@@ -1518,16 +1518,13 @@ def main() -> None:
                 "min": round(min(samples), 3),
                 "trials": CHAIN_TRIALS,
             }
-        # the same build with independent chain members on worker threads
-        # (run_chain_parallel) — wall approaches the longest member; the
-        # sequential total above stays the round-comparable baseline
-        from trialsync_etl_spark.transforms import run_chain_parallel
-
+        # the same build with an explicit 4-wide worker pool — wall
+        # approaches the longest member
         par_res: list = []
         times["warehouse_build_parallel"] = _trials(
             lambda: par_res.extend(
-                run_chain_parallel(spark, "load_all_new_dimensions", ctx)
-                + run_chain_parallel(spark, "load_all_new_facts", ctx)
+                run_chain(spark, "load_all_new_dimensions", ctx, max_parallel=4)
+                + run_chain(spark, "load_all_new_facts", ctx, max_parallel=4)
             ),
             CHAIN_TRIALS,
         )

@@ -590,7 +590,7 @@ def test_cli_release_rehearsal_cold_warehouse_all_green(spark, tmp_path):
     exports + verifies shards, writes the data card, builds the warehouse
     chains from COLD (dims → facts → verify, landing dq_report), and
     evaluates the alert rules — exit 0 only when every artifact is green.
-    ``--parallel 4`` routes the load chains through run_chain_parallel —
+    ``--parallel 4`` runs the load chains on a 4-wide run_chain pool —
     the rehearsal exercises the SAME parallel runner production uses, and
     the sequential verify chain that follows reads every built table, so
     a thread-unsafe transform would turn the rehearsal red here."""
@@ -834,9 +834,10 @@ def test_cli_transform_max_parallel_rejected_on_unsafe_chain(tmp_path):
 
 
 def test_run_chain_parallel_refuses_unsafe_named_chain(spark, tmp_path):
-    """The runner itself enforces the allowlist (callers other than the
-    CLI get the same rail); an explicit member LIST still bypasses it —
-    the caller constructing a list owns its independence."""
+    """The runner itself enforces the allowlist on an explicit width
+    above 1 (callers other than the CLI get the same rail); an explicit
+    member LIST still bypasses it — the caller constructing a list owns
+    its independence."""
     import pytest as _pytest
 
     from tests.conftest import SF_DIR
@@ -844,17 +845,17 @@ def test_run_chain_parallel_refuses_unsafe_named_chain(spark, tmp_path):
     from trialsync_etl_spark.transforms import (
         PARALLEL_SAFE_CHAINS,
         WarehouseContext,
-        run_chain_parallel,
+        run_chain,
     )
 
     transforms.load_all()
     ctx = WarehouseContext(sf_dir=SF_DIR, warehouse_dir=str(tmp_path / "wh"))
     with _pytest.raises(ValueError, match="not parallel-safe"):
-        run_chain_parallel(spark, "maintain_warehouse", ctx)
+        run_chain(spark, "maintain_warehouse", ctx, max_parallel=4)
     # the safe list names real chains only
     assert PARALLEL_SAFE_CHAINS <= set(transforms.CHAINS)
     # explicit lists pass through (build one dim twice-independently)
-    res = run_chain_parallel(
+    res = run_chain(
         spark, ["load_dim_customer", "load_dim_date"], ctx, max_parallel=2
     )
     assert [r.status for r in res] == ["success", "success"]

@@ -393,6 +393,8 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     doc via the store (vs='history') plus its own in-batch clone
     (vs='batch') without re-hashing history; re-probing is idempotent for
     pair derivation."""
+    import os
+
     from trialsync_etl_spark.operators.dedup_store import incremental_dup_pairs
 
     store = str(tmp_path / "sig_store")
@@ -432,11 +434,22 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     rerun = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
         spark, b2, store, batch_id="run-2").collect()}
     assert rerun == out2
+    # ...and, rerunning the last completed append, appends nothing
+    assert spark.read.parquet(f"{store}/sigs").count() == 5
+
+    # an append that crashed before recording itself (no marker): the
+    # rerun's pair set is still identical, but it appends the batch again
+    os.remove(os.path.join(store, "_last_append"))
+    rerun = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
+        spark, b2, store, batch_id="run-2").collect()}
+    assert rerun == out2
+    assert spark.read.parquet(f"{store}/sigs").count() == 8
 
     # maintenance compaction drops the duplicate rows the rerun appended
     from trialsync_etl_spark.operators.dedup_store import compact_store
 
     n = compact_store(spark, store)
+    assert n == 5
     stored = spark.read.parquet(f"{store}/sigs")
     assert stored.count() == n
     assert stored.groupBy("doc_id", "batch_id").count().filter(
@@ -493,15 +506,18 @@ def test_ann_index_build_query_matches_in_memory(spark, tmp_path):
 
 def test_ann_index_append_and_compact(spark, tmp_path):
     """Incremental index ingest: a new batch is assigned under the stored
-    centroids and becomes retrievable without a rebuild; a replayed append
-    is healed by compaction; query answers stay duplicate-free even
-    before the heal."""
+    centroids and becomes retrievable without a rebuild; a replay of the
+    last completed append lands nothing; a replay of an append that
+    crashed before recording itself is healed by compaction; query
+    answers stay duplicate-free even before the heal."""
     from trialsync_etl_spark.operators.ann_store import (
+        _write_meta,
         append_to_ann_index,
         build_ann_index,
         compact_ann_index,
         query_ann_index,
         read_index_meta,
+        resolve_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -521,9 +537,18 @@ def test_ann_index_append_and_compact(spark, tmp_path):
     # no duplicate (query, neighbor) pairs in the answers
     assert len({(q, n) for q, n, _ in pre}) == len(pre)
 
-    # replayed append (same batch id, e.g. retry after a crash): answers
-    # stay duplicate-free; compaction restores the true count
-    append_to_ann_index(newb, idx, batch_id="run-1")
+    # replayed append (same batch id, e.g. retry after a crash): the
+    # append completed last, so the retry lands nothing
+    assert append_to_ann_index(newb, idx, batch_id="run-1") == meta1
+
+    # an append that crashed before recording itself (no last_batch_id):
+    # its retry lands the batch again; answers stay duplicate-free;
+    # compaction restores the true count
+    meta = read_index_meta(idx)
+    meta.pop("last_batch_id")
+    _write_meta(resolve_index(idx), meta)
+    dup = append_to_ann_index(newb, idx, batch_id="run-1")
+    assert dup["count"] == meta1["count"] + newb.count()
     got2 = query_ann_index(spark, idx, queries, k=5, n_probe=8)
     assert got2.select("query_id", "neighbor_id").distinct().count() == got2.count()
     healed = compact_ann_index(spark, idx)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trialsync_etl_spark.operators.ann_store import (
+    _write_meta,
     compact_ann_index,
     incremental_semantic_dups,
     read_index_meta,
@@ -98,8 +99,23 @@ def test_bootstrap_crash_replay_converges(spark, tmp_path):
     assert _verdicts(retry) == {(3, 1): "batch"}
     assert retry.filter(F.col("vs") == "history").count() == 0
 
-    # the retry's append left duplicate rows; compaction heals them and
-    # restores the true count
+    # the bootstrap was the index's last completed append, so the retry
+    # appended nothing
+    assert read_index_meta(idx)["count"] == len(B1)
+
+    # a bootstrap that crashed before recording itself (no
+    # last_batch_id): the retry's verdicts are the same, its append
+    # leaves duplicate rows; compaction heals them and restores the true
+    # count
+    meta = read_index_meta(idx)
+    meta.pop("last_batch_id")
+    _write_meta(resolve_index(idx), meta)
+    retry = incremental_semantic_dups(
+        spark, _df(spark, B1), idx, 0.95, batch_id="run-1", n_probe=1
+    )
+    assert _verdicts(retry) == {(3, 1): "batch"}
+    assert retry.filter(F.col("vs") == "history").count() == 0
+    assert read_index_meta(idx)["count"] == 2 * len(B1)
     meta = compact_ann_index(spark, idx)
     assert meta["count"] == len(B1)
     assert read_index_meta(idx)["count"] == len(B1)
@@ -156,8 +172,9 @@ def test_empty_non_bootstrap_batch_is_a_noop(spark, tmp_path):
 def test_semantic_dup_stream_sink_end_to_end(spark, tmp_path):
     """SemanticDupStreamSink: batch 0 bootstraps the index and keeps only
     its first near-dup representative; batch 1's vectors are gated
-    against batch 0 as history; replaying a batch converges; the index
-    holds every ingested vector for the next batch."""
+    against batch 0 as history; replaying the last (non-bootstrap) batch
+    converges; the index holds every ingested vector for the next
+    batch."""
     import json
     import os
 
@@ -203,8 +220,9 @@ def test_semantic_dup_stream_sink_end_to_end(spark, tmp_path):
     kept = spark.read.parquet(out)
     assert sorted(r.vec_id for r in kept.collect()) == [1, 2, 12]
 
-    # the index saw every vector (batch 0 via bootstrap, batch 1 via
-    # append; the replayed append's duplicates are healed by compaction)
+    # the index saw every vector once (batch 0 via bootstrap, batch 1 via
+    # append; the replay appended nothing)
+    assert read_index_meta(idx)["count"] == len(B1) + len(B2)
     meta = compact_ann_index(spark, idx)
     assert meta["count"] == len(B1) + len(B2)
 

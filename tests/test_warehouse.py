@@ -429,7 +429,7 @@ def test_maintenance_preserves_every_table_value_for_value(spark, tmp_path):
 
 
 def test_parallel_chain_matches_sequential_and_isolates_failures(spark, tmp_path):
-    """run_chain_parallel: the dim+fact chains built on worker threads
+    """run_chain(max_parallel=4): the dim+fact chains built on worker threads
     produce EVERY table row-for-row identical to the sequential build
     (same plans, just interleaved scheduling), results keep chain order,
     and one member's failure neither cancels the others nor reorders the
@@ -440,7 +440,6 @@ def test_parallel_chain_matches_sequential_and_isolates_failures(spark, tmp_path
         CHAINS,
         WarehouseContext,
         run_chain,
-        run_chain_parallel,
     )
     from trialsync_etl_spark.transforms.maintenance import _published_tables
 
@@ -449,10 +448,10 @@ def test_parallel_chain_matches_sequential_and_isolates_failures(spark, tmp_path
     seq_ctx = WarehouseContext(sf_dir=SF_DIR, warehouse_dir=seq_wh)
     par_ctx = WarehouseContext(sf_dir=SF_DIR, warehouse_dir=par_wh)
 
-    seq = run_chain(spark, "load_all_new_dimensions", seq_ctx)
-    seq += run_chain(spark, "load_all_new_facts", seq_ctx)
-    par = run_chain_parallel(spark, "load_all_new_dimensions", par_ctx)
-    par += run_chain_parallel(spark, "load_all_new_facts", par_ctx)
+    seq = run_chain(spark, "load_all_new_dimensions", seq_ctx, max_parallel=1)
+    seq += run_chain(spark, "load_all_new_facts", seq_ctx, max_parallel=1)
+    par = run_chain(spark, "load_all_new_dimensions", par_ctx, max_parallel=4)
+    par += run_chain(spark, "load_all_new_facts", par_ctx, max_parallel=4)
 
     assert [r.name for r in par] == [r.name for r in seq]  # chain order
     assert all(r.status == "success" for r in par), [
@@ -470,11 +469,12 @@ def test_parallel_chain_matches_sequential_and_isolates_failures(spark, tmp_path
         assert a == b, f"parallel build diverged on {t}"
 
     # failure isolation: an unknown member fails in place, the rest land
-    mixed = run_chain_parallel(
+    mixed = run_chain(
         spark,
         [CHAINS["load_all_new_dimensions"][0], "no_such_transform",
          CHAINS["load_all_new_dimensions"][1]],
         WarehouseContext(sf_dir=SF_DIR, warehouse_dir=str(tmp_path / "mx")),
+        max_parallel=4,
     )
     assert [r.status for r in mixed] == ["success", "failed", "success"]
     assert "unknown transform" in mixed[1].error

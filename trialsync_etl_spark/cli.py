@@ -102,7 +102,6 @@ def cmd_transform(args, out=sys.stdout) -> int:
     from trialsync_etl_spark.transforms import (
         WarehouseContext,
         run_chain,
-        run_chain_parallel,
         run_transform,
     )
 
@@ -126,12 +125,12 @@ def cmd_transform(args, out=sys.stdout) -> int:
         return 2
     spark = get_spark(app_name="trialsync-cli")
     ctx = WarehouseContext(sf_dir=args.sf_dir, warehouse_dir=args.warehouse_dir)
-    if args.chain and args.max_parallel > 1:
-        results = run_chain_parallel(
-            spark, args.name, ctx, max_parallel=args.max_parallel
+    if args.chain:
+        # the default width 1 keeps the runner's own policy
+        results = run_chain(
+            spark, args.name, ctx,
+            max_parallel=args.max_parallel if args.max_parallel > 1 else None,
         )
-    elif args.chain:
-        results = run_chain(spark, args.name, ctx)
     else:
         results = [run_transform(spark, args.name, ctx)]
     ok = True
@@ -411,24 +410,17 @@ def cmd_release(args, out=sys.stdout) -> int:
             options=ctx_options,
         )
         res = []
-        n_parallel = max(1, getattr(args, "parallel", 1) or 1)
-        if n_parallel > 1:
-            # the operational entry point exercises the SAME parallel
-            # runner production would use (both load chains are in
-            # PARALLEL_SAFE_CHAINS); the verify chain that follows reads
-            # every built table, so a thread-unsafe transform surfaces
-            # here, in rehearsal, not in production
-            from trialsync_etl_spark.transforms import run_chain_parallel
-
-            for chain in ("load_all_new_dimensions", "load_all_new_facts"):
-                res += run_chain_parallel(
-                    spark, chain, ctx, max_parallel=n_parallel
-                )
-            res += run_chain(spark, "verify_warehouse", ctx)
-        else:
-            for chain in ("load_all_new_dimensions", "load_all_new_facts",
-                          "verify_warehouse"):
-                res += run_chain(spark, chain, ctx)
+        n_parallel = getattr(args, "parallel", 1) or 1
+        # --parallel N sets the load chains' pool width (both are in
+        # PARALLEL_SAFE_CHAINS); the verify chain that follows reads
+        # every built table, so a thread-unsafe transform surfaces here,
+        # in rehearsal, not in production
+        for chain in ("load_all_new_dimensions", "load_all_new_facts"):
+            res += run_chain(
+                spark, chain, ctx,
+                max_parallel=n_parallel if n_parallel > 1 else None,
+            )
+        res += run_chain(spark, "verify_warehouse", ctx)
         n_failed = sum(1 for r in res if r.status != "success")
         dq_missing = False
         try:

@@ -478,6 +478,9 @@ def _publish_model_and_lists(
         }
         if not clustered:
             meta["pending_count"] = int(n_vecs)
+        if batch_id is not None and row_tags is None:
+            # a bootstrap build is the first append (see append_to_ann_index)
+            meta["last_batch_id"] = batch_id
         # meta is PART of the generation: written before the swap, so a
         # published pointer always references a complete, self-described
         # model — there is no separate meta swap to crash between
@@ -761,8 +764,11 @@ def append_to_ann_index(
     reading their resolved snapshot throughout.
 
     ``batch_id`` must be a stable per-ingest identifier: appended rows are
-    tagged with it, so a crashed-and-retried append can be healed by
-    :func:`compact_ann_index` (drops duplicate (vec_id, batch_id) rows).
+    tagged with it. A retry of the last completed append (the meta's
+    ``last_batch_id``, written with the count it landed) appends nothing;
+    a retry of an append that crashed midway can leave duplicate rows,
+    healed by :func:`compact_ann_index` (drops duplicate (vec_id,
+    batch_id) rows).
     It should also be LEXICOGRAPHICALLY MONOTONIC across ingests
     (timestamp-prefixed or zero-padded — ``b0009`` not ``b9``): the
     maintenance retrain keeps one copy per vec_id by string-max batch_id,
@@ -854,6 +860,10 @@ def append_to_ann_index(
     with _index_lock(index_path):
         root = resolve_index(index_path)
         meta = read_index_meta(index_path)
+        if meta.get("last_batch_id") == batch_id:
+            # a retry of the append that completed last: its rows are
+            # already in the index, landing them again would duplicate
+            return meta
         live_version = int(meta.get("model_version", 1))
         if (
             expected_model_version is not None
@@ -890,6 +900,7 @@ def append_to_ann_index(
         # pre-upgrade meta missing the key undercounts until the next
         # fold — conservative: triggers late, never spuriously)
         meta["pending_count"] = int(meta.get("pending_count", 0)) + n_new
+        meta["last_batch_id"] = batch_id
         _write_meta(root, meta)
         # minor compaction, size-triggered, under the already-held lock:
         # the meta above is already durable, so a crash inside the fold

@@ -24,8 +24,10 @@ probe/compact (:func:`_migrate_v1_locked`).
 Each appended row is tagged with the caller's ``batch_id``, and the
 history probe excludes the current batch's id — so re-running a batch
 after a partial or complete append still derives the same pair set (its
-own earlier signatures are not mistaken for history). The append itself
-is NOT atomic: a crashed rerun can leave duplicate rows for the same
+own earlier signatures are not mistaken for history). A rerun of the
+last COMPLETED append (``<store>/_last_append`` names its batch_id)
+appends nothing, so the store converges too. An append that crashed
+midway is NOT atomic: its rerun can leave duplicate rows for the same
 (doc_id, batch_id); pair derivation is insensitive to them (pairs are
 DISTINCT and re-derived, never stored), and :func:`compact_store`
 removes them during maintenance.
@@ -45,6 +47,7 @@ from trialsync_etl_spark.operators.dedup import (
 
 BANDS_TABLE = "bands"
 SIGS_TABLE = "sigs"
+LAST_APPEND = "_last_append"  # batch_id of the last completed append
 
 
 def _band_structs() -> list:
@@ -394,6 +397,10 @@ def _probe_and_append_locked(
     # a lazily-evaluated result would re-list the store after the append
     # and re-read the just-appended rows. Caller holds the store lock.
     result = out.localCheckpoint(eager=True)
+    if _last_append(store_path) == batch_id:
+        # a rerun of the append that completed last: its rows are
+        # already in the store, appending them again would duplicate
+        return result
     if sigs.isEmpty():
         # an empty batch must not CREATE the store: a bands/ dir holding
         # only _SUCCESS has no inferable schema and would wedge every
@@ -414,7 +421,25 @@ def _probe_and_append_locked(
         if os.path.exists(os.path.join(real, SIGS_TABLE))
         else os.path.join(real, SIGS_TABLE)
     )
+    _record_append(store_path, batch_id)
     return result
+
+
+def _last_append(store_path: str) -> str | None:
+    """The batch_id of the store's last completed append, if recorded.
+    The marker lives inside the store dir, so it dies with the store."""
+    try:
+        with open(os.path.join(store_path, LAST_APPEND), encoding="utf-8") as fh:
+            return fh.read()
+    except FileNotFoundError:
+        return None
+
+
+def _record_append(store_path: str, batch_id: str) -> None:
+    path = os.path.join(store_path, LAST_APPEND)
+    with open(path + ".tmp", "w", encoding="utf-8") as fh:
+        fh.write(batch_id)
+    os.replace(path + ".tmp", path)
 
 
 def compact_store(spark: SparkSession, store_path: str) -> int:

@@ -140,8 +140,9 @@ def append_gram_firsts(
     half of the ingest cadence; run AFTER the batch was probed/trimmed).
     Only grams the store has never seen land (anti-join on h) — the
     store stays one row per distinct corpus gram. Re-appending the same
-    ``batch_id`` overwrites its partition (replay-convergent). Returns
-    the number of new grams folded."""
+    ``batch_id`` overwrites its partition (replay-convergent: the batch's
+    own earlier fold is not history to it). Returns the number of new
+    grams folded."""
     if not batch_id or any(c in batch_id for c in "/=%"):
         raise ValueError(
             f"batch_id {batch_id!r} must be a non-empty partition-safe tag"
@@ -157,7 +158,11 @@ def append_gram_firsts(
         # no .distinct() on the store side: left_anti is already
         # membership semantics, and a distinct would add a full store
         # shuffle to every append
-        seen = docs.sparkSession.read.parquet(table).select("h")
+        seen = (
+            docs.sparkSession.read.parquet(table)
+            .filter(F.col("batch_id").cast("string") != batch_id)
+            .select("h")
+        )
         mins = mins.join(seen, "h", "left_anti")
     new = mins.select(
         "h", F.col("__first.doc_id").alias("doc_id"),

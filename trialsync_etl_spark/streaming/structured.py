@@ -6,19 +6,48 @@ source offsets ARE the watermark, `checkpointLocation` IS run_context, and
 `Trigger.AvailableNow` IS timeout→suspend→resume (each invocation drains
 what's available and stops, resuming from the checkpoint next time).
 
-This module provides the file-landing-zone stream (the shape a REST
-ingestor lands pages into), watermarked windowed aggregation for the
-snapshot fact, and a foreachBatch SCD2 sink that applies `scd2_merge`
-per micro-batch — the streaming dimension-maintenance path.
+The module-level helpers are the file-landing-zone stream (the shape a
+REST ingestor lands pages into), the availableNow drain, watermarked
+exact dedup and watermarked windowed aggregation for the snapshot fact.
+
+Every foreachBatch sink subclasses one skeleton, `_GateSink`, which owns
+the loop:
+
+- `attach(stream_df, checkpoint_dir)` loads the sink's recovery state
+  from the checkpoint dir (`_restore`: the stream-instance tag named by
+  the class-level `_marker`, plus any sink-specific state) and drains
+  what's available through the INSTANCE's `process_batch` attribute, so
+  a caller may wrap `process_batch` per instance.
+- `process_batch(batch_df, batch_id)` pins the micro-batch once
+  (`_pin_batch`: one parse, the row count riding the pin job), returns
+  on an empty batch, refuses to run before `attach` when the sink needs
+  a stream tag, calls the subclass's gate hook
+  `_gate(batch_df, batch_id, n_rows)`, and releases the thread's
+  tracked persists in a `finally` (the stream thread never sees another
+  build, cache.py).
+
+A subclass supplies its constructor, its marker name and `_gate`.
+
+Replay contract: after a crash Structured Streaming re-delivers the last
+uncommitted batch id, and every sink converges on that replay. Landed
+output overwrites `root/batch=<id>` wholesale (`_land`); store appends
+are tagged `<stream-instance-uuid>-<batch_id>` (`_batch_tag`), the uuid
+persisted in the checkpoint dir (`_stream_instance_tag`), so a replay
+rewrites or excludes its own earlier attempt while a wiped checkpoint or
+a second stream on the same store never collides with it.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from trialsync_etl_spark.cache import release_persisted
 
 
 def read_landing_stream(
@@ -46,10 +75,18 @@ def run_available_now(
     """I2+I3: drain everything currently available, then stop. Re-invoking
     resumes from the checkpoint — the reference's suspend/resume loop
     (src/etl/executor.py:804-836) with Spark owning the bookkeeping."""
+    _drain(
+        stream_df.writeStream.format(fmt).option("path", out_dir),
+        checkpoint_dir,
+    )
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Start ``writer`` as an availableNow query checkpointed at
+    ``checkpoint_dir`` and wait for it: everything currently available
+    is processed, then the query stops."""
     (
-        stream_df.writeStream.format(fmt)
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
+        writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
@@ -111,14 +148,11 @@ def run_windowed_to_parquet(
 ) -> None:
     """Append-mode windowed write: a window is emitted once its watermark
     passes — the append-only snapshot-fact stream."""
-    (
+    _drain(
         windowed.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        .outputMode("append"),
+        checkpoint_dir,
     )
 
 
@@ -131,8 +165,9 @@ def _pin_batch(batch_df: DataFrame) -> tuple[DataFrame, int]:
     the survivors join, the landed write) read the pinned blocks
     instead. Returns ``(pinned_df, n_rows)``; callers skip the batch on
     ``n_rows == 0``. The SemanticDupStreamSink measured this re-parse
-    as a dominant slice of the small-batch floor — this helper extends
-    the same shape to the whole sink family."""
+    as a dominant slice of the small-batch floor; every sink now pins
+    this way (``_GateSink.process_batch``), and the count reaches each
+    gate hook (the semantic-dup gate sizes its shuffle width with it)."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -142,26 +177,108 @@ def _pin_batch(batch_df: DataFrame) -> tuple[DataFrame, int]:
     return pinned, int(obs.get["n"])
 
 
-def _releases_persists(fn):
-    """foreachBatch bodies run on the stream-execution thread, which dies
-    with the stream — the thread-local persist tracker (cache.py) would
-    never see a 'next build' there, leaking any relation an operator
-    track_persist'ed during the batch. Release at every batch boundary."""
-    import functools
+def _checkpoint_predates_marker(checkpoint_dir: str, marker_name: str) -> bool:
+    """True iff the checkpoint dir holds Spark streaming state (offsets)
+    written BEFORE the instance-uuid marker existed — i.e. a pre-uuid
+    deployment's checkpoint being resumed right after the upgrade. Only
+    that one resume may replay micro-batches whose store appends were
+    tagged with the legacy ``stream-<n>`` scheme; once the marker exists
+    the answer is permanently False, so legacy-era appends by OTHER
+    streams sharing a store are never excluded from history again."""
+    marker = os.path.join(checkpoint_dir, marker_name)
+    return (
+        not os.path.exists(marker)
+        and os.path.isdir(os.path.join(checkpoint_dir, "offsets"))
+    )
 
-    @functools.wraps(fn)
-    def wrapped(self, batch_df, batch_id):
-        from trialsync_etl_spark.cache import release_persisted
 
+def _stream_instance_tag(checkpoint_dir: str, marker_name: str) -> str:
+    """Stream-instance uuid persisted in the checkpoint dir: reused
+    across crash-restarts (intact checkpoint → the same store tags, so
+    replay exclusion / partition overwrite converges), fresh after a
+    checkpoint wipe or for a new stream (batch numbering restarts at 0,
+    so a reused tag would collide with another stream's batch ids in a
+    shared store)."""
+    import uuid
+
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    marker = os.path.join(checkpoint_dir, marker_name)
+    try:
+        with open(marker, encoding="utf-8") as fh:
+            tag = fh.read().strip()
+        if tag:
+            return tag
+    except FileNotFoundError:
+        pass
+    tag = uuid.uuid4().hex
+    tmp = marker + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(tag)
+    os.replace(tmp, marker)
+    return tag
+
+
+def _land(df: DataFrame, root: str, batch_id: int) -> None:
+    """Land a micro-batch's output at ``root/batch=<id>``, overwriting
+    the dir wholesale: a re-delivered batch id rewrites its own earlier
+    attempt instead of appending duplicates."""
+    df.write.mode("overwrite").parquet(_batch_dir(root, batch_id))
+
+
+def _batch_dir(root: str, batch_id: int) -> str:
+    return os.path.join(root, f"batch={batch_id}")
+
+
+class _GateSink:
+    """The foreachBatch skeleton every sink shares (see the module
+    docstring): ``attach`` restores the recovery state and drains the
+    stream through ``self.process_batch``; ``process_batch`` pins the
+    batch, skips an empty one, checks the stream tag, runs ``_gate`` and
+    releases the thread's tracked persists."""
+
+    #: checkpoint-dir file holding the stream-instance uuid that tags the
+    #: sink's store appends; None for a sink without a stream tag
+    _marker: str | None = None
+    _stream_tag: str | None = None
+
+    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
+        """Restore the recovery state, then drain what's available
+        (availableNow), resuming from the checkpoint on the next call."""
+        self._restore(checkpoint_dir)
+        _drain(
+            stream_df.writeStream.foreachBatch(self.process_batch),
+            checkpoint_dir,
+        )
+
+    def _restore(self, checkpoint_dir: str) -> None:
+        """Load the state a restart must reuse from the checkpoint dir."""
+        if self._marker is not None:
+            self._stream_tag = _stream_instance_tag(checkpoint_dir, self._marker)
+
+    def _batch_tag(self, batch_id: int) -> str:
+        """The store-append tag of one micro-batch of this stream."""
+        return f"{self._stream_tag}-{batch_id}"
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         try:
-            return fn(self, batch_df, batch_id)
+            batch_df, n_rows = _pin_batch(batch_df)
+            if n_rows == 0:
+                return
+            if self._marker is not None and self._stream_tag is None:
+                raise RuntimeError(
+                    f"{type(self).__name__}.process_batch before attach(): "
+                    "the stream tag comes from the checkpoint dir"
+                )
+            self._gate(batch_df, batch_id, n_rows)
         finally:
             release_persisted()
 
-    return wrapped
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
+        """One pinned, non-empty micro-batch of ``n_rows`` rows."""
+        raise NotImplementedError
 
 
-class Scd2StreamSink:
+class Scd2StreamSink(_GateSink):
     """foreachBatch SCD2 maintenance: each micro-batch merges into the dim
     via the same `scd2_merge` the batch path uses — one code path for both
     cadences (I6's dual cadence collapses to trigger choice).
@@ -186,16 +303,10 @@ class Scd2StreamSink:
         self.ts_col = ts_col
         self.tiebreak_cols = list(tiebreak_cols)
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.scd2 import scd2_merge
         from trialsync_etl_spark.storage import swap_publish
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         dim = None
         if os.path.exists(self.dim_path):
             dim = self.spark.read.parquet(self.dim_path)
@@ -209,25 +320,20 @@ class Scd2StreamSink:
         )
         swap_publish(merged, self.dim_path)
 
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str):
-        """Start the availableNow foreachBatch query and wait for it."""
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
-
-class CurateStreamSink:
+class CurateStreamSink(_GateSink):
     """Streaming corpus curation: the landing stream of raw documents is
     cross-batch deduplicated (`dedup_stream`, watermark-bounded state),
     then each micro-batch runs the SAME batch operators the offline
     funnel uses — clean, quality/repetition filter, benchmark
-    decontamination — via foreachBatch, appending survivors to the
-    curated store. One code path for both cadences: the batch funnel
+    decontamination — via foreachBatch, landing survivors in the
+    curated store's per-batch overwritten ``batch=<id>`` subdirs. One
+    code path for both cadences: the batch funnel
     (operators/curate.py) and this sink share every stage function.
+    Reading ``out_dir`` back (``spark.read.parquet``) therefore yields
+    an extra partition column ``batch`` (int); an ``out_dir`` holding
+    flat part files from an older run mixes layouts Spark refuses to
+    read, so move those files aside before resuming.
 
     The benchmark is static reference data (tiny): re-read per batch and
     broadcast by the decontamination probe — or, with
@@ -368,16 +474,13 @@ class CurateStreamSink:
         self.id_col = id_col
         self.text_col = text_col
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators import textstats
         from trialsync_etl_spark.operators.decontam import decontaminate
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         text = F.col(self.text_col)
         cur = batch_df
+        fold = None
         if self.url_blocklist is not None or self.max_per_domain is not None:
             # the batch funnel's URL-level stages, FIRST (same order) —
             # the blocklist is the shared Column expression; the cap
@@ -515,10 +618,11 @@ class CurateStreamSink:
             # exact substring dedup at ingest cadence (the batch funnel's
             # substring_dedup=True stage, store-backed for cross-batch
             # state): trim vs history+self, drop pure duplicates, fold
-            # the batch's firsts so the NEXT batch sees it as history
+            # the batch's firsts (after landing, below) so the NEXT batch
+            # sees it as history
             from trialsync_etl_spark.operators import substring_store as SS
 
-            cur = cur.localCheckpoint(eager=True)
+            cur = fold = cur.localCheckpoint(eager=True)
             if SS.read_substring_params(self.substring_store) is None:
                 SS.append_gram_firsts(
                     cur.limit(0), self.substring_store, "__pin",
@@ -530,14 +634,7 @@ class CurateStreamSink:
                 self.substring_min_len, self.id_col, self.text_col,
                 k=self.substring_k,
             ).filter(F.length(F.col(self.text_col)) > 0)
-            gated = cur.drop(self.text_col).join(trimmed, self.id_col)
-            SS.append_gram_firsts(
-                cur, self.substring_store,
-                f"{self._substr_tag}-{batch_id}",
-                k=self.substring_k, id_col=self.id_col,
-                text_col=self.text_col,
-            )
-            cur = gated
+            cur = cur.drop(self.text_col).join(trimmed, self.id_col)
         if self.benchmark is not None:
             cur = decontaminate(
                 cur,
@@ -586,7 +683,17 @@ class CurateStreamSink:
                 emb_id_col=self.emb_id_col,
                 emb_vec_col=self.emb_vec_col,
             )
-        cur.write.mode("append").parquet(self.out_dir)
+        _land(cur, self.out_dir, batch_id)
+        if fold is not None:
+            # the landed rows were trimmed against the store as it stood;
+            # folding first would rewrite, on a replay, the very
+            # partition their lazy trim still has to read
+            SS.append_gram_firsts(
+                fold, self.substring_store,
+                f"{self._substr_tag}-{batch_id}",
+                k=self.substring_k, id_col=self.id_col,
+                text_col=self.text_col,
+            )
 
     def attach(
         self,
@@ -595,9 +702,18 @@ class CurateStreamSink:
         ts_col: str = "ts",
         watermark_delay: str = "1 day",
     ) -> None:
-        """Wire dedup_stream in front of the curation batches and drain
-        what's available (availableNow), resuming from the checkpoint on
-        the next invocation."""
+        """Wire dedup_stream in front of the curation batches, then
+        drain like every sink."""
+        super().attach(
+            dedup_stream(
+                stream_df, [self.id_col], ts_col=ts_col,
+                watermark_delay=watermark_delay,
+            ),
+            checkpoint_dir,
+        )
+
+    def _restore(self, checkpoint_dir: str) -> None:
+        # one stream tag per store-backed stage that needs one
         if self.substring_store is not None:
             self._substr_tag = _stream_instance_tag(
                 checkpoint_dir, "__curate_substr_id"
@@ -606,19 +722,9 @@ class CurateStreamSink:
             self._domain_tag = _stream_instance_tag(
                 checkpoint_dir, "__curate_domain_id"
             )
-        deduped = dedup_stream(
-            stream_df, [self.id_col], ts_col=ts_col, watermark_delay=watermark_delay
-        )
-        (
-            deduped.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
 
-class ExportStreamSink:
+class ExportStreamSink(_GateSink):
     """Streaming JSONL export: each micro-batch is written as its own
     ``batch=<id>/shard=N`` JSONL shard set via
     :func:`operators.export.export_jsonl_shards` (same deterministic
@@ -645,30 +751,15 @@ class ExportStreamSink:
         self.id_col = id_col
         self.hash_fn = hash_fn
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.export import export_jsonl_shards
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         export_jsonl_shards(
             batch_df,
-            os.path.join(self.out_dir, f"batch={batch_id}"),
+            _batch_dir(self.out_dir, batch_id),
             self.n_shards,
             id_col=self.id_col,
             hash_fn=self.hash_fn,
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
         )
 
 
@@ -692,7 +783,7 @@ def combined_export_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-class QualityGateStreamSink:
+class QualityGateStreamSink(_GateSink):
     """Streaming cadence of the post-load DQ suite (operators/quality.py):
     each micro-batch runs the DECLARED check list — the same single
     aggregate pass the warehouse chain uses — before landing. Green
@@ -722,84 +813,24 @@ class QualityGateStreamSink:
         self.quarantine_dir = quarantine_dir
         self.report_dir = report_dir
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.quality import check_table
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         report = check_table(batch_df, self.checks)
         verdicts = report.collect()  # one tiny row per check
         passed = all(r["passed"] for r in verdicts)
         target = self.out_dir if passed else self.quarantine_dir
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(target, f"batch={batch_id}")
-        )
+        _land(batch_df, target, batch_id)
         if self.report_dir is not None:
-            report.withColumn("batch_id", F.lit(batch_id)).withColumn(
-                "landed", F.lit(passed)
-            ).write.mode("overwrite").parquet(
-                os.path.join(self.report_dir, f"batch={batch_id}")
+            _land(
+                report.withColumn("batch_id", F.lit(batch_id))
+                .withColumn("landed", F.lit(passed)),
+                self.report_dir,
+                batch_id,
             )
 
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
-
-def _checkpoint_predates_marker(checkpoint_dir: str, marker_name: str) -> bool:
-    """True iff the checkpoint dir holds Spark streaming state (offsets)
-    written BEFORE the instance-uuid marker existed — i.e. a pre-uuid
-    deployment's checkpoint being resumed right after the upgrade. Only
-    that one resume may replay micro-batches whose store appends were
-    tagged with the legacy ``stream-<n>`` scheme; once the marker exists
-    the answer is permanently False, so legacy-era appends by OTHER
-    streams sharing a store are never excluded from history again."""
-    import os
-
-    marker = os.path.join(checkpoint_dir, marker_name)
-    return (
-        not os.path.exists(marker)
-        and os.path.isdir(os.path.join(checkpoint_dir, "offsets"))
-    )
-
-
-def _stream_instance_tag(checkpoint_dir: str, marker_name: str) -> str:
-    """Stream-instance uuid persisted in the checkpoint dir: reused
-    across crash-restarts (intact checkpoint → the same store tags, so
-    replay exclusion / partition overwrite converges), fresh after a
-    checkpoint wipe or for a new stream (batch numbering restarts at 0,
-    so a reused tag would collide with another stream's batch ids in a
-    shared store)."""
-    import os
-    import uuid
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    marker = os.path.join(checkpoint_dir, marker_name)
-    try:
-        with open(marker, encoding="utf-8") as fh:
-            tag = fh.read().strip()
-        if tag:
-            return tag
-    except FileNotFoundError:
-        pass
-    tag = uuid.uuid4().hex
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(tag)
-    os.replace(tmp, marker)
-    return tag
-
-
-class NearDupStreamSink:
+class NearDupStreamSink(_GateSink):
     """Streaming near-duplicate gate against the persisted MinHash
     signature store (operators/dedup_store.py): each micro-batch probes
     the store's band partitions for history near-dups AND checks within
@@ -825,6 +856,8 @@ class NearDupStreamSink:
     (partition pruning on the store scan); history is never re-hashed.
     """
 
+    _marker = "__neardup_stream_id"
+
     def __init__(
         self,
         out_dir: str,
@@ -840,31 +873,19 @@ class NearDupStreamSink:
         self.id_col = id_col
         self.text_col = text_col
         self.report_dir = report_dir
-        self._stream_tag: str | None = None
         self._legacy_replay = False
 
-    def _load_stream_tag(self, checkpoint_dir: str) -> str:
+    def _restore(self, checkpoint_dir: str) -> None:
         # order matters: the predates-check must run before the tag call
         # creates the marker file
         self._legacy_replay = _checkpoint_predates_marker(
-            checkpoint_dir, "__neardup_stream_id"
+            checkpoint_dir, self._marker
         )
-        return _stream_instance_tag(checkpoint_dir, "__neardup_stream_id")
+        super()._restore(checkpoint_dir)
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.dedup_store import incremental_dup_pairs
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "NearDupStreamSink.process_batch before attach(): the "
-                "stream tag comes from the checkpoint dir"
-            )
         pairs = incremental_dup_pairs(
             batch_df.sparkSession,
             batch_df,
@@ -872,7 +893,7 @@ class NearDupStreamSink:
             self.min_est_jaccard,
             self.id_col,
             self.text_col,
-            batch_id=f"{self._stream_tag}-{batch_id}",
+            batch_id=self._batch_tag(batch_id),
             # a pre-uuid deployment tagged appends "stream-<n>"; ONLY the
             # first resume after the upgrade (checkpoint predates the uuid
             # marker) may replay such a batch, and must treat that crashed
@@ -885,26 +906,12 @@ class NearDupStreamSink:
         )
         dup_ids = pairs.select(F.col("doc_b").alias(self.id_col)).distinct()
         survivors = batch_df.join(dup_ids, self.id_col, "left_anti")
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
+        _land(survivors, self.out_dir, batch_id)
         if self.report_dir is not None:
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(self.report_dir, f"batch={batch_id}")
-            )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = self._load_stream_tag(checkpoint_dir)
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+            _land(pairs, self.report_dir, batch_id)
 
 
-class MediaNearDupStreamSink:
+class MediaNearDupStreamSink(_GateSink):
     """Streaming perceptual media gate against the persisted signature
     store (operators/media_dedup.py): each micro-batch signatures its
     binary payloads ONCE, probes the store's batch partitions banded for
@@ -923,6 +930,8 @@ class MediaNearDupStreamSink:
     discipline): a replayed batch rewrites its own signature partition
     and its probe never sees its own earlier attempt as history.
     """
+
+    _marker = "__media_neardup_stream_id"
 
     def __init__(
         self,
@@ -943,29 +952,17 @@ class MediaNearDupStreamSink:
         self.n_bands = n_bands
         self.sig_kind = sig_kind
         self.use_real_codec = use_real_codec
-        self._stream_tag: str | None = None
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.media_dedup import (
             media_neardup_incremental,
         )
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "MediaNearDupStreamSink.process_batch before attach(): "
-                "the stream tag comes from the checkpoint dir"
-            )
         survivors = media_neardup_incremental(
             batch_df.sparkSession,
             batch_df,
             self.store_path,
-            batch_id=f"{self._stream_tag}-{batch_id}",
+            batch_id=self._batch_tag(batch_id),
             id_col=self.id_col,
             content_col=self.content_col,
             max_distance=self.max_distance,
@@ -973,24 +970,10 @@ class MediaNearDupStreamSink:
             sig_kind=self.sig_kind,
             use_real_codec=self.use_real_codec,
         )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = _stream_instance_tag(
-            checkpoint_dir, "__media_neardup_stream_id"
-        )
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        _land(survivors, self.out_dir, batch_id)
 
 
-class SubstringDedupStreamSink:
+class SubstringDedupStreamSink(_GateSink):
     """Streaming exact-substring dedup gate against the persisted
     first-occurrence gram store (operators/substring_store.py): each
     micro-batch is trimmed against history PLUS itself (verbatim blocks
@@ -1009,6 +992,8 @@ class SubstringDedupStreamSink:
     previous instance's partition and silently drop history firsts.
     ``drop_empty`` drops docs trimmed to nothing (pure duplicates) from
     the landed output; they still contribute history."""
+
+    _marker = "__substr_stream_id"
 
     def __init__(
         self,
@@ -1029,22 +1014,10 @@ class SubstringDedupStreamSink:
         self.text_col = text_col
         self.hash_fn = hash_fn
         self.drop_empty = drop_empty
-        self._stream_tag: str | None = None
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators import substring_store as SS
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "SubstringDedupStreamSink.process_batch before attach(): "
-                "the stream tag comes from the checkpoint dir"
-            )
         spark = batch_df.sparkSession
         # first batch pins the store params; later batches assert them
         params = SS.read_substring_params(self.store_path)
@@ -1062,29 +1035,15 @@ class SubstringDedupStreamSink:
             trimmed = trimmed.filter(F.length(F.col(self.text_col)) > 0)
         # non-text columns survive the gate (trim only replaces the text)
         survivors = batch_df.drop(self.text_col).join(trimmed, self.id_col)
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
+        _land(survivors, self.out_dir, batch_id)
         SS.append_gram_firsts(
-            batch_df, self.store_path, f"{self._stream_tag}-{batch_id}",
+            batch_df, self.store_path, self._batch_tag(batch_id),
             k=self.k, id_col=self.id_col, text_col=self.text_col,
             hash_fn=self.hash_fn,
         )
 
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = _stream_instance_tag(
-            checkpoint_dir, "__substr_stream_id"
-        )
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
-
-class SketchRollupStreamSink:
+class SketchRollupStreamSink(_GateSink):
     """Streaming cadence of the mergeable HLL rollup store
     (operators/sketch_store.py): each micro-batch folds its slice into
     per-key sketches under its own store partition, so distinct-count
@@ -1100,6 +1059,8 @@ class SketchRollupStreamSink:
     batch-0 sketches.
     """
 
+    _marker = "__sketch_stream_id"
+
     def __init__(
         self,
         store_path: str,
@@ -1113,40 +1074,19 @@ class SketchRollupStreamSink:
         self.key_cols = list(key_cols)
         self.distinct_cols = list(distinct_cols)
         self.lgk = DEFAULT_LGK if lgk is None else lgk
-        self._stream_tag: str | None = None
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.sketch_store import (
             append_sketch_rollup,
         )
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "SketchRollupStreamSink.process_batch before attach(): the "
-                "stream tag comes from the checkpoint dir"
-            )
         append_sketch_rollup(
             batch_df,
             self.store_path,
             self.key_cols,
             self.distinct_cols,
-            batch_id=f"{self._stream_tag}-{batch_id}",
+            batch_id=self._batch_tag(batch_id),
             lgk=self.lgk,
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = _stream_instance_tag(
-            checkpoint_dir, "__sketch_stream_id"
-        )
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
         )
 
 
@@ -1164,7 +1104,7 @@ def _auto_prescreen_decision(
     return pairs_per_vec >= enable
 
 
-class SemanticDupStreamSink:
+class SemanticDupStreamSink(_GateSink):
     """Streaming semantic near-duplicate gate against the persisted ANN
     index (operators/ann_store.py): each micro-batch of embedded docs
     probes the index for history near-dups AND checks within the batch
@@ -1213,6 +1153,8 @@ class SemanticDupStreamSink:
     AUTO_ENABLE_PAIRS_PER_VEC = 1000.0
     AUTO_DISABLE_PAIRS_PER_VEC = 500.0
 
+    _marker = "__semdup_stream_id"
+
     def __init__(
         self,
         out_dir: str,
@@ -1250,38 +1192,14 @@ class SemanticDupStreamSink:
             if auto_disable_pairs_per_vec is None
             else auto_disable_pairs_per_vec
         )
-        self._stream_tag: str | None = None
         self._checkpoint_dir: str | None = None
         self._auto_on: bool = False
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.ann_store import (
             incremental_semantic_dups,
         )
 
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "SemanticDupStreamSink.process_batch before attach(): the "
-                "stream tag comes from the checkpoint dir"
-            )
-        # pin the micro-batch ONCE: the gate's assignment, the survivors
-        # join, and the emptiness check would otherwise each re-parse the
-        # landing JSON (three source scans per batch — measured fixed
-        # cost at the 500-row floor); the row count rides the pin job via
-        # an Observation, doubling as the emptiness probe and sizing the
-        # gate's shuffle width below
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        batch_df = batch_df.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        n_rows = int(obs.get["n"])
-        if n_rows == 0:
-            return
         spark = batch_df.sparkSession
         # right-size the gate's shuffle width to the batch: full-CPU
         # width on a tiny batch is hundreds of task launches of pure
@@ -1297,7 +1215,7 @@ class SemanticDupStreamSink:
             batch_df,
             self.index_path,
             self.threshold,
-            batch_id=f"{self._stream_tag}-{batch_id}",
+            batch_id=self._batch_tag(batch_id),
             id_col=self.id_col,
             vec_col=self.vec_col,
             n_probe=self.n_probe,
@@ -1316,13 +1234,9 @@ class SemanticDupStreamSink:
             F.col("doc_dup").alias(self.id_col)
         ).distinct()
         survivors = batch_df.join(dup_ids, self.id_col, "left_anti")
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
+        _land(survivors, self.out_dir, batch_id)
         if self.report_dir is not None:
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(self.report_dir, f"batch={batch_id}")
-            )
+            _land(pairs, self.report_dir, batch_id)
         if auto:
             # candidate counts came back with the gate call (batch side
             # exact, history side a per-generation-snapshot estimate —
@@ -1341,9 +1255,13 @@ class SemanticDupStreamSink:
                 self._auto_on = new_on
                 self._save_prescreen_state()
 
-    def _prescreen_state_path(self) -> str:
-        import os
+    def _restore(self, checkpoint_dir: str) -> None:
+        super()._restore(checkpoint_dir)
+        self._checkpoint_dir = checkpoint_dir
+        if self.prescreen == "auto":
+            self._auto_on = self._load_prescreen_state()
 
+    def _prescreen_state_path(self) -> str:
         return os.path.join(self._checkpoint_dir, "__semdup_prescreen.json")
 
     def _load_prescreen_state(self) -> bool:
@@ -1357,7 +1275,6 @@ class SemanticDupStreamSink:
 
     def _save_prescreen_state(self) -> None:
         import json
-        import os
 
         path = self._prescreen_state_path()
         tmp = path + ".tmp"
@@ -1365,23 +1282,8 @@ class SemanticDupStreamSink:
             json.dump({"on": self._auto_on}, fh)
         os.replace(tmp, path)
 
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = _stream_instance_tag(
-            checkpoint_dir, "__semdup_stream_id"
-        )
-        self._checkpoint_dir = checkpoint_dir
-        if self.prescreen == "auto":
-            self._auto_on = self._load_prescreen_state()
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
 
-
-class DecontamStreamSink:
+class DecontamStreamSink(_GateSink):
     """Streaming benchmark-decontamination gate against the persisted
     shingle store (operators/decontam_store.py): each micro-batch of
     documents probes the stored benchmarks' (broadcast) shingle union,
@@ -1415,17 +1317,11 @@ class DecontamStreamSink:
         self.text_col = text_col
         self.report_dir = report_dir
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.decontam_store import (
             contamination_profile_store,
         )
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         spark = batch_df.sparkSession
         profile = contamination_profile_store(
             spark, batch_df, self.store_path, self.benchmark_ids,
@@ -1434,9 +1330,7 @@ class DecontamStreamSink:
         )
         if self.report_dir is not None:
             profile = profile.localCheckpoint(eager=True)  # two consumers
-            profile.write.mode("overwrite").parquet(
-                os.path.join(self.report_dir, f"batch={batch_id}")
-            )
+            _land(profile, self.report_dir, batch_id)
         flagged = profile.filter(F.col("contaminated")).select(
             F.col("doc_id").alias("__flagged_id")
         )
@@ -1445,21 +1339,10 @@ class DecontamStreamSink:
             flagged, batch_df[self.id_col] == flagged["__flagged_id"],
             "left_anti",
         )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        _land(survivors, self.out_dir, batch_id)
 
 
-class PerplexityBandStreamSink:
+class PerplexityBandStreamSink(_GateSink):
     """Streaming statistical-quality gate against the persisted LM store
     (operators/lm_store.py): each micro-batch of documents is scored
     under the STORED model — unigram or interpolated bigram, routed by
@@ -1499,17 +1382,11 @@ class PerplexityBandStreamSink:
         self.text_col = text_col
         self.report_dir = report_dir
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.lm_store import (
             score_perplexity_store,
         )
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
         spark = batch_df.sparkSession
         scored = score_perplexity_store(
             spark, batch_df, self.store_path, self.model_id,
@@ -1517,9 +1394,7 @@ class PerplexityBandStreamSink:
         )
         if self.report_dir is not None:
             scored = scored.localCheckpoint(eager=True)  # two consumers
-            scored.write.mode("overwrite").parquet(
-                os.path.join(self.report_dir, f"batch={batch_id}")
-            )
+            _land(scored, self.report_dir, batch_id)
         keep = scored.filter(
             (F.col("perplexity") >= F.lit(float(self.min_ppl)))
             & (F.col("perplexity") <= F.lit(float(self.max_ppl)))
@@ -1527,21 +1402,10 @@ class PerplexityBandStreamSink:
         survivors = batch_df.join(
             keep, batch_df[self.id_col] == keep["__keep_id"], "semi"
         )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(self.out_dir, f"batch={batch_id}")
-        )
-
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        _land(survivors, self.out_dir, batch_id)
 
 
-class FreqRollupStreamSink:
+class FreqRollupStreamSink(_GateSink):
     """Streaming hot-key monitor: each micro-batch folds its key
     frequencies into a persisted count-min rollup store
     (operators/freq.py) — at most depth×width cells per batch whatever
@@ -1561,6 +1425,8 @@ class FreqRollupStreamSink:
     re-appending batch data under a fresh id in batch mode).
     """
 
+    _marker = "__freq_stream_id"
+
     def __init__(
         self,
         store_path: str,
@@ -1577,37 +1443,16 @@ class FreqRollupStreamSink:
         self.key_col = key_col
         self.depth = depth or DEFAULT_DEPTH
         self.width = width or DEFAULT_WIDTH
-        self._stream_tag: str | None = None
 
-    @_releases_persists
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.freq import append_cm_rollup
 
-        batch_df, __n_rows = _pin_batch(batch_df)
-        if __n_rows == 0:
-            return
-        if self._stream_tag is None:
-            raise RuntimeError(
-                "FreqRollupStreamSink.process_batch before attach(): the "
-                "stream tag comes from the checkpoint dir"
-            )
         append_cm_rollup(
             batch_df,
             self.store_path,
             self.key_col,
-            f"{self._stream_tag}-{batch_id}",
+            self._batch_tag(batch_id),
             self.depth,
             self.width,
         )
 
-    def attach(self, stream_df: DataFrame, checkpoint_dir: str) -> None:
-        self._stream_tag = _stream_instance_tag(
-            checkpoint_dir, "__freq_stream_id"
-        )
-        (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )

@@ -13,7 +13,6 @@ registered by name; `run_chain` reproduces the master-procedure semantics
 
 from __future__ import annotations
 
-import os
 import time
 import traceback
 from collections.abc import Callable, Sequence
@@ -48,7 +47,7 @@ CHAINS: dict[str, list[str]] = {}
 
 #: chains whose members are MUTUALLY INDEPENDENT (each reads only source
 #: tables / previously-built layers and writes its own table) and may run
-#: under :func:`run_chain_parallel`. Dependency-ordered chains —
+#: overlapped under :func:`run_chain`. Dependency-ordered chains —
 #: verify_warehouse reads what the load chains wrote, maintain_warehouse
 #: steps share fact_orders and the stores — are NOT listed: parallelizing
 #: them silently races cross-step dependencies, so the runner (and the
@@ -124,7 +123,7 @@ def run_transform(
 #: fighting for executors (guide §2.6); deliberately NOT derived from the
 #: core count — the same width is right on local[8] and a 1000-executor
 #: cluster because it bounds concurrent JOBS, not tasks.
-DEFAULT_CHAIN_PARALLEL = int(os.environ.get("SPARK_GRAFT_CHAIN_PARALLEL", "4"))
+DEFAULT_CHAIN_PARALLEL = 4
 
 
 def run_chain(
@@ -132,73 +131,46 @@ def run_chain(
     names: Sequence[str] | str,
     ctx: WarehouseContext,
     run_log=None,
+    max_parallel: int | None = None,
 ) -> list[TransformResult]:
     """Master-procedure semantics: run a chain with per-call wrapping so
     later members still run after a failure
     (update_load_all_new_dimensions.sql:12-84).
 
-    Chains declared in :data:`PARALLEL_SAFE_CHAINS` — whose members are
-    mutually independent by construction (each reads only source tables /
-    previously-built layers and writes its own table) — execute with their
-    members overlapped on a small worker pool: sequential order is not a
-    semantic property of those chains (the set exists to declare exactly
-    that), and Spark's scheduler back-fills one member's straggler tail
-    with the next member's tasks instead of idling the executor pool
-    between 16 small jobs. The API contract is unchanged either way:
-    results return in chain order with per-member timing, and a failure in
-    one member never stops the others. Dependency-ordered chains
-    (verify_warehouse reads what the load chains wrote; maintenance steps
-    share fact_orders) and explicit member LISTS run strictly in the
-    given order.
-    """
-    if isinstance(names, str):
-        if names in PARALLEL_SAFE_CHAINS:
-            return _run_overlapped(
-                spark, CHAINS.get(names, []), ctx, run_log,
-                DEFAULT_CHAIN_PARALLEL,
-            )
-        names = CHAINS.get(names, [])
-    return [run_transform(spark, n, ctx, run_log=run_log) for n in names]
-
-
-def run_chain_parallel(
-    spark: SparkSession,
-    names: Sequence[str] | str,
-    ctx: WarehouseContext,
-    run_log=None,
-    max_parallel: int = 4,
-) -> list[TransformResult]:
-    """Run a chain whose members are MUTUALLY INDEPENDENT (each transform
-    reads only source tables / previously-built layers and writes its own
-    table — true of the dim and fact master chains) concurrently.
-
     The reference executes its 2AM master chains serially — one cursor,
-    one stored procedure at a time (update_load_all_new_dimensions.sql:
-    12-84). On Spark each transform is just a job: submitted from worker
-    threads, the scheduler interleaves their stages across the executor
-    pool, so chain wall time approaches the longest member instead of the
-    sum while per-member shuffle/broadcast shapes are untouched. Result
-    order matches chain order regardless of completion order, and a
-    failure in one member never cancels the others (the master-chain
-    continue-past-failure contract).
+    one stored procedure at a time. On Spark each transform is just a
+    job: submitted from worker threads, the scheduler interleaves their
+    stages across the executor pool (back-filling one member's straggler
+    tail with the next member's tasks), so chain wall time approaches the
+    longest member instead of the sum while per-member shuffle/broadcast
+    shapes are untouched. The API contract is the same either way:
+    results return in chain order with per-member timing, and a failure
+    in one member never stops the others.
 
-    A NAMED chain must be in :data:`PARALLEL_SAFE_CHAINS` — dependency-
-    ordered chains (verify reads what load wrote; maintenance steps share
-    fact_orders) raise instead of silently racing; sequence those with
-    :func:`run_chain`. An explicit member LIST bypasses the check: the
-    caller constructing the list owns its independence. (:func:`run_chain`
-    already overlaps parallel-safe NAMED chains; this entry point remains
-    for explicit pool-width control and for independent member lists.)
+    ``max_parallel`` is the worker-pool width; 1 runs the members in
+    order on the calling thread. ``None`` picks the policy:
+    :data:`DEFAULT_CHAIN_PARALLEL` for a chain named in
+    :data:`PARALLEL_SAFE_CHAINS` — whose members are mutually independent
+    by construction — and in-order for everything else
+    (verify_warehouse reads what the load chains wrote; maintenance
+    steps share fact_orders). An explicit width above 1 on any other
+    NAMED chain raises instead of silently racing its cross-step
+    dependencies; an explicit member LIST is the caller's to vouch for.
     """
     if isinstance(names, str):
-        if names in CHAINS and names not in PARALLEL_SAFE_CHAINS:
+        safe = names in PARALLEL_SAFE_CHAINS
+        if names in CHAINS and not safe and (max_parallel or 1) > 1:
             raise ValueError(
                 f"chain {names!r} has cross-step dependencies and is not "
-                "parallel-safe; run it with run_chain (sequential) or pass "
-                "an explicit independent subset of its members"
+                "parallel-safe; run it sequentially or pass an explicit "
+                "independent subset of its members"
             )
+        if max_parallel is None and safe:
+            max_parallel = DEFAULT_CHAIN_PARALLEL
         names = CHAINS.get(names, [])
-    return _run_overlapped(spark, names, ctx, run_log, max_parallel)
+    if (max_parallel or 1) > 1:
+        return _run_overlapped(spark, names, ctx, run_log, max_parallel)
+    return [run_transform(spark, n, ctx, run_log=run_log) for n in names]
 
 
 def _run_overlapped(
@@ -208,8 +180,7 @@ def _run_overlapped(
     run_log,
     max_parallel: int,
 ) -> list[TransformResult]:
-    """Shared overlapped-execution body of :func:`run_chain` (parallel-safe
-    named chains) and :func:`run_chain_parallel`."""
+    """The overlapped-execution body of :func:`run_chain`."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -244,7 +215,7 @@ def _run_overlapped(
             # release must happen here or the blocks leak for the session
             release_persisted()
 
-    with ThreadPoolExecutor(max_workers=max(1, max_parallel)) as pool:
+    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
         return list(pool.map(_one, names))
 
 
