@@ -629,6 +629,10 @@ def _aqe_skew_probe(
     from trialsync_etl_spark.catalog import load_table
 
     confs = {
+        # pinned, not inherited: every get_spark() call on a live session
+        # resets it to the core count, and at 4 partitions the hot key's
+        # partition is only ~2x the median — under the skew factor below
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": threshold,
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory,

@@ -466,7 +466,7 @@ def test_decontam_store_corrupt_meta_is_loud(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     DS.build_benchmark_store(docs, store, "v1", k=3)
-    meta = DS._meta_path(store)
+    meta = store + "__meta.json"
 
     with open(meta, "w") as f:
         f.write('{"k": 3, "hash_')  # truncated mid-write

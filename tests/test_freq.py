@@ -409,6 +409,36 @@ def test_cm_store_pins_its_parameters(spark, tmp_path):
         )
 
 
+def test_corrupt_cm_params_file_is_loud(spark, tmp_path):
+    """A truncated or key-less ``<store>__cm.json`` raises the
+    "unreadable … rebuild" error on every path — never a bare
+    JSONDecodeError/KeyError, and never a silent re-pin."""
+    import json
+
+    import pytest as _pytest
+
+    from trialsync_etl_spark.operators.freq import (
+        append_cm_rollup,
+        cm_store_estimate,
+        read_cm_params,
+    )
+
+    df = _skewed(spark, n=200, hot="H", hot_share=0.3, n_cold=10)
+    store = str(tmp_path / "cm")
+    append_cm_rollup(df, store, "key", "b1", depth=4, width=256)
+    for broken in ('{"depth": 4, "wid', json.dumps({})):
+        with open(store + "__cm.json", "w") as f:
+            f.write(broken)
+        with _pytest.raises(ValueError, match="unreadable.*rebuild"):
+            read_cm_params(store)
+        with _pytest.raises(ValueError, match="unreadable"):
+            append_cm_rollup(df, store, "key", "b2", depth=4, width=256)
+        with _pytest.raises(ValueError, match="unreadable"):
+            cm_store_estimate(spark, store, df, "key")
+        with open(store + "__cm.json") as f:
+            assert f.read() == broken
+
+
 def test_freq_edge_validation(spark, tmp_path):
     """phi outside (0, 1] raises (and exits 2 from the CLI before Spark);
     a key column named like a sketch column works."""
@@ -518,7 +548,7 @@ def test_windowed_read_excludes_compacted_base(spark, tmp_path):
 
 
 def test_concurrent_first_appends_with_different_params_serialize(spark, tmp_path):
-    """_pin_cm_params runs its read-check-write under the store's __lock
+    """The CM params pin runs its read-check-write under the store's __lock
     flock: two concurrent FIRST appends with different (depth, width)
     cannot both see params=None — exactly one pins, the other raises
     BEFORE writing any cells, and the surviving store is consistent."""
@@ -527,7 +557,7 @@ def test_concurrent_first_appends_with_different_params_serialize(spark, tmp_pat
     import pytest as _pytest
 
     from trialsync_etl_spark.operators.freq import (
-        _pin_cm_params,
+        _CM_PARAMS,
         append_cm_rollup,
         cm_store_estimate,
         read_cm_params,
@@ -545,7 +575,7 @@ def test_concurrent_first_appends_with_different_params_serialize(spark, tmp_pat
         def pin_t(i, depth, width, s=s):
             barrier.wait()
             try:
-                _pin_cm_params(s, depth, width)
+                _CM_PARAMS.pin(s, depth=depth, width=width)
             except Exception as e:  # noqa: BLE001
                 errors[i] = e
 

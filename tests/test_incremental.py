@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from trialsync_etl_spark.streaming.incremental import (
     CadencePlan,
@@ -51,6 +52,8 @@ def test_watermark_store(tmp_path):
     ws.set("job1", "2024-02-01 00:00:00", param=42)
     assert ws.get("job1") == "2024-01-09 00:00:00"
     assert ws.get("job1", param=42) == "2024-02-01 00:00:00"
+    # readable by monitoring/cron users, like every other sidecar
+    assert os.stat(tmp_path / "wm.json").st_mode & 0o777 == 0o644
 
 
 def test_checkpoint_failure_cap():

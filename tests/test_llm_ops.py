@@ -510,8 +510,9 @@ def test_ann_index_append_and_compact(spark, tmp_path):
     last completed append lands nothing; a replay of an append that
     crashed before recording itself is healed by compaction; query
     answers stay duplicate-free even before the heal."""
+    import os
+
     from trialsync_etl_spark.operators.ann_store import (
-        _write_meta,
         append_to_ann_index,
         build_ann_index,
         compact_ann_index,
@@ -519,6 +520,7 @@ def test_ann_index_append_and_compact(spark, tmp_path):
         read_index_meta,
         resolve_index,
     )
+    from trialsync_etl_spark.storage import atomic_write_json
 
     emb = load_table(spark, SF_DIR, "embeddings")
     base = emb.filter(F.col("vec_id") >= 20)
@@ -546,7 +548,7 @@ def test_ann_index_append_and_compact(spark, tmp_path):
     # compaction restores the true count
     meta = read_index_meta(idx)
     meta.pop("last_batch_id")
-    _write_meta(resolve_index(idx), meta)
+    atomic_write_json(os.path.join(resolve_index(idx), "_index.json"), meta)
     dup = append_to_ann_index(newb, idx, batch_id="run-1")
     assert dup["count"] == meta1["count"] + newb.count()
     got2 = query_ann_index(spark, idx, queries, k=5, n_probe=8)

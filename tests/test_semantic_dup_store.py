@@ -11,12 +11,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trialsync_etl_spark.operators.ann_store import (
-    _write_meta,
     compact_ann_index,
     incremental_semantic_dups,
     read_index_meta,
     resolve_index,
 )
+from trialsync_etl_spark.storage import atomic_write_json
 
 EMB_SCHEMA = "vec_id long, embedding array<float>"
 
@@ -86,6 +86,8 @@ def test_bootstrap_crash_replay_converges(spark, tmp_path):
     the non-bootstrap path) excludes the partial append from its history
     probe — identical verdicts, never symmetric 'history' self-pairs
     that would drop BOTH members of a within-batch near-dup pair."""
+    import os
+
     idx = str(tmp_path / "ann")
     out1 = incremental_semantic_dups(
         spark, _df(spark, B1), idx, 0.95, batch_id="run-1",
@@ -109,7 +111,7 @@ def test_bootstrap_crash_replay_converges(spark, tmp_path):
     # count
     meta = read_index_meta(idx)
     meta.pop("last_batch_id")
-    _write_meta(resolve_index(idx), meta)
+    atomic_write_json(os.path.join(resolve_index(idx), "_index.json"), meta)
     retry = incremental_semantic_dups(
         spark, _df(spark, B1), idx, 0.95, batch_id="run-1", n_probe=1
     )
@@ -449,7 +451,7 @@ def test_rebuild_crash_never_publishes_a_mixed_model_index(
 
     # two injection points: mid-staging (meta write) and the worst case —
     # everything staged, one instruction before the pointer swap
-    for target in ("_write_meta", "_swap_generation_locked"):
+    for target in ("atomic_write_json", "_swap_generation_locked"):
         def boom(*a, **k):
             raise RuntimeError("injected crash")
 

@@ -337,3 +337,35 @@ def test_compact_keeps_recurring_batch_and_refolds_converge(spark, tmp_path):
     # run-1 was folded into __base: re-appending it must refuse
     with pytest.raises(ValueError, match="folded"):
         append_sketch_rollup(extra, store, ["event_type"], ["user_id"], "run-1")
+
+
+def test_corrupt_folded_list_is_loud_and_never_rewritten(spark, tmp_path):
+    """A truncated ``<store>__folded.json`` must not read as "nothing
+    folded": appending a folded id would double-count n_rows, and a
+    compaction would rewrite the list without the lost ids. Both raise,
+    and compaction leaves the file (and the store) as they were."""
+    import pytest
+
+    store = str(tmp_path / "sk")
+    ev = _events(spark).limit(40)
+    append_sketch_rollup(ev, store, ["event_type"], ["user_id"], "run-1")
+    compact_sketch_store(spark, store)
+    append_sketch_rollup(ev, store, ["event_type"], ["user_id"], "run-2")
+    before = estimate_rollup(spark, store).collect()[0]["n_rows"]
+    folded = store + "__folded.json"
+    with open(folded, "w", encoding="utf-8") as fh:
+        fh.write('["run-')  # torn write
+
+    with pytest.raises(ValueError, match="unreadable"):
+        append_sketch_rollup(ev, store, ["event_type"], ["user_id"], "run-1")
+    with pytest.raises(ValueError, match="unreadable"):
+        compact_sketch_store(spark, store)
+    with open(folded, encoding="utf-8") as fh:
+        assert fh.read() == '["run-'
+    assert estimate_rollup(spark, store).collect()[0]["n_rows"] == before
+    live = {
+        r[0]
+        for r in read_sketch_store(spark, store)
+        .select("batch_id").distinct().collect()
+    }
+    assert live == {"__base", "run-2"}

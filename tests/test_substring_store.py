@@ -105,7 +105,7 @@ def test_store_pins_params_and_corrupt_meta_is_loud(spark, tmp_path):
     with pytest.raises(ValueError, match="partition-safe"):
         SS.append_gram_firsts(_b2(spark), store, "a/b", k=4)
 
-    with open(SS._meta_path(store), "w") as f:
+    with open(store + "__meta.json", "w") as f:
         f.write('{"k": 4')  # truncated
     with pytest.raises(ValueError, match="unreadable"):
         SS.read_substring_params(store)

@@ -43,8 +43,6 @@ publish (build or retrain) migrates them to a generation in place.
 
 from __future__ import annotations
 
-import contextlib
-import fcntl
 import json
 import os
 import shutil
@@ -66,6 +64,8 @@ from trialsync_etl_spark.operators.similarity import (
     quantize_scale,
     super_centroids,
 )
+from trialsync_etl_spark.storage import atomic_write_json, file_lock
+
 #: basename of the publish pointer inside an index directory
 GEN_POINTER = "current"
 
@@ -148,12 +148,8 @@ def _lock_file(index_path: str) -> str:
     return os.path.join(index_path, "lists__lock")
 
 
-@contextlib.contextmanager
 def _index_lock(index_path: str):
-    os.makedirs(index_path, exist_ok=True)
-    with open(_lock_file(index_path), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        yield
+    return file_lock(_lock_file(index_path))
 
 
 def _load_two_level(
@@ -484,7 +480,7 @@ def _publish_model_and_lists(
         # meta is PART of the generation: written before the swap, so a
         # published pointer always references a complete, self-described
         # model — there is no separate meta swap to crash between
-        _write_meta(gen, meta)
+        atomic_write_json(os.path.join(gen, "_index.json"), meta)
         _swap_generation_locked(index_path, gen)
         # pre-warm the model cache for the generation just published: the
         # frames in hand ARE the artifacts a follow-up probe would
@@ -520,17 +516,6 @@ def _publish_model_and_lists(
 def read_index_meta(index_path: str) -> dict:
     with open(os.path.join(resolve_index(index_path), "_index.json")) as f:
         return json.load(f)
-
-
-def _write_meta(gen_root: str, meta: dict) -> None:
-    """Atomic metadata update (temp file + rename) inside a RESOLVED
-    generation: a crash mid-write must never leave a truncated
-    _index.json that wedges every later call."""
-    target = os.path.join(gen_root, "_index.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, target)
 
 
 def query_ann_index(
@@ -901,7 +886,7 @@ def append_to_ann_index(
         # fold — conservative: triggers late, never spuriously)
         meta["pending_count"] = int(meta.get("pending_count", 0)) + n_new
         meta["last_batch_id"] = batch_id
-        _write_meta(root, meta)
+        atomic_write_json(os.path.join(root, "_index.json"), meta)
         # minor compaction, size-triggered, under the already-held lock:
         # the meta above is already durable, so a crash inside the fold
         # leaves a correct un-compacted index and the next trigger refires
@@ -1370,7 +1355,7 @@ def _compact_pending_locked(spark: SparkSession, index_path: str) -> dict:
     meta = read_index_meta(index_path)
     meta["count"] = int(obs.get["n"])
     meta["pending_count"] = 0  # the published generation's delta is empty
-    _write_meta(gen, meta)
+    atomic_write_json(os.path.join(gen, "_index.json"), meta)
     _swap_generation_locked(index_path, gen)
     return meta
 

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trialsync_etl_spark.operators.textstats import BPE_TOKEN_RE  # noqa: F401
+from trialsync_etl_spark.storage import atomic_write_text
 
 #: the EXACT path's pre-tokenizer: a Python-re rendering of GPT-2's
 #: FULL published pattern ('s|'t|… | ?\p{L}+ | ?\p{N}+ |
@@ -236,9 +237,8 @@ def train_bpe_merges(
 
 
 def save_merges(merges: list[tuple[str, str]], path: str) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("#version: trialsync-fixture-bpe\n")
-        for left, right in merges:
-            f.write(f"{left} {right}\n")
-    os.replace(tmp, path)
+    atomic_write_text(
+        path,
+        "#version: trialsync-fixture-bpe\n"
+        + "".join(f"{left} {right}\n" for left, right in merges),
+    )

@@ -45,20 +45,28 @@ null cosines — silent zero contamination), one-shot parity against
 
 from __future__ import annotations
 
-import fcntl
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import dedup
+from trialsync_etl_spark.storage import PinnedParams
 
 SHINGLES_TABLE = "shingles"
 
 
-def _meta_path(store_path: str) -> str:
-    return store_path + "__meta.json"
+_PARAMS = PinnedParams(
+    label="decontam store",
+    suffix="__meta.json",
+    lock_suffix="/__lock",
+    keys=("k", "hash_fn"),
+    hint="the (k, hash_fn) pin is the contamination gate's safety "
+    "contract; rebuild it by re-running build_benchmark_store for any "
+    "benchmark (or restore the meta file from the store's source of truth)",
+    why="mixed shingle spaces report silent zero contamination",
+    first_step="build a benchmark first (build_benchmark_store)",
+)
 
 
 def read_store_params(store_path: str) -> dict | None:
@@ -70,63 +78,7 @@ def read_store_params(store_path: str) -> dict | None:
     gate — an operator staring at a KeyError should be told the fix
     (re-pin by rebuilding a benchmark), not left to guess whether the
     gate's params are trustworthy."""
-    try:
-        with open(_meta_path(store_path)) as f:
-            params = json.load(f)
-        if not isinstance(params, dict) or not {"k", "hash_fn"} <= set(params):
-            raise ValueError(f"missing keys in {params!r}")
-        return params
-    except FileNotFoundError:
-        return None
-    except (json.JSONDecodeError, ValueError) as e:
-        raise ValueError(
-            f"decontam store meta {_meta_path(store_path)} is unreadable "
-            f"({e}) — the (k, hash_fn) pin is the contamination gate's "
-            "safety contract; rebuild it by re-running "
-            "build_benchmark_store for any benchmark (or restore the "
-            "meta file from the store's source of truth)"
-        ) from e
-
-
-def _pin_params(store_path: str, k: int, hash_fn: str) -> None:
-    """First build pins (k, hash_fn); later builds and probes must match.
-    Read-check-write under the store flock — two concurrent first builds
-    with different params serialize, the loser raises before writing."""
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        existing = read_store_params(store_path)
-        if existing is not None:
-            if (existing["k"], existing["hash_fn"]) != (k, hash_fn):
-                raise ValueError(
-                    f"decontam store {store_path} pins k={existing['k']} "
-                    f"hash_fn={existing['hash_fn']}; got k={k} "
-                    f"hash_fn={hash_fn} — mixed shingle spaces report "
-                    "silent zero contamination"
-                )
-            return
-        from trialsync_etl_spark.storage import atomic_write_json
-
-        atomic_write_json(_meta_path(store_path), {"k": k, "hash_fn": hash_fn})
-
-
-def _resolve_params(
-    store_path: str, k: int | None, hash_fn: str | None
-) -> tuple[int, str]:
-    params = read_store_params(store_path)
-    if params is None:
-        raise FileNotFoundError(
-            f"decontam store {store_path} has no pinned params — build a "
-            "benchmark first (build_benchmark_store)"
-        )
-    for name, got, pinned in (
-        ("k", k, params["k"]), ("hash_fn", hash_fn, params["hash_fn"])
-    ):
-        if got is not None and got != pinned:
-            raise ValueError(
-                f"decontam store {store_path} pins {name}={pinned}, got {got}"
-            )
-    return params["k"], params["hash_fn"]
+    return _PARAMS.read(store_path)
 
 
 def build_benchmark_store(
@@ -149,7 +101,7 @@ def build_benchmark_store(
             f"benchmark_id {benchmark_id!r} must be a non-empty partition-"
             "safe tag (no '/', '=', '%')"
         )
-    _pin_params(store_path, k, hash_fn)
+    _PARAMS.pin(store_path, k=k, hash_fn=hash_fn)
     sh = (
         dedup.doc_shingles(
             benchmark, id_col=id_col, text_col=text_col, k=k, hash_fn=hash_fn
@@ -219,7 +171,7 @@ def contamination_profile_store(
     n_overlap, overlap_frac, contaminated)), with the benchmark side
     read from the store instead of re-shingled. (k, hash_fn) come from
     the store's pin; pass them only to assert expectations."""
-    k, hash_fn = _resolve_params(store_path, k, hash_fn)
+    k, hash_fn = _PARAMS.resolve(store_path, k=k, hash_fn=hash_fn)
     train_sh = dedup.doc_shingles(
         dedup.spread_for_cpu(train), id_col=id_col, text_col=text_col,
         k=k, hash_fn=hash_fn,
@@ -278,8 +230,19 @@ def decontaminate_incremental(
 EMBEDDINGS_TABLE = "embeddings"
 
 
-def _emb_meta_path(store_path: str) -> str:
-    return store_path + "__emb_meta.json"
+#: separate meta from the shingle family's (k, hash_fn) pin — a store may
+#: carry either family alone
+_EMB_PARAMS = PinnedParams(
+    label="decontam embedding store",
+    suffix="__emb_meta.json",
+    lock_suffix="/__lock",
+    keys=("dim",),
+    hint="rebuild it by re-running build_benchmark_embeddings for any "
+    "benchmark",
+    why="mixed dimensions zip to null cosines and report silent zero "
+    "contamination",
+    first_step="build a benchmark first (build_benchmark_embeddings)",
+)
 
 
 def read_emb_params(store_path: str) -> dict | None:
@@ -288,44 +251,7 @@ def read_emb_params(store_path: str) -> dict | None:
     :func:`read_store_params` — the dim pin is what keeps a
     mismatched-dimension probe from silently scoring null cosines
     (zip_with over unequal lengths) and reporting zero contamination."""
-    import json as _json
-
-    try:
-        with open(_emb_meta_path(store_path)) as f:
-            params = _json.load(f)
-        if not isinstance(params, dict) or "dim" not in params:
-            raise ValueError(f"missing keys in {params!r}")
-        return params
-    except FileNotFoundError:
-        return None
-    except (_json.JSONDecodeError, ValueError) as e:
-        raise ValueError(
-            f"decontam store embedding meta {_emb_meta_path(store_path)} is "
-            f"unreadable ({e}) — rebuild it by re-running "
-            "build_benchmark_embeddings for any benchmark"
-        ) from e
-
-
-def _pin_emb_params(store_path: str, dim: int) -> None:
-    """First embedding build pins the vector dim under the store flock;
-    later builds and probes must match (separate meta from the shingle
-    family's (k, hash_fn) pin — a store may carry either family alone)."""
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        existing = read_emb_params(store_path)
-        if existing is not None:
-            if existing["dim"] != dim:
-                raise ValueError(
-                    f"decontam store {store_path} pins embedding dim="
-                    f"{existing['dim']}; got dim={dim} — mixed dimensions "
-                    "zip to null cosines and report silent zero "
-                    "contamination"
-                )
-            return
-        from trialsync_etl_spark.storage import atomic_write_json
-
-        atomic_write_json(_emb_meta_path(store_path), {"dim": dim})
+    return _EMB_PARAMS.read(store_path)
 
 
 def build_benchmark_embeddings(
@@ -355,7 +281,7 @@ def build_benchmark_embeddings(
         raise ValueError(
             f"benchmark {benchmark_id!r} has no non-null embeddings"
         )
-    _pin_emb_params(store_path, len(probe[0][1]))
+    _EMB_PARAMS.pin(store_path, dim=len(probe[0][1]))
     target = os.path.join(
         store_path, EMBEDDINGS_TABLE, f"benchmark_id={benchmark_id}"
     )
@@ -421,20 +347,10 @@ def semantic_contamination_profile_store(
         semantic_contamination_profile,
     )
 
-    params = read_emb_params(store_path)
-    if params is None:
-        raise FileNotFoundError(
-            f"decontam store {store_path} has no pinned embedding params — "
-            "build a benchmark first (build_benchmark_embeddings)"
-        )
     probe = train_emb.select(F.col(vec_col)).filter(
         F.col(vec_col).isNotNull()
     ).limit(1).collect()
-    if probe and len(probe[0][0]) != params["dim"]:
-        raise ValueError(
-            f"decontam store {store_path} pins embedding dim="
-            f"{params['dim']}; probe batch has dim {len(probe[0][0])}"
-        )
+    _EMB_PARAMS.resolve(store_path, dim=len(probe[0][0]) if probe else None)
     # the store frame is always (doc_id, embedding) — align it with the
     # caller's column names before handing both sides to the one-shot
     bench = read_benchmark_embeddings(spark, store_path, benchmark_ids).select(

@@ -44,6 +44,7 @@ from trialsync_etl_spark.operators.dedup import (
     est_jaccard,
     minhash_signatures_narrow,
 )
+from trialsync_etl_spark.storage import atomic_write_text, file_lock, swap_publish
 
 BANDS_TABLE = "bands"
 SIGS_TABLE = "sigs"
@@ -274,12 +275,8 @@ def incremental_dup_pairs(
     # compact_store republish (which deletes the previous version dir
     # right after its swap) could yank files out from under in-flight
     # probe tasks if the lock only covered the append
-    import fcntl
-
-    os.makedirs(os.path.dirname(store_path) or ".", exist_ok=True)
     try:
-        with open(store_path + "__lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
+        with file_lock(store_path + "__lock"):
             _migrate_v1_locked(spark, store_path)
             result = _probe_and_append_locked(
                 spark, sigs, keys, store_path, min_est_jaccard, batch_id,
@@ -421,7 +418,7 @@ def _probe_and_append_locked(
         if os.path.exists(os.path.join(real, SIGS_TABLE))
         else os.path.join(real, SIGS_TABLE)
     )
-    _record_append(store_path, batch_id)
+    atomic_write_text(os.path.join(store_path, LAST_APPEND), batch_id)
     return result
 
 
@@ -435,13 +432,6 @@ def _last_append(store_path: str) -> str | None:
         return None
 
 
-def _record_append(store_path: str, batch_id: str) -> None:
-    path = os.path.join(store_path, LAST_APPEND)
-    with open(path + ".tmp", "w", encoding="utf-8") as fh:
-        fh.write(batch_id)
-    os.replace(path + ".tmp", path)
-
-
 def compact_store(spark: SparkSession, store_path: str) -> int:
     """Maintenance: drop duplicate rows left by re-run appends (same
     doc_id from the same batch_id) from both store tables and rewrite
@@ -450,12 +440,7 @@ def compact_store(spark: SparkSession, store_path: str) -> int:
     ``incremental_dup_pairs`` append cannot commit between them and be
     dropped by the swap. Returns the compacted signature-row count (one
     row per (doc_id, batch_id))."""
-    import fcntl
-
-    from trialsync_etl_spark.storage import swap_publish
-
-    with open(store_path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(store_path + "__lock"):
         _migrate_v1_locked(spark, store_path)
         frames = _store_frames(spark, store_path)
         if frames is None:

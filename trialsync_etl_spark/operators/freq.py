@@ -38,10 +38,11 @@ consumes exactly the keys `heavy_hitters` emits) and
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from trialsync_etl_spark.storage import PinnedParams
 
 DEFAULT_DEPTH = 4
 DEFAULT_WIDTH = 4096
@@ -120,78 +121,30 @@ def cm_estimate(
     )
 
 
-def _cm_params_path(store_path: str) -> str:
-    return store_path + "__cm.json"
+#: (depth, width) pinned beside the store on first append, under the
+#: SAME ``<store>__lock`` append_rollup takes: cells hashed mod a
+#: different width would silently estimate 0 for genuinely hot keys —
+#: the exact silently-wrong failure the sketch store's folded-id guard
+#: exists to keep loud. A store created before the params file existed
+#: resolves to the caller's values or the module defaults.
+_CM_PARAMS = PinnedParams(
+    label="CM store",
+    suffix="__cm.json",
+    lock_suffix="__lock",
+    keys=("depth", "width"),
+    hint="restore it with the store's original (depth, width), or rebuild "
+    "the store from its source",
+    why="mixed parameters break the overestimate-only guarantee",
+    defaults={"depth": DEFAULT_DEPTH, "width": DEFAULT_WIDTH},
+)
 
 
 def read_cm_params(store_path: str) -> dict | None:
     """The store's pinned (depth, width), or None for a store created
     before the params file existed (callers then fall back to their own
-    arguments — the legacy behavior)."""
-    import json
-
-    try:
-        with open(_cm_params_path(store_path)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _pin_cm_params(store_path: str, depth: int, width: int) -> None:
-    """Persist (depth, width) beside the store on first append and REJECT
-    a mismatch on every later one: cells hashed mod a different width
-    would silently estimate 0 for genuinely hot keys — the exact
-    silently-wrong failure the sketch store's folded-id guard exists to
-    keep loud. The check-and-write runs under the store's ``__lock``
-    flock, so two concurrent first appends with DIFFERENT parameters
-    serialize: the loser raises before writing any cells."""
-    import fcntl
-    import json
-
-    # the read-check-write is atomic under the SAME <store>__lock flock
-    # append_rollup takes (released before the append — flock is per-open-
-    # file-description, so holding it here would deadlock the append's own
-    # acquire): two concurrent FIRST appends with different (depth, width)
-    # now serialize — the loser sees the winner's pin and raises BEFORE
-    # writing any cells, instead of landing a batch under a mismatched pin
-    os.makedirs(os.path.dirname(store_path) or ".", exist_ok=True)
-    with open(store_path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        existing = read_cm_params(store_path)
-        if existing is not None:
-            if (existing["depth"], existing["width"]) != (depth, width):
-                raise ValueError(
-                    f"CM store {store_path} was built with depth="
-                    f"{existing['depth']} width={existing['width']}; got "
-                    f"depth={depth} width={width} — mixed parameters break "
-                    "the overestimate-only guarantee"
-                )
-            return
-        from trialsync_etl_spark.storage import atomic_write_json
-
-        atomic_write_json(
-            _cm_params_path(store_path), {"depth": depth, "width": width}
-        )
-
-
-def _resolve_cm_params(
-    store_path: str, depth: int | None, width: int | None
-) -> tuple[int, int]:
-    """Readers take (depth, width) from the store's pinned params;
-    explicitly-passed values are validated against them (a mismatch is
-    the silent-zero-estimates bug), and a pre-params legacy store falls
-    back to the caller's values or the module defaults."""
-    params = read_cm_params(store_path)
-    if params is None:
-        return depth or DEFAULT_DEPTH, width or DEFAULT_WIDTH
-    for name, got, pinned in (
-        ("depth", depth, params["depth"]), ("width", width, params["width"])
-    ):
-        if got is not None and got != pinned:
-            raise ValueError(
-                f"CM store {store_path} pins {name}={pinned}, got {got}"
-            )
-    return params["depth"], params["width"]
+    arguments — the legacy behavior). A present-but-unreadable file
+    raises the "unreadable … rebuild" error."""
+    return _CM_PARAMS.read(store_path)
 
 
 def append_cm_rollup(
@@ -222,7 +175,7 @@ def append_cm_rollup(
     store must carry both."""
     from trialsync_etl_spark.operators.sketch_store import append_rollup
 
-    _pin_cm_params(store_path, depth, width)
+    _CM_PARAMS.pin(store_path, depth=depth, width=width)
     cells = cm_sketch(df, key_col, depth, width).withColumnRenamed(
         "cnt", "n_rows"
     )
@@ -302,7 +255,7 @@ def cm_store_estimate(
     params — pass them only to assert what you expect (mismatch raises).
     ``where`` windows exclude the compacted ``__base`` partition unless
     ``include_base=True`` (see :func:`read_cm_store`)."""
-    depth, width = _resolve_cm_params(store_path, depth, width)
+    depth, width = _CM_PARAMS.resolve(store_path, depth=depth, width=width)
     return cm_estimate(
         read_cm_store(spark, store_path, where, include_base),
         keys, key_col, depth, width,
@@ -343,7 +296,7 @@ def hot_key_drift(
     gates an action."""
     if key_col in ("share_a", "share_b", "share_delta"):
         raise ValueError(f"key_col {key_col!r} collides with output columns")
-    depth, width = _resolve_cm_params(store_path, depth, width)
+    depth, width = _CM_PARAMS.resolve(store_path, depth=depth, width=width)
     out = None
     for tag, where, inc_base in (
         ("a", where_a, include_base_a), ("b", where_b, include_base_b)

@@ -44,6 +44,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from trialsync_etl_spark.storage import atomic_write_json
+
 #: highest char-n-gram order; inference mixes orders MIN_GRAM_K..GRAM_K
 #: (the fastText recipe — unigrams carry the script signal for CJK,
 #: trigrams separate Latin-script near-neighbors)
@@ -176,20 +178,17 @@ class LangIdModel:
         return tuple(sorted(self.weights))
 
     def save(self, path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "weights": self.weights,
-                    "intercepts": self.intercepts,
-                    "n_buckets": self.n_buckets,
-                    "k": self.k,
-                    "hash_fn": self.hash_fn,
-                    "min_k": self.min_k,
-                },
-                f,
-            )
-        os.replace(tmp, path)
+        atomic_write_json(
+            path,
+            {
+                "weights": self.weights,
+                "intercepts": self.intercepts,
+                "n_buckets": self.n_buckets,
+                "k": self.k,
+                "hash_fn": self.hash_fn,
+                "min_k": self.min_k,
+            },
+        )
 
     @classmethod
     def load(cls, path: str) -> "LangIdModel":

@@ -151,16 +151,12 @@ def zorder_table(
     concurrent append). ``keep_versions=None`` preserves the table's
     existing retention width, like compact_table. Returns
     {"files", "bytes", "cols"}."""
-    import fcntl
     import math
-    import os
 
     from trialsync_etl_spark import storage
-    from trialsync_etl_spark.storage import swap_publish, table_file_stats
+    from trialsync_etl_spark.storage import file_lock, swap_publish, table_file_stats
 
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(path + "__lock"):
         if keep_versions is None:
             keep_versions = storage.table_keep_versions(path)
         _, total_bytes = table_file_stats(path)

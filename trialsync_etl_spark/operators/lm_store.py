@@ -52,12 +52,16 @@ registry query against the same DuckDB oracle as the one-shot
 
 from __future__ import annotations
 
-import fcntl
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from trialsync_etl_spark.storage import (
+    atomic_write_json,
+    file_lock,
+    read_json_sidecar,
+)
 
 VOCAB_TABLE = "vocab"
 BIGRAMS_TABLE = "bigrams"
@@ -85,22 +89,14 @@ def read_lm_meta(store_path: str) -> dict | None:
     unseen_logp}}), or None when no model was ever built. A PRESENT-but-
     unreadable meta raises a loud rebuild error: the unseen-token mass
     lives here, and scoring without it is silently wrong."""
-    try:
-        with open(_meta_path(store_path)) as f:
-            meta = json.load(f)
-        if not isinstance(meta, dict) or "models" not in meta:
-            raise ValueError(f"missing 'models' key in {meta!r}")
-        return meta
-    except FileNotFoundError:
-        return None
-    except (json.JSONDecodeError, ValueError) as e:
-        raise ValueError(
-            f"lm store meta {_meta_path(store_path)} is unreadable ({e}) "
-            "— the per-model scalars (add_k, unseen_logp) are part of the "
-            "model; rebuild by re-running build_lm_model for the affected "
-            "model_id (or restore the meta from the store's source of "
-            "truth)"
-        ) from e
+    return read_json_sidecar(
+        _meta_path(store_path),
+        "lm store meta",
+        "the per-model scalars (add_k, unseen_logp) are part of the model; "
+        "rebuild by re-running build_lm_model for the affected model_id (or "
+        "restore the meta from the store's source of truth)",
+        keys=("models",),
+    )
 
 
 def list_lm_models(store_path: str) -> list[str]:
@@ -128,13 +124,9 @@ def _record_model(store_path: str, model_id: str, params: dict) -> None:
     """Register one model's scalars under the store flock (read-modify-
     write + tmp+rename: concurrent builds of different ids serialize and
     both land; a crash mid-write never leaves a torn meta)."""
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(os.path.join(store_path, "__lock")):
         meta = read_lm_meta(store_path) or {"models": {}}
         meta["models"][model_id] = params
-        from trialsync_etl_spark.storage import atomic_write_json
-
         atomic_write_json(_meta_path(store_path), meta)
 
 

@@ -37,6 +37,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trialsync_etl_spark.storage import PinnedParams
+
 #: grid: 8 rows × 9 columns = 72 cells → 8 comparisons per row; the
 #: 64th bit is dropped to keep the packed signature a non-negative int64
 GRID_W = 9
@@ -421,30 +423,25 @@ def curate_media(
 MEDIA_SIGS_TABLE = "dhash"
 
 
-def _media_meta_path(store_path: str) -> str:
-    return store_path + "__meta.json"
+_MEDIA_PARAMS = PinnedParams(
+    label="media signature store",
+    suffix="__meta.json",
+    lock_suffix="/__lock",
+    keys=("codec",),
+    hint="re-append any batch to re-pin, or restore the meta from the "
+    "store's source of truth",
+    why="signatures of another codec or kind share no space and report "
+    "silent zero duplication",
+    # pre-r14 metas carry no sig_kind: they are dhash63 stores
+    defaults={"sig_kind": "dhash63"},
+)
 
 
 def read_media_store_params(store_path: str) -> dict | None:
     """Pinned {codec}, or None when never pinned; PRESENT-but-unreadable
     meta raises the rebuild-instructing error (the store-family
     contract)."""
-    import json
-
-    try:
-        with open(_media_meta_path(store_path)) as f:
-            params = json.load(f)
-        if not isinstance(params, dict) or "codec" not in params:
-            raise ValueError(f"missing 'codec' in {params!r}")
-        return params
-    except FileNotFoundError:
-        return None
-    except (json.JSONDecodeError, ValueError) as e:
-        raise ValueError(
-            f"media signature store meta {_media_meta_path(store_path)} is "
-            f"unreadable ({e}) — re-append any batch to re-pin, or restore "
-            "the meta from the store's source of truth"
-        ) from e
+    return _MEDIA_PARAMS.read(store_path)
 
 
 def _sig_kind(name: str) -> dict:
@@ -453,41 +450,6 @@ def _sig_kind(name: str) -> dict:
             f"sig_kind must be one of {sorted(SIG_KINDS)}, got {name!r}"
         )
     return SIG_KINDS[name]
-
-
-def _pin_media_params(
-    store_path: str, codec: str, sig_kind: str = "dhash63"
-) -> None:
-    import fcntl
-    import json
-    import os
-
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        existing = read_media_store_params(store_path)
-        if existing is not None:
-            if existing["codec"] != codec:
-                raise ValueError(
-                    f"media signature store {store_path} pins codec="
-                    f"{existing['codec']!r}; got {codec!r} — mixed codec "
-                    "signature spaces report silent zero duplication"
-                )
-            # pre-r14 metas carry no sig_kind: they are dhash63 stores
-            if existing.get("sig_kind", "dhash63") != sig_kind:
-                raise ValueError(
-                    f"media signature store {store_path} pins sig_kind="
-                    f"{existing.get('sig_kind', 'dhash63')!r}; got "
-                    f"{sig_kind!r} — mixed signature KINDS share no "
-                    "space and report silent zero duplication"
-                )
-            return
-        from trialsync_etl_spark.storage import atomic_write_json
-
-        atomic_write_json(
-            _media_meta_path(store_path),
-            {"codec": codec, "sig_kind": sig_kind},
-        )
 
 
 def read_media_signatures(spark, store_path: str) -> DataFrame:
@@ -540,7 +502,7 @@ def media_neardup_incremental(
         max_distance = kind["default_distance"]
     n_bands = resolve_bands(n_bands, max_distance, kind["n_bits"])
     codec = "real" if use_real_codec else "fake"
-    _pin_media_params(store_path, codec, sig_kind)
+    _MEDIA_PARAMS.pin(store_path, codec=codec, sig_kind=sig_kind)
 
     from trialsync_etl_spark.cache import track_persist
 

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import textstats
+from trialsync_etl_spark.storage import atomic_write_json
 
 #: feature order is part of the model contract (weights key by name, so
 #: the order only matters for the training assembler's determinism)
@@ -65,14 +66,9 @@ class QualityModel:
     intercept: float
 
     def save(self, path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"weights": self.weights, "intercept": self.intercept}, f
-            )
-        import os
-
-        os.replace(tmp, path)
+        atomic_write_json(
+            path, {"weights": self.weights, "intercept": self.intercept}
+        )
 
     @classmethod
     def load(cls, path: str) -> "QualityModel":

@@ -29,12 +29,14 @@ the same ``<path>__lock`` flock the other stores use.
 
 from __future__ import annotations
 
-import fcntl
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from trialsync_etl_spark.storage import (
+    atomic_write_json,
+    file_lock,
+    read_json_sidecar,
+)
 
 #: Datasketches lgConfigK: 2^12 registers ≈ 1.6% relative standard error
 #: at ~4 KB per sketch — the usual accuracy/size sweet spot for rollups
@@ -91,9 +93,7 @@ def append_rollup(rollup: DataFrame, store_path: str, batch_id: str) -> None:
     the idempotent sketch union cannot inflate."""
     if not batch_id or batch_id.startswith("__"):
         raise ValueError("batch_id must be non-empty and not start with '__'")
-    os.makedirs(os.path.dirname(store_path) or ".", exist_ok=True)
-    with open(store_path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(store_path + "__lock"):
         # the folded check lives INSIDE the lock: a concurrent
         # compact_sketch_store folding this batch_id between an unlocked
         # check and the write would re-land the partition and silently
@@ -175,17 +175,21 @@ def _folded_path(store_path: str) -> str:
 def _read_folded(store_path: str) -> set[str]:
     """Batch ids whose contribution lives inside ``__base`` — persisted
     by compaction so a later append of the same id fails loudly instead
-    of double-counting (HLL cannot subtract)."""
-    try:
-        with open(_folded_path(store_path), encoding="utf-8") as fh:
-            return set(json.load(fh))
-    except (FileNotFoundError, json.JSONDecodeError):
-        return set()
+    of double-counting (HLL cannot subtract). A corrupt file raises
+    instead of reading as empty: an empty set would let a folded id land
+    again (double-counted ``n_rows``), and the next compaction would
+    rewrite the file without the lost ids."""
+    folded = read_json_sidecar(
+        _folded_path(store_path),
+        "sketch store folded-id list",
+        "restore it, or rewrite it as a JSON list of every batch id ever "
+        "folded into '__base' (re-appending one of those double-counts "
+        "n_rows)",
+    )
+    return set(folded or ())
 
 
 def _write_folded(store_path: str, folded: set[str]) -> None:
-    from trialsync_etl_spark.storage import atomic_write_json
-
     atomic_write_json(_folded_path(store_path), sorted(folded))
 
 
@@ -209,8 +213,10 @@ def compact_sketch_store(
 
     The read happens under the same lock as the rewrite (listing outside
     it would drop a concurrent append, cf. storage.compact_table)."""
-    with open(store_path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(store_path + "__lock"):
+        # read BEFORE the rewrite: a corrupt list must stop the fold, not
+        # surface after the data already moved into __base
+        folded = _read_folded(store_path)
         store = read_sketch_store(spark, store_path)
         key_cols = store_key_cols(store)
         batch_ids = {
@@ -238,9 +244,7 @@ def compact_sketch_store(
         out.localCheckpoint().write.mode("overwrite").partitionBy(
             "batch_id"
         ).parquet(store_path)
-        _write_folded(
-            store_path, (_read_folded(store_path) | fold_ids) - {BASE_BATCH}
-        )
+        _write_folded(store_path, (folded | fold_ids) - {BASE_BATCH})
     n_keys = read_sketch_store(spark, store_path).count()
     return {
         "batches_merged": len(fold_ids - {BASE_BATCH}),

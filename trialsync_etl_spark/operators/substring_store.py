@@ -37,83 +37,35 @@ query's DuckDB oracle); out-of-order ids keep the earlier-arrived copy
 
 from __future__ import annotations
 
-import fcntl
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import dedup
+from trialsync_etl_spark.storage import PinnedParams, file_lock
 
 FIRSTS_TABLE = "firsts"
 BASE_BATCH = "__base"
 
 
-def _meta_path(store_path: str) -> str:
-    return store_path + "__meta.json"
+_PARAMS = PinnedParams(
+    label="substring store",
+    suffix="__meta.json",
+    lock_suffix="/__lock",
+    keys=("k", "hash_fn"),
+    hint="re-append any batch to re-pin, or restore the meta file from "
+    "the store's source of truth",
+    why="mixed gram spaces report silent zero duplication",
+    first_step="append a batch first (append_gram_firsts)",
+)
 
 
 def read_substring_params(store_path: str) -> dict | None:
     """Pinned (k, hash_fn), or None when never pinned; PRESENT-but-
-    unreadable meta raises the rebuild-instructing error (the
-    decontam-store contract — a corrupt pin must never be silently
-    re-pinned with different params)."""
-    try:
-        with open(_meta_path(store_path)) as f:
-            params = json.load(f)
-        if not isinstance(params, dict) or not {"k", "hash_fn"} <= set(params):
-            raise ValueError(f"missing keys in {params!r}")
-        return params
-    except FileNotFoundError:
-        return None
-    except (json.JSONDecodeError, ValueError) as e:
-        raise ValueError(
-            f"substring store meta {_meta_path(store_path)} is unreadable "
-            f"({e}) — re-append any batch to re-pin, or restore the meta "
-            "file from the store's source of truth"
-        ) from e
-
-
-def _pin_params(store_path: str, k: int, hash_fn: str) -> None:
-    os.makedirs(store_path, exist_ok=True)
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        existing = read_substring_params(store_path)
-        if existing is not None:
-            if (existing["k"], existing["hash_fn"]) != (k, hash_fn):
-                raise ValueError(
-                    f"substring store {store_path} pins k={existing['k']} "
-                    f"hash_fn={existing['hash_fn']}; got k={k} "
-                    f"hash_fn={hash_fn} — mixed gram spaces report silent "
-                    "zero duplication"
-                )
-            return
-        from trialsync_etl_spark.storage import atomic_write_json
-
-        # the shared small-artifact publish (object-storage caveat
-        # documented ONCE on storage.atomic_write_text)
-        atomic_write_json(_meta_path(store_path), {"k": k, "hash_fn": hash_fn})
-
-
-def _resolve_params(
-    store_path: str, k: int | None, hash_fn: str | None
-) -> tuple[int, str]:
-    params = read_substring_params(store_path)
-    if params is None:
-        raise FileNotFoundError(
-            f"substring store {store_path} has no pinned params — append a "
-            "batch first (append_gram_firsts)"
-        )
-    for name, got, pinned in (
-        ("k", k, params["k"]), ("hash_fn", hash_fn, params["hash_fn"])
-    ):
-        if got is not None and got != pinned:
-            raise ValueError(
-                f"substring store {store_path} pins {name}={pinned}, "
-                f"got {got}"
-            )
-    return params["k"], params["hash_fn"]
+    unreadable meta raises the rebuild-instructing error (a corrupt pin
+    must never be silently re-pinned with different params)."""
+    return _PARAMS.read(store_path)
 
 
 def read_gram_firsts(spark: SparkSession, store_path: str) -> DataFrame:
@@ -147,7 +99,7 @@ def append_gram_firsts(
         raise ValueError(
             f"batch_id {batch_id!r} must be a non-empty partition-safe tag"
         )
-    _pin_params(store_path, k, hash_fn)
+    _PARAMS.pin(store_path, k=k, hash_fn=hash_fn)
     mins = (
         dedup.positional_shingles(docs, id_col, text_col, k, hash_fn)
         .groupBy("h")
@@ -198,7 +150,7 @@ def duplicate_spans_incremental(
 
     Same output contract as :func:`dedup.duplicate_spans`. (k, hash_fn)
     come from the store pin; pass them only to assert expectations."""
-    k, hash_fn = _resolve_params(store_path, k, hash_fn)
+    k, hash_fn = _PARAMS.resolve(store_path, k=k, hash_fn=hash_fn)
     if min_len < k:
         raise ValueError(
             f"min_len ({min_len}) must be >= k ({k}): spans are unions "
@@ -256,8 +208,7 @@ def compact_gram_store(spark: SparkSession, store_path: str) -> int:
     table = os.path.join(store_path, FIRSTS_TABLE)
     if not os.path.isdir(table):
         return 0
-    with open(os.path.join(store_path, "__lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(os.path.join(store_path, "__lock")):
         parts = [
             d for d in os.listdir(table)
             if d.startswith("batch_id=") and d != f"batch_id={BASE_BATCH}"

@@ -223,25 +223,15 @@ class ScheduleStore:
                     self._specs[row["procedure_name"]] = ScheduleSpec(**row)
 
     def _save(self) -> None:
-        """Atomic write via a UNIQUE temp file: two concurrent writers must
-        never interleave into one tmp path (callers hold self._mu, but the
-        unique name also guards multi-process writers)."""
         import json
         import os
-        import tempfile
+
+        from trialsync_etl_spark.storage import atomic_write_text
 
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(self.path) or ".", suffix=".tmp"
-        )
         rows = [vars(s) for s in sorted(
             self._specs.values(), key=lambda s: s.procedure_name)]
-        with os.fdopen(fd, "w") as f:
-            json.dump(rows, f, indent=1)
-        # mkstemp creates 0600; restore umask-style visibility so other
-        # readers of the store (monitoring, cron) keep working
-        os.chmod(tmp, 0o644)
-        os.replace(tmp, self.path)
+        atomic_write_text(self.path, json.dumps(rows, indent=1))
 
     def upsert(
         self,

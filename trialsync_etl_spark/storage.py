@@ -1,10 +1,11 @@
-"""Atomic parquet-table publication (the engine's single swap primitive).
+"""Atomic publication: parquet tables by pointer swap, and the small
+sidecar files every store keeps beside its data.
 
-Publication is a **versioned directory + pointer swap**: each publish
-writes a fresh ``<path>__v<token>`` directory, then atomically repoints
-``<path>`` (a symlink) at it with ``os.replace`` — a single POSIX rename,
-so a reader resolving the published path always sees either the old or
-the new complete version, never a missing or half-written table.
+**Tables.** Publication is a **versioned directory + pointer swap**: each
+publish writes a fresh ``<path>__v<token>`` directory, then atomically
+repoints ``<path>`` (a symlink) at it with ``os.replace`` — a single POSIX
+rename, so a reader resolving the published path always sees either the
+old or the new complete version, never a missing or half-written table.
 Concurrent publishes to the same path are serialized by an exclusive
 ``flock`` on ``<path>__lock``.
 
@@ -29,18 +30,45 @@ Guarantees and their limits (stated precisely, not aspirationally):
 
 Crash-safe: leftovers from a crash at any point (a ``__v*`` version
 referenced by neither the pointer nor the history manifest, legacy
-``__old``/``__staging`` dirs, a stray ``__ptr`` temp link or
-``__history.json.tmp``) are cleared on the next publish, so a table can
-never be permanently wedged.
+``__old``/``__staging`` dirs, a stray ``__ptr`` temp link or history
+temp file) are cleared on the next publish, so a table can never be
+permanently wedged.
+
+**Sidecars.** Store pins, locks, markers and state files (run
+watermarks and checkpoints, schedules, model JSONs, folded-id lists,
+index metas) go through three primitives, and only these:
+
+- :func:`file_lock` — the exclusive ``flock`` on a store's lock file;
+- :func:`atomic_write_text` / :func:`atomic_write_json` — the one
+  small-file writer: a uniquely named temp file in the target dir, mode
+  0644, then ``os.replace``;
+- :class:`PinnedParams` — the pinned-parameters sidecar of a store: a
+  loud read, a first-write-wins pin under the store lock, and the check
+  of explicitly passed values against the pin.
+
+The object-storage caveat, stated once: ``os.replace`` and ``flock`` are
+atomic only on a POSIX filesystem. On object storage (S3/GCS) rename is
+copy+delete and there is no flock, so neither the sidecar writer nor the
+table pointer swap is atomic there. The PORTABLE idioms this repo's
+stores already use are (a) per-batch PARTITION OVERWRITE keyed by
+batch_id/model_id — a replay rewrites its own partition and readers
+aggregate partitions, so a torn write is repaired by the retry, never
+folded twice — and (b) distinct-merge on read for append-style tables. A
+cloud deployment swaps these primitives for a conditional PUT (S3
+If-None-Match / GCS preconditions) or a real table format's commit
+protocol; everything above them is already shaped for that.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
 import json
 import os
 import shutil
+import tempfile
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
@@ -87,10 +115,9 @@ def table_keep_versions(publish_path: str) -> int:
 
 
 def _write_history(publish_path: str, entries: list[dict], keep: int) -> None:
-    tmp = _history_path(publish_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"keep": int(keep), "versions": entries}, f)
-    os.replace(tmp, _history_path(publish_path))
+    atomic_write_json(
+        _history_path(publish_path), {"keep": int(keep), "versions": entries}
+    )
 
 
 def _clear_crash_leftovers(publish_path: str) -> None:
@@ -100,6 +127,7 @@ def _clear_crash_leftovers(publish_path: str) -> None:
     current = _current_target(publish_path)
     parent = os.path.dirname(publish_path) or "."
     base = os.path.basename(publish_path)
+    history = os.path.basename(_history_path(publish_path))
     retained = {
         os.path.realpath(os.path.join(parent, e["dir"]))
         for e in _read_history(publish_path)
@@ -112,12 +140,15 @@ def _clear_crash_leftovers(publish_path: str) -> None:
         real = os.path.realpath(full)
         if name.startswith(base + "__v") and real != current and real not in retained:
             shutil.rmtree(full, ignore_errors=True)
+        elif name.endswith(".tmp") and name.lstrip(".").startswith(history):
+            # the history writer's temp file (the publish lock is held,
+            # so no live write owns it)
+            os.remove(full)
     for legacy in (publish_path + "__old", publish_path + "__staging"):
         if os.path.isdir(legacy) and not os.path.islink(legacy):
             shutil.rmtree(legacy, ignore_errors=True)
-    for stray in (publish_path + "__ptr", _history_path(publish_path) + ".tmp"):
-        if os.path.lexists(stray):
-            os.remove(stray)
+    if os.path.lexists(publish_path + "__ptr"):
+        os.remove(publish_path + "__ptr")
 
 
 def write_counted(
@@ -170,8 +201,7 @@ def swap_publish(
         return _publish_locked(
             df, publish_path, partition_by, keep_versions, return_count
         )
-    with open(publish_path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(publish_path + "__lock"):
         return _publish_locked(
             df, publish_path, partition_by, keep_versions, return_count
         )
@@ -328,9 +358,7 @@ def compact_table(
     """
     import math
 
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path + "__lock", "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
+    with file_lock(path + "__lock"):
         if keep_versions is None:
             keep_versions = table_keep_versions(path)
         files_before, total_bytes = table_file_stats(path)
@@ -412,34 +440,151 @@ def read_published_pylist(publish_path: str) -> list[dict]:
 
 
 # ---------------------------------------------------------------------------
-# small-artifact publication (store metas, model JSONs, pointer files)
+# sidecars: the lock, the small-file writer, pinned store parameters
 # ---------------------------------------------------------------------------
-#: THE object-storage note, written once (r14 — every store module used
-#: to restate its own variant): ``os.replace`` is atomic only on a
-#: POSIX filesystem; on object storage (S3/GCS) rename is copy+delete,
-#: so neither the tmp+rename below nor swap_publish's pointer flip is
-#: atomic there. The PORTABLE idioms this repo's stores already use are
-#: (a) per-batch PARTITION OVERWRITE keyed by batch_id/model_id — a
-#: replay rewrites its own partition and readers aggregate partitions,
-#: so a torn write is repaired by the retry, never folded twice — and
-#: (b) distinct-merge on read for append-style tables. A cloud
-#: deployment swaps this helper for a conditional PUT (S3
-#: If-None-Match / GCS preconditions) or a real table format's commit
-#: protocol; everything above the helper is already shaped for that.
-OBJECT_STORAGE_NOTE = "see storage.atomic_write_text"
+@contextlib.contextmanager
+def file_lock(path: str):
+    """Hold an exclusive ``flock`` on the lock file ``path`` (created,
+    with its parent dir) for the with-block. flock belongs to the open
+    file description, so another open of the same path blocks — other
+    threads included — and a nested ``file_lock`` on a path this thread
+    already holds deadlocks (hence ``swap_publish(already_locked=True)``).
+    POSIX only; see the module docstring."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path, "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        yield
 
 
 def atomic_write_text(path: str, text: str) -> None:
-    """Publish a SMALL artifact (store meta JSON, model constants,
-    merges table) as one file: write ``<path>.tmp``, then ``os.replace``
-    — a crash leaves either the old complete file or the new one, never
-    a torn write. POSIX-atomic only; see the object-storage note above."""
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(text)
-    os.replace(tmp, path)
+    """Publish a SMALL file (store meta, marker, state file, model JSON,
+    merges table) whole: write a uniquely named temp file in the target
+    dir — concurrent writers never share one — set mode 0644 (mkstemp
+    creates 0600; monitoring and cron readers of the state files need
+    read access), then ``os.replace``. A crash leaves either the old
+    complete file or the new one, never a torn write. The temp name is
+    hidden (``.<name>.*.tmp``) so a parquet reader of the dir skips it.
+    POSIX-atomic only; see the module docstring."""
+    fd, tmp = tempfile.mkstemp(
+        dir=os.path.dirname(path) or ".",
+        prefix="." + os.path.basename(path) + ".",
+        suffix=".tmp",
+    )
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            f.write(text)
+        os.chmod(tmp, 0o644)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
 
 
 def atomic_write_json(path: str, obj) -> None:
     """:func:`atomic_write_text` for a JSON payload."""
     atomic_write_text(path, json.dumps(obj))
+
+
+def read_json_sidecar(
+    path: str, what: str, hint: str, keys: tuple[str, ...] = ()
+):
+    """The loud read of a JSON sidecar: ``None`` when the file is missing;
+    a ``ValueError`` "<what> <path> is unreadable (…) — <hint>" when it
+    is corrupt, or is not a JSON object holding ``keys`` (a JSON list when
+    no keys are given). A present-but-broken sidecar never reads as
+    "absent": that would let the next write silently replace the state
+    it guards."""
+    try:
+        with open(path, encoding="utf-8") as f:
+            doc = json.load(f)
+        if not isinstance(doc, dict if keys else list):
+            raise ValueError(f"unexpected document {doc!r}")
+        missing = [k for k in keys if k not in doc]
+        if missing:
+            raise ValueError(f"missing keys {missing} in {doc!r}")
+        return doc
+    except FileNotFoundError:
+        return None
+    except ValueError as e:
+        raise ValueError(f"{what} {path} is unreadable ({e}) — {hint}") from e
+
+
+@dataclass(frozen=True)
+class PinnedParams:
+    """A store's pinned-parameters sidecar ``<store><suffix>``: the values
+    every append and probe of the store must share (grams, shingles or
+    cells under another k, hash, width, dim or codec share no space, so a
+    mismatch reads as silent zero matches, not as an error). Each store
+    declares its file, lock and messages here once; :meth:`read`,
+    :meth:`pin` and :meth:`resolve` are the whole contract."""
+
+    #: names the store in every message ("substring store")
+    label: str
+    #: the sidecar is ``store_path + suffix``
+    suffix: str
+    #: the store's lock file is ``store_path + lock_suffix``
+    lock_suffix: str
+    #: the keys a readable sidecar must hold
+    keys: tuple[str, ...]
+    #: how to recover an unreadable sidecar
+    hint: str
+    #: why a mismatched pin is refused
+    why: str
+    #: how to pin a store that has no sidecar yet
+    first_step: str = ""
+    #: the value a store that never recorded a key implies for it; when
+    #: every key has one, a store without a sidecar resolves to the
+    #: caller's values or these (a store older than its sidecar)
+    defaults: dict = field(default_factory=dict)
+
+    def path(self, store_path: str) -> str:
+        return store_path + self.suffix
+
+    def read(self, store_path: str) -> dict | None:
+        """The pinned params, or None when never pinned; a corrupt
+        sidecar raises the "unreadable" error with this store's hint."""
+        return read_json_sidecar(
+            self.path(store_path), f"{self.label} meta", self.hint, self.keys
+        )
+
+    def pin(self, store_path: str, **params) -> None:
+        """Write ``params`` on the store's first use; on every later use
+        raise if they differ from the pin. The read-check-write holds the
+        store lock, so two concurrent first pins with different params
+        serialize and the loser raises before writing anything. The lock
+        is released on return: a caller that takes the same lock next
+        would deadlock if it were held."""
+        with file_lock(store_path + self.lock_suffix):
+            pinned = self.read(store_path)
+            if pinned is None:
+                atomic_write_json(self.path(store_path), params)
+                return
+            for name, got in params.items():
+                want = pinned.get(name, self.defaults.get(name))
+                if got != want:
+                    raise ValueError(
+                        f"{self.label} {store_path} pins {name}={want!r}; "
+                        f"got {name}={got!r} — {self.why}"
+                    )
+
+    def resolve(self, store_path: str, **passed) -> tuple:
+        """The pinned values in ``keys`` order, for a reader. Explicitly
+        passed values (not None) must equal the pin; a store with no
+        sidecar raises FileNotFoundError unless ``defaults`` covers every
+        key."""
+        pinned = self.read(store_path)
+        if pinned is None:
+            if set(self.keys) <= set(self.defaults):
+                return tuple(passed.get(k) or self.defaults[k] for k in self.keys)
+            raise FileNotFoundError(
+                f"{self.label} {store_path} has no pinned params — "
+                f"{self.first_step}"
+            )
+        for name, got in passed.items():
+            if got is not None and got != pinned[name]:
+                raise ValueError(
+                    f"{self.label} {store_path} pins {name}={pinned[name]!r}, "
+                    f"got {got!r}"
+                )
+        return tuple(pinned[k] for k in self.keys)

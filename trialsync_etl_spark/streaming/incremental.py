@@ -23,12 +23,13 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from trialsync_etl_spark.storage import atomic_write_text
 
 MAX_FAILED_PARAMS = 100
 
@@ -111,11 +112,7 @@ class WatermarkStore:
             return json.load(f)
 
     def _save(self, data: dict) -> None:
-        d = os.path.dirname(self.path) or "."
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump(data, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        atomic_write_text(self.path, json.dumps(data, indent=1, sort_keys=True))
 
     @staticmethod
     def _key(job: str, param: object = None) -> str:
@@ -188,11 +185,7 @@ class CheckpointStore:
             with open(self.path) as f:
                 data = json.load(f)
         data[run_id] = asdict(cp)
-        d = os.path.dirname(self.path) or "."
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump(data, f, indent=1)
-        os.replace(tmp, self.path)
+        atomic_write_text(self.path, json.dumps(data, indent=1))
         self._last_save = time.monotonic()
         self._last_param_index = cp.parameter_index
 

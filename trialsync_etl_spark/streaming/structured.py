@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from trialsync_etl_spark.cache import release_persisted
+from trialsync_etl_spark.storage import atomic_write_json, atomic_write_text
 
 
 def read_landing_stream(
@@ -211,10 +212,7 @@ def _stream_instance_tag(checkpoint_dir: str, marker_name: str) -> str:
     except FileNotFoundError:
         pass
     tag = uuid.uuid4().hex
-    tmp = marker + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(tag)
-    os.replace(tmp, marker)
+    atomic_write_text(marker, tag)
     return tag
 
 
@@ -1274,13 +1272,7 @@ class SemanticDupStreamSink(_GateSink):
             return False
 
     def _save_prescreen_state(self) -> None:
-        import json
-
-        path = self._prescreen_state_path()
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"on": self._auto_on}, fh)
-        os.replace(tmp, path)
+        atomic_write_json(self._prescreen_state_path(), {"on": self._auto_on})
 
 
 class DecontamStreamSink(_GateSink):
