@@ -34,7 +34,7 @@ import time
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.plans import registry
-from trialsync_etl_spark.session import get_spark
+from trialsync_etl_spark.session import DEFAULT_CPUS, get_spark
 
 HEADLINE = [
     "a1_pricing_summary",
@@ -1233,6 +1233,8 @@ def compact_line(
     quiet_wait_s: float | None = None,
     degraded: bool | None = None,
     sentinel_flags: int = 0,
+    cpus: int | None = None,
+    parallelism: int | None = None,
 ) -> str:
     """The ONE printed line, kept deliberately small: plain float medians
     per query (the r4 shape the recording driver demonstrably parses),
@@ -1241,7 +1243,9 @@ def compact_line(
     1-minute host loadavg sampled BEFORE the run — the field that lets a
     reviewer adjudicate a round-over-round swing as host noise instead of
     re-running archaeology (three rounds of 20-30% phantom warehouse
-    swings were exactly this). Everything else lives in the detail file."""
+    swings were exactly this). ``cpus`` (the local[N] core count) and
+    ``parallelism`` (``sc.defaultParallelism``) say which machine shape
+    the timings belong to. Everything else lives in the detail file."""
     payload: dict = {
         "metric": "headline_suite_total",
         "value": round(total, 3),
@@ -1261,6 +1265,10 @@ def compact_line(
         payload["load"] = round(load, 2)
     if cpu_ms is not None:
         payload["cpu_ms"] = round(cpu_ms, 1)
+    if cpus is not None:
+        payload["cpus"] = cpus
+    if parallelism is not None:
+        payload["parallelism"] = parallelism
     # the record judges itself: a run started on a contended host (prior
     # loadavg past DEGRADED_LOAD, or the fixed-work CPU probe more than
     # DEGRADED_CPU_RATIO over its pinned quiet-host value) is flagged in
@@ -1316,7 +1324,9 @@ def compact_line(
     # the JSON (main() also exits non-zero) so the record is visibly invalid
     if n_failed:
         payload["warehouse_build_failed_transforms"] = n_failed
-    return json.dumps(payload)
+    # no-space separators: the same JSON, ~135 chars shorter at the full
+    # inventory (the cpus/parallelism fields took the spaced form to 1811)
+    return json.dumps(payload, separators=(",", ":"))
 
 
 def main() -> None:
@@ -1608,6 +1618,8 @@ def main() -> None:
         "cpu_ms_end": round(cpu_ms_end, 1),
         "mc_ms_end": round(mc_ms_end, 1),
         "quiet_wait_s": round(quiet_wait_s, 1),
+        "cpus": DEFAULT_CPUS,
+        "parallelism": spark.sparkContext.defaultParallelism,
         "sentinel_base_s": sentinel_base,
         "sentinel_floor_s": sentinel_floor,
         "queries": times,
@@ -1647,6 +1659,8 @@ def main() -> None:
         quiet_wait_s=quiet_wait_s,
         degraded=(start_degraded or end_degraded or mid_degraded) or None,
         sentinel_flags=sentinel_flags,
+        cpus=detail["cpus"],
+        parallelism=detail["parallelism"],
     )
     if len(line) > 1800:  # the practical driver-buffer contract is ~2K
         print(f"  WARNING: bench line is {len(line)} chars — the driver "

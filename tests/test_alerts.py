@@ -8,7 +8,7 @@ import json
 
 from trialsync_etl_spark.alerts import (
     evaluate_alerts,
-    evaluate_dq_alerts,
+    evaluate_report_alerts,
     evaluate_run_alerts,
     notify,
     webhook_transport,
@@ -73,13 +73,13 @@ def test_dq_alerts_from_landed_report(spark, tmp_path):
         "passed boolean",
     )
     swap_publish(report, f"{wh}/dq_report")
-    fired = evaluate_dq_alerts(wh)
+    fired = [a for a in evaluate_report_alerts(wh) if a["rule"] == "dq_failed"]
     assert len(fired) == 1 and fired[0]["rule"] == "dq_failed"
     assert fired[0]["n_failed"] == 1
     assert fired[0]["checks"][0]["table"] == "fact_b"
     # absent warehouse / report → quiet, never a crash
-    assert evaluate_dq_alerts(None) == []
-    assert evaluate_dq_alerts(str(tmp_path / "nope")) == []
+    assert evaluate_report_alerts(None) == []
+    assert evaluate_report_alerts(str(tmp_path / "nope")) == []
 
 
 def test_notify_consolidates_and_reports_delivery_errors(tmp_path):
@@ -151,6 +151,14 @@ def test_cli_alerts_exit_code_and_payload(tmp_path):
                    out=out2)
     assert rc2 == 0 and json.loads(out2.getvalue())["all_quiet"]
 
+    # a threshold that would switch a rule off is a usage error (exit 2),
+    # not a forever-quiet monitor
+    for bad in (["--min-rate", "nan"], ["--window", "0"]):
+        out3 = io.StringIO()
+        rc3 = cli.main(["--run-log", log_path, "alerts", *bad], out=out3)
+        assert rc3 == 2, bad
+        assert "must be" in out3.getvalue()
+
 
 def test_control_plane_alerts_route(tmp_path):
     from trialsync_etl_spark.api import ControlPlane
@@ -206,7 +214,7 @@ def test_dq_alerts_tolerate_foreign_report_schema(spark, tmp_path):
     wh = str(tmp_path / "wh")
     weird = spark.createDataFrame([("x",)], "something string")
     swap_publish(weird, f"{wh}/dq_report")
-    assert evaluate_dq_alerts(wh) == []
+    assert evaluate_report_alerts(wh) == []
 
 
 def test_schema_drift_rule_survives_later_failed_run(tmp_path):
@@ -248,7 +256,10 @@ def test_alerts_route_validates_params(tmp_path):
     log.update(rec2, "success")
     plane = ControlPlane(run_log=log)
 
-    for bad in ("consecutive=abc", "min_rate=x", "window=1.5"):
+    # the last five parse but would silently switch a rule off
+    for bad in ("consecutive=abc", "min_rate=x", "window=1.5",
+                "min_rate=nan", "min_rate=1.5", "window=0", "window=-2",
+                "consecutive=0"):
         status, _c, payload = plane.handle("GET", f"/alerts?{bad}", b"")
         assert status == 400, bad
         body = json.loads(payload)

@@ -376,3 +376,27 @@ def test_schedules_listing_survives_never_firing_cron(tmp_path):
     assert code == 200 and len(rows) == 2
     assert rows["never"]["next_run_time"] is None
     assert rows["daily"]["next_run_time"] is not None
+
+
+def test_foreign_dq_report_is_a_503_and_the_dashboard_survives(tmp_path):
+    """A dq_report landed by a different chain version (only a
+    ``something`` column) answers GET /quality and /quality/history with
+    a 503 naming the missing columns, and the dashboard renders its
+    "No quality report" paragraph instead of dying on the page."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    wh = tmp_path / "wh"
+    os.makedirs(wh / "dq_report")
+    pq.write_table(pa.table({"something": ["x"]}),
+                   str(wh / "dq_report" / "part-0.parquet"))
+    p = ControlPlane(run_log=RunLog(str(tmp_path / "runs.jsonl")),
+                     warehouse_dir=str(wh))
+    for route in ("/quality", "/quality/history"):
+        code, _, body = p.handle("GET", route)
+        assert code == 503, route
+        assert "passed" in json.loads(body)["error"], route
+    code, _, html = p.handle("GET", "/dashboard")
+    assert code == 200 and "No quality report" in html

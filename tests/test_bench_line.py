@@ -107,7 +107,7 @@ def test_compact_line_parses_and_stays_small():
     times, streaming, ladder = _fixture()
     line = bench.compact_line(
         260.0, times, streaming, ladder, 0.1, 0, "BENCH_DETAIL.json",
-        load=1.234, cpu_ms=123.456,
+        load=1.234, cpu_ms=123.456, cpus=32, parallelism=32,
     )
     assert "\n" not in line
     assert len(line) < 1800, f"line is {len(line)} chars"
@@ -140,6 +140,8 @@ def test_compact_line_parses_and_stays_small():
     # the fixed-work CPU probe: catches hypervisor-level contention the
     # guest loadavg cannot see (load 0 but every metric 2x slower)
     assert payload["cpu_ms"] == 123.5
+    # the machine shape the timings belong to
+    assert payload["cpus"] == 32 and payload["parallelism"] == 32
     # skew ladder folded to slope_last + the AQE-engagement bit
     assert payload["skew"]["j1_star_join_broadcast"] == -0.25
     assert payload["skew"]["aqe"] is True

@@ -699,13 +699,18 @@ def test_check_freq_drift_detects_a_newly_hot_key(spark, tmp_path):
     import pyspark.sql.functions as SF
 
     from trialsync_etl_spark import transforms
-    from trialsync_etl_spark.alerts import evaluate_freq_drift_alerts
+    from trialsync_etl_spark.alerts import evaluate_report_alerts
     from trialsync_etl_spark.operators.freq import append_cm_rollup
     from trialsync_etl_spark.transforms import WarehouseContext, run_transform
 
     transforms.load_all()
     sf_dir = str(tmp_path / "sf")
     wh = str(tmp_path / "wh")
+
+    def evaluate_freq_drift_alerts(wh):
+        return [a for a in evaluate_report_alerts(wh)
+                if a["rule"] == "hot_key_drift"]
+
     # current events: user 7 hot (~40%)
     ev = spark.range(2000).select(
         SF.col("id").alias("event_id"),

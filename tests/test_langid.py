@@ -434,7 +434,7 @@ def test_check_lang_drift_fires_on_misrouted_source(spark, tmp_path):
     import os
     import shutil
 
-    from trialsync_etl_spark.alerts import evaluate_lang_drift_alerts
+    from trialsync_etl_spark.alerts import evaluate_report_alerts
     from trialsync_etl_spark.transforms import (
         WarehouseContext,
         load_all,
@@ -466,6 +466,10 @@ def test_check_lang_drift_fires_on_misrouted_source(spark, tmp_path):
     )
     base.write.parquet(os.path.join(sf_dir, "documents.parquet"))
     ctx = WarehouseContext(sf_dir=sf_dir, warehouse_dir=wh)
+
+    def evaluate_lang_drift_alerts(wh):
+        return [a for a in evaluate_report_alerts(wh)
+                if a["rule"] == "lang_mix_drift"]
 
     r1 = run_transform(spark, "check_lang_drift", ctx)
     assert r1.status == "success"

@@ -401,7 +401,7 @@ def test_check_perplexity_drift_fires_on_planted_degraded_source(
 
     from trialsync_etl_spark.alerts import (
         evaluate_alerts,
-        evaluate_perplexity_drift_alerts,
+        evaluate_report_alerts,
     )
     from trialsync_etl_spark.transforms import (
         WarehouseContext,
@@ -413,6 +413,10 @@ def test_check_perplexity_drift_fires_on_planted_degraded_source(
     sf_dir = str(tmp_path / "sf")
     wh = str(tmp_path / "wh")
     os.makedirs(sf_dir)
+
+    def evaluate_perplexity_drift_alerts(wh):
+        return [a for a in evaluate_report_alerts(wh)
+                if a["rule"] == "perplexity_drift"]
 
     base = spark.createDataFrame(
         [

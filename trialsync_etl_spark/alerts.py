@@ -2,7 +2,7 @@
 gap ("Error Notifications - No alerting on job failures",
 docs/00_Master_Handoff_Document.md:289, listed again as future work at
 :595). Rules evaluate the SAME driver-side stores the dashboard reads
-(the JSONL run log, the landed dq_report parquet), so alerting adds no
+(the JSONL run log, the landed report tables), so alerting adds no
 Spark jobs and no data-plane load:
 
 - ``consecutive_failures``: a job's latest K completed runs all failed
@@ -10,23 +10,24 @@ Spark jobs and no data-plane load:
 - ``success_rate``: a job's completed-run success rate over its recent
   window fell below a floor (the slow-burn signal a per-run alert
   misses).
-- ``dq_failed``: the landed warehouse quality report has red checks
-  (post-load verification regressed).
+- one rule per alerting landed report (reports.py, whose module
+  docstring lists them): ``dq_failed`` on the landed dq_report's red
+  checks, and ``hot_key_drift`` / ``quality_score_drift`` /
+  ``perplexity_drift`` / ``lang_mix_drift`` on any row of their drift
+  reports (the nightly chain publishes only entries past their cutoffs).
 - ``schema_drift``: a job's latest SUCCESSFUL run recorded unknown
   payload keys (the executor's opt-in post-load contract check found
   fields ``from_json`` is silently dropping — an upstream API change).
   Successful, not merely completed: drift is only recorded on success,
   so a later failed run must not mask an unresolved drift.
-- ``hot_key_drift`` / ``quality_score_drift``: rows of the landed
-  ``freq_drift_report`` / ``quality_drift_report`` (the nightly chain
-  publishes only entries past their delta cutoffs, so any row alerts).
 
 Delivery is a pluggable transport: any callable ``(payload_dict) ->
 None``. :func:`webhook_transport` POSTs JSON via stdlib urllib (covers
 Slack-style incoming webhooks and generic HTTP receivers); tests and
 dry-runs pass a list-appending callable. Evaluation is pure — it never
-raises on a missing store, because an alerting path that can itself
-crash the control plane is worse than no alerting.
+raises on a missing, racing or foreign store, because an alerting path
+that can itself crash the control plane is worse than no alerting (only
+a threshold that would switch a rule off is rejected).
 """
 
 from __future__ import annotations
@@ -34,6 +35,12 @@ from __future__ import annotations
 import json
 from typing import Callable
 
+from trialsync_etl_spark.reports import (
+    REPORTS,
+    ReportRepublishing,
+    ReportSchemaError,
+    read_report,
+)
 from trialsync_etl_spark.runs import RunLog
 
 
@@ -104,204 +111,46 @@ def evaluate_run_alerts(
     return alerts
 
 
-def evaluate_dq_alerts(warehouse_dir: str | None) -> list[dict]:
-    """Red rows of the landed dq_report (pyarrow read, Spark-free); an
-    absent/unreadable report yields no alerts — run the verify chain to
-    get coverage, but don't crash the alert path over maintenance races."""
-    import os
-
+def evaluate_report_alerts(warehouse_dir: str | None) -> list[dict]:
+    """One alert per alerting landed report (reports.py) with rows that
+    alert, in spec order. Spark-free pyarrow reads; an absent report, a
+    read racing a publish trim, or a report landed by a different chain
+    version (missing columns) is quiet — run the producing chain to get
+    coverage, but never crash the alert path over maintenance races.
+    Drift shares are CM overestimates: verify a flagged hot key exactly
+    before acting on it."""
     if not warehouse_dir:
         return []
-    path = os.path.join(warehouse_dir, "dq_report")
-    if not os.path.exists(path):
-        return []
-    try:
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        rows = read_published_pylist(path)
-        # row shaping stays inside the guard too: a report landed by a
-        # different chain version (missing/renamed columns) must degrade
-        # to quiet, not crash the alerter — the never-raises contract
-        failed = [r for r in rows if not r.get("passed", True)]
-        if not failed:
-            return []
-        return [
-            {
-                "rule": "dq_failed",
-                "n_failed": len(failed),
-                "checks": [
-                    {"table": r.get("table"), "check": r.get("check"),
-                     "column": r.get("column"),
-                     "n_violations": r.get("n_violations")}
-                    for r in failed[:20]
-                ],
-            }
-        ]
-    except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-        return []
+    alerts = []
+    for report in REPORTS:
+        if report.rule is None:
+            continue
+        try:
+            rows = read_report(warehouse_dir, report)
+        except (FileNotFoundError, ReportRepublishing, ReportSchemaError):
+            continue
+        alert = report.alert(rows)
+        if alert is not None:
+            alerts.append(alert)
+    return alerts
 
 
-def evaluate_freq_drift_alerts(warehouse_dir: str | None) -> list[dict]:
-    """Drifted-hot-key rows of the landed ``freq_drift_report`` (the
-    nightly ``check_freq_drift`` publishes only keys past its share-delta
-    cutoff, so any row IS an alert). Same never-raises contract as the dq
-    rule: absent/unreadable report → quiet. Shares are CM-overestimates
-    (bounded by N·e/width per window), so the row is a detector verdict —
-    verify a flagged key exactly before acting on it."""
-    import os
-
-    if not warehouse_dir:
-        return []
-    path = os.path.join(warehouse_dir, "freq_drift_report")
-    if not os.path.exists(path):
-        return []
-    try:
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        rows = read_published_pylist(path)
-        if not rows:
-            return []
-        rows.sort(key=lambda r: -(r.get("share_delta") or 0.0))
-        return [
-            {
-                "rule": "hot_key_drift",
-                "n_keys": len(rows),
-                "keys": [
-                    {"key": r.get("user_id"),
-                     "share_a": r.get("share_a"),
-                     "share_b": r.get("share_b"),
-                     "share_delta": r.get("share_delta")}
-                    for r in rows[:20]
-                ],
-            }
-        ]
-    except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-        return []
-
-
-def evaluate_quality_drift_alerts(warehouse_dir: str | None) -> list[dict]:
-    """Drifted-source rows of the landed ``quality_drift_report`` (the
-    nightly ``check_quality_drift`` publishes only sources whose
-    median/mean quality score moved past its delta cutoff vs the previous
-    report, so any row IS an alert — a retrained model or a degrading
-    source changed what the corpus keeps). Same never-raises contract as
-    the other report-backed rules: absent/unreadable report → quiet."""
-    import os
-
-    if not warehouse_dir:
-        return []
-    path = os.path.join(warehouse_dir, "quality_drift_report")
-    if not os.path.exists(path):
-        return []
-    try:
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        rows = read_published_pylist(path)
-        if not rows:
-            return []
-        rows.sort(key=lambda r: -max(r.get("p50_delta") or 0.0,
-                                     r.get("mean_delta") or 0.0))
-        return [
-            {
-                "rule": "quality_score_drift",
-                "n_sources": len(rows),
-                "sources": [
-                    {"source": r.get("source"),
-                     "p50_prev": r.get("p50_prev"),
-                     "p50_now": r.get("p50_now"),
-                     "p50_delta": r.get("p50_delta"),
-                     "mean_delta": r.get("mean_delta")}
-                    for r in rows[:20]
-                ],
-            }
-        ]
-    except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-        return []
-
-
-def evaluate_perplexity_drift_alerts(warehouse_dir: str | None) -> list[dict]:
-    """Drifted-source rows of the landed ``perplexity_drift_report``
-    (the nightly ``check_perplexity_drift`` publishes only sources whose
-    median/mean perplexity moved RELATIVELY past its cutoff vs the
-    previous report, so any row IS an alert — a source drifting toward
-    boilerplate or gibberish, or a swapped LM version, changed what the
-    perplexity band keeps). Same never-raises contract as the other
-    report-backed rules: absent/unreadable report → quiet."""
-    import os
-
-    if not warehouse_dir:
-        return []
-    path = os.path.join(warehouse_dir, "perplexity_drift_report")
-    if not os.path.exists(path):
-        return []
-    try:
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        rows = read_published_pylist(path)
-        if not rows:
-            return []
-        rows.sort(key=lambda r: -max(r.get("p50_rel") or 0.0,
-                                     r.get("mean_rel") or 0.0))
-        return [
-            {
-                "rule": "perplexity_drift",
-                "n_sources": len(rows),
-                "sources": [
-                    {"source": r.get("source"),
-                     "p50_prev": r.get("p50_prev"),
-                     "p50_now": r.get("p50_now"),
-                     "p50_rel": r.get("p50_rel"),
-                     "mean_rel": r.get("mean_rel")}
-                    for r in rows[:20]
-                ],
-            }
-        ]
-    except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-        return []
-
-
-def evaluate_lang_drift_alerts(warehouse_dir: str | None) -> list[dict]:
-    """Drifted-source rows of the landed ``lang_drift_report`` (the
-    nightly ``check_lang_drift`` publishes only sources whose dominant
-    predicted language flipped or whose dominant share moved past the
-    delta cutoff vs the previous report, so any row IS an alert — a
-    misrouted crawler, an encoding bug, or a swapped language-ID model
-    changed a source's composition). Same never-raises contract as the
-    other report-backed rules: absent/unreadable report → quiet."""
-    import os
-
-    if not warehouse_dir:
-        return []
-    path = os.path.join(warehouse_dir, "lang_drift_report")
-    if not os.path.exists(path):
-        return []
-    try:
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        rows = read_published_pylist(path)
-        if not rows:
-            return []
-        rows.sort(key=lambda r: (
-            r.get("lang_prev") == r.get("lang_now"),  # flips first
-            -(r.get("frac_delta") or 0.0),
-        ))
-        return [
-            {
-                "rule": "lang_mix_drift",
-                "n_sources": len(rows),
-                "sources": [
-                    {"source": r.get("source"),
-                     "lang_prev": r.get("lang_prev"),
-                     "lang_now": r.get("lang_now"),
-                     "frac_prev": r.get("frac_prev"),
-                     "frac_now": r.get("frac_now"),
-                     "frac_delta": r.get("frac_delta")}
-                    for r in rows[:20]
-                ],
-            }
-        ]
-    except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-        return []
+def check_thresholds(
+    consecutive_failures: int, min_success_rate: float | None, window: int
+) -> None:
+    """Raise ValueError on a threshold that would silently turn a rule
+    off (``consecutive_failures`` or ``window`` below 1,
+    ``min_success_rate`` outside [0, 1] or NaN) — a monitor with a typo
+    must not read "all quiet" forever."""
+    if consecutive_failures < 1 or window < 1:
+        raise ValueError(
+            f"consecutive ({consecutive_failures}) and window ({window}) "
+            "must be >= 1"
+        )
+    if min_success_rate is not None and not 0.0 <= min_success_rate <= 1.0:
+        raise ValueError(
+            f"min_rate ({min_success_rate}) must be none or within [0, 1]"
+        )
 
 
 def evaluate_alerts(
@@ -311,17 +160,12 @@ def evaluate_alerts(
     min_success_rate: float | None = 0.5,
     window: int = 20,
 ) -> list[dict]:
-    """The full rule set; empty list = all quiet."""
-    return (
-        evaluate_run_alerts(
-            run_log, consecutive_failures, min_success_rate, window
-        )
-        + evaluate_dq_alerts(warehouse_dir)
-        + evaluate_freq_drift_alerts(warehouse_dir)
-        + evaluate_quality_drift_alerts(warehouse_dir)
-        + evaluate_perplexity_drift_alerts(warehouse_dir)
-        + evaluate_lang_drift_alerts(warehouse_dir)
-    )
+    """The full rule set; empty list = all quiet. Thresholds are checked
+    first (:func:`check_thresholds`)."""
+    check_thresholds(consecutive_failures, min_success_rate, window)
+    return evaluate_run_alerts(
+        run_log, consecutive_failures, min_success_rate, window
+    ) + evaluate_report_alerts(warehouse_dir)
 
 
 def webhook_transport(url: str, timeout: float = 10.0) -> Callable[[dict], None]:

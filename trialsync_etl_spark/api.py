@@ -24,6 +24,11 @@ Routes:
   POST /transformations/{name}/execute → run one transform/chain
   GET  /schedules                   → transformation schedules + next fire
   POST /schedules/{name}            → upsert / (de)activate a schedule
+  GET  /tables                      → warehouse table inventory
+  GET  /quality, /freq/hot, /freq/drift, /quality/drift, /lm/drift,
+       /lang/drift                  → a landed report (reports.py specs)
+  GET  /quality/history             → one summary per retained dq_report
+  GET  /alerts                      → alert rules over run log + reports
   GET  /metrics                     → Prometheus text exposition
   GET  /dashboard                   → server-rendered HTML status page
 
@@ -42,6 +47,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from trialsync_etl_spark import jobs as jobs_mod
+from trialsync_etl_spark import reports
 from trialsync_etl_spark.jobs import DEMO_CATALOG, JobSpec
 from trialsync_etl_spark.metrics import MetricsRegistry
 from trialsync_etl_spark.orchestrator import execute_dag
@@ -162,24 +168,14 @@ class ControlPlane:
             return self._list_tables()
         if method == "GET" and route == "/quality/history":
             return self._quality_history()
-        if method == "GET" and route == "/quality":
-            return self._quality_report()
+        if method == "GET" and route in reports.BY_ROUTE:
+            return self._serve_report(reports.BY_ROUTE[route])
         if method == "GET" and route == "/alerts":
             return self._alerts(query)
-        if method == "GET" and route == "/freq/drift":
-            return self._freq_drift()
-        if method == "GET" and route == "/quality/drift":
-            return self._quality_drift()
-        if method == "GET" and route == "/freq/hot":
-            return self._freq_hot()
         if method == "GET" and route == "/decontam/benchmarks":
             return self._decontam_benchmarks()
         if method == "GET" and route == "/lm/models":
             return self._lm_models()
-        if method == "GET" and route == "/lm/drift":
-            return self._lm_drift()
-        if method == "GET" and route == "/lang/drift":
-            return self._lang_drift()
         if method == "GET" and route == "/metrics":
             return 200, "text/plain; version=0.0.4", self.metrics.exposition()
         if method == "GET" and route == "/dashboard":
@@ -501,7 +497,7 @@ class ControlPlane:
         # data-quality section: the landed dq_report, red rows first
         import json as _json
 
-        q_status, _ctype, q_payload = self._quality_report()
+        q_status, _ctype, q_payload = self._serve_report(reports.DQ_REPORT)
         if q_status == 200:
             q = _json.loads(q_payload)
             verdict = "all green" if q["passed"] else f'{q["n_failed"]} FAILED'
@@ -623,13 +619,14 @@ border-radius:4px;padding:6px 12px;margin-right:8px}}
 
     def _alerts(self, query: dict) -> tuple[int, str, str]:
         """Evaluate the alert rules (alerts.py) over the run log + landed
-        dq_report — the reference's missing error-notification surface.
+        reports — the reference's missing error-notification surface.
         ``?consecutive=N&min_rate=F&window=K`` tune the thresholds
         (``min_rate=none`` disables the success-rate rule, matching
         evaluate_alerts' ``min_success_rate=None``); ``all_quiet`` is the
-        poll-me field for external monitors. Bad params are a 400 with a
-        usage message, not a 500 — monitors retry 500s, not typos."""
-        from trialsync_etl_spark.alerts import evaluate_alerts
+        poll-me field for external monitors. Bad params — unparseable, or
+        a threshold that would switch a rule off — are a 400 with a usage
+        message, not a 500 — monitors retry 500s, not typos."""
+        from trialsync_etl_spark.alerts import check_thresholds, evaluate_alerts
 
         usage = (
             "usage: /alerts?consecutive=<int>&min_rate=<float|none>"
@@ -644,6 +641,7 @@ border-radius:4px;padding:6px 12px;margin-right:8px}}
                 if str(raw_rate).strip().lower() in ("none", "")
                 else float(raw_rate)
             )
+            check_thresholds(consecutive, min_rate, window)
         except (TypeError, ValueError) as exc:
             return 400, "application/json", json.dumps(
                 {"error": f"bad query parameter: {exc}", "usage": usage}
@@ -662,8 +660,13 @@ border-radius:4px;padding:6px 12px;margin-right:8px}}
     def _quality_history(self) -> tuple[int, str, str]:
         """Quality trend: one summary row per RETAINED dq_report version
         (the report table publishes with keep_versions, so past verdicts
-        are time-travelable) — Spark-free pyarrow reads, newest last."""
+        are time-travelable) — Spark-free pyarrow reads, newest last. A
+        retained version missing a declared column is a 503, like
+        ``GET /quality``."""
         import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         from trialsync_etl_spark.storage import list_versions
 
@@ -671,24 +674,29 @@ border-radius:4px;padding:6px 12px;margin-right:8px}}
             return 503, "application/json", json.dumps(
                 {"error": "no warehouse_dir attached to the control plane"}
             )
-        path = os.path.join(self.warehouse_dir, "dq_report")
+        report = reports.DQ_REPORT
+        path = os.path.join(self.warehouse_dir, report.table)
         versions = list_versions(path)
         if not versions:
             return 404, "application/json", json.dumps(
-                {"error": "no dq_report table — run the verify_warehouse chain"}
+                {"error": report.absent_message}
             )
-        import pyarrow.parquet as pq
-
         out = []
         parent = os.path.dirname(path)
         for v in versions:
             try:
-                rows = pq.read_table(os.path.join(parent, v["dir"])).to_pylist()
-            except Exception:  # noqa: BLE001 — trimmed by a concurrent publish
-                continue
-            n_failed = sum(1 for r in rows if not r["passed"])
+                table = pq.read_table(os.path.join(parent, v["dir"]))
+            except (OSError, pa.ArrowException):
+                continue  # trimmed by a concurrent publish
+            try:
+                report.check_columns(table.column_names)
+            except reports.ReportSchemaError as exc:
+                return 503, "application/json", json.dumps({"error": str(exc)})
+            rows = table.to_pylist()
+            n_failed = sum(1 for r in rows if report.alerts_on(r))
             checked = max(
-                (str(r["checked_at"]) for r in rows if r.get("checked_at")),
+                (str(r[report.timestamp]) for r in rows
+                 if r.get(report.timestamp)),
                 default=None,
             )
             out.append(
@@ -698,228 +706,24 @@ border-radius:4px;padding:6px 12px;margin-right:8px}}
             )
         return 200, "application/json", json.dumps({"history": out})
 
-    def _quality_report(self) -> tuple[int, str, str]:
-        """Serve the LANDED dq_report table (transforms/quality.py) — the
-        post-load verification verdicts the reference's docs prescribe
-        (ref docs/03_Data_Warehouse_Layers.md:775-814). Reads the parquet
-        directly via pyarrow: the control plane stays Spark-free and the
-        report was already computed by the `run_quality_checks` chain
-        step, so serving it is a metadata-cheap file read."""
-        import os
-
+    def _serve_report(self, report: reports.Report) -> tuple[int, str, str]:
+        """Serve a LANDED report table (reports.py: dq verdicts, hot keys,
+        the drift reports) — a Spark-free pyarrow read of what a chain
+        step already computed, so serving it is a metadata-cheap file
+        read. A read racing a publish trim and a report landed by a
+        different chain version are retryable 503s, not a dropped
+        connection or a dead dashboard."""
         if not self.warehouse_dir:
             return 503, "application/json", json.dumps(
                 {"error": "no warehouse_dir attached to the control plane"}
             )
-        path = os.path.join(self.warehouse_dir, "dq_report")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no dq_report table — run the verify_warehouse chain"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
         try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001
-            # the version dir resolved by realpath can vanish between the
-            # exists() check and the read when a concurrent publish trims
-            # retention — a retryable 503, not a dropped connection (and
-            # not a dead dashboard, which calls this unguarded)
-            return 503, "application/json", json.dumps(
-                {"error": "dq_report is being republished — retry"}
-            )
-        for r in rows:
-            if r.get("checked_at") is not None:
-                r["checked_at"] = str(r["checked_at"])
-        rows.sort(key=lambda r: (r["table"], r["check"], r["column"]))
-        n_failed = sum(1 for r in rows if not r["passed"])
-        return 200, "application/json", json.dumps(
-            {"passed": n_failed == 0, "n_checks": len(rows), "n_failed": n_failed,
-             "checks": rows}
-        )
-
-    def _freq_drift(self) -> tuple[int, str, str]:
-        """Serve the LANDED freq_drift_report table (the nightly
-        ``check_freq_drift`` member materializes keys whose frequency
-        share grew past the cutoff between the CM store's history and
-        current windows) — hot-key drift as an operational surface next
-        to ``/quality`` and ``/alerts``, not just a CLI. Spark-free
-        pyarrow read of cells-derived rows; ``all_quiet`` is the poll-me
-        field. Shares are CM overestimates — verify a flagged key exactly
-        (``freq.heavy_hitters``) before acting."""
-        import os
-
-        if not self.warehouse_dir:
-            return 503, "application/json", json.dumps(
-                {"error": "no warehouse_dir attached to the control plane"}
-            )
-        path = os.path.join(self.warehouse_dir, "freq_drift_report")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no freq_drift_report table — run the "
-                          "maintain_warehouse chain"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001 — read raced a publish trim
-            return 503, "application/json", json.dumps(
-                {"error": "freq_drift_report is being republished — retry"}
-            )
-        for r in rows:
-            if r.get("checked_at") is not None:
-                r["checked_at"] = str(r["checked_at"])
-        rows.sort(key=lambda r: -(r.get("share_delta") or 0.0))
-        return 200, "application/json", json.dumps(
-            {"all_quiet": not rows, "n_keys": len(rows), "keys": rows}
-        )
-
-    def _quality_drift(self) -> tuple[int, str, str]:
-        """Serve the LANDED quality_drift_report table (the nightly
-        ``check_quality_drift`` member publishes only sources whose
-        median/mean quality score moved past the delta cutoff vs the
-        previously published quantiles) — the trained filter's
-        composition observable as an API surface next to ``/freq/drift``.
-        Spark-free pyarrow read; ``all_quiet`` is the poll-me field."""
-        import os
-
-        if not self.warehouse_dir:
-            return 503, "application/json", json.dumps(
-                {"error": "no warehouse_dir attached to the control plane"}
-            )
-        path = os.path.join(self.warehouse_dir, "quality_drift_report")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no quality_drift_report table — run the "
-                          "maintain_warehouse chain"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001 — read raced a publish trim
-            return 503, "application/json", json.dumps(
-                {"error": "quality_drift_report is being republished — retry"}
-            )
-        for r in rows:
-            if r.get("checked_at") is not None:
-                r["checked_at"] = str(r["checked_at"])
-        rows.sort(key=lambda r: -max(r.get("p50_delta") or 0.0,
-                                     r.get("mean_delta") or 0.0))
-        return 200, "application/json", json.dumps(
-            {"all_quiet": not rows, "n_sources": len(rows), "sources": rows}
-        )
-
-    def _lm_drift(self) -> tuple[int, str, str]:
-        """Serve the LANDED perplexity_drift_report table (the nightly
-        ``check_perplexity_drift`` member publishes only sources whose
-        median/mean perplexity moved relatively past the cutoff vs the
-        previously published quantiles) — the statistical-quality twin
-        of ``/quality/drift``. Spark-free pyarrow read; ``all_quiet`` is
-        the poll-me field."""
-        import os
-
-        if not self.warehouse_dir:
-            return 503, "application/json", json.dumps(
-                {"error": "no warehouse_dir attached to the control plane"}
-            )
-        path = os.path.join(self.warehouse_dir, "perplexity_drift_report")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no perplexity_drift_report table — run the "
-                          "maintain_warehouse chain with lm_store/"
-                          "lm_model_id options"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001 — read raced a publish trim
-            return 503, "application/json", json.dumps(
-                {"error": "perplexity_drift_report is being republished "
-                          "— retry"}
-            )
-        for r in rows:
-            if r.get("checked_at") is not None:
-                r["checked_at"] = str(r["checked_at"])
-        rows.sort(key=lambda r: -max(r.get("p50_rel") or 0.0,
-                                     r.get("mean_rel") or 0.0))
-        return 200, "application/json", json.dumps(
-            {"all_quiet": not rows, "n_sources": len(rows), "sources": rows}
-        )
-
-    def _lang_drift(self) -> tuple[int, str, str]:
-        """Serve the LANDED lang_drift_report table (the nightly
-        ``check_lang_drift`` member publishes only sources whose
-        dominant predicted language flipped or whose share moved past
-        the delta vs the previous report) — the composition twin of
-        ``/quality/drift``. Spark-free pyarrow read; ``all_quiet`` is
-        the poll-me field."""
-        import os
-
-        if not self.warehouse_dir:
-            return 503, "application/json", json.dumps(
-                {"error": "no warehouse_dir attached to the control plane"}
-            )
-        path = os.path.join(self.warehouse_dir, "lang_drift_report")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no lang_drift_report table — run the "
-                          "maintain_warehouse chain (check_lang_drift)"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001 — read raced a publish trim
-            return 503, "application/json", json.dumps(
-                {"error": "lang_drift_report is being republished — retry"}
-            )
-        for r in rows:
-            if r.get("checked_at") is not None:
-                r["checked_at"] = str(r["checked_at"])
-        rows.sort(key=lambda r: (
-            r.get("lang_prev") == r.get("lang_now"),
-            -(r.get("frac_delta") or 0.0),
-        ))
-        return 200, "application/json", json.dumps(
-            {"all_quiet": not rows, "n_sources": len(rows), "sources": rows}
-        )
-
-    def _freq_hot(self) -> tuple[int, str, str]:
-        """Serve the LANDED hot_keys table (the gold chain's
-        ``refresh_hot_keys`` materializes the event stream's exact heavy
-        hitters) — the detect half of detect→mitigate as an API surface;
-        the list is what ``skew.targeted_salted_join`` consumes. Empty is
-        a real verdict: no key owns ≥ phi of events."""
-        import os
-
-        if not self.warehouse_dir:
-            return 503, "application/json", json.dumps(
-                {"error": "no warehouse_dir attached to the control plane"}
-            )
-        path = os.path.join(self.warehouse_dir, "hot_keys")
-        if not os.path.exists(path):
-            return 404, "application/json", json.dumps(
-                {"error": "no hot_keys table — run the refresh_gold_views "
-                          "chain"}
-            )
-        from trialsync_etl_spark.storage import read_published_pylist
-
-        try:
-            rows = read_published_pylist(path)
-        except Exception:  # noqa: BLE001 — read raced a publish trim
-            return 503, "application/json", json.dumps(
-                {"error": "hot_keys is being republished — retry"}
-            )
-        for r in rows:
-            if r.get("detected_at") is not None:
-                r["detected_at"] = str(r["detected_at"])
-        rows.sort(key=lambda r: -(r.get("share") or 0.0))
-        return 200, "application/json", json.dumps(
-            {"n_keys": len(rows), "keys": rows}
-        )
+            rows = reports.read_report(self.warehouse_dir, report)
+        except FileNotFoundError as exc:
+            return 404, "application/json", json.dumps({"error": str(exc)})
+        except (reports.ReportRepublishing, reports.ReportSchemaError) as exc:
+            return 503, "application/json", json.dumps({"error": str(exc)})
+        return 200, "application/json", json.dumps(report.payload(rows))
 
     def _decontam_benchmarks(self) -> tuple[int, str, str]:
         """Serve the persisted benchmark store's inventory — the built

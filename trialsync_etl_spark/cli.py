@@ -390,8 +390,12 @@ def cmd_release(args, out=sys.stdout) -> int:
     if args.warehouse:
         from trialsync_etl_spark import transforms
         from trialsync_etl_spark.alerts import evaluate_alerts
+        from trialsync_etl_spark.reports import (
+            DQ_REPORT,
+            ReportSchemaError,
+            read_report,
+        )
         from trialsync_etl_spark.runs import RunLog
-        from trialsync_etl_spark.storage import read_published_pylist
         from trialsync_etl_spark.transforms import WarehouseContext, run_chain
 
         transforms.load_all()
@@ -424,15 +428,16 @@ def cmd_release(args, out=sys.stdout) -> int:
         n_failed = sum(1 for r in res if r.status != "success")
         dq_missing = False
         try:
-            dq = read_published_pylist(os.path.join(args.warehouse, "dq_report"))
-        except FileNotFoundError:
+            dq = read_report(args.warehouse, DQ_REPORT)
+        except (FileNotFoundError, ReportSchemaError):
             # a failed dims/facts transform can abort the chain before
             # verify_warehouse lands dq_report; the rehearsal must still
-            # emit its JSON verdict (a missing report is itself red, on
-            # top of whatever n_failed flags) rather than traceback
+            # emit its JSON verdict (a missing or unreadable report is
+            # itself red, on top of whatever n_failed flags) rather than
+            # traceback
             dq = []
             dq_missing = True
-        dq_red = [r for r in dq if not r.get("passed", True)]
+        dq_red = [r for r in dq if DQ_REPORT.alerts_on(r)]
         alerts = evaluate_alerts(
             RunLog(args.run_log), warehouse_dir=args.warehouse
         )
@@ -455,13 +460,11 @@ def cmd_release(args, out=sys.stdout) -> int:
             post = run_chain(spark, "verify_warehouse", ctx)
             p_failed = sum(1 for r in post if r.status != "success")
             try:
-                dq2 = read_published_pylist(
-                    os.path.join(args.warehouse, "dq_report")
-                )
-            except FileNotFoundError:
+                dq2 = read_report(args.warehouse, DQ_REPORT)
+            except (FileNotFoundError, ReportSchemaError):
                 dq2 = []
                 p_failed = p_failed or 1
-            dq2_red = [r for r in dq2 if not r.get("passed", True)]
+            dq2_red = [r for r in dq2 if DQ_REPORT.alerts_on(r)]
             payload["maintenance"] = {
                 "transforms": len(maint),
                 "failed_transforms": m_failed,
@@ -858,12 +861,18 @@ def cmd_alerts(args, out=sys.stdout) -> int:
     webhook. Exit 1 when anything fires — cron-able as the reference's
     missing error-notification hook."""
     from trialsync_etl_spark.alerts import (
+        check_thresholds,
         evaluate_alerts,
         notify,
         webhook_transport,
     )
     from trialsync_etl_spark.runs import RunLog
 
+    try:
+        check_thresholds(args.consecutive, args.min_rate, args.window)
+    except ValueError as exc:
+        out.write(f"alerts: {exc}\n")
+        return 2
     alerts = evaluate_alerts(
         RunLog(args.run_log),
         warehouse_dir=args.warehouse,

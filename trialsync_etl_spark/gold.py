@@ -238,6 +238,7 @@ def refresh_hot_keys(spark: SparkSession, ctx: WarehouseContext) -> int:
     key owns ≥ phi of events) — the targeted join degrades to the plain
     plan on it. ``ctx.options['hot_key_phi']`` tunes the share cutoff."""
     from trialsync_etl_spark.operators.freq import heavy_hitters
+    from trialsync_etl_spark.reports import HOT_KEYS
     from trialsync_etl_spark.storage import swap_publish
 
     ev = load_table(spark, ctx.sf_dir, "events").select("user_id")
@@ -245,7 +246,7 @@ def refresh_hot_keys(spark: SparkSession, ctx: WarehouseContext) -> int:
     hot = heavy_hitters(ev, "user_id", phi=phi).withColumn(
         "detected_at", F.current_timestamp()
     )
-    return swap_publish(hot, ctx.table_path("hot_keys"), return_count=True)
+    return swap_publish(hot, ctx.table_path(HOT_KEYS.table), return_count=True)
 
 
 @transform("refresh_mv_enrollment_summary_incremental", chain=None)

@@ -426,17 +426,20 @@ def diff_versions(
     return out
 
 
-def read_published_pylist(publish_path: str) -> list[dict]:
-    """Spark-free read of a published table as Python rows (pyarrow) —
-    the ONE copy of the realpath-then-read sequence the control plane and
-    the alert rules share. Raises on a missing table or a read racing a
-    concurrent publish trim; callers choose the degradation (503 for an
-    API route, quiet [] for the alert path)."""
-    import os
-
+def read_published_arrow(publish_path: str):
+    """Spark-free read of a published table as a pyarrow Table — the ONE
+    copy of the realpath-then-read sequence the control plane, the alert
+    rules and the drift checks share. Raises on a missing table or a read
+    racing a concurrent publish trim; callers choose the degradation
+    (reports.read_report turns both into typed errors)."""
     import pyarrow.parquet as pq
 
-    return pq.read_table(os.path.realpath(publish_path)).to_pylist()
+    return pq.read_table(os.path.realpath(publish_path))
+
+
+def read_published_pylist(publish_path: str) -> list[dict]:
+    """:func:`read_published_arrow` as Python rows."""
+    return read_published_arrow(publish_path).to_pylist()
 
 
 # ---------------------------------------------------------------------------

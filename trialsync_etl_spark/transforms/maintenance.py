@@ -59,6 +59,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+from trialsync_etl_spark.reports import (
+    FREQ_DRIFT,
+    HOT_KEYS,
+    LANG_DRIFT,
+    PERPLEXITY_DRIFT,
+    QUALITY_DRIFT,
+    Report,
+)
 from trialsync_etl_spark.transforms import WarehouseContext, transform
 
 MAINT_CHAIN = "maintain_warehouse"
@@ -180,10 +188,8 @@ def check_freq_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
     from trialsync_etl_spark.storage import swap_publish
 
     store = ctx.table_path("freq_events")
-    report_path = ctx.table_path("freq_drift_report")
-    empty = spark.createDataFrame(
-        [], "user_id long, share_a double, share_b double, share_delta double"
-    )
+    report_path = ctx.table_path(FREQ_DRIFT.table)
+    empty = spark.createDataFrame([], FREQ_DRIFT.schema)
     if not os.path.isdir(store):
         swap_publish(
             empty.withColumn("checked_at", F.current_timestamp()), report_path
@@ -200,7 +206,7 @@ def check_freq_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
             empty.withColumn("checked_at", F.current_timestamp()), report_path
         )
         return 0
-    hk_path = ctx.table_path("hot_keys")
+    hk_path = ctx.table_path(HOT_KEYS.table)
     if os.path.isdir(hk_path):
         keys = spark.read.parquet(hk_path).select("user_id")
     else:
@@ -220,6 +226,47 @@ def check_freq_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         include_base_a=True,
     ).withColumn("checked_at", F.current_timestamp())
     return swap_publish(drift, report_path, return_count=True)
+
+
+def _publish_with_drift(
+    spark: SparkSession,
+    ctx: WarehouseContext,
+    report_df,
+    report_table: str,
+    drift: Report,
+    compare,
+) -> int:
+    """The per-source drift checks' shared tail, in this order: read the
+    PREVIOUSLY published ``report_table``, publish ``report_df`` over it,
+    read the new report back, and publish ``drift`` with one row per
+    source present in both whose ``compare(old_row, new_row)`` returns
+    the row's non-source fields (None = no drift). A new source is a
+    baseline, not drift — so the first run publishes an EMPTY drift
+    report. Returns the number of drifted sources."""
+    from pyspark.sql import functions as F
+
+    from trialsync_etl_spark.storage import read_published_pylist, swap_publish
+
+    report_path = ctx.table_path(report_table)
+    prev = (
+        {r["source"]: r for r in read_published_pylist(report_path)}
+        if os.path.isdir(report_path)
+        else {}
+    )
+    swap_publish(report_df, report_path)
+    drifted = []
+    for r in read_published_pylist(report_path):
+        old = prev.get(r["source"])
+        found = None if old is None else compare(old, r)
+        if found is not None:
+            drifted.append((r["source"], *found))
+    swap_publish(
+        spark.createDataFrame(drifted, drift.schema).withColumn(
+            "checked_at", F.current_timestamp()
+        ),
+        ctx.table_path(drift.table),
+    )
+    return len(drifted)
 
 
 @transform("check_quality_drift", chain=MAINT_CHAIN)
@@ -248,19 +295,10 @@ def check_quality_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         QualityModel,
         quality_model_score,
     )
-    from trialsync_etl_spark.storage import read_published_pylist, swap_publish
 
     model_path = ctx.options.get("quality_model_path")
     model = QualityModel.load(model_path) if model_path else None
     min_delta = float(ctx.options.get("quality_drift_min_delta", 0.05))
-
-    report_path = ctx.table_path("quality_score_report")
-    drift_path = ctx.table_path("quality_drift_report")
-    prev = (
-        read_published_pylist(report_path)
-        if os.path.isdir(report_path)
-        else []
-    )
 
     docs = load_table(spark, ctx.sf_dir, "documents")
     score = quality_model_score(F.col("text"), model)
@@ -276,30 +314,18 @@ def check_quality_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         )
         .withColumn("checked_at", F.current_timestamp())
     )
-    swap_publish(report, report_path)
 
-    prev_by_source = {r["source"]: r for r in prev}
-    drifted = []
-    for r in read_published_pylist(report_path):
-        old = prev_by_source.get(r["source"])
-        if old is None:
-            continue  # new source: baseline established, not drift
-        d_p50 = round(abs(r["p50"] - old["p50"]), 4)
-        d_mean = round(abs(r["mean_score"] - old["mean_score"]), 4)
+    def compare(old: dict, new: dict):
+        d_p50 = round(abs(new["p50"] - old["p50"]), 4)
+        d_mean = round(abs(new["mean_score"] - old["mean_score"]), 4)
         if max(d_p50, d_mean) >= min_delta:
-            drifted.append(
-                (
-                    r["source"], old["p50"], r["p50"], d_p50,
-                    old["mean_score"], r["mean_score"], d_mean,
-                )
-            )
-    drift = spark.createDataFrame(
-        drifted,
-        "source string, p50_prev double, p50_now double, p50_delta double, "
-        "mean_prev double, mean_now double, mean_delta double",
-    ).withColumn("checked_at", F.current_timestamp())
-    swap_publish(drift, drift_path)
-    return len(drifted)
+            return (old["p50"], new["p50"], d_p50,
+                    old["mean_score"], new["mean_score"], d_mean)
+        return None
+
+    return _publish_with_drift(
+        spark, ctx, report, "quality_score_report", QUALITY_DRIFT, compare
+    )
 
 
 @transform("check_perplexity_drift", chain=MAINT_CHAIN)
@@ -326,21 +352,12 @@ def check_perplexity_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
     from trialsync_etl_spark.operators.lm_store import (
         score_perplexity_store,
     )
-    from trialsync_etl_spark.storage import read_published_pylist, swap_publish
 
     store = ctx.options.get("lm_store")
     model_id = ctx.options.get("lm_model_id")
     if not store or not model_id or not os.path.isdir(store):
         return 0
     min_rel = float(ctx.options.get("perplexity_drift_min_rel", 0.10))
-
-    report_path = ctx.table_path("perplexity_report")
-    drift_path = ctx.table_path("perplexity_drift_report")
-    prev = (
-        read_published_pylist(report_path)
-        if os.path.isdir(report_path)
-        else []
-    )
 
     docs = load_table(spark, ctx.sf_dir, "documents")
     scored = score_perplexity_store(
@@ -366,40 +383,26 @@ def check_perplexity_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         .withColumn("model_id", F.lit(model_id))
         .withColumn("checked_at", F.current_timestamp())
     )
-    swap_publish(report, report_path)
 
-    prev_by_source = {r["source"]: r for r in prev}
-    drifted = []
-    for r in read_published_pylist(report_path):
-        old = prev_by_source.get(r["source"])
-        if old is None:
-            continue  # new source: baseline established, not drift
-        # NOTE: a model-version swap is deliberately NOT a baseline
-        # reset — "a retrained model silently changes corpus
-        # composition" is exactly the event this observable exists to
-        # surface (check_quality_drift's contract); the report rows
-        # carry model_id so the operator can attribute the shift
-        rel_p50 = round(
-            abs(r["p50"] - old["p50"]) / max(old["p50"], 1e-9), 4
-        )
+    # NOTE: a model-version swap is deliberately NOT a baseline reset —
+    # "a retrained model silently changes corpus composition" is exactly
+    # the event this observable exists to surface (check_quality_drift's
+    # contract); the report rows carry model_id so the operator can
+    # attribute the shift
+    def compare(old: dict, new: dict):
+        rel_p50 = round(abs(new["p50"] - old["p50"]) / max(old["p50"], 1e-9), 4)
         rel_mean = round(
-            abs(r["mean_ppl"] - old["mean_ppl"]) / max(old["mean_ppl"], 1e-9),
+            abs(new["mean_ppl"] - old["mean_ppl"]) / max(old["mean_ppl"], 1e-9),
             4,
         )
         if max(rel_p50, rel_mean) >= min_rel:
-            drifted.append(
-                (
-                    r["source"], old["p50"], r["p50"], rel_p50,
-                    old["mean_ppl"], r["mean_ppl"], rel_mean,
-                )
-            )
-    drift = spark.createDataFrame(
-        drifted,
-        "source string, p50_prev double, p50_now double, p50_rel double, "
-        "mean_prev double, mean_now double, mean_rel double",
-    ).withColumn("checked_at", F.current_timestamp())
-    swap_publish(drift, drift_path)
-    return len(drifted)
+            return (old["p50"], new["p50"], rel_p50,
+                    old["mean_ppl"], new["mean_ppl"], rel_mean)
+        return None
+
+    return _publish_with_drift(
+        spark, ctx, report, "perplexity_report", PERPLEXITY_DRIFT, compare
+    )
 
 
 @transform("maintain_compact_ann_index", chain=MAINT_CHAIN)
@@ -508,19 +511,10 @@ def check_lang_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         LangIdModel,
         annotate_language,
     )
-    from trialsync_etl_spark.storage import read_published_pylist, swap_publish
 
     model_path = ctx.options.get("langid_model_path")
     model = LangIdModel.load(model_path) if model_path else None
     min_delta = float(ctx.options.get("lang_drift_min_delta", 0.10))
-
-    report_path = ctx.table_path("lang_mix_report")
-    drift_path = ctx.table_path("lang_drift_report")
-    prev = (
-        read_published_pylist(report_path)
-        if os.path.isdir(report_path)
-        else []
-    )
 
     docs = load_table(spark, ctx.sf_dir, "documents")
     counts = (
@@ -548,26 +542,14 @@ def check_lang_drift(spark: SparkSession, ctx: WarehouseContext) -> int:
         )
         .withColumn("checked_at", F.current_timestamp())
     )
-    swap_publish(report, report_path)
 
-    prev_by_source = {r["source"]: r for r in prev}
-    drifted = []
-    for r in read_published_pylist(report_path):
-        old = prev_by_source.get(r["source"])
-        if old is None:
-            continue  # new source: baseline established, not drift
-        d_frac = round(abs(r["top_frac"] - old["top_frac"]), 4)
-        if r["top_lang"] != old["top_lang"] or d_frac >= min_delta:
-            drifted.append(
-                (
-                    r["source"], old["top_lang"], r["top_lang"],
-                    old["top_frac"], r["top_frac"], d_frac,
-                )
-            )
-    drift = spark.createDataFrame(
-        drifted,
-        "source string, lang_prev string, lang_now string, "
-        "frac_prev double, frac_now double, frac_delta double",
-    ).withColumn("checked_at", F.current_timestamp())
-    swap_publish(drift, drift_path)
-    return len(drifted)
+    def compare(old: dict, new: dict):
+        d_frac = round(abs(new["top_frac"] - old["top_frac"]), 4)
+        if new["top_lang"] != old["top_lang"] or d_frac >= min_delta:
+            return (old["top_lang"], new["top_lang"],
+                    old["top_frac"], new["top_frac"], d_frac)
+        return None
+
+    return _publish_with_drift(
+        spark, ctx, report, "lang_mix_report", LANG_DRIFT, compare
+    )

@@ -23,12 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import quality as Q
+from trialsync_etl_spark.reports import DQ_REPORT
 from trialsync_etl_spark.transforms import WarehouseContext, transform
 
 QUALITY_CHAIN = "verify_warehouse"
-
-#: the report table name under the warehouse dir
-REPORT_TABLE = "dq_report"
 
 
 def _read(spark: SparkSession, ctx: WarehouseContext, name: str) -> DataFrame:
@@ -212,12 +210,12 @@ def run_quality_checks(spark: SparkSession, ctx: WarehouseContext) -> int:
     # second job re-reading the just-landed report)
     n = swap_publish(
         report,
-        ctx.table_path(REPORT_TABLE),
+        ctx.table_path(DQ_REPORT.table),
         keep_versions=int(ctx.options.get("dq_keep_reports", 5)),
         return_count=True,
     )
     if ctx.options.get("fail_on_violation"):
-        landed = spark.read.parquet(ctx.table_path(REPORT_TABLE))
+        landed = spark.read.parquet(ctx.table_path(DQ_REPORT.table))
         bad = landed.filter(~F.col("passed")).collect()
         if bad:
             failed = ", ".join(f"{r['table']}.{r['check']}({r['column']})" for r in bad[:10])
