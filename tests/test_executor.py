@@ -16,12 +16,13 @@ from trialsync_etl_spark.executor import (
 )
 from trialsync_etl_spark.jobs import JobSpec
 from trialsync_etl_spark.runs import RunLog
-from trialsync_etl_spark.sources.odata import ODataSource
+from trialsync_etl_spark.sources.odata import ODataSource, ODataSourceError
 from trialsync_etl_spark.streaming.incremental import CheckpointStore, WatermarkStore
 
 
-def make_transport(records, capture=None):
-    """Hermetic OData endpoint honoring $top/$skip/$filter."""
+def make_transport(records, capture=None, ignore_skip=False):
+    """Hermetic OData endpoint honoring $top/$skip/$filter
+    (``ignore_skip=True``: every request is answered from offset 0)."""
 
     def transport(url):
         from urllib.parse import parse_qs, urlparse
@@ -30,7 +31,7 @@ def make_transport(records, capture=None):
         if capture is not None:
             capture.append(url)
         top = int(q.get("$top", ["1000"])[0])
-        skip = int(q.get("$skip", ["0"])[0])
+        skip = 0 if ignore_skip else int(q.get("$skip", ["0"])[0])
         rows = records
         flt = q.get("$filter", [None])[0]
         if flt:  # "modifiedDate gt <ts>"
@@ -349,3 +350,14 @@ def test_resumed_run_drift_covers_first_attempts_rows(spark, tmp_path):
     # all 20 rows scanned — including the first attempt's flushes under
     # the 2024-03-01 stamp — not just the resuming attempt's remainder
     assert drift["unknown_keys"]["brandNewUpstreamField"] == 20
+
+
+def test_skip_ignoring_feed_fails_run_and_keeps_watermark(spark, tmp_path):
+    """A feed that ignores $skip repeats its first page. The run must fail,
+    not land that page as the whole feed and advance the watermark past
+    records it never pulled."""
+    ex = _executor(spark, tmp_path, make_transport(_records(25), ignore_skip=True))
+    with pytest.raises(ODataSourceError, match=r"ignored \$skip"):
+        ex.execute(SPEC)
+    assert ex.run_log.history("Patients")[0]["status"] == "failed"
+    assert ex.watermarks.get("Patients") is None

@@ -12,6 +12,7 @@ from trialsync_etl_spark.sources.odata import (
     API_MAX_PAGE_SIZE,
     ODataParams,
     ODataSource,
+    ODataSourceError,
     PaginationLimitExceeded,
     RateLimiter,
     ResponseParseError,
@@ -19,8 +20,11 @@ from trialsync_etl_spark.sources.odata import (
 )
 
 
-def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, retry_after=None):
-    """Fake OData server honoring $top/$skip, with fault injection."""
+def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, retry_after=None,
+                   count=False, cap=None):
+    """Fake OData server honoring $top/$skip, with fault injection;
+    ``count=True`` answers ``$count=true`` (enveloped bodies only), and
+    ``cap`` serves at most that many rows per page whatever $top asks."""
     state = {"calls": 0}
 
     def transport(url):
@@ -29,11 +33,15 @@ def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, r
             headers = {"Retry-After": str(retry_after)} if retry_after else {}
             return 503, headers, "busy"
         q = parse_qs(urlparse(url).query)
-        top = int(q.get("$top", [API_MAX_PAGE_SIZE])[0])
+        top = min(int(q.get("$top", [API_MAX_PAGE_SIZE])[0]), cap or API_MAX_PAGE_SIZE)
         skip = 0 if ignore_skip else int(q.get("$skip", [0])[0])
         page = records[skip : skip + top]
-        body = json.dumps(page if envelope is None else {envelope: page})
-        return 200, {}, body
+        if envelope is None:
+            return 200, {}, json.dumps(page)
+        doc = {envelope: page}
+        if count and q.get("$count") == ["true"]:
+            doc["@odata.count"] = len(records)
+        return 200, {}, json.dumps(doc)
 
     transport.state = state
     return transport
@@ -70,9 +78,27 @@ def test_page_size_governor():
 
 
 def test_skip_ignored_detection():
+    # a full page repeated: ending here would drop the other 150 records
     src = ODataSource(make_transport(RECORDS, ignore_skip=True), page_size=100)
-    pages = list(src.pages("/Patients"))
-    assert len(pages) == 1  # second page identical → stop, no infinite loop
+    with pytest.raises(ODataSourceError, match=r"ignored \$skip"):
+        list(src.pages("/Patients"))
+    assert src.requests_made == 2
+    # ignoring $top as well: the first, oversized page held every record,
+    # so the repeat ends the scan quietly
+    t = make_transport(RECORDS, ignore_skip=True)
+    src = ODataSource(lambda url: t(url.replace("%24top", "x")), page_size=100)
+    assert [len(p.items) for p in src.pages("/Patients")] == [250]
+    assert src.requests_made == 2
+
+
+def test_bounded_scan_reads_past_server_page_cap():
+    # the server serves at most 50 rows where 100 were asked: a short page
+    # ends an open scan, but a $top-bounded scan (a DataSource range) reads
+    # on until its total is met
+    t = make_transport(RECORDS)
+    src = ODataSource(lambda url: t(url.replace("%24top=100", "%24top=50")), page_size=100)
+    assert [len(p.items) for p in src.pages("/Patients")] == [50]
+    assert [len(p.items) for p in src.pages("/Patients", ODataParams(top=120))] == [50, 70]
 
 
 def test_max_pages_rail():
@@ -136,15 +162,6 @@ def test_checkpoint_resume_skips_prefix():
     assert len(pages[0].items) == 50
 
 
-def test_fetch_df_bronze_shape(spark):
-    src = ODataSource(make_transport(RECORDS[:7]), page_size=100)
-    df = src.fetch_df(spark, "/Patients")
-    assert df.columns == ["data"]
-    assert df.count() == 7
-    ids = sorted(json.loads(r.data)["id"] for r in df.collect())
-    assert ids == list(range(7))
-
-
 def test_fanout_fetch_partial_failures(spark):
     def fetch_one(key):  # nested → cloudpickle serializes by value
         if key % 7 == 3:
@@ -158,3 +175,80 @@ def test_fanout_fetch_partial_failures(spark):
     assert len(ok) == 9 and len(failed) == 1  # I4: partial failure tolerated
     assert failed[0]["_parentId"] == 3
     assert json.loads(ok[0].data)["parent"] == ok[0]["_parentId"]
+
+
+# -- one pager contract over both front ends: the driver-side pages() and
+# the Spark DataSource's partitions() + read() --------------------------------
+def _via_pages(transport, pagesize, monkeypatch):
+    src = ODataSource(transport, page_size=pagesize)
+    return [item for page in src.pages("/Patients") for item in page.items]
+
+
+def _via_datasource(transport, pagesize, monkeypatch):
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    import trialsync_etl_spark.sources.odata_datasource as ds
+
+    monkeypatch.setattr(ds, "_make_transport", lambda options: transport)
+    reader = ds.ODataReader(
+        StructType([StructField("data", StringType())]),
+        {"resource": "/Patients", "pagesize": str(pagesize)},
+    )
+    return [json.loads(row[0]) for part in reader.partitions() for row in reader.read(part)]
+
+
+FRONT_ENDS = pytest.mark.parametrize(
+    "fetch", [_via_pages, _via_datasource], ids=["pages", "datasource"]
+)
+
+LANDS_EVERY_ROW = {
+    "value": dict(envelope="value", count=True),
+    "items": dict(envelope="items", count=True),
+    "bare-list": dict(envelope=None),
+    # "0" as a string: the header is sent, and the retry does not wait
+    "503-retry-after": dict(fail_first=1, retry_after="0", count=True),
+    "count-ignored": dict(),  # the DataSource pages one serial partition
+}
+
+
+@FRONT_ENDS
+@pytest.mark.parametrize("feed", LANDS_EVERY_ROW.values(), ids=LANDS_EVERY_ROW.keys())
+def test_pager_contract_lands_every_row(fetch, feed, monkeypatch):
+    got = fetch(make_transport(RECORDS, **feed), 100, monkeypatch)
+    assert [r["id"] for r in got] == list(range(250))
+
+
+@pytest.mark.parametrize("count", [True, False], ids=["ranges", "count-ignored"])
+def test_datasource_reads_past_server_page_cap(count, monkeypatch):
+    # the server serves at most 50 rows where 100 are asked: that short page
+    # ends an open pages() scan, but a DataSource partition, ranged or the
+    # serial one, reads on until its range is full or a page comes back empty
+    got = _via_datasource(make_transport(RECORDS, count=count, cap=50), 100, monkeypatch)
+    assert [r["id"] for r in got] == list(range(250))
+
+
+@FRONT_ENDS
+def test_pager_contract_unparseable_body_raises(fetch, monkeypatch):
+    with pytest.raises(ResponseParseError):
+        fetch(make_transport(RECORDS, envelope="nope", count=True), 100, monkeypatch)
+
+
+@FRONT_ENDS
+def test_pager_contract_skip_ignored_raises(fetch, monkeypatch):
+    # with $count answered the DataSource plans 3 ranges; each would land
+    # the same first rows (250 rows, 84 distinct)
+    feed = make_transport(RECORDS, ignore_skip=True, count=True)
+    with pytest.raises(ODataSourceError, match=r"ignored \$skip"):
+        fetch(feed, 100, monkeypatch)
+
+
+@FRONT_ENDS
+def test_pager_contract_caps_page_size(fetch, monkeypatch):
+    feed, tops = make_transport(RECORDS), []
+
+    def spy(url):
+        tops.append(int(parse_qs(urlparse(url).query)["$top"][0]))
+        return feed(url)
+
+    assert len(fetch(spy, 5000, monkeypatch)) == 250
+    assert max(tops) == API_MAX_PAGE_SIZE

@@ -1,16 +1,22 @@
 """Paginated OData REST source (SURVEY.md §2.1 S1–S8), Spark-first.
 
 The reference's ClinicalConductorClient (ref: src/api/client.py:28-734)
-re-expressed as a driver-side ingestor that fetches pages and hands Spark
-JSON batches: the slow, rate-limited part (HTTP) stays on the driver where
-the reference keeps it too; parsing/typing happens distributed via
-``spark.read.json`` / ``from_json`` on the fetched batch.
+re-expressed as the one OData pager: ``ODataSource`` is the only code that
+builds an OData URL, sends a request, parses a response and decides when a
+scan ends. Two front ends iterate ``ODataSource.pages``: the driver-side
+``JobExecutor`` (the reference's shape — the slow, rate-limited HTTP stays
+on the driver, Bronze holds the raw JSON) and each partition of
+``spark.read.format("odata")`` (``sources/odata_datasource.py``).
 
 Behavioral parity:
 - S2 predicate/limit pushdown: ``ODataParams`` serializes $filter/$top/
   $skip/$orderby/$count onto the request.
 - S3 page-size governor: $top capped to the API max (1000), floor 1.
-- S4 termination heuristics: short page, empty page, skip-ignored detection.
+- S4 termination heuristics: an empty page ends a scan, a short page ends
+  an open scan (no $top total). A repeated page means the endpoint ignores
+  $skip and raises, unless the page before it held more rows than asked:
+  then the endpoint ignores $top too, has served everything, and the scan
+  ends.
 - S5 pagination rails: max_pages / max_records → PaginationLimitExceeded.
 - S6 token-bucket rate limiter.
 - S7 retry with exponential backoff honoring Retry-After.
@@ -27,7 +33,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterator, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from urllib.parse import urlencode
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +44,7 @@ DEFAULT_MAX_PAGES = 10000
 Transport = Callable[[str], tuple[int, dict, str]]
 
 
-class ODataSourceError(Exception):
+class ODataSourceError(IOError):
     pass
 
 
@@ -168,13 +174,14 @@ class ODataSource:
             self.sleep(wait)
 
     # -- S8: response parsing/validation ------------------------------------
-    def _parse(self, body: str) -> list[dict]:
+    def _parse(self, body: str) -> tuple[object, list[dict]]:
+        """(document, records) of one response body."""
         try:
             doc = json.loads(body)
         except json.JSONDecodeError as exc:
             if self.strict:
                 raise ResponseParseError(f"invalid JSON: {exc}") from exc
-            return []
+            return None, []
         if isinstance(doc, list):
             items = doc
         elif isinstance(doc, dict):
@@ -182,17 +189,32 @@ class ODataSource:
             if items is None:
                 if self.strict:
                     raise ResponseParseError("no value/items key in response object")
-                return []
+                return doc, []
         else:
             if self.strict:
                 raise ResponseParseError(f"unexpected payload type {type(doc)}")
-            return []
+            return doc, []
         if self.strict:
             bad = [i for i in items if not isinstance(i, dict)]
             if bad:
                 raise ResponseParseError(f"{len(bad)} non-object items")
-            return items
-        return [i for i in items if isinstance(i, dict)]
+            return doc, items
+        return doc, [i for i in items if isinstance(i, dict)]
+
+    def _get(self, resource: str, params: ODataParams) -> tuple[object, list[dict]]:
+        """One request with S7 retry and S8 parsing: (document, records)."""
+        url = f"{self.base_url}{resource}?{urlencode(params.to_query())}"
+        return self._parse(self._request(url))
+
+    def probe(self, resource: str, filter: str | None = None) -> tuple[int | None, dict | None]:
+        """The ``$count`` probe: one ``$top=1&$count=true`` request.
+        Returns (total, first record); total is ``@odata.count``, 0 when the
+        probe page is empty, and None when the endpoint ignores ``$count``."""
+        doc, items = self._get(resource, ODataParams(filter=filter, top=1, skip=0, count=True))
+        first = items[0] if items else None
+        if isinstance(doc, dict) and "@odata.count" in doc:
+            return int(doc["@odata.count"]), first
+        return (0 if first is None else None), first
 
     # -- S1/S4/S5: page iterator with termination + rails --------------------
     def pages(
@@ -212,21 +234,13 @@ class ODataSource:
         # pages (each request still asks for at most page_size)
         remaining = params.top
         prev_page_sig: list | None = None
+        prev_overfull = False
 
-        while True:
+        while remaining is None or remaining > 0:
             if page_index - start_page_index >= self.max_pages:
                 raise PaginationLimitExceeded(f"max_pages={self.max_pages} exceeded")
-            ask = self.page_size if remaining is None else max(1, min(self.page_size, remaining))
-            q = ODataParams(
-                filter=params.filter,
-                top=ask,
-                skip=skip,
-                orderby=params.orderby,
-                count=params.count,
-                extra=params.extra,
-            ).to_query()
-            url = f"{self.base_url}{resource}?{urlencode(q)}"
-            items = self._parse(self._request(url))
+            ask = self.page_size if remaining is None else min(self.page_size, remaining)
+            _, items = self._get(resource, replace(params, top=ask, skip=skip))
 
             if not items:  # S4: empty page → done
                 return
@@ -235,52 +249,34 @@ class ODataSource:
             # would otherwise all hash to None and truncate after one page)
             page_sig = [json.dumps(i, sort_keys=True) for i in items[:3]]
             if skip > start_skip and page_sig == prev_page_sig:
-                return
+                if prev_overfull:
+                    # the endpoint ignores $top as well: its one oversized
+                    # page already held everything
+                    return
+                # ending here would report a partial scan as complete
+                raise ODataSourceError(
+                    "odata endpoint ignored $skip (page repeated at "
+                    f"skip={skip}); serial pagination cannot make progress"
+                )
             prev_page_sig = page_sig
+            prev_overfull = len(items) > ask
 
             if self.max_records is not None and total + len(items) > self.max_records:
                 raise PaginationLimitExceeded(f"max_records={self.max_records} exceeded")
 
+            short = len(items) < ask
             if remaining is not None:
                 items = items[:remaining]
+                remaining -= len(items)
             yield Page(items=items, page_index=page_index, skip=skip)
             total += len(items)
-            if remaining is not None:
-                remaining -= len(items)
-                if remaining <= 0:
-                    return
-            if len(items) < ask:  # S4: short page → done
+            # S4: a short page ends an open scan. A scan with a $top total
+            # reads on until the total is met or a page comes back empty, so
+            # a server that caps its pages below page_size cannot cut it short
+            if short and remaining is None:
                 return
             skip += len(items)
             page_index += 1
-
-    def fetch_json_batches(
-        self, resource: str, params: ODataParams | None = None, **kw
-    ) -> Iterator[list[str]]:
-        for page in self.pages(resource, params, **kw):
-            yield [json.dumps(item, sort_keys=True) for item in page.items]
-
-    def fetch_df(
-        self,
-        spark: SparkSession,
-        resource: str,
-        params: ODataParams | None = None,
-        schema=None,
-        **kw,
-    ) -> DataFrame:
-        """Aggregate all pages into a Bronze-shaped DataFrame with the raw
-        JSON in a `data` string column (the reference's JSONB column)."""
-        rows: list[tuple[str]] = []
-        for batch in self.fetch_json_batches(resource, params, **kw):
-            rows.extend((s,) for s in batch)
-        df = spark.createDataFrame(rows, schema="data string") if rows else (
-            spark.createDataFrame([], schema="data string")
-        )
-        if schema is not None:
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("parsed", F.from_json("data", schema))
-        return df
 
 
 def fanout_fetch(

@@ -1,14 +1,19 @@
-"""OData as a first-class PySpark Python DataSource (Spark 4 API).
+"""OData as a first-class PySpark Python DataSource (Spark 4 API): planner
++ pushdown + row shaping over ``ODataSource``.
 
-`sources/odata.py` is the driver-side ingestor (the reference's shape);
-this module is the Spark-idiomatic upgrade: `spark.read.format("odata")`
-with
+`sources/odata.py::ODataSource` is the one OData pager (URL, request with
+retry, parse, scan end); this module adds only what Spark needs on top of
+it, behind `spark.read.format("odata")`:
 
-- **partition-parallel scan**: a driver-side `$count` probe splits the
-  `$skip` range into N disjoint partitions, each fetched ON AN EXECUTOR —
-  the reference serializes every page through one process; here a
-  1000-executor cluster pulls 1000 ranges concurrently (rate limits
-  permitting),
+- **partition-parallel scan**: the driver-side ``ODataSource.probe``
+  (`$count`) splits the `$skip` range into N disjoint partitions, each
+  paged by ``ODataSource.pages`` ON AN EXECUTOR — the reference serializes
+  every page through one process; here a 1000-executor cluster pulls 1000
+  ranges concurrently (rate limits permitting). Each partition is held to
+  the pager's S5 rail of ``DEFAULT_MAX_PAGES`` (10000) pages, so with the
+  default `pagesize` (1000) and `numpartitions` (4) a scan reads at most
+  about 40M rows (10M on the serial fallback) and beyond that raises
+  ``PaginationLimitExceeded``; raise `numpartitions` for larger feeds,
 - **filter pushdown** (`pushFilters`): comparison predicates on declared
   filterable fields become the `$filter` query string (the reference's S2,
   now driven by Catalyst instead of hand-built),
@@ -22,6 +27,7 @@ server over a JSON file — hermetic tests, picklable to executors).
 from __future__ import annotations
 
 import json
+import sys
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 from urllib.parse import parse_qs, urlparse
@@ -39,7 +45,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-DEFAULT_PAGE_SIZE = 1000
+from trialsync_etl_spark.sources.odata import (
+    API_MAX_PAGE_SIZE,
+    ODataParams,
+    ODataSource,
+    ODataSourceError,
+)
+
 DEFAULT_NUM_PARTITIONS = 4
 
 _OP = {
@@ -102,7 +114,7 @@ def fixture_transport(path: str, honor_count: bool = True):
                 records = [r for r in records if _matches(r, clause)]
         total = len(records)
         skip = int(q.get("$skip", "0"))
-        top = int(q.get("$top", str(DEFAULT_PAGE_SIZE)))
+        top = int(q.get("$top", str(API_MAX_PAGE_SIZE)))
         body: dict = {"value": records[skip : skip + top]}
         if honor_count and q.get("$count") == "true":
             body["@odata.count"] = total
@@ -135,25 +147,10 @@ def _make_transport(options: dict):
     raise ValueError("odata source needs a 'fixture' or 'url' option")
 
 
-def _request_page(options: dict, skip: int, top: int, flt: str | None, count: bool = False) -> dict:
-    from urllib.parse import urlencode
-
-    transport = _make_transport(options)
-    base = options.get("url", "") + options.get("resource", "")
-    q = {"$top": top, "$skip": skip}
-    if flt:
-        q["$filter"] = flt
-    if count:
-        q["$count"] = "true"
-    status, _, body = transport(f"{base}?{urlencode(q)}")
-    if status != 200:
-        raise IOError(f"odata request failed: status={status}")
-    return json.loads(body)
-
-
-#: partition-end sentinel: paginate serially until an empty page (used when
-#: the endpoint doesn't honor $count=true, so the total is unknowable)
-SERIAL = -1
+#: partition-end sentinel: an unbounded range, paged serially until an empty
+#: page (used when the endpoint doesn't honor $count=true, so the total is
+#: unknowable)
+SERIAL = sys.maxsize
 
 
 @dataclass
@@ -166,7 +163,7 @@ class ODataReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.schema = schema
         self.options = dict(options)
-        self.page_size = int(options.get("pagesize", DEFAULT_PAGE_SIZE))
+        self.page_size = int(options.get("pagesize", API_MAX_PAGE_SIZE))
         self.num_partitions = int(options.get("numpartitions", DEFAULT_NUM_PARTITIONS))
         self.filterable = {
             f.strip() for f in options.get("filterable", "").split(",") if f.strip()
@@ -186,59 +183,57 @@ class ODataReader(DataSourceReader):
     def _filter_string(self) -> str | None:
         return " and ".join(self.pushed) if self.pushed else None
 
+    def _source(self) -> ODataSource:
+        return ODataSource(
+            _make_transport(self.options),
+            base_url=self.options.get("url", ""),
+            page_size=self.page_size,
+        )
+
     # -- partition planning: $count probe → disjoint $skip ranges -----------
     def partitions(self) -> Sequence[InputPartition]:
-        doc = self._probe()
-        if "@odata.count" not in doc:
+        source = self._source()
+        resource, flt = self.options.get("resource", ""), self._filter_string()
+        total, first = source.probe(resource, flt)
+        if total is None:
             # endpoint ignored $count=true: a parallel range plan is
             # impossible, but the data may exist — fall back to one
             # serial-pagination partition (end=SERIAL sentinel) instead of
             # silently returning an empty scan
-            if not doc.get("value"):
-                return [SkipRange(0, 0)]  # probe shows genuinely no rows
             return [SkipRange(0, SERIAL)]
-        total = int(doc["@odata.count"])
         if total <= 0:
             return [SkipRange(0, 0)]
         n = max(1, min(self.num_partitions, (total + self.page_size - 1) // self.page_size))
         step = (total + n - 1) // n
-        return [SkipRange(s, min(s + step, total)) for s in range(0, total, step)]
-
-    def _probe(self) -> dict:
-        return _request_page(self.options, skip=0, top=1, flt=self._filter_string(), count=True)
+        plan = [SkipRange(s, min(s + step, total)) for s in range(0, total, step)]
+        if len(plan) > 1:
+            # an endpoint that ignores $skip serves the first rows at every
+            # range start: each partition would land copies of them
+            _, items = source._get(resource, ODataParams(filter=flt, top=1, skip=plan[1].start))
+            if items[:1] == [first]:
+                raise ODataSourceError(
+                    f"odata endpoint ignored $skip (row at skip={plan[1].start} "
+                    "repeats skip=0); a parallel range scan would duplicate rows"
+                )
+        return plan
 
     # -- executor-side range scan -------------------------------------------
     def read(self, partition: SkipRange) -> Iterator[tuple]:
         fields = [f.name for f in self.schema.fields]
         raw_mode = fields == ["data"]
-        flt = self._filter_string()
-        skip = partition.start
-        prev_first: object = object()  # sentinel ≠ any item
-        while partition.end == SERIAL or skip < partition.end:
-            top = (
-                self.page_size
-                if partition.end == SERIAL
-                else min(self.page_size, partition.end - skip)
-            )
-            doc = _request_page(self.options, skip=skip, top=top, flt=flt)
-            items = doc.get("value", [])
-            if not items:
-                return
-            # SERIAL mode exists because the endpoint ignored $count=true;
-            # an endpoint that ALSO ignores $skip would serve the same page
-            # forever — fail loudly instead of looping and duplicating rows
-            if partition.end == SERIAL and items[0] == prev_first:
-                raise IOError(
-                    "odata endpoint ignored $skip (page repeated at "
-                    f"skip={skip}); serial pagination cannot make progress"
-                )
-            prev_first = items[0]
-            for item in items:
+        # a bounded scan, the SERIAL range too: it reads until the range is
+        # full or a page is empty, so a server that serves fewer rows than
+        # asked cannot cut the partition short
+        for page in self._source().pages(
+            self.options.get("resource", ""),
+            ODataParams(filter=self._filter_string(), top=partition.end - partition.start),
+            start_skip=partition.start,
+        ):
+            for item in page.items:
                 if raw_mode:
                     yield (json.dumps(item, sort_keys=True),)
                 else:
                     yield tuple(item.get(f) for f in fields)
-            skip += len(items)
 
 
 class ODataDataSource(DataSource):
