@@ -4,8 +4,10 @@ order-insensitive value comparison with canonical value rendering)."""
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -31,6 +33,24 @@ TABLES = (
 def spark():
     s = get_spark(app_name="trialsync-tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs the with-block launches from the
+    calling thread: a fresh job group is set on this thread, and after the
+    block (once the listener bus has delivered every job event) the group's
+    jobs are read back from the status tracker into the yielded list."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

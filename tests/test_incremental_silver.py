@@ -5,7 +5,9 @@ plus tuning-helper units."""
 from __future__ import annotations
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -125,6 +127,7 @@ def test_incremental_fact_converges_to_full_reload(spark, tmp_path):
     r1 = run_transform(spark, "load_fact_daily_events_incremental", ctx)
     assert r1.status == "success", r1.error
     assert store.get("fact_daily_events") is not None
+    wm1 = store.get("fact_daily_events")
 
     _write_events_dir(spark, all_events, sf_dir)
     r2 = run_transform(spark, "load_fact_daily_events_incremental", ctx)
@@ -135,6 +138,11 @@ def test_incremental_fact_converges_to_full_reload(spark, tmp_path):
         (F.year("ts") * 10000 + F.month("ts") * 100 + F.dayofmonth("ts"))
         .cast("int").alias("date_key")
     )
+    # rows written = the rows of the partitions the inclusive slice touched
+    touched = all_events.filter(F.col("ts") >= F.lit(wm1).cast("timestamp"))
+    assert r2.rows == got.join(
+        touched.select(date_key).distinct(), "date_key", "left_semi"
+    ).count()
     expected = all_events.groupBy(date_key, "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
@@ -210,12 +218,20 @@ def test_incremental_mv_refresh_converges_to_full_view(spark, tmp_path):
     r1 = run_transform(spark, "refresh_mv_enrollment_summary_incremental", ctx)
     assert r1.status == "success", r1.error
     assert store.get("mv_enrollment_summary") is not None
+    wm1 = store.get("mv_enrollment_summary")
 
     all_orders.write.mode("overwrite").parquet(os.path.join(sf_dir, "orders.parquet"))
     r2 = run_transform(spark, "refresh_mv_enrollment_summary_incremental", ctx)
     assert r2.status == "success", r2.error
 
     got = spark.read.parquet(ctx.table_path("mv_enrollment_summary_inc"))
+    # rows written = the rows of the months the inclusive slice touched
+    touched = all_orders.filter(
+        F.col("o_orderdate") >= F.lit(wm1).cast("timestamp")
+    ).select(F.date_format("o_orderdate", "yyyy-MM").alias("order_month"))
+    assert r2.rows == got.join(
+        touched.distinct(), "order_month", "left_semi"
+    ).count()
     expected = enrollment_summary(spark, sf_dir)
     cols = ["order_month", "c_mktsegment", "n_customers", "n_orders",
             "total_value", "pct_urgent"]
@@ -232,3 +248,207 @@ def test_incremental_mv_refresh_converges_to_full_view(spark, tmp_path):
                 spark.read.parquet(ctx.table_path("mv_enrollment_summary_inc"))
                 .select(*cols).collect())
     assert g3 == e
+
+
+# ---------------------------------------------------------------------------
+# the listing early exit and the one-write commit (run_incremental)
+# ---------------------------------------------------------------------------
+#: transform -> (watermark job, source table it slices)
+INCREMENTAL = {
+    "load_dim_users_incremental": ("dim_users", "events"),
+    "load_fact_daily_events_incremental": ("fact_daily_events", "events"),
+    "refresh_mv_enrollment_summary_incremental": ("mv_enrollment_summary", "orders"),
+}
+
+
+def _sources(spark, tmp_path):
+    """A source dir of Spark-written events, orders and customer tables,
+    and a context with a fresh watermark store over it."""
+    sf_dir = str(tmp_path / "sf")
+    for name in ("events", "orders", "customer"):
+        load_table(spark, SF_DIR, name).write.mode("overwrite").parquet(
+            os.path.join(sf_dir, f"{name}.parquet")
+        )
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    return WarehouseContext(sf_dir=sf_dir, warehouse_dir=str(tmp_path / "wh"),
+                            options={"watermark_store": store})
+
+
+def _land_newer(spark, sf_dir, table, tag):
+    """Append one part file of rows newer than any in ``table`` (the shape
+    of a sync change batch)."""
+    src = load_table(spark, sf_dir, table).limit(3)
+    if table == "events":
+        rows = src.withColumn("ts", F.col("ts") + F.expr("INTERVAL 400 DAYS")) \
+            .withColumn("event_id", F.col("event_id") + 10_000_000 * tag)
+    else:
+        rows = src.withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 400 DAYS")) \
+            .withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000 * tag)
+    rows.write.mode("append").parquet(os.path.join(sf_dir, f"{table}.parquet"))
+
+
+def _state(ctx, job):
+    from trialsync_etl_spark.streaming.incremental import (
+        BOUNDARY_PARAM,
+        FINGERPRINT_PARAM,
+    )
+
+    store = ctx.options["watermark_store"]
+    return tuple(store.get(job, param=p) for p in (None, BOUNDARY_PARAM, FINGERPRINT_PARAM))
+
+
+@pytest.mark.parametrize("name", sorted(INCREMENTAL))
+def test_idle_poll_launches_no_spark_job(spark, tmp_path, name):
+    """A poll over an unchanged source listing is answered from the
+    watermark store and the listing: 0 Spark jobs, 0 rows."""
+    from tests.conftest import spark_jobs
+
+    ctx = _sources(spark, tmp_path)
+    r1 = run_transform(spark, name, ctx)
+    assert r1.status == "success" and r1.rows > 0, r1.error
+    with spark_jobs(spark) as jobs:
+        r2 = run_transform(spark, name, ctx)
+    assert r2.status == "success" and r2.rows == 0, r2.error
+    assert jobs == []
+
+
+def test_listing_fingerprint_sees_data_not_bookkeeping(tmp_path):
+    """The fingerprint changes when a file Spark reads is added or
+    rewritten, and not when Spark's bookkeeping files come and go."""
+    from trialsync_etl_spark.streaming.incremental import source_fingerprint as fp
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    part.write_bytes(b"x" * 10)
+    base = fp(str(table))
+    assert fp(str(table)) == base
+
+    # bookkeeping: _SUCCESS, .crc, _temporary/ are invisible to a read
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / ".part-0.parquet.crc").write_bytes(b"c")
+    (table / "_temporary" / "0").mkdir(parents=True)
+    (table / "_temporary" / "0" / "part-9.parquet").write_bytes(b"t")
+    assert fp(str(table)) == base
+
+    # a rewrite under the same name: same size, new mtime ...
+    st = part.stat()
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    rewritten = fp(str(table))
+    assert rewritten != base
+    # ... or new size, same mtime
+    mtime = part.stat().st_mtime_ns
+    part.write_bytes(b"y" * 11)
+    os.utime(part, ns=(mtime, mtime))
+    assert fp(str(table)) not in (base, rewritten)
+
+    # an appended part file, and a key=value partition dir, are data
+    before = fp(str(table))
+    (table / "part-1.parquet").write_bytes(b"z")
+    appended = fp(str(table))
+    assert appended != before
+    (table / "_p=1").mkdir()
+    (table / "_p=1" / "part-2.parquet").write_bytes(b"w")
+    assert fp(str(table)) != appended
+
+    # the resolved root counts: a pointer repointed at a copy is a change
+    ptr = tmp_path / "ptr"
+    ptr.symlink_to(table.name)
+    assert fp(str(ptr)) == fp(str(table))
+    shutil.copytree(table, tmp_path / "copy", copy_function=shutil.copy2)
+    ptr.unlink()
+    ptr.symlink_to("copy")
+    assert fp(str(ptr)) == fp(str(tmp_path / "copy")) != fp(str(table))
+
+
+def test_poll_refreshes_on_appended_part_not_on_bookkeeping(spark, tmp_path):
+    from tests.conftest import spark_jobs
+    from trialsync_etl_spark.streaming.incremental import (
+        BOUNDARY_PARAM,
+        advance_boundary,
+    )
+
+    name, job = "load_fact_daily_events_incremental", "fact_daily_events"
+    ctx = _sources(spark, tmp_path)
+    assert run_transform(spark, name, ctx).status == "success"
+
+    # a store committed without a listing (one written before listings
+    # were recorded): the first poll reads, finds nothing new and records
+    # the listing, so the next poll needs no job
+    store = ctx.options["watermark_store"]
+    advance_boundary(store, job, store.get(job), int(store.get(job, param=BOUNDARY_PARAM)))
+    assert _state(ctx, job)[2] is None
+    r = run_transform(spark, name, ctx)
+    assert r.status == "success" and r.rows == 0 and _state(ctx, job)[2] is not None
+    events = os.path.join(ctx.sf_dir, "events.parquet")
+    for junk in ("_SUCCESS", ".part-x.crc"):
+        with open(os.path.join(events, junk), "w") as f:
+            f.write("junk")
+    os.makedirs(os.path.join(events, "_temporary", "0"))
+    with spark_jobs(spark) as jobs:
+        r = run_transform(spark, name, ctx)
+    assert r.status == "success" and r.rows == 0 and jobs == []
+
+    _land_newer(spark, ctx.sf_dir, "events", tag=1)
+    r = run_transform(spark, name, ctx)
+    assert r.status == "success" and r.rows > 0, r.error
+
+
+def test_file_landed_during_a_run_is_read_by_the_next_poll(spark, tmp_path, monkeypatch):
+    """The listing a run records is the one taken before its first read:
+    a part file landing mid-run is not marked consumed unread."""
+    from trialsync_etl_spark.streaming import incremental
+
+    name = "load_fact_daily_events_incremental"
+    ctx = _sources(spark, tmp_path)
+    real = incremental.boundary_stats
+
+    def landing(df, ts_col):
+        monkeypatch.setattr(incremental, "boundary_stats", real)
+        _land_newer(spark, ctx.sf_dir, "events", tag=2)
+        return real(df, ts_col)
+
+    monkeypatch.setattr(incremental, "boundary_stats", landing)
+    assert run_transform(spark, name, ctx).status == "success"
+    assert incremental.boundary_stats is real
+    r2 = run_transform(spark, name, ctx)
+    assert r2.status == "success" and r2.rows > 0, r2.error
+
+    full = WarehouseContext(sf_dir=ctx.sf_dir, warehouse_dir=str(tmp_path / "full"))
+    assert run_transform(spark, "load_fact_daily_events", full).status == "success"
+    sel = ["date_key", "event_type", "n_events", "n_users",
+           F.round("total_value", 4).alias("total_value")]
+
+    def rows(c):
+        df = spark.read.parquet(c.table_path("fact_daily_events"))
+        return sorted(tuple(map(str, r)) for r in df.select(*sel).collect())
+
+    assert rows(ctx) == rows(full)
+
+
+@pytest.mark.parametrize("name", sorted(INCREMENTAL))
+def test_failed_write_commits_nothing(spark, tmp_path, monkeypatch, name):
+    """A failure in the transform's table write leaves watermark, boundary
+    count and listing fingerprint as they were; the next poll refreshes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    job, table = INCREMENTAL[name]
+    ctx = _sources(spark, tmp_path)
+    assert run_transform(spark, name, ctx).status == "success"
+    before = _state(ctx, job)
+    assert all(v is not None for v in before)
+    _land_newer(spark, ctx.sf_dir, table, tag=3)
+
+    def fail(*a, **kw):
+        raise OSError("injected write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", fail)
+        r = run_transform(spark, name, ctx)
+    assert r.status == "failed" and "injected write failure" in r.error
+    assert _state(ctx, job) == before
+
+    r = run_transform(spark, name, ctx)
+    assert r.status == "success" and r.rows > 0, r.error
+    after = _state(ctx, job)
+    assert after[0] > before[0] and after[2] != before[2]

@@ -149,3 +149,71 @@ def test_legacy_sidecars_keep_their_defaults(tmp_path):
     )
     assert freq._CM_PARAMS.resolve(cm, depth=2, width=64) == (2, 64)
     assert freq.read_cm_params(cm) is None
+
+
+def test_watermark_updates_wait_for_the_store_lock(tmp_path):
+    """A watermark ``set``, ``advance`` or boundary commit is one
+    read-modify-write under ``<path>__lock``: while the lock is held here
+    each waits; once released, every update lands and none is lost."""
+    from trialsync_etl_spark.streaming.incremental import (
+        BOUNDARY_PARAM,
+        FINGERPRINT_PARAM,
+        WatermarkStore,
+        advance_boundary,
+    )
+
+    path = str(tmp_path / "wm.json")
+    store = WatermarkStore(path)
+    store.set("a", "2026-01-01 00:00:00")
+    ops = [
+        lambda: store.set("b", "2026-02-01 00:00:00"),
+        lambda: store.advance("a", "2026-03-01 00:00:00"),
+        lambda: advance_boundary(store, "c", "2026-04-01", 7, fingerprint="f"),
+    ]
+    ts = [threading.Thread(target=op) for op in ops]
+    with file_lock(store.lock_path):
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=0.5)
+        assert all(t.is_alive() for t in ts), "an update ran without the lock"
+        assert store.get("b") is None
+    for t in ts:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in ts)
+    assert store.get("a") == "2026-03-01 00:00:00"
+    assert store.get("b") == "2026-02-01 00:00:00"
+    assert (store.get("c"), store.get("c", param=BOUNDARY_PARAM),
+            store.get("c", param=FINGERPRINT_PARAM)) == ("2026-04-01", "7", "f")
+    assert os.stat(path).st_mode & 0o777 == 0o644
+    assert not [f for f in os.listdir(tmp_path) if f.endswith(".tmp")]
+
+
+def test_concurrent_watermark_updates_lose_none(tmp_path):
+    """More writer threads than cores, switching as often as the
+    interpreter allows: every key each one sets is in the final file, so
+    no read-modify-write overwrote another's update."""
+    import sys
+
+    from trialsync_etl_spark.streaming.incremental import WatermarkStore
+
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    n_threads, n_each = 2 * (os.cpu_count() or 4), 10
+
+    def work(i):
+        for k in range(n_each):
+            store.set(f"job{i}", str(k), param=k)
+
+    ts = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in ts)
+    with open(store.path) as f:
+        assert len(json.load(f)) == n_threads * n_each

@@ -47,19 +47,48 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _open(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The raw scan of a table: ONE ``spark.read.parquet`` (one listing and
+    one schema-inference job). Nano-timestamp columns read as int64."""
     if name in NANO_TS_COLS:
         # the caller may hand us a session built without this config (the
         # driver does); it is runtime-settable, so pin it before the read
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    dtypes = dict(df.dtypes)
+    return spark.read.parquet(table_path(sf_dir, name))
+
+
+def _as_loaded(raw: DataFrame, name: str) -> DataFrame:
+    """``raw`` with its nano-timestamp columns truncated to µs."""
+    dtypes = dict(raw.dtypes)
     for col in NANO_TS_COLS.get(name, ()):
         if dtypes.get(col) == "bigint":
             # integer division keeps full precision (ns epoch > 2^53 would
             # lose bits through a double)
-            df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
-    return df
+            raw = raw.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
+    return raw
+
+
+def _since(
+    raw: DataFrame, name: str, ts_col: str, watermark: str, inclusive: bool
+) -> DataFrame:
+    """The rows of ``raw`` newer than ``watermark`` (see load_table_since)."""
+
+    def cmp(col, bound):
+        return col >= bound if inclusive else col > bound
+
+    if ts_col in NANO_TS_COLS.get(name, ()) and dict(raw.dtypes).get(ts_col) == "bigint":
+        import datetime as _dt
+
+        wm = _dt.datetime.fromisoformat(watermark).replace(tzinfo=_dt.timezone.utc)
+        wm_ns = int(wm.timestamp()) * 1_000_000_000 + wm.microsecond * 1000
+        raw = raw.filter(cmp(F.col(ts_col), F.lit(wm_ns)))
+    return _as_loaded(raw, name).filter(
+        cmp(F.col(ts_col), F.lit(watermark).cast("timestamp"))
+    )
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return _as_loaded(_open(spark, sf_dir, name), name)
 
 
 def load_table_since(
@@ -85,24 +114,26 @@ def load_table_since(
     seen again (silent data loss). CDC-style consumers that must not
     re-emit boundary rows keep the strict default.
     """
-    if ts_col in NANO_TS_COLS.get(name, ()):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _since(_open(spark, sf_dir, name), name, ts_col, watermark, inclusive)
 
-    def cmp(col, bound):
-        return col >= bound if inclusive else col > bound
 
-    raw = spark.read.parquet(table_path(sf_dir, name))
-    if dict(raw.dtypes).get(ts_col) == "bigint":  # nanos stored as int64
-        import datetime as _dt
-
-        wm = _dt.datetime.fromisoformat(watermark).replace(tzinfo=_dt.timezone.utc)
-        wm_ns = int(wm.timestamp()) * 1_000_000_000 + wm.microsecond * 1000
-        converted = raw.filter(cmp(F.col(ts_col), F.lit(wm_ns))).withColumn(
-            ts_col, F.expr(f"timestamp_micros({ts_col} div 1000)")
-        )
-    else:
-        converted = raw
-    return converted.filter(cmp(F.col(ts_col), F.lit(watermark).cast("timestamp")))
+def load_table_and_since(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    ts_col: str,
+    watermark: str | None,
+    inclusive: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """``(full, slice)`` of one table from ONE open: :func:`load_table`
+    and :func:`load_table_since` (same pushdown) over a shared scan, so a
+    consumer that needs both pays one listing and one schema-inference
+    job. ``watermark=None`` ⇒ the slice is the full table."""
+    raw = _open(spark, sf_dir, name)
+    full = _as_loaded(raw, name)
+    if watermark is None:
+        return full, full
+    return full, _since(raw, name, ts_col, watermark, inclusive)
 
 
 def load_tables(

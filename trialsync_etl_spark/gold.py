@@ -255,68 +255,57 @@ def refresh_mv_enrollment_summary_incremental(
 ) -> int:
     """Incremental MV refresh (the Spark-first upgrade of the reference's
     scheduled full `REFRESH MATERIALIZED VIEW`, docs/03:749-757): only
-    orders newer than the stored watermark are scanned, the months they
+    orders at or after the stored watermark are sliced, the months they
     touch are re-aggregated FROM THE FULL month (late rows merge
-    correctly), and only those month partitions of the MV are replaced by
-    dynamic partition overwrite — untouched months are never recomputed
-    or rewritten. Same cadence pattern as
-    load_fact_daily_events_incremental; converges to the full
-    `enrollment_summary` (pinned by test).
+    correctly; o_orderdate is date-grained, so the boundary date must be
+    rescanned, and the full-month re-aggregation makes that idempotent),
+    and only those month partitions of the MV are replaced by dynamic
+    partition overwrite — untouched months are never recomputed or
+    rewritten. Same cadence pattern as
+    load_fact_daily_events_incremental (streaming.incremental
+    .run_incremental); converges to the full `enrollment_summary`
+    (pinned by test).
+
+    The watermark and the listing fingerprint cover ``orders`` only: a
+    change to ``customer`` alone does not refresh the MV (the full
+    refresh does).
+
+    Returns the rows written (the touched months' rows), counted during
+    the write.
 
     ctx.options: {"watermark_store": WatermarkStore} (required).
     """
-    from trialsync_etl_spark.catalog import load_table_since
+    from trialsync_etl_spark.storage import write_counted
+    from trialsync_etl_spark.streaming.incremental import run_incremental
 
-    store = ctx.options["watermark_store"]
-    wm = store.get("mv_enrollment_summary")
-    path = ctx.table_path("mv_enrollment_summary_inc")
     month = F.date_format("o_orderdate", "yyyy-MM").alias("order_month")
 
-    if wm is None:
-        new = load_table(spark, ctx.sf_dir, "orders")
-    else:
-        # inclusive: o_orderdate is date-grained, so a late order landing
-        # with EXACTLY the watermark date would be lost forever under
-        # strict >; rescanning the boundary is free correctness here
-        # because touched months re-aggregate in full (idempotent)
-        new = load_table_since(
-            spark, ctx.sf_dir, "orders", "o_orderdate", wm, inclusive=True
+    def reaggregate(new, full):
+        touched = new.select(month).distinct()
+        o = full.withColumn("order_month", month)
+        c = load_table(spark, ctx.sf_dir, "customer")
+        mv = (
+            o.join(F.broadcast(touched), "order_month", "left_semi")
+            .join(c, o.o_custkey == c.c_custkey)
+            .groupBy("order_month", "c_mktsegment")
+            .agg(
+                F.countDistinct("o_custkey").alias("n_customers"),
+                F.count(F.lit(1)).alias("n_orders"),
+                F.round(F.sum("o_totalprice"), 2).alias("total_value"),
+                F.round(
+                    F.lit(100.0)
+                    * F.count(F.when(F.col("o_orderpriority") == "1-URGENT", 1))
+                    / F.nullif(F.count(F.lit(1)), F.lit(0)),
+                    2,
+                ).alias("pct_urgent"),
+            )
         )
-    # boundary-count early-exit: the inclusive slice always re-contains
-    # the boundary rows, so isEmpty() would never fire after run 1 and
-    # every idle refresh would rewrite the boundary month for nothing
-    from trialsync_etl_spark.streaming.incremental import (
-        advance_boundary,
-        boundary_stats,
-        stale_slice,
-    )
-
-    mx, n_at_mx = boundary_stats(new, "o_orderdate")
-    if stale_slice(store, "mv_enrollment_summary", wm, mx, n_at_mx):
-        return 0
-    touched = new.select(month).distinct()
-
-    o = load_table(spark, ctx.sf_dir, "orders").withColumn("order_month", month)
-    c = load_table(spark, ctx.sf_dir, "customer")
-    mv = (
-        o.join(F.broadcast(touched), "order_month", "left_semi")
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("order_month", "c_mktsegment")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_value"),
-            F.round(
-                F.lit(100.0)
-                * F.count(F.when(F.col("o_orderpriority") == "1-URGENT", 1))
-                / F.nullif(F.count(F.lit(1)), F.lit(0)),
-                2,
-            ).alias("pct_urgent"),
+        return write_counted(
+            mv, ctx.table_path("mv_enrollment_summary_inc"),
+            partition_by=("order_month",), dynamic=True,
         )
-    )
-    mv.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("order_month").parquet(path)
 
-    advance_boundary(store, "mv_enrollment_summary", mx, n_at_mx)
-    return spark.read.parquet(path).count()
+    return run_incremental(
+        spark, ctx.options["watermark_store"], "mv_enrollment_summary",
+        ctx.sf_dir, "orders", "o_orderdate", reaggregate,
+    )

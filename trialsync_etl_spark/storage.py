@@ -155,6 +155,7 @@ def write_counted(
     df: DataFrame,
     path: str,
     partition_by: tuple[str, ...] | list[str] = (),
+    dynamic: bool = False,
 ) -> int:
     """Overwrite ``path`` with ``df`` as parquet and return the row count
     observed DURING the write (``Observation`` riding the write action) —
@@ -162,7 +163,9 @@ def write_counted(
     ``spark.read.parquet(path).count()`` used to pay. At 16 transforms per
     warehouse build that second job per table was pure fixed overhead; at
     100 TB it is a full re-listing + footer scan of what was just
-    written."""
+    written. ``dynamic=True`` replaces only the ``partition_by``
+    partitions ``df`` holds (write-scoped dynamic partition overwrite, no
+    session-conf leak); the count is then the rows of those partitions."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -170,6 +173,8 @@ def write_counted(
     writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "overwrite"
     )
+    if dynamic:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

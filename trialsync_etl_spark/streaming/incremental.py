@@ -4,7 +4,11 @@ Maps the reference's incremental-load machinery (SURVEY.md §2.9) onto
 Spark concepts:
 
 - I1 watermark filtering: `col(ts) > last_watermark` — a pushed-down scan
-  predicate (the reference's `$filter=modifiedDate gt <ts>`).
+  predicate (the reference's `$filter=modifiedDate gt <ts>`). The
+  incremental transforms run it through :func:`run_incremental`, which
+  answers an idle poll from the watermark store and a listing of the
+  source directory, with no Spark job; only a changed listing reads the
+  slice.
 - I2 checkpoint/resume: a JSON checkpoint of {skip, page_index,
   total_records, parameter_index, failed_parameters} persisted atomically —
   the reference's `run_context` JSONB (src/etl/executor.py:34-89).
@@ -21,15 +25,18 @@ Postgres config tables — the data plane stays distributed.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
+from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trialsync_etl_spark.storage import atomic_write_text
+from trialsync_etl_spark.catalog import load_table_and_since, table_path
+from trialsync_etl_spark.storage import atomic_write_json, atomic_write_text, file_lock
 
 MAX_FAILED_PARAMS = 100
 
@@ -52,11 +59,15 @@ def odata_incremental_clause(ts_field: str, watermark: str) -> str:
 #: WatermarkStore param under which the boundary row-count rides along
 #: with a job's watermark (see boundary_stats)
 BOUNDARY_PARAM = "__boundary_n"
+#: WatermarkStore param under which the source listing fingerprint the
+#: job last consumed rides along with its watermark (see run_incremental)
+FINGERPRINT_PARAM = "__listing"
 
 
 def boundary_stats(df: DataFrame, ts_col: str) -> tuple[str | None, int]:
     """(max ts as string, row count AT that max) of an incremental slice
-    in ONE job — a groupBy on the (small) slice, TakeOrdered(1). ISO
+    in one query — a groupBy on the (small) slice, TakeOrdered(1); under
+    AQE that is two jobs (the shuffle map stage, then the result). ISO
     date/timestamp strings order like their values, so the string max is
     the watermark. (None, 0) for an empty slice."""
     top = (
@@ -89,30 +100,133 @@ def stale_slice(
     return prev is not None and int(prev) == n_at_mx
 
 
+def _later(cur: str | None, candidate: str) -> str:
+    return candidate if cur is None or candidate > cur else cur
+
+
 def advance_boundary(
-    store: "WatermarkStore", job: str, mx: str, n_at_mx: int
+    store: "WatermarkStore",
+    job: str,
+    mx: str,
+    n_at_mx: int,
+    fingerprint: str | None = None,
 ) -> None:
-    """Record the watermark AND its boundary row count after a refresh."""
-    store.advance(job, mx)
-    store.set(job, str(n_at_mx), param=BOUNDARY_PARAM)
+    """Record the watermark (monotonic), its boundary row count and the
+    source listing fingerprint the refresh consumed, in ONE locked write:
+    a crash leaves all three as they were or all three new. Without a
+    fingerprint the recorded one is dropped, so the next poll reads."""
+
+    def commit(data: dict) -> None:
+        key = store._key(job)
+        data[key] = _later(data.get(key), mx)
+        data[store._key(job, BOUNDARY_PARAM)] = str(n_at_mx)
+        if fingerprint is None:
+            data.pop(store._key(job, FINGERPRINT_PARAM), None)
+        else:
+            data[store._key(job, FINGERPRINT_PARAM)] = fingerprint
+
+    store.update(commit)
+
+
+def _visible(name: str) -> bool:
+    """Spark's listing rule for a file source: names starting with ``.``
+    or ``_`` (``.crc``, ``_SUCCESS``, ``_temporary``) are skipped, except
+    ``key=value`` partition dirs; so are in-flight ``._COPYING_`` files."""
+    if name.startswith(".") or name.endswith("._COPYING_"):
+        return False
+    return not name.startswith("_") or "=" in name
+
+
+def source_fingerprint(path: str) -> str:
+    """Digest of what a ``spark.read.parquet(path)`` would read: the
+    resolved root, then the relative name, size and ``mtime_ns`` of every
+    visible file under it (see :func:`_visible`). Driver-side ``stat``
+    calls only — no Spark job. An appended part file or a file rewritten
+    in place changes it; Spark's bookkeeping files do not. A missing path
+    digests to its root alone, which no successful read ever recorded."""
+    root = os.path.realpath(path)
+    entries = []
+    if os.path.isfile(root):
+        st = os.stat(root)
+        entries.append(("", st.st_size, st.st_mtime_ns))
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if _visible(x)]
+        for f in files:
+            if not _visible(f):
+                continue
+            full = os.path.join(d, f)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # removed mid-listing: not readable
+                continue
+            entries.append((os.path.relpath(full, root), st.st_size, st.st_mtime_ns))
+    h = hashlib.sha256(root.encode())
+    for rel, size, mtime_ns in sorted(entries):
+        h.update(f"\0{rel}\0{size}\0{mtime_ns}".encode())
+    return h.hexdigest()
+
+
+def run_incremental(
+    spark: SparkSession,
+    store: "WatermarkStore",
+    job: str,
+    sf_dir: str,
+    table: str,
+    ts_col: str,
+    refresh: Callable[[DataFrame, DataFrame], int],
+) -> int:
+    """The one I1 cadence protocol of the incremental transforms:
+    fingerprint → inclusive slice → boundary → refresh → commit.
+
+    1. List the source table (:func:`source_fingerprint`). With a stored
+       watermark and the same listing as the last commit, nothing can
+       have changed: return 0 without a Spark job (the idle poll).
+    2. Otherwise open the table ONCE and derive both the full table and
+       the slice at or after the watermark (``inclusive``: a row landing
+       exactly at the stored watermark must still be seen; the refresh
+       is idempotent for re-seen boundary rows).
+    3. :func:`boundary_stats` + :func:`stale_slice`: a slice that holds
+       only the rows the last run processed returns 0 (and records the
+       listing, so the next idle poll needs no job).
+    4. ``refresh(new, full)`` writes the job's output and returns the
+       rows it wrote; then :func:`advance_boundary` commits watermark,
+       boundary count and the listing in one write. A failed refresh
+       commits nothing, so the next poll reads again.
+
+    The listing recorded is the one taken BEFORE the read: a file that
+    lands while the job runs is not in it, so the next poll refreshes
+    rather than marking that file consumed unread."""
+    listing = source_fingerprint(table_path(sf_dir, table))
+    wm = store.get(job)
+    if wm is not None and listing == store.get(job, param=FINGERPRINT_PARAM):
+        return 0
+    full, new = load_table_and_since(spark, sf_dir, table, ts_col, wm, inclusive=True)
+    mx, n_at_mx = boundary_stats(new, ts_col)
+    if stale_slice(store, job, wm, mx, n_at_mx):
+        if wm is not None:
+            store.set(job, listing, param=FINGERPRINT_PARAM)
+        return 0
+    n = refresh(new, full)
+    advance_boundary(store, job, mx, n_at_mx, fingerprint=listing)
+    return n
 
 
 class WatermarkStore:
     """Per-(job, parameter) high-watermark persistence — the reference reads
     `dw_etl_runs.completed_at` of the last success (executor.py:950-997).
-    Atomic JSON file keyed by job/param; swap for a Delta table in prod."""
+    One JSON file keyed by job/param; every change is a read-modify-write
+    under the ``<path>__lock`` flock, published by ``atomic_write_json``.
+    Swap for a Delta table in prod."""
 
     def __init__(self, path: str) -> None:
         self.path = path
+        self.lock_path = path + "__lock"
 
     def _load(self) -> dict:
         if not os.path.exists(self.path):
             return {}
         with open(self.path) as f:
             return json.load(f)
-
-    def _save(self, data: dict) -> None:
-        atomic_write_text(self.path, json.dumps(data, indent=1, sort_keys=True))
 
     @staticmethod
     def _key(job: str, param: object = None) -> str:
@@ -121,17 +235,27 @@ class WatermarkStore:
     def get(self, job: str, param: object = None) -> str | None:
         return self._load().get(self._key(job, param))
 
+    def update(self, change: Callable[[dict], object]):
+        """Apply ``change`` to the whole document under the store lock and
+        write it once; returns what ``change`` returns."""
+        with file_lock(self.lock_path):
+            data = self._load()
+            out = change(data)
+            atomic_write_json(self.path, data)
+        return out
+
     def set(self, job: str, watermark: str, param: object = None) -> None:
-        data = self._load()
-        data[self._key(job, param)] = watermark
-        self._save(data)
+        self.update(lambda data: data.__setitem__(self._key(job, param), watermark))
 
     def advance(self, job: str, candidate: str, param: object = None) -> str:
         """Monotonic update — never move a watermark backwards."""
-        cur = self.get(job, param)
-        new = candidate if cur is None or candidate > cur else cur
-        self.set(job, new, param)
-        return new
+        key = self._key(job, param)
+
+        def step(data: dict) -> str:
+            data[key] = _later(data.get(key), candidate)
+            return data[key]
+
+        return self.update(step)
 
 
 @dataclass

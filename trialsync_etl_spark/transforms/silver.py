@@ -337,69 +337,51 @@ def load_dim_visit(spark: SparkSession, ctx: WarehouseContext) -> int:
 @transform("load_dim_users_incremental")
 def load_dim_users_incremental(spark: SparkSession, ctx: WarehouseContext) -> int:
     """The incremental cadence of load_dim_users (I1 + SCD2 merge): only
-    events newer than the stored watermark are merged into the persisted
+    events at or after the stored watermark are merged into the persisted
     dim; the watermark then advances to the max merged timestamp. At scale
     this reads a sliver of the change stream (pushdown via
     load_table_since) and rewrites only the current slice logic — the
-    full rebuild stays the weekly/backfill path (I6 dual cadence).
+    full rebuild stays the weekly/backfill path (I6 dual cadence). An
+    unchanged ``events`` listing returns 0 with no Spark job
+    (streaming.incremental.run_incremental).
+
+    The rescan of the boundary instant is safe: scd2_merge no-ops re-seen
+    rows (null-safe tracked-change check) and its same-timestamp rule
+    replaces rather than duplicates.
 
     ctx.options: {"watermark_store": WatermarkStore} (required).
     """
-    from trialsync_etl_spark.catalog import load_table_since
-    from trialsync_etl_spark.operators.scd2 import read_scd2, scd2_merge
-
-    store = ctx.options["watermark_store"]
-    wm = store.get("dim_users")
-    path = ctx.table_path("dim_users")
-
-    if wm is None:
-        events = load_table(spark, ctx.sf_dir, "events")
-    else:
-        # inclusive: a straggler change with ts EXACTLY at the stored
-        # watermark must still merge. Safe here because scd2_merge is
-        # idempotent for re-seen rows — the null-safe tracked-change check
-        # no-ops unchanged rows and the same-timestamp rule replaces
-        # rather than duplicates
-        events = load_table_since(
-            spark, ctx.sf_dir, "events", "ts", wm, inclusive=True
-        )
-    staging = events.select(
-        "user_id", F.col("event_type").alias("status"), "value", "ts", "event_id"
-    )
-    # boundary-count early-exit: the inclusive slice re-contains the
-    # boundary rows, so isEmpty() would never fire after run 1 and every
-    # idle cycle would re-merge + republish the whole dim for a no-op
-    from trialsync_etl_spark.streaming.incremental import (
-        advance_boundary,
-        boundary_stats,
-        stale_slice,
-    )
-
-    mx, n_at_mx = boundary_stats(staging, "ts")
-    if stale_slice(store, "dim_users", wm, mx, n_at_mx):
-        return 0
-
     import os
 
-    dim = read_scd2(spark, path) if os.path.exists(path) else None
-    if dim is not None and "event_id" in dim.columns:
-        dim = dim.drop("event_id")
-    merged = scd2_merge(
-        dim,
-        staging,
-        key_cols=["user_id"],
-        tracked_cols=["status", "value"],
-        ts_col="ts",
-        tiebreak_cols=["event_id"],
-    )
+    from trialsync_etl_spark.operators.scd2 import read_scd2, scd2_merge
     from trialsync_etl_spark.storage import swap_publish
+    from trialsync_etl_spark.streaming.incremental import run_incremental
 
-    n = swap_publish(
-        merged, path, partition_by=("is_current",), return_count=True
+    path = ctx.table_path("dim_users")
+
+    def merge(new, _full):
+        staging = new.select(
+            "user_id", F.col("event_type").alias("status"), "value", "ts", "event_id"
+        )
+        dim = read_scd2(spark, path) if os.path.exists(path) else None
+        if dim is not None and "event_id" in dim.columns:
+            dim = dim.drop("event_id")
+        merged = scd2_merge(
+            dim,
+            staging,
+            key_cols=["user_id"],
+            tracked_cols=["status", "value"],
+            ts_col="ts",
+            tiebreak_cols=["event_id"],
+        )
+        return swap_publish(
+            merged, path, partition_by=("is_current",), return_count=True
+        )
+
+    return run_incremental(
+        spark, ctx.options["watermark_store"], "dim_users", ctx.sf_dir,
+        "events", "ts", merge,
     )
-
-    advance_boundary(store, "dim_users", mx, n_at_mx)
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -544,23 +526,26 @@ def load_fact_daily_events_incremental(
 ) -> int:
     """Incremental cadence of load_fact_daily_events (the reference's
     incremental-loading pattern, docs/05, applied to a fact): only events
-    newer than the stored watermark are scanned (predicate pushed to
-    parquet via load_table_since), their affected date_key partitions are
-    re-aggregated FROM THE FULL day (late rows within a day merge
-    correctly), and only those partitions are replaced via dynamic
-    partition overwrite — the rest of the fact is untouched.
+    at or after the stored watermark are sliced (predicate pushed to
+    parquet), their affected date_key partitions are re-aggregated FROM
+    THE FULL day (late rows within a day merge correctly, and the
+    boundary rescan is idempotent), and only those partitions are
+    replaced via dynamic partition overwrite — the rest of the fact is
+    untouched. Slice and full day come from one open of ``events``; an
+    unchanged listing returns 0 with no Spark job
+    (streaming.incremental.run_incremental).
 
     At 100 TB this reads a sliver of the stream + the handful of touched
     days, and rewrites only those partitions; the full truncate-reload
     stays the backfill path (I6 dual cadence).
 
+    Returns the rows written (the touched days' aggregate rows), counted
+    during the write.
+
     ctx.options: {"watermark_store": WatermarkStore} (required).
     """
-    from trialsync_etl_spark.catalog import load_table_since
-
-    store = ctx.options["watermark_store"]
-    wm = store.get("fact_daily_events")
-    path = ctx.table_path("fact_daily_events")
+    from trialsync_etl_spark.storage import write_counted
+    from trialsync_etl_spark.streaming.incremental import run_incremental
 
     date_key = (
         (F.year("ts") * 10000 + F.month("ts") * 100 + F.dayofmonth("ts"))
@@ -568,50 +553,30 @@ def load_fact_daily_events_incremental(
         .alias("date_key")
     )
 
-    if wm is None:
-        new = load_table(spark, ctx.sf_dir, "events")
-    else:
-        # inclusive: a late row with ts EXACTLY at the stored watermark
-        # must still mark its day as touched; the full-day re-aggregation
-        # makes the rescan idempotent (cf. refresh_mv_*_incremental)
-        new = load_table_since(spark, ctx.sf_dir, "events", "ts", wm, inclusive=True)
-    # boundary-count early-exit — the inclusive slice re-contains the
-    # boundary rows, so isEmpty() alone would rescan + rewrite the
-    # watermark day on every idle cycle (see streaming.incremental)
-    from trialsync_etl_spark.streaming.incremental import (
-        advance_boundary,
-        boundary_stats,
-        stale_slice,
+    def reaggregate(new, full):
+        # touched days only (tiny: distinct date_keys of the new slice)
+        touched = new.select(date_key).distinct()
+        # re-aggregate the touched days from the FULL stream so a day that
+        # receives late rows is replaced by its complete aggregate, not a
+        # partial one; the date_key semi-join prunes the scan to those days
+        day_full = full.withColumn("date_key", date_key).join(
+            F.broadcast(touched), "date_key", "left_semi"
+        )
+        fact = day_full.groupBy("date_key", "event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.countDistinct("user_id").alias("n_users"),
+            F.sum("value").alias("total_value"),
+            F.avg("value").alias("avg_value"),
+        )
+        return write_counted(
+            fact, ctx.table_path("fact_daily_events"),
+            partition_by=("date_key",), dynamic=True,
+        )
+
+    return run_incremental(
+        spark, ctx.options["watermark_store"], "fact_daily_events", ctx.sf_dir,
+        "events", "ts", reaggregate,
     )
-
-    mx, n_at_mx = boundary_stats(new, "ts")
-    if stale_slice(store, "fact_daily_events", wm, mx, n_at_mx):
-        return 0
-
-    # touched days only (tiny: distinct date_keys of the new slice)
-    touched = new.select(date_key).distinct()
-    # re-aggregate the touched days from the FULL stream so a day that
-    # receives late rows is replaced by its complete aggregate, not a
-    # partial one; the date_key semi-join prunes the scan to those days
-    e = load_table(spark, ctx.sf_dir, "events").withColumn(
-        "date_key", date_key
-    )
-    day_full = e.join(F.broadcast(touched), "date_key", "left_semi")
-    fact = day_full.groupBy("date_key", "event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum("value").alias("total_value"),
-        F.avg("value").alias("avg_value"),
-    )
-
-    # write-scoped dynamic overwrite (no session-conf leak): only the
-    # touched date_key partitions are replaced
-    fact.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("date_key").parquet(path)
-
-    advance_boundary(store, "fact_daily_events", mx, n_at_mx)
-    return spark.read.parquet(path).count()
 
 
 @transform("load_fact_subject_status_change", chain=FACT_CHAIN)
