@@ -777,101 +777,83 @@ def test_two_level_assignment_plan_has_two_broadcast_stages(spark):
     assert n_broadcast >= 2, plan
 
 
-def test_dedup_store_migrates_legacy_combined_layout(spark, tmp_path):
-    """A v1 store (wide signature rows on every band partition, with or
-    without batch tags) is migrated in place on first probe: history
-    verdicts still fire, and the rewritten store carries each legacy
-    signature exactly once in sigs/ with its batch tag preserved."""
-    from pyspark.sql import functions as F
+def _one_table_near_dup_store(spark, docs, path):
+    """A near-dup store in the single-table shape (the MinHash signature
+    on every band row, partitioned by band) — not the bands/ + sigs/
+    layout dedup_store writes."""
+    from trialsync_etl_spark.operators import dedup_store as D
 
-    from trialsync_etl_spark.operators.dedup_store import (
-        batch_signatures,
-        incremental_dup_pairs,
-    )
-
-    store = str(tmp_path / "store")
-    base = " ".join(f"w{i}token" for i in range(30))
-    b1 = spark.createDataFrame(
-        [(1, base), (2, "totally different words about other things entirely")],
-        "doc_id long, text string",
-    )
-    batch_signatures(b1).withColumn("batch_id", F.lit("legacy-1")).write.partitionBy(
-        "band"
-    ).parquet(store)
-
-    b2 = spark.createDataFrame(
-        [(10, base + " tiny tail")], "doc_id long, text string"
-    )
-    out = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
-        spark, b2, store, batch_id="run-2").collect()}
-    assert out == {(1, 10): "history"}
-
-    sigs = spark.read.parquet(f"{store}/sigs")
-    assert sigs.filter("batch_id = 'legacy-1'").count() == 2  # once per doc
-    assert sigs.filter("batch_id = 'run-2'").count() == 1
-    # a pre-tagging legacy store (no batch_id column) migrates too
-    store2 = str(tmp_path / "store2")
-    batch_signatures(b1).write.partitionBy("band").parquet(store2)
-    out2 = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
-        spark, b2, store2, batch_id="run-2").collect()}
-    assert out2 == {(1, 10): "history"}
-    assert spark.read.parquet(f"{store2}/sigs").filter(
-        "batch_id IS NULL").count() == 2
+    h = D._h_cols()
+    D._signed(docs).select(
+        "doc_id", F.explode(F.array(*D._band_structs())).alias("bk"), *h
+    ).select(
+        "doc_id", "bk.band", "bk.band_key", *h, F.lit("old").alias("batch_id")
+    ).write.partitionBy("band").parquet(path)
 
 
-def test_dedup_store_migration_crash_windows_recover(spark, tmp_path):
-    """The migration's two crash windows heal on the next locked call:
-    (a) crash between the renames with a COMPLETE staged copy → the
-    recovery finishes the migration forward; (b) crash with an
-    incomplete staged copy → the legacy store rolls back and migrates
-    again. Either way the next probe sees full history."""
+def _root_table_ann_index(spark, vecs, path):
+    """An ANN index with its tables at the index root and no `current`
+    pointer — not the generation layout ann_store writes."""
     import os
     import shutil
 
-    from pyspark.sql import functions as F
+    from trialsync_etl_spark.operators.ann_store import build_ann_index, resolve_index
 
-    from trialsync_etl_spark.operators.dedup_store import (
-        _migrate_v1_locked,
-        batch_signatures,
-        incremental_dup_pairs,
+    build_ann_index(vecs, path, n_lists=2)
+    gen = resolve_index(path)
+    for name in os.listdir(gen):
+        os.rename(os.path.join(gen, name), os.path.join(path, name))
+    os.unlink(os.path.join(path, "current"))
+    shutil.rmtree(gen)
+
+
+@pytest.mark.parametrize(
+    "entry", ["incremental_dup_pairs", "compact_store", "incremental_semantic_dups"]
+)
+def test_dedup_gate_refuses_a_foreign_store_layout(spark, tmp_path, entry):
+    """A dedup gate's store dir in a layout its module does not write
+    raises ValueError naming the path and the expected layout, and
+    writes nothing into it — read as "no history" it would silently lose
+    every history verdict and land new files beside the old ones. A
+    missing or empty dir is still a fresh store."""
+    import os
+    import re
+
+    from trialsync_etl_spark.operators import ann_store, dedup_store
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "one two three four five")],
+        "doc_id long, text string",
     )
-
-    base = " ".join(f"w{i}token" for i in range(30))
-    b1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    b2 = spark.createDataFrame(
-        [(10, base + " tiny tail")], "doc_id long, text string"
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0])],
+        "vec_id long, embedding array<float>",
     )
+    call = {
+        "incremental_dup_pairs": lambda p: dedup_store.incremental_dup_pairs(
+            spark, docs, p, batch_id="b1"
+        ).collect(),
+        "compact_store": lambda p: dedup_store.compact_store(spark, p),
+        "incremental_semantic_dups": lambda p: ann_store.incremental_semantic_dups(
+            spark, vecs, p, batch_id="b1", n_lists=2
+        ).collect(),
+    }[entry]
+    foreign = str(tmp_path / "foreign")
+    if entry == "incremental_semantic_dups":
+        _root_table_ann_index(spark, vecs, foreign)
+        expected = "current"
+    else:
+        _one_table_near_dup_store(spark, docs, foreign)
+        expected = "bands"
+    before = sorted(os.listdir(foreign))
+    with pytest.raises(ValueError, match=re.escape(foreign) + ".*" + expected):
+        call(foreign)
+    assert sorted(os.listdir(foreign)) == before
 
-    def legacy_store(path):
-        batch_signatures(b1).withColumn(
-            "batch_id", F.lit("legacy-1")
-        ).write.partitionBy("band").parquet(path)
-
-    # (a) forward recovery: store renamed aside, staged copy complete
-    sa = str(tmp_path / "sa")
-    legacy_store(sa)
-    helper = str(tmp_path / "helper")
-    legacy_store(helper)
-    _migrate_v1_locked(spark, helper)          # produce a v2 layout
-    os.rename(helper, sa + "__migrate")        # = the complete staged copy
-    os.rename(sa, sa + "__premigration")       # = crash between renames
-    out = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
-        spark, b2, sa, batch_id="run-2").collect()}
-    assert out == {(1, 10): "history"}
-    assert not os.path.exists(sa + "__premigration")
-    assert not os.path.exists(sa + "__migrate")
-
-    # (b) rollback: staged copy incomplete (no _SUCCESS) → legacy restored
-    sb = str(tmp_path / "sb")
-    legacy_store(sb)
-    os.rename(sb, sb + "__premigration")
-    os.makedirs(os.path.join(sb + "__migrate", "bands"))
-    out = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
-        spark, b2, sb, batch_id="run-2").collect()}
-    assert out == {(1, 10): "history"}
-    assert spark.read.parquet(f"{sb}/sigs").filter(
-        "batch_id = 'legacy-1'").count() == 1
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    call(str(empty))
+    call(str(tmp_path / "missing"))
 
 
 def test_dedup_store_empty_batch_never_creates_unreadable_store(spark, tmp_path):

@@ -344,28 +344,6 @@ def test_sketch_rollup_plan_is_one_hash_aggregate(spark):
     assert s["scans"] == 1
 
 
-def test_batch_signatures_filter_pushdown_is_cheap(spark):
-    """The no-shingle predicate that Catalyst pushes below the signing
-    repartition must stay CHEAP: if the filter form ever reverts to
-    size(__hs) > 0, the optimizer substitutes the whole per-shingle hash
-    pipeline into the pushed predicate and re-evaluates it
-    single-threaded on the pre-shuffle side (the 40s-per-micro-batch
-    regression the streaming bench caught)."""
-    import re
-
-    from trialsync_etl_spark.operators.dedup_store import batch_signatures
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta") for i in range(10)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    plan = batch_signatures(docs)._jdf.queryExecution().executedPlan().toString()
-    # isolate every Filter operator line; none may invoke the hash chain
-    for line in plan.splitlines():
-        if re.match(r"\s*[:+\-\s]*\*?\(?\d*\)?\s*Filter", line):
-            assert "md5" not in line and "conv(" not in line, line
-
-
 def test_live_probe_signing_filter_stays_cheap(spark):
     """Same gate as batch_signatures, on the LIVE probe path
     (_signed + _band_keys): no Filter operator may carry the md5/conv

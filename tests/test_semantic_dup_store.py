@@ -540,65 +540,6 @@ def test_ann_store_concurrent_appends_rebuild_and_compaction(spark, tmp_path):
     )
 
 
-def _flatten_to_legacy_layout(idx):
-    """Rewrite a generation-layout index into the pre-generation shape
-    (tables + _index.json at the index root, no `current` pointer) — the
-    on-disk state an index built before the generation rewrite has."""
-    import os
-    import shutil
-
-    gen = resolve_index(idx)
-    assert gen != idx
-    for name in os.listdir(gen):
-        os.rename(os.path.join(gen, name), os.path.join(idx, name))
-    os.unlink(os.path.join(idx, "current"))
-    shutil.rmtree(gen)
-    assert resolve_index(idx) == idx
-
-
-def test_legacy_migration_retains_root_tables_one_publish_cycle(
-    spark, tmp_path
-):
-    """The migration publish must give a lock-free reader of the OLD
-    layout the same grace window every other swap gives: the root-level
-    legacy tables survive the migration publish (they are that publish's
-    'replaced generation') and are retired only at the NEXT publish."""
-    import os
-
-    import trialsync_etl_spark.operators.ann_store as A
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(80)
-        .localCheckpoint(eager=True)
-    )
-    idx = str(tmp_path / "idx")
-    A.build_ann_index(emb, idx, n_lists=2)
-    _flatten_to_legacy_layout(idx)
-    queries = emb.filter("vec_id < 3").localCheckpoint(eager=True)
-    pre_answers = _full_probe(spark, idx, queries)
-
-    # a reader mid-scan of the legacy layout: resolved (the root) before
-    # the migration publish, consumed after it
-    legacy_lists = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(idx, "lists")
-    )
-    meta1 = compact_ann_index(spark, idx)  # the migration publish
-    assert os.path.islink(os.path.join(idx, "current"))
-    # grace window: the legacy root tables are still intact...
-    assert os.path.exists(os.path.join(idx, "centroids"))
-    assert os.path.exists(os.path.join(idx, "lists"))
-    assert legacy_lists.count() == meta1["count"]  # ...and still readable
-    assert _full_probe(spark, idx, queries) == pre_answers
-
-    # the NEXT publish retires them
-    compact_ann_index(spark, idx)
-    assert not os.path.exists(os.path.join(idx, "centroids"))
-    assert not os.path.exists(os.path.join(idx, "lists"))
-    assert _full_probe(spark, idx, queries) == pre_answers
-
-
 @pytest.mark.slow
 def test_overlapping_rebuilds_never_publish_colliding_model_versions(
     spark, tmp_path
@@ -766,169 +707,6 @@ def test_probe_retry_requires_a_moved_pointer(spark, tmp_path):
     assert len(attempts) == 1
 
 
-@pytest.mark.slow
-def test_prescreen_identical_verdicts_and_persisted_sketch(spark, tmp_path):
-    """The sign-sketch prescreen is an accelerator, not a semantics
-    change: with and without it the gate derives IDENTICAL verdicts on
-    the sf0.001 embeddings corpus with planted near-dups, appended rows
-    persist their `sig` so the NEXT batch's history probe reads sketches
-    instead of recomputing them, and the conservative cutoff keeps every
-    true ≥-threshold pair (the whole miss-risk budget is ~2e-7/pair at
-    5σ)."""
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(150)
-    )
-    # plant near-dups of ids 0..9 at +1000 (tiny first-coord bump)
-    clones = emb.filter("vec_id < 10").select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: F.when(i == 0, x + F.lit(0.01)).otherwise(x),
-        ).cast("array<float>").alias("embedding"),
-    )
-    b1 = emb.filter("vec_id >= 10")
-    b2 = emb.filter("vec_id < 10").unionByName(clones)
-
-    verdicts = {}
-    for tag, pre in (("on", True), ("off", False)):
-        idx = str(tmp_path / f"ann_{tag}")
-        incremental_semantic_dups(
-            spark, b1, idx, 0.95, batch_id="b1", prescreen=pre
-        )
-        out2 = incremental_semantic_dups(
-            spark, b2, idx, 0.95, batch_id="b2", prescreen=pre
-        )
-        verdicts[tag] = sorted(
-            (r.doc_dup, r.neighbor_id, r.cosine_sim, r.vs)
-            for r in out2.collect()
-        )
-    assert verdicts["on"] == verdicts["off"]
-    # the planted pairs were found at all (the test bites). Not all 10:
-    # a clone pair sitting near-equidistant between two bootstrap
-    # centroids can land on opposite sides of the boundary and be
-    # cluster-split — the DOCUMENTED SemDeDup miss (see
-    # incremental_semantic_dups "a pair straddling clusters in BOTH
-    # stages is missed"), deterministic per centroid geometry but not
-    # stable across k-means implementations/seeds. The test's claim is
-    # prescreen-identity plus a biting detector, not zero-miss recall.
-    found = {(d, n) for d, n, _, _ in verdicts["on"]}
-    assert len(found & {(1000 + i, i) for i in range(10)}) >= 8
-
-    # appended rows persist the sketch: the prescreen index (base lists
-    # + pending delta) carries a non-null bigint sig for every row of
-    # both batches
-    from trialsync_etl_spark.operators.ann_store import read_index_rows
-
-    lists = read_index_rows(spark, resolve_index(str(tmp_path / "ann_on")))
-    assert dict(lists.dtypes)["sig"] == "bigint"
-    assert lists.filter(F.col("sig").isNull()).count() == 0
-
-
-def test_prescreen_passes_legacy_rows_without_sig(spark, tmp_path):
-    """History written before the sketch existed (no `sig` column) must
-    always reach exact scoring — the prescreen treats NULL sketches as
-    pass-through, so verdicts equal the exact path's."""
-    import os
-    import shutil
-
-    idx = str(tmp_path / "ann")
-    incremental_semantic_dups(
-        spark, _df(spark, B1), idx, 0.95, batch_id="b1", n_probe=1, n_lists=2
-    )
-    # strip the sig column in place (simulate a pre-sketch index)
-    root = resolve_index(idx)
-    lists_path = os.path.realpath(os.path.join(root, "lists"))
-    legacy = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(lists_path)
-        .drop("sig")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(lists_path)
-    legacy.write.partitionBy("cid").parquet(lists_path)
-
-    out2 = incremental_semantic_dups(
-        spark, _df(spark, B2), idx, 0.95, batch_id="b2", n_probe=1
-    )
-    v2 = _verdicts(out2)
-    assert v2[(10, 1)] == "history"
-    assert v2[(11, 10)] == "batch"
-    assert not any(12 in pair for pair in v2)
-
-
-def test_sign_sketch_hamming_separates_near_from_random(spark):
-    """The prescreen's physics on real embeddings: pairs above 0.95
-    cosine stay at/below the 5σ cutoff (no misses on the fixture), and
-    the bulk of unrelated pairs exceeds it (that filtered share IS the
-    measured speedup) — at the gate's 0.98 bench threshold the random
-    pass rate is ~1%, at the looser 0.95 cutoff it is bounded ~15%."""
-    from trialsync_etl_spark.operators.similarity import (
-        cosine,
-        prescreen_hamming_max,
-        sign_sketch,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(200)
-    )
-    dim = len(emb.first()["embedding"])
-    h_max = prescreen_hamming_max(0.95)
-    sk = emb.select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        sign_sketch(F.col("embedding"), dim).alias("sig"),
-    )
-    # planted near-dups: +0.01 bump on coord 0 (cos > 0.99)
-    bumped = sk.select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform(
-            "v", lambda x, i: F.when(i == 0, x + F.lit(0.01)).otherwise(x)
-        ).alias("v"),
-    )
-    bumped = bumped.select(
-        "vec_id", "v", sign_sketch(F.col("v"), dim).alias("sig")
-    )
-    a, b = sk.alias("a"), bumped.alias("b")
-    near = (
-        a.join(b, F.col("a.vec_id") + 1000 == F.col("b.vec_id"))
-        .select(
-            F.bit_count(
-                F.col("a.sig").bitwiseXOR(F.col("b.sig"))
-            ).alias("h"),
-            cosine(
-                F.col("a.v").cast("array<double>"),
-                F.col("b.v").cast("array<double>"),
-            ).alias("cos"),
-        )
-        .collect()
-    )
-    assert all(r.cos >= 0.95 for r in near)
-    assert all(r.h <= h_max for r in near), "a true pair was prescreened out"
-
-    c = sk.alias("c")
-    rand = (
-        a.join(c, F.col("a.vec_id") < F.col("c.vec_id"))
-        .select(
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("c.sig"))).alias("h"),
-            cosine(
-                F.col("a.v").cast("array<double>"),
-                F.col("c.v").cast("array<double>"),
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") < 0.6)
-    )
-    n_rand = rand.count()
-    frac_95 = rand.filter(F.col("h") <= h_max).count() / n_rand
-    assert frac_95 < 0.15, f"0.95-cutoff prescreen filters too little: {frac_95}"
-    h98 = prescreen_hamming_max(0.98)
-    frac_98 = rand.filter(F.col("h") <= h98).count() / n_rand
-    assert frac_98 < 0.05, f"0.98-cutoff prescreen filters too little: {frac_98}"
-
-
 def test_append_lands_in_pending_delta_and_compaction_folds_it(spark, tmp_path):
     """The LSM append shape: an ingest batch lands as a handful of
     sequential files in the generation's `pending` delta (never one tiny
@@ -1081,273 +859,3 @@ def test_size_triggered_minor_compaction_bounds_the_pending_delta(
         )
 
     assert answers(idx) == answers(ctl)
-
-
-def test_auto_prescreen_decision_hysteresis():
-    """The crossover decision must hold its arm between the enable and
-    disable thresholds — a ratio oscillating at the boundary must not
-    flap the sketch on and off every batch."""
-    from trialsync_etl_spark.streaming.structured import (
-        _auto_prescreen_decision as d,
-    )
-
-    assert d(False, 999.0, 1000.0, 500.0) is False
-    assert d(False, 1000.0, 1000.0, 500.0) is True
-    assert d(True, 700.0, 1000.0, 500.0) is True  # hold (hysteresis band)
-    assert d(False, 700.0, 1000.0, 500.0) is False  # hold (other arm)
-    assert d(True, 499.0, 1000.0, 500.0) is False
-    assert d(True, 500.0, 1000.0, 500.0) is True
-
-
-def _landing(tmp_path, name, files):
-    """Write [(filename, rows)] as a json landing dir with pinned batch
-    order; rows are (vec_id, [floats])."""
-    import json
-    import os
-
-    landing = str(tmp_path / name)
-    os.makedirs(landing)
-    for i, (fname, rows) in enumerate(files):
-        path = os.path.join(landing, fname)
-        with open(path, "w") as f:
-            for vid, emb in rows:
-                f.write(json.dumps({"vec_id": vid, "embedding": emb}) + "\n")
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    return landing
-
-
-def _run_semdup_stream(spark, tmp_path, tag, landing, prescreen, **kw):
-    import os
-
-    from trialsync_etl_spark.streaming import structured
-
-    out = str(tmp_path / f"kept_{tag}")
-    sink = structured.SemanticDupStreamSink(
-        out, str(tmp_path / f"ann_{tag}"), threshold=0.98,
-        n_probe=1, n_lists=2, prescreen=prescreen, **kw,
-    )
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ])
-    ckpt = str(tmp_path / f"ckpt_{tag}")
-    sink.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        ckpt,
-    )
-    kept = sorted(
-        r.vec_id for r in spark.read.parquet(out).select("vec_id").collect()
-    )
-    state = os.path.join(ckpt, "__semdup_prescreen.json")
-    return kept, state, sink
-
-
-@pytest.mark.slow
-def test_auto_prescreen_matches_the_better_arm_on_both_shapes(
-    spark, tmp_path
-):
-    """The r10 A/B shipped the prescreen OFF by default with a committed
-    crossover (enable once raw candidate pairs per probe vector reach the
-    thousands). Auto mode must pick each shape's better arm BY ITSELF:
-    stay off on the sparse/bench shape, turn on for a dense-cone
-    deep-history shape — and be verdict-identical to the exact arm on
-    both (the sketch is an accelerator, never a semantics change). The
-    thresholds are injected low here so the dense shape crosses at test
-    scale; the committed default lives in AUTO_ENABLE_PAIRS_PER_VEC."""
-    import json
-    import os
-
-    import numpy as np
-
-    from trialsync_etl_spark.streaming import structured
-
-    # --- sparse shape: the B1/B2 fixture (a handful of candidates) ---
-    sparse = _landing(
-        tmp_path, "sparse",
-        [("b1.json", B1), ("b2.json", B2)],
-    )
-    kept_auto, state, sink = _run_semdup_stream(
-        spark, tmp_path, "sp_auto", sparse, "auto"
-    )
-    kept_off, _, _ = _run_semdup_stream(
-        spark, tmp_path, "sp_off", sparse, False
-    )
-    assert kept_auto == kept_off
-    assert sink._auto_on is False
-    assert not os.path.exists(state)  # never flipped → nothing persisted
-
-    # --- dense cone: every vector in one tight cluster, so candidates
-    # per vector ~ cluster size — the deep-history shape ---
-    rng = np.random.default_rng(11)
-    base = np.zeros(8); base[0] = 1.0
-    def cone_rows(n0, n, id0):
-        rows = []
-        for i in range(n0, n):
-            v = base + 0.25 * rng.standard_normal(8)
-            v = v / np.linalg.norm(v)
-            rows.append((id0 + i, [float(x) for x in v]))
-        return rows
-    f1 = cone_rows(0, 150, 0)
-    # file 2: fresh cone members + exact clones of three file-1 vectors
-    # (ids +1000) so the verdict set is non-trivial in both arms
-    f2 = cone_rows(150, 290, 0) + [
-        (1000 + vid, emb) for vid, emb in f1[:3]
-    ]
-    dense = _landing(
-        tmp_path, "dense", [("c1.json", f1), ("c2.json", f2)]
-    )
-    # low enough that batch 0's within-batch pairs cross even when the
-    # 2-means bootstrap splits the cone in half (~n/4 pairs per vector)
-    thresholds = dict(
-        auto_enable_pairs_per_vec=25.0, auto_disable_pairs_per_vec=12.0
-    )
-    kept_auto, state, sink = _run_semdup_stream(
-        spark, tmp_path, "dn_auto", dense, "auto", **thresholds
-    )
-    kept_off, _, _ = _run_semdup_stream(
-        spark, tmp_path, "dn_off", dense, False
-    )
-    assert kept_auto == kept_off, "auto arm changed verdicts"
-    # the clones were actually dropped (the gate bites on this shape)
-    assert not any(k >= 1000 for k in kept_auto)
-    # the crossover fired and was persisted for crash-restart resume
-    assert sink._auto_on is True
-    with open(state, encoding="utf-8") as fh:
-        assert json.load(fh) == {"on": True}
-    # batch 1 ran WITH the prescreen: its appended rows persist `sig`
-    from trialsync_etl_spark.operators.ann_store import read_index_rows
-
-    rows = read_index_rows(
-        spark, resolve_index(str(tmp_path / "ann_dn_auto"))
-    )
-    b1_rows = rows.filter(F.col("batch_id").endswith("-1"))
-    assert b1_rows.count() > 0
-    assert b1_rows.filter(F.col("sig").isNull()).count() == 0
-
-
-@pytest.mark.slow
-def test_ivf_assign_literal_is_float_identical_to_window_path(spark):
-    """The literal-centroid assignment (narrow projection) must return
-    EXACTLY the window formulation's rows — same score expression, same
-    (score DESC, cid ASC) order, same ranks — across n_probe values,
-    keep_rank, and the SELF-UNION input shape (the planted-dup parity
-    corpus; the shape that once tripped Spark's Union constraint rewrite
-    in fresh sessions when derived expressions rode the projection)."""
-    from trialsync_etl_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_literal,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .limit(150)
-    )
-    cents = emb.filter("vec_id % 12 = 0").select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    crows = [(r.cid, list(r.cvec)) for r in cents.collect()]
-    # a self-union input with clone rows — the hazard shape
-    clones = emb.filter("vec_id < 10").select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: F.when(i == 0, x + F.lit(0.01)).otherwise(x),
-        ).cast("array<float>").alias("embedding"),
-    )
-    unioned = emb.unionByName(clones)
-
-    def rows(df, keep_rank):
-        cols = ["__vid", "cid"] + (["__crank"] if keep_rank else [])
-        return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
-
-    for src in (emb, unioned):
-        for n_probe in (1, 2, 3):
-            for keep_rank in (False, True):
-                a = rows(
-                    ivf_assign(src, cents, n_probe, keep_rank=keep_rank),
-                    keep_rank,
-                )
-                b = rows(
-                    ivf_assign_literal(
-                        src, crows, n_probe, keep_rank=keep_rank
-                    ),
-                    keep_rank,
-                )
-                assert a == b, (n_probe, keep_rank)
-
-
-@pytest.mark.slow
-def test_auto_prescreen_decision_survives_a_restart(spark, tmp_path):
-    """The persisted crossover decision is the RESUME contract: a new
-    sink instance attaching to the same checkpoint (crash-restart /
-    next availableNow invocation) must come up on the arm the previous
-    run decided, not re-derive it from scratch — and a later batch that
-    stays above the disable threshold keeps it on."""
-    import json
-    import os
-
-    import numpy as np
-
-    from trialsync_etl_spark.streaming import structured
-
-    rng = np.random.default_rng(23)
-    base = np.zeros(8); base[0] = 1.0
-
-    def cone_rows(n0, n, id0=0):
-        rows = []
-        for i in range(n0, n):
-            v = base + 0.25 * rng.standard_normal(8)
-            v = v / np.linalg.norm(v)
-            rows.append((id0 + i, [float(x) for x in v]))
-        return rows
-
-    landing = _landing(
-        tmp_path, "landing", [("c1.json", cone_rows(0, 150))]
-    )
-    out = str(tmp_path / "kept")
-    idx = str(tmp_path / "ann")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-    ])
-    kw = dict(
-        threshold=0.98, n_probe=1, n_lists=2,
-        auto_enable_pairs_per_vec=25.0, auto_disable_pairs_per_vec=12.0,
-    )
-    sink1 = structured.SemanticDupStreamSink(out, idx, prescreen="auto", **kw)
-    sink1.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        ckpt,
-    )
-    assert sink1._auto_on is True  # the dense cone flipped it on
-
-    # a NEW instance on the same checkpoint resumes ON before any batch
-    f2 = os.path.join(landing, "c2.json")
-    with open(f2, "w") as f:
-        for vid, emb in cone_rows(150, 290):
-            f.write(json.dumps({"vec_id": vid, "embedding": emb}) + "\n")
-    os.utime(f2, (1_700_000_001, 1_700_000_001))
-    sink2 = structured.SemanticDupStreamSink(out, idx, prescreen="auto", **kw)
-    assert sink2._auto_on is False  # pre-attach default
-    sink2.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        ckpt,
-    )
-    assert sink2._auto_on is True
-    with open(os.path.join(ckpt, "__semdup_prescreen.json")) as fh:
-        assert json.load(fh) == {"on": True}
-    # batch 1 ran under the resumed ON arm: its appended rows carry sig
-    from trialsync_etl_spark.operators.ann_store import read_index_rows
-
-    rows = read_index_rows(spark, resolve_index(idx))
-    b1 = rows.filter(F.col("batch_id").endswith("-1"))
-    assert b1.count() > 0
-    assert b1.filter(F.col("sig").isNull()).count() == 0

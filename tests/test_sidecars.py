@@ -192,28 +192,41 @@ def test_watermark_updates_wait_for_the_store_lock(tmp_path):
 def test_concurrent_watermark_updates_lose_none(tmp_path):
     """More writer threads than cores, switching as often as the
     interpreter allows: every key each one sets is in the final file, so
-    no read-modify-write overwrote another's update."""
+    no read-modify-write overwrote another's update. Both run-state
+    files are checked: the watermark store and the per-run checkpoint
+    store, whose saves of distinct run ids share one JSON file."""
     import sys
 
-    from trialsync_etl_spark.streaming.incremental import WatermarkStore
+    from trialsync_etl_spark.streaming.incremental import (
+        Checkpoint,
+        CheckpointStore,
+        WatermarkStore,
+    )
 
-    store = WatermarkStore(str(tmp_path / "wm.json"))
+    wm = WatermarkStore(str(tmp_path / "wm.json"))
+    cps = CheckpointStore(str(tmp_path / "checkpoints.json"))
+    writers = {
+        wm.path: lambda i, k: wm.set(f"job{i}", str(k), param=k),
+        cps.path: lambda i, k: cps.save(f"run{i}-{k}", Checkpoint(skip=k)),
+    }
     n_threads, n_each = 2 * (os.cpu_count() or 4), 10
 
-    def work(i):
-        for k in range(n_each):
-            store.set(f"job{i}", str(k), param=k)
+    for path, write in writers.items():
 
-    ts = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join(timeout=60)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(t.is_alive() for t in ts)
-    with open(store.path) as f:
-        assert len(json.load(f)) == n_threads * n_each
+        def work(i):
+            for k in range(n_each):
+                write(i, k)
+
+        ts = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in ts:
+                t.start()
+            for t in ts:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in ts)
+        with open(path) as f:
+            assert len(json.load(f)) == n_threads * n_each, path

@@ -386,73 +386,6 @@ def test_near_dup_stream_sink_checkpoint_wipe_keeps_history(spark, tmp_path):
     assert sink3._stream_tag == sink2._stream_tag
 
 
-def test_near_dup_replay_excludes_legacy_stream_tags(spark, tmp_path):
-    """Upgrade path: a crashed pre-uuid attempt appended signatures tagged
-    'stream-<n>'. Replaying batch n under the new uuid tag must treat that
-    partial append as its own earlier attempt — probing it as history
-    would pair every doc with itself-from-the-crash and drop BOTH docs of
-    each near-dup pair."""
-    from trialsync_etl_spark.operators.dedup_store import incremental_dup_pairs
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    store = str(tmp_path / "store")
-    out = str(tmp_path / "kept")
-    b0 = spark.createDataFrame(
-        [(1, base), (2, base + " tonight"),
-         (3, "completely different content about spark engines")],
-        "doc_id long, text string",
-    )
-    # the old deployment's crashed attempt: full append under legacy tag
-    incremental_dup_pairs(spark, b0, store, 0.5, batch_id="stream-0")
-
-    sink = structured.NearDupStreamSink(out, store, min_est_jaccard=0.5)
-    sink._stream_tag = "newuuid"
-    # attach() on a pre-uuid checkpoint (offsets exist, marker doesn't)
-    # sets this; it scopes the legacy exclusion to the one upgrade replay
-    sink._legacy_replay = True
-    sink.process_batch(b0, 0)
-    kept = spark.read.parquet(out)
-    # keep-first within the batch: doc 1 survives, near-dup 2 dropped;
-    # without the legacy exclusion doc 1 would ALSO be dropped (history
-    # pair against its own crashed append)
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
-
-
-def test_neardup_legacy_exclusion_only_on_post_upgrade_replay(tmp_path):
-    """The pre-uuid 'stream-<n>' exclusion applies ONLY when the resumed
-    checkpoint predates the uuid marker (the one post-upgrade replay);
-    once the marker exists, legacy-era appends by other streams sharing
-    the store stay visible as genuine history."""
-    import os
-
-    from trialsync_etl_spark.streaming.structured import (
-        NearDupStreamSink,
-        _checkpoint_predates_marker,
-    )
-
-    # fresh checkpoint (no Spark state yet): not a legacy resume
-    fresh = str(tmp_path / "ckpt_fresh")
-    sink = NearDupStreamSink(str(tmp_path / "out"), str(tmp_path / "store"))
-    sink._restore(fresh)
-    assert sink._legacy_replay is False
-
-    # pre-uuid checkpoint: Spark offsets exist, marker doesn't → the
-    # FIRST resume sees legacy_replay, and creating the marker during it
-    # makes every later resume normal again
-    legacy = str(tmp_path / "ckpt_legacy")
-    os.makedirs(os.path.join(legacy, "offsets"))
-    assert _checkpoint_predates_marker(legacy, "__neardup_stream_id")
-    sink2 = NearDupStreamSink(str(tmp_path / "out2"), str(tmp_path / "store"))
-    sink2._restore(legacy)
-    tag = sink2._stream_tag
-    assert sink2._legacy_replay is True
-
-    sink3 = NearDupStreamSink(str(tmp_path / "out3"), str(tmp_path / "store"))
-    sink3._restore(legacy)
-    assert sink3._stream_tag == tag
-    assert sink3._legacy_replay is False
-
-
 def test_media_neardup_stream_sink_matches_batch_incremental(spark, tmp_path):
     """The media member of the streaming store-sibling family: two
     parquet landing files drained as separate micro-batches through

@@ -31,14 +31,13 @@ GENERATION per model:
   written into the generation BEFORE the pointer swap (meta can never
   describe a model the pointer doesn't reference).
 
-Mutations serialize on ``<index>/lists__lock`` (path kept from the
-pre-generation layout so lock identity survives migration). The replaced
-generation is retained until the NEXT publish — a lock-free reader that
-resolved the pointer just before a swap keeps scanning intact files for
-one more publish cycle (same long-running-reader bound as
-`storage.swap_publish` with keep_versions=2). Pre-generation indexes
-(tables at the index root) stay readable and appendable; the first full
-publish (build or retrain) migrates them to a generation in place.
+Mutations serialize on ``<index>/lists__lock`` (see :func:`_lock_file`).
+The replaced generation is retained until the NEXT publish — a lock-free
+reader that resolved the pointer just before a swap keeps scanning
+intact files for one more publish cycle (same long-running-reader bound
+as `storage.swap_publish` with keep_versions=2). This is the only layout
+read: a directory holding index tables at its root but no ``current``
+pointer is refused (:func:`resolve_index`), never read as an empty index.
 """
 
 from __future__ import annotations
@@ -95,11 +94,23 @@ PENDING_COMPACT_MIN_ROWS = 20_000
 def resolve_index(index_path: str) -> str:
     """The live generation directory (realpath through the ``current``
     pointer) — resolve ONCE per logical read so centroids and lists come
-    from the same model snapshot. A pre-generation index (tables at the
-    index root) resolves to the root itself."""
+    from the same model snapshot. An index with nothing published yet (a
+    missing or empty dir) resolves to the index dir itself, which holds
+    no ``centroids``, so the ingest gate bootstraps it. A dir with index
+    tables at its root but no pointer is not this layout and raises
+    ``ValueError``: reading it as empty would drop every history verdict
+    and publish a generation beside the foreign files."""
     ptr = os.path.join(index_path, GEN_POINTER)
     if os.path.islink(ptr):
         return os.path.realpath(ptr)
+    root_tables = ("centroids", "lists")
+    if any(os.path.exists(os.path.join(index_path, t)) for t in root_tables):
+        raise ValueError(
+            f"ANN index {index_path} has index tables at its root but no "
+            f"'{GEN_POINTER}' pointer; expected layout: "
+            f"{index_path}/{GEN_POINTER} -> gen-<id>/{{centroids, lists, "
+            "_index.json}}"
+        )
     return index_path
 
 
@@ -114,9 +125,9 @@ def read_index_rows(
     :data:`PENDING_DIR`). ``probed_cids`` prunes the base by partition
     and the delta by a data filter — the delta is bounded by what landed
     since the last ``compact_ann_index``, so the extra scan is a
-    between-compactions read-amplification trade, classic LSM. Columns
-    one side lacks (``batch_id``/``sig`` on pre-append or pre-sketch
-    bases) are null-filled so downstream schema checks see the union.
+    between-compactions read-amplification trade, classic LSM. A column
+    one side lacks (``batch_id`` on a base built without a batch tag) is
+    null-filled so downstream schema checks see the union.
 
     ``schema`` (the cached unified schema from :func:`_gen_model`) skips
     the per-call ``mergeSchema`` footer-scan job — measured at ~0.4s per
@@ -142,9 +153,11 @@ def read_index_rows(
 
 
 def _lock_file(index_path: str) -> str:
-    """The index mutation lock. The path equals the pre-generation
-    layout's ``<index>/lists__lock`` so a mixed-version deployment still
-    excludes correctly across the migration."""
+    """The index mutation lock, at the index ROOT: every generation is
+    retired by a later publish, so a lock inside one would be a different
+    file for each publisher. The file is never unlinked — a later locker
+    opening a new inode at the same path would not exclude a holder of
+    the old one."""
     return os.path.join(index_path, "lists__lock")
 
 
@@ -180,14 +193,9 @@ def _gen_model(spark: SparkSession, gen_root: str) -> dict:
     """The cached model artifacts of a RESOLVED generation: pays the
     three parquet reads + one mergeSchema footer scan ONCE per
     generation instead of per ingest micro-batch (measured ~0.5s of
-    per-batch fixed cost at the 500-row gate floor). Pre-generation
-    (legacy root-layout) indexes bypass the cache — their tables sit at
-    the mutable index root, so immutability doesn't hold."""
-    from pyspark.sql import types as T
-
-    legacy = not os.path.basename(gen_root).startswith("gen-")
+    per-batch fixed cost at the 500-row gate floor)."""
     key = (spark.sparkContext.applicationId, gen_root)
-    ent = None if legacy else _MODEL_CACHE.get(key)
+    ent = _MODEL_CACHE.get(key)
     if ent is not None:
         return ent
     centroids = spark.read.parquet(
@@ -197,40 +205,32 @@ def _gen_model(spark: SparkSession, gen_root: str) -> dict:
     if supers is not None:
         supers = supers.localCheckpoint(eager=True)
         children = children.localCheckpoint(eager=True)
-    # `centroid_rows` stays None — the literal-projection assignment
-    # (ivf_assign_literal) is float-identical and drops the window
-    # shuffles (15 → 10 jobs/batch), but the interleaved quiet-host A/B
-    # measured the gate END-TO-END SLOWER with it (min-of-3: 256 rows/s
-    # window arm vs 160 literal arm at 500-row batches): analyzing a
-    # k×dim nested literal in every batch's fresh plan costs more
-    # driver-side than the exchanges it removes. Measured, not assumed —
-    # flip here (collect the centroid frame) only with a new measurement
-    # on a shape where plan-analysis isn't the bottleneck.
-    centroid_rows = None
-    # unified base+delta schema: the base's merged footers plus the two
-    # append-only columns (delta rows tag batch_id always, sig when a
-    # prescreen-enabled gate handed it over) — files missing a requested
-    # column null-fill per ordinary parquet schema evolution, exactly the
-    # semantics the mergeSchema read produced
     schema = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(gen_root, "lists")
     ).schema
-    names = set(schema.fieldNames())
-    if "batch_id" not in names:
+    return _cache_model(key, centroids, supers, children, schema)
+
+
+def _cache_model(key, centroids, supers, children, lists_schema) -> dict:
+    """Cache one generation's model artifacts under ``key``. The cached
+    schema is the unified base+delta one: the base's schema plus the
+    append-only ``batch_id`` (delta rows always tag it) — files missing
+    it null-fill per ordinary parquet schema evolution, exactly the
+    semantics a mergeSchema read of both produces."""
+    from pyspark.sql import types as T
+
+    schema = lists_schema
+    if "batch_id" not in schema.fieldNames():
         schema = schema.add("batch_id", T.StringType())
-    if "sig" not in names:
-        schema = schema.add("sig", T.LongType())
     ent = {
         "centroids": centroids,
         "supers": supers,
         "children": children,
-        "centroid_rows": centroid_rows,
         "lists_schema": schema,
     }
-    if not legacy:
-        _MODEL_CACHE[key] = ent
-        while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
-            del _MODEL_CACHE[next(iter(_MODEL_CACHE))]
+    _MODEL_CACHE[key] = ent
+    while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
+        del _MODEL_CACHE[next(iter(_MODEL_CACHE))]
     return ent
 
 
@@ -239,10 +239,7 @@ def _swap_generation_locked(index_path: str, new_gen: str) -> None:
     then retire what the pointer no longer references: generations other
     than {current, the one just replaced} (the replaced one is retained
     for in-flight lock-free readers until the next publish; anything
-    older — including crash-stranded half-staged dirs — is debris), and
-    the pre-generation root-level tables (one-time legacy migration,
-    deferred one cycle — see below; symlinks are unlinked explicitly —
-    rmtree refuses them)."""
+    older — including crash-stranded half-staged dirs — is debris)."""
     ptr = os.path.join(index_path, GEN_POINTER)
     prev = os.path.realpath(ptr) if os.path.islink(ptr) else None
     tmp = ptr + "__ptr"
@@ -256,39 +253,6 @@ def _swap_generation_locked(index_path: str, new_gen: str) -> None:
         full = os.path.join(index_path, name)
         if name.startswith("gen-") and os.path.realpath(full) not in keep:
             shutil.rmtree(full, ignore_errors=True)
-    # the migration publish (prev is None on a pre-generation index)
-    # RETAINS the legacy root-level tables for one cycle — they are this
-    # publish's "replaced generation", and a lock-free reader mid-scan of
-    # the old layout keeps intact files exactly as a generation reader
-    # would; the next publish (prev set) retires them
-    if prev is not None:
-        _cleanup_legacy_tables(index_path)
-
-
-def _cleanup_legacy_tables(index_path: str) -> None:
-    """Remove the pre-generation layout's root-level artifacts at the
-    first publish AFTER the migration publish (the migration itself
-    retains them one cycle as its "replaced generation" so a lock-free
-    reader of the old layout gets the standard grace window): the four
-    table pointers/dirs, their ``__v*``
-    version dirs, ``__history.json`` manifests, per-table lock files, and
-    the root ``_index.json``. The index mutation lock (``lists__lock``)
-    is kept — unlinking it would let a later locker open a NEW inode and
-    break mutual exclusion with any still-running holder. No-op on an
-    already-migrated index."""
-    legacy = ("centroids", "supers", "children", "lists", PENDING_DIR)
-    for name in os.listdir(index_path):
-        if name == GEN_POINTER or name.startswith("gen-"):
-            continue
-        if name == os.path.basename(_lock_file(index_path)):
-            continue
-        stem = name.split("__", 1)[0]
-        if stem in legacy or name in ("_index.json", "_index.json.tmp"):
-            full = os.path.join(index_path, name)
-            if os.path.islink(full) or os.path.isfile(full):
-                os.unlink(full)
-            elif os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
 
 
 def build_ann_index(
@@ -399,32 +363,16 @@ def _publish_model_and_lists(
         children = children.localCheckpoint(eager=True)
 
     def _stage_and_publish() -> dict:
-        from trialsync_etl_spark.operators.similarity import (
-            SIGN_SKETCH_PLANES,
-            sign_sketch,
-        )
-
         assigned = ivf_assign_auto(
             corpus, centroids, 1, id_col, vec_col,
             supers=supers, children=children,
         )
         scale = quantize_scale(F.col("__vec"))
-        # the ingest gate's prescreen sketch, persisted from day one. NOT
-        # a `carry` through the assignment: at n_probe=1 the assignment
-        # output is already one row per vector, so computing it here
-        # costs the same — and a carry expression over a SELF-UNION
-        # corpus (the planted-dup query shape) trips Spark's Union
-        # constraint rewrite ("key not found: <attr>") in fresh sessions.
-        # The plane count is pinned in the meta below — stored and
-        # probe-side sketches can never silently use different planes.
         lists = assigned.select(
             F.col("__vid").alias("vec_id"),
             "cid",
             quantize_int8(F.col("__vec"), scale).alias("codes"),
             F.col("__vec").cast("array<float>").alias("vec"),
-            sign_sketch(
-                F.col("__vec"), int(dim_row[0]), SIGN_SKETCH_PLANES
-            ).alias("sig"),
         )
         if row_tags is not None:
             lists = lists.join(
@@ -470,7 +418,6 @@ def _publish_model_and_lists(
             "dim": int(dim_row[0]),
             "count": int(n_vecs),
             "model_version": int(model_version),
-            "sig_planes": SIGN_SKETCH_PLANES,
         }
         if not clustered:
             meta["pending_count"] = int(n_vecs)
@@ -487,23 +434,10 @@ def _publish_model_and_lists(
         # otherwise re-read + re-checkpoint (plus one mergeSchema footer
         # job for the lists schema) — the ingest gate probes the index it
         # just bootstrapped in the SAME micro-batch
-        from pyspark.sql import types as T
-
-        schema = lists.schema
-        names = set(schema.fieldNames())
-        if "batch_id" not in names:
-            schema = schema.add("batch_id", T.StringType())
-        if "sig" not in names:
-            schema = schema.add("sig", T.LongType())
-        _MODEL_CACHE[(spark.sparkContext.applicationId, os.path.realpath(gen))] = {
-            "centroids": centroids,
-            "supers": supers,
-            "children": children,
-            "centroid_rows": None,  # literal path measured OFF; see _gen_model
-            "lists_schema": schema,
-        }
-        while len(_MODEL_CACHE) > _MODEL_CACHE_MAX:
-            del _MODEL_CACHE[next(iter(_MODEL_CACHE))]
+        _cache_model(
+            (spark.sparkContext.applicationId, os.path.realpath(gen)),
+            centroids, supers, children, lists.schema,
+        )
         return meta
 
     os.makedirs(index_path, exist_ok=True)
@@ -552,19 +486,7 @@ def query_ann_index(
     # high list counts: N_queries x K dots beat the two-level path's
     # per-call super-centroid derivation. The auto/two-level routing is
     # for CORPUS-side assignment (build/append), where N dominates.
-    # Small-model generations carry collected centroid_rows — the literal
-    # path drops the probe's broadcast join + window shuffle entirely.
-    if model["centroid_rows"] is not None:
-        from trialsync_etl_spark.operators.similarity import (
-            ivf_assign_literal,
-        )
-
-        assigned_q = ivf_assign_literal(
-            queries, model["centroid_rows"], n_probe, id_col, vec_col
-        )
-    else:
-        assigned_q = ivf_assign(queries, centroids, n_probe, id_col, vec_col)
-    probes = assigned_q.select(
+    probes = ivf_assign(queries, centroids, n_probe, id_col, vec_col).select(
         F.col("__vid").alias("query_id"),
         F.col("__vec").cast("array<double>").alias("__qvec"),
         "cid",
@@ -794,20 +716,9 @@ def append_to_ann_index(
         return ivf_assign_auto(
             new_vectors, model["centroids"], 1, id_col, vec_col,
             supers=model["supers"], children=model["children"],
-            centroid_rows=model["centroid_rows"],
         )
 
     def _project_plan(a):
-        # the prescreen sketch is persisted ONLY when the handoff already
-        # carries it (a prescreen-enabled gate computed it on the ranked
-        # probe rows) — computing it here unconditionally would put
-        # ~n_planes folds per row inside the LOCKED write for callers
-        # that never prescreen, measured as most of the pending-delta
-        # win given back. Rows appended without it have a NULL ``sig``
-        # (prescreen pass-through, exact scoring — always correct), and
-        # the nightly ``rebuild_ann_index_if_oversized`` retrain
-        # recomputes sketches for EVERY row, so enabling the prescreen
-        # later backfills at the next rebuild with no special path.
         scale = quantize_scale(F.col("__vec"))
         r = a.select(
             F.col("__vid").alias("vec_id"),
@@ -815,10 +726,7 @@ def append_to_ann_index(
             quantize_int8(F.col("__vec"), scale).alias("codes"),
             F.col("__vec").cast("array<float>").alias("vec"),
             F.lit(batch_id).alias("batch_id"),
-            *(["__sig"] if "__sig" in a.columns else []),
         )
-        if "__sig" in a.columns:
-            r = r.withColumnRenamed("__sig", "sig")
         # a handful of sequential files into the pending delta — never a
         # cid-partitioned write (one tiny file per touched cid per batch,
         # measured at 1.5-3s of in-lock time for an 8K batch vs ~0.3s;
@@ -908,44 +816,15 @@ def incremental_semantic_dups(
     vec_col: str = "embedding",
     n_probe: int = 2,
     n_lists: int | None = None,
-    also_exclude: tuple[str, ...] = (),
-    prescreen: bool = False,
     spread: int | None = None,
     pin: bool = True,
     batch_rows: int | None = None,
-    stats_sink: dict | None = None,
 ) -> DataFrame:
     """Semantic near-dup detection of a NEW batch against the persisted
     ANN index AND within the batch, then append the batch to the index —
     SemDeDup's cluster-scoped pair semantics at INGEST cadence (the
     dedup_store pattern applied to embeddings: history is never
     re-embedded, re-assigned, or re-scored).
-
-    ``prescreen=True`` gates the exact cosine fold behind a sign-sketch
-    hamming test (``similarity.sign_sketch``): each batch vector's sketch
-    is computed once on the ranked probe rows, history sketches are read
-    from the ``sig`` column appends persist, and a candidate pair pays
-    the ``dim``-element float fold only when its sketches disagree on at
-    most ``prescreen_hamming_max(threshold)`` bits — a 5σ-conservative
-    cutoff (miss probability ~1e-6 per pair; random pairs are filtered
-    ~99% at gate thresholds). History rows written before the sketch
-    existed have a NULL ``sig`` and always pass through to exact scoring;
-    thresholds too low for the sketch to discriminate auto-disable it.
-
-    The DEFAULT is False — measured, not assumed: the prescreen cuts the
-    pair-scoring stage 3.8s→1.3s at an 8K-batch/24K-history bench point
-    (33× on an isolated 16M-pair stress shape), but at ingest-cadence
-    micro-batches the end-to-end gate is FIXED-COST bound (assignment +
-    checkpoint + locked append + per-batch plan builds), and the
-    sketch's own per-batch cost made the streaming gate ~17% SLOWER at
-    every bench scale (interleaved A/B, committed in COVERAGE.md round
-    10). Turn it on when candidate pairs per probe vector are large —
-    history lists in the thousands, i.e. deep-history deployments where
-    the scoring stage, not the fixed work, dominates. Builds and
-    prescreen-enabled appends persist ``sig``; rows appended with the
-    prescreen off carry NULL (always exact-scored), and the nightly
-    rebuild retrain recomputes sketches for every row — enabling the
-    prescreen later backfills itself at the next rebuild.
 
     Returns (doc_dup, neighbor_id, cosine_sim, vs) with vs ∈ {'history',
     'batch'}; ``doc_dup`` is always the NEW vector to drop (history wins;
@@ -963,13 +842,19 @@ def incremental_semantic_dups(
     from ONE resolved generation, so the centroids that route the probe
     and the lists it prunes always belong to the same model.
 
+    Every candidate pair is scored by the exact cosine fold, with no
+    sketch filter in front: at ingest micro-batch sizes the gate is bound
+    by fixed per-batch work, not pair scoring (a sign-sketch filter
+    measured ~17% slower end to end; COVERAGE.md round 10).
+
     Replay-convergent: the history probe excludes rows tagged with the
-    current ``batch_id`` (+ ``also_exclude``), so a crashed-and-retried
-    ingest derives the same verdicts instead of pairing the batch with
-    its own earlier partial append; duplicate appended rows are healed by
-    :func:`compact_ann_index`. A missing index bootstraps from this
-    batch (``n_lists`` defaults to ~√N), emitting within-batch pairs
-    only.
+    current ``batch_id``, so a crashed-and-retried ingest derives the
+    same verdicts instead of pairing the batch with its own earlier
+    partial append; duplicate appended rows are healed by
+    :func:`compact_ann_index`. A missing (or empty) index dir bootstraps
+    from this batch (``n_lists`` defaults to ~√N), emitting within-batch
+    pairs only; a dir in a foreign layout raises ``ValueError`` (see
+    :func:`resolve_index`).
 
     ``pin=False`` returns the verdicts LAZY (skipping one whole query
     execution per call — planning + an AQE job cascade, a measured slice
@@ -981,30 +866,8 @@ def incremental_semantic_dups(
     frame across two index publishes scans retired files. ``batch_rows``
     passes a row count the caller already knows (the streaming sink's
     pin-job Observation) so the bootstrap's ~√N list sizing skips its
-    own count query.
-
-    ``stats_sink`` (a dict) receives RAW candidate-pair counts
-    (pre-prescreen, pre-threshold) for the auto-prescreen crossover
-    detector, derived with ZERO extra per-batch jobs:
-    ``batch_candidates`` is exact (Σ n·(n-1)/2 over the primary-cid
-    histogram, which rides the existing ranked-probe Observation), and
-    ``hist_candidates`` is Σ per probe row of the history rows in its
-    cid, from a per-generation cid histogram computed ONCE per
-    generation (one bounded job, cached) — so it counts the generation
-    snapshot and lags rows appended since, by at most the pending-delta
-    bound, which the crossover's 2× hysteresis band absorbs. NOT
-    measured with mid-plan Observations: a ``CollectMetrics`` node that
-    isn't the root of the executed frame proved unreliable under AQE
-    (``Observation.get`` blocked forever on some plan shapes and threw
-    ``toPyRow`` assertion errors on others — found by the restart test,
-    reproduced in plain batch mode)."""
-    from trialsync_etl_spark.operators.similarity import (
-        dot,
-        ivf_assign_auto,
-        l2_norm,
-        prescreen_hamming_max,
-        sign_sketch,
-    )
+    own count query."""
+    from trialsync_etl_spark.operators.similarity import dot, l2_norm
 
     if not batch_id:
         raise ValueError("batch_id must be a non-empty per-ingest identifier")
@@ -1065,30 +928,12 @@ def incremental_semantic_dups(
     # centroids, so a mid-probe rebuild always errs on re-assigning.
     root = resolve_index(index_path)
     with open(os.path.join(root, "_index.json")) as f:
-        _meta = json.load(f)
-        model_version = int(_meta.get("model_version", 1))
-        dim = _meta.get("dim")
-        sig_planes = _meta.get("sig_planes")
-    # the sketch needs the static vector dim AND the index's pinned plane
-    # count (set at build; stored sketches from a different count would
-    # make the hamming meaningless) — a legacy meta missing either just
-    # runs without the prescreen (exact path). The cutoff is computed
-    # ONCE, from the INDEX's plane count, never from the module default:
-    # pre-gating at the default planes would silently no-op the prescreen
-    # on an index pinned at a higher count where the threshold IS
-    # discriminative.
-    h_max = (
-        prescreen_hamming_max(threshold, n_planes=int(sig_planes))
-        if prescreen and sig_planes
-        else None
-    )
-    with_sig = h_max is not None and bool(dim)
+        model_version = int(json.load(f).get("model_version", 1))
     # immutable per-generation artifacts from the cache: centroids +
     # two-level routing pinned in memory, and the unified lists schema so
     # the history read below skips its per-batch mergeSchema footer job —
     # together ~0.5s of measured fixed cost per ingest micro-batch
     model = _gen_model(spark, root)
-    centroids = model["centroids"]
     # ONE ranked probe scores the batch against the centroids; rank 1 IS
     # the primary assignment (same window, same score/cid tiebreak as a
     # separate n_probe=1 call — float-identical), so the per-batch cost
@@ -1107,75 +952,20 @@ def incremental_semantic_dups(
     # batch's shuffle stages — pure scheduling, measured as a material
     # slice of the small-batch fixed cost (the ingest sink passes
     # ~rows/250 clamped to [4, defaultParallelism]).
-    supers, children = model["supers"], model["children"]
-    # the checkpoint job below already touches every row — observe the
+    # The checkpoint job already touches every row — observe the
     # probed-cid set on it instead of paying a separate
     # `distinct().collect()` job per ingest batch
     obs = Observation()
-    # extra ROOT-level metrics only when the caller wants candidate
-    # stats: the cid lists are n_probe × batch rows of ints — bounded,
-    # and riding the same checkpoint job (see the stats_sink docstring
-    # for why these are never mid-plan CollectMetrics nodes)
-    obs_metrics = [F.collect_set("cid").alias("cids")]
-    if stats_sink is not None:
-        obs_metrics.append(F.collect_list("cid").alias("probe_cids"))
-        obs_metrics.append(
-            F.collect_list(
-                F.when(F.col("__crank") == 1, F.col("cid"))
-            ).alias("primary_cids")
-        )
-    ranked = ivf_assign_auto(
-        new_vectors, centroids, n_probe, id_col, vec_col, keep_rank=True,
-        supers=supers, children=children,
-        centroid_rows=model["centroid_rows"],
-    ).withColumn("__n", l2_norm(F.col("__vec").cast("array<double>")))
-    if with_sig:
-        # the prescreen sketch, computed on the RANKED rows (n_probe per
-        # vector) and materialized by the checkpoint below so every later
-        # consumer — vs_hist, vs_batch, the append's persisted `sig` —
-        # reads it instead of recomputing. NOT a `carry` through the
-        # assignment's per-vector projection: a derived expression there
-        # over a SELF-UNION batch (the planted-dup parity shape) trips
-        # Spark's Union constraint rewrite ("key not found: <attr>") in
-        # fresh sessions; the n_probe-fold recompute costs ~n_planes
-        # extra folds per extra rank row, bounded and safe.
-        ranked = ranked.withColumn(
-            "__sig", sign_sketch(F.col("__vec"), int(dim), int(sig_planes))
-        )
     ranked = (
-        ranked.repartition(spread or spark.sparkContext.defaultParallelism)
-        .observe(obs, *obs_metrics)
+        ivf_assign_auto(
+            new_vectors, model["centroids"], n_probe, id_col, vec_col,
+            keep_rank=True, supers=model["supers"], children=model["children"],
+        )
+        .withColumn("__n", l2_norm(F.col("__vec").cast("array<double>")))
+        .repartition(spread or spark.sparkContext.defaultParallelism)
+        .observe(obs, F.collect_set("cid").alias("cids"))
         .localCheckpoint(eager=True)
     )
-    batch_stats = obs.get  # fired by the eager checkpoint job
-    if stats_sink is not None:
-        from collections import Counter
-
-        primary = Counter(
-            c for c in (batch_stats["primary_cids"] or []) if c is not None
-        )
-        stats_sink["batch_candidates"] = sum(
-            n * (n - 1) // 2 for n in primary.values()
-        )
-        if bootstrap:
-            stats_sink["hist_candidates"] = 0
-        else:
-            counts = model.get("hist_cid_counts")
-            if counts is None:
-                # one bounded job per generation (n_lists rows), cached
-                # on the model entry; lags same-generation appends by
-                # the pending-delta bound — see the docstring
-                counts = {
-                    r["cid"]: r["count"]
-                    for r in read_index_rows(
-                        spark, root, schema=model["lists_schema"]
-                    ).groupBy("cid").count().collect()
-                }
-                model["hist_cid_counts"] = counts
-            stats_sink["hist_candidates"] = sum(
-                counts.get(c, 0) for c in (batch_stats["probe_cids"] or [])
-            )
-    _sig_cols = ["__sig"] if with_sig else []
 
     def _nview(df):
         # __nv pre-cast to array<double> once per row: every consumer of
@@ -1185,7 +975,6 @@ def incremental_semantic_dups(
             F.col("__vec").cast("array<double>").alias("__nv"),
             "cid",
             F.col("__n").alias("__nn"),
-            *_sig_cols,
         )
 
     primary = ranked.filter(F.col("__crank") == 1)
@@ -1194,42 +983,22 @@ def incremental_semantic_dups(
 
     pairs = []
     if not bootstrap:
-        probed_cids = list(batch_stats["cids"] or [])
+        probed_cids = list(obs.get["cids"] or [])  # fired by the checkpoint
         hist = read_index_rows(
             spark, root, probed_cids, schema=model["lists_schema"]
         )
-        if "batch_id" not in hist.columns:  # never-appended index
-            hist = hist.withColumn("batch_id", F.lit(None).cast("string"))
-        if "sig" not in hist.columns:  # pre-sketch index: exact path only
-            hist = hist.withColumn("sig", F.lit(None).cast("bigint"))
-        excluded = (batch_id, *also_exclude)
         hist = hist.filter(
-            F.col("batch_id").isNull() | ~F.col("batch_id").isin(*excluded)
+            # NULL tags (a base built without a batch tag) are history
+            ~F.col("batch_id").eqNullSafe(batch_id)
         ).select(
             F.col("vec_id").alias("neighbor_id"),
             "cid",
             # pre-cast once per history row (see _exact_cos)
             F.col("vec").cast("array<double>").alias("__hv"),
-            F.col("sig").alias("__hsig"),
         ).withColumn("__hn", l2_norm(F.col("__hv")))
-        joined = probes.join(hist, "cid").filter(
-            F.col("__nid") != F.col("neighbor_id")
-        )
-        if with_sig:
-            # the prescreen: ONE bit_count(xor) per candidate pair gates
-            # the dim-element exact fold below. Rows appended before the
-            # sketch existed (NULL __hsig) always pass through.
-            joined = joined.filter(
-                F.col("__hsig").isNull()
-                | (
-                    F.bit_count(
-                        F.col("__hsig").bitwiseXOR(F.col("__sig"))
-                    )
-                    <= F.lit(h_max)
-                )
-            )
         vs_hist = (
-            joined
+            probes.join(hist, "cid")
+            .filter(F.col("__nid") != F.col("neighbor_id"))
             .select(
                 F.col("__nid").alias("doc_dup"),
                 "neighbor_id",
@@ -1257,19 +1026,10 @@ def incremental_semantic_dups(
         F.col("__nv").alias("__av"),
         "cid",
         F.col("__nn").alias("__an"),
-        *[F.col("__sig").alias("__asig") for _ in _sig_cols],
     )
-    batch_joined = assigned.join(a, "cid").filter(
-        F.col("__nid") > F.col("neighbor_id")
-    )
-    if with_sig:
-        # within-batch pairs: both sketches were computed this batch
-        batch_joined = batch_joined.filter(
-            F.bit_count(F.col("__asig").bitwiseXOR(F.col("__sig")))
-            <= F.lit(h_max)
-        )
     vs_batch = (
-        batch_joined
+        assigned.join(a, "cid")
+        .filter(F.col("__nid") > F.col("neighbor_id"))
         .select(
             F.col("__nid").alias("doc_dup"),
             "neighbor_id",
@@ -1294,9 +1054,7 @@ def incremental_semantic_dups(
         append_to_ann_index(
             new_vectors, index_path, batch_id=batch_id,
             id_col=id_col, vec_col=vec_col,
-            # the handoff carries the sketch so the append persists it
-            # without recomputing the n_planes plane folds per row
-            assigned=primary.select("__vid", "__vec", "cid", *_sig_cols),
+            assigned=primary.select("__vid", "__vec", "cid"),
             expected_model_version=model_version,
         )
     return result

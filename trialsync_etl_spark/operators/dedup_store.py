@@ -14,12 +14,12 @@ Layout (two tables — the classic LSH-index shape):
   MinHash signature stored ONCE. Only the few candidate pairs' rows are
   fetched for scoring.
 
-The earlier single-table layout carried the full n-hash signature on
-EVERY band row — a ~(n_bands)× write/storage/shuffle amplification that
-dominated the streaming gate's per-batch cost (and at 100 TB would have
-made the store ~12× larger than the signatures it indexes). Legacy
-combined stores are migrated in place, under the store lock, on first
-probe/compact (:func:`_migrate_v1_locked`).
+Keeping the signature out of the band rows matters: a single table
+carrying the full n-hash signature on EVERY band row is a ~(n_bands)×
+write/storage/shuffle amplification (at 100 TB, a store ~12× larger than
+the signatures it indexes). This two-table layout is the only one read:
+a non-empty store dir without ``bands/`` is refused with a
+``ValueError`` (see :func:`_store_frames`), never read as an empty store.
 
 Each appended row is tagged with the caller's ``batch_id``, and the
 history probe excludes the current batch's id — so re-running a batch
@@ -105,127 +105,27 @@ def _band_keys(sigs: DataFrame) -> DataFrame:
     )
 
 
-def batch_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(doc_id, band, band_key, h0..h{n-1}) for a batch — the LEGACY
-    combined-store row shape, kept for the plan gate on the signing
-    filter form and for reading v1 stores during migration. The live
-    probe/append path uses :func:`_signed` + :func:`_band_keys`, which
-    never materialize the signature × band cross product."""
-    sigs = _signed(docs, id_col, text_col, k, hash_fn)
-    h_cols = _h_cols()
-    return sigs.select(
-        "doc_id", F.explode(F.array(*_band_structs())).alias("__bk"), *h_cols
-    ).select(
-        "doc_id",
-        F.col("__bk.band").alias("band"),
-        F.col("__bk.band_key").alias("band_key"),
-        *h_cols,
-    )
-
-
-def _is_v2(store_path: str) -> bool:
-    return os.path.isdir(os.path.join(store_path, BANDS_TABLE))
-
-
-def _staged_complete(tmp: str) -> bool:
-    return all(
-        os.path.exists(os.path.join(tmp, t, "_SUCCESS"))
-        for t in (BANDS_TABLE, SIGS_TABLE)
-    )
-
-
-def _migrate_v1_locked(spark: SparkSession, store_path: str) -> None:
-    """One-off in-place rewrite of a legacy combined store (wide rows,
-    band-partitioned, possibly behind a swap_publish pointer) into the
-    bands/ + sigs/ layout. Caller holds the store lock. Crash-safe by
-    ordering: the rewrite is staged to ``__migrate`` first, the legacy
-    store (dir or pointer) is RENAMED aside to ``__premigration`` (never
-    deleted before the staged copy is in place), the staged copy renames
-    in, and only then are the old files dropped — every crash window
-    leaves either the intact legacy store or a recoverable pair, and the
-    preamble below finishes or rolls back an interrupted attempt."""
-    import glob
-    import shutil
-
-    tmp = store_path + "__migrate"
-    bak = store_path + "__premigration"
-
-    def _cleanup() -> None:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.islink(bak):
-            # the legacy pointer: its version-dir target dies with the
-            # publish artifacts below
-            os.unlink(bak)
-        else:
-            shutil.rmtree(bak, ignore_errors=True)
-        for leftover in glob.glob(store_path + "__*"):
-            if leftover in (store_path + "__lock", tmp, bak):
-                continue
-            if os.path.islink(leftover) or not os.path.isdir(leftover):
-                os.remove(leftover)
-            else:
-                shutil.rmtree(leftover, ignore_errors=True)
-
-    # recovery from an interrupted earlier migration (we hold the lock):
-    # store gone but both pieces present → finish or roll back
-    if not os.path.exists(store_path) and os.path.exists(bak):
-        if _staged_complete(tmp):
-            os.rename(tmp, store_path)
-            _cleanup()
-        else:
-            os.rename(bak, store_path)
-            shutil.rmtree(tmp, ignore_errors=True)
-    if _is_v2(store_path):
-        # stale staging/backup from a crash after the final rename
-        if os.path.exists(tmp) or os.path.exists(bak):
-            _cleanup()
-        return
-    if not os.path.exists(store_path):
-        return
-    real = os.path.realpath(store_path)
-    if not os.listdir(real):  # bare dir, nothing landed: treat as fresh
-        return
-    wide = spark.read.option("mergeSchema", "true").parquet(real)
-    if "batch_id" not in wide.columns:  # pre-tagging stores
-        wide = wide.withColumn("batch_id", F.lit(None).cast("string"))
-    shutil.rmtree(tmp, ignore_errors=True)
-    wide.select("doc_id", "band", "band_key", "batch_id").write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(os.path.join(tmp, BANDS_TABLE))
-    # every doc has exactly one row per band — band 0 carries the sig
-    wide.filter(F.col("band") == 0).select(
-        "doc_id", *_h_cols(), "batch_id"
-    ).write.mode("overwrite").parquet(os.path.join(tmp, SIGS_TABLE))
-    if os.path.islink(bak):
-        os.unlink(bak)  # stale leftover; rename below must not collide
-    else:
-        shutil.rmtree(bak, ignore_errors=True)
-    os.rename(store_path, bak)  # renames a pointer link itself, not its target
-    os.rename(tmp, store_path)
-    _cleanup()
-
-
 def _store_frames(
     spark: SparkSession, store_path: str
 ) -> tuple[DataFrame, DataFrame] | None:
-    """(bands, sigs) of a v2 store, or None when the store doesn't exist
-    yet. mergeSchema: migrated legacy rows may lack columns later appends
-    carry; a sampled-footer read could resolve either schema."""
-    if not _is_v2(store_path):
+    """(bands, sigs) of a store, or None when the store doesn't exist
+    yet (a missing or empty dir: the first append's bands write creates
+    it). Any other dir without ``bands/`` is a foreign layout and raises
+    ``ValueError``: reading it as "no history" would silently drop every
+    history verdict and land new bands beside the old files."""
+    if not os.path.isdir(os.path.join(store_path, BANDS_TABLE)):
+        if os.path.isdir(store_path) and os.listdir(store_path):
+            raise ValueError(
+                f"near-dup store {store_path} is not in the store layout: "
+                f"expected {store_path}/{BANDS_TABLE} (doc_id, band, "
+                f"band_key, batch_id; partitioned by band) and "
+                f"{store_path}/{SIGS_TABLE} (doc_id, h0..h{{n-1}}, batch_id)"
+            )
         return None
-    bands = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(store_path, BANDS_TABLE)
+    return (
+        spark.read.parquet(os.path.join(store_path, BANDS_TABLE)),
+        spark.read.parquet(os.path.join(store_path, SIGS_TABLE)),
     )
-    sigs = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(store_path, SIGS_TABLE)
-    )
-    return bands, sigs
 
 
 def incremental_dup_pairs(
@@ -238,7 +138,6 @@ def incremental_dup_pairs(
     k: int = 3,
     *,
     batch_id: str,
-    also_exclude: tuple[str, ...] = (),
 ) -> DataFrame:
     """Detect near-dups of `new_docs` against the store AND within the
     batch, then append the batch's signatures (tagged ``batch_id``) to
@@ -259,11 +158,8 @@ def incremental_dup_pairs(
     the argument is required (a shared default would silently exclude
     every prior default-tagged append from history).
 
-    ``also_exclude``: extra batch_ids treated as this batch's own earlier
-    attempts — for callers whose tagging scheme changed (the streaming
-    sink's pre-uuid ``stream-<n>`` tags), so a replay after an upgrade
-    still excludes the crashed attempt's partial append instead of
-    probing it as history (which would drop BOTH docs of each pair).
+    A store dir in a foreign layout raises ``ValueError`` (see
+    :func:`_store_frames`).
     """
     if not batch_id:
         raise ValueError("batch_id must be a non-empty per-ingest identifier")
@@ -277,10 +173,8 @@ def incremental_dup_pairs(
     # probe tasks if the lock only covered the append
     try:
         with file_lock(store_path + "__lock"):
-            _migrate_v1_locked(spark, store_path)
             result = _probe_and_append_locked(
-                spark, sigs, keys, store_path, min_est_jaccard, batch_id,
-                also_exclude,
+                spark, sigs, keys, store_path, min_est_jaccard, batch_id
             )
     finally:
         # also on a failed probe/append — a streaming sink retrying a
@@ -297,7 +191,6 @@ def _probe_and_append_locked(
     store_path: str,
     min_est_jaccard: float,
     batch_id: str,
-    also_exclude: tuple[str, ...] = (),
 ) -> DataFrame:
     h_cols = _h_cols()
     cands = []
@@ -307,8 +200,7 @@ def _probe_and_append_locked(
     frames = _store_frames(spark, store_path)
     if frames is not None:
         bands_h, sigs_h = frames
-        excluded = (batch_id, *also_exclude)
-        keep = F.col("batch_id").isNull() | ~F.col("batch_id").isin(*excluded)
+        keep = F.col("batch_id") != batch_id
         cands.append(
             bands_h.filter(keep)
             .alias("hb")
@@ -435,13 +327,13 @@ def _last_append(store_path: str) -> str | None:
 def compact_store(spark: SparkSession, store_path: str) -> int:
     """Maintenance: drop duplicate rows left by re-run appends (same
     doc_id from the same batch_id) from both store tables and rewrite
-    them atomically; legacy combined stores are migrated first. The read
-    and the republish share the store's ``__lock`` so a concurrent
-    ``incremental_dup_pairs`` append cannot commit between them and be
-    dropped by the swap. Returns the compacted signature-row count (one
-    row per (doc_id, batch_id))."""
+    them atomically. The read and the republish share the store's
+    ``__lock`` so a concurrent ``incremental_dup_pairs`` append cannot
+    commit between them and be dropped by the swap. Returns the
+    compacted signature-row count (one row per (doc_id, batch_id)),
+    observed on the rewrite itself. A store dir in a foreign layout
+    raises ``ValueError`` (see :func:`_store_frames`)."""
     with file_lock(store_path + "__lock"):
-        _migrate_v1_locked(spark, store_path)
         frames = _store_frames(spark, store_path)
         if frames is None:
             return 0
@@ -452,9 +344,9 @@ def compact_store(spark: SparkSession, store_path: str) -> int:
             partition_by=("band",),
             already_locked=True,
         )
-        swap_publish(
+        return swap_publish(
             sigs.dropDuplicates(["doc_id", "batch_id"]),
             os.path.join(store_path, SIGS_TABLE),
             already_locked=True,
+            return_count=True,
         )
-    return spark.read.parquet(os.path.join(store_path, SIGS_TABLE)).count()

@@ -90,9 +90,9 @@ def brute_force_topk(
 @functools.lru_cache(maxsize=4096)
 def hyperplane(dim: int, plane: int) -> list[float]:
     """Deterministic pseudo-random hyperplane components derived from md5 —
-    reproducible on any engine (oracle parity), no RNG state. Cached: the
-    ingest gate rebuilds its plan every micro-batch, and the 64-plane sign
-    sketch would otherwise recompute 4096 md5 digests per batch."""
+    reproducible on any engine (oracle parity), no RNG state. Cached: a
+    plan that is rebuilt per call would otherwise recompute ``dim`` md5
+    digests per plane every time."""
     import hashlib
 
     comps = []
@@ -120,100 +120,16 @@ def lsh_signature(vec: Column, dim: int, n_planes: int = 8) -> Column:
     return sig
 
 
-#: default plane count of :func:`sign_sketch` — one BIGINT per vector.
-#: 32 (not 64): the sketch costs n_planes dot folds per VECTOR while it
-#: saves dim-element folds per PAIR, so halving the planes halves the
-#: fixed cost while the filtering power at gate thresholds barely moves
-#: (0.98 → hamming cutoff 9/32, random pairs still ~99% filtered; the
-#: 64-plane variant measured net-negative at the bench's 4-batch history
-#: depth because the sketch cost matched the fold savings). Indexes pin
-#: their plane count in ``_index.json`` (``sig_planes``) at build time,
-#: so a later default change can never mismatch stored sketches.
-SIGN_SKETCH_PLANES = 32
-
-
-def sign_sketch(
-    vec: Column, dim: int, n_planes: int = SIGN_SKETCH_PLANES
-) -> Column:
-    """``n_planes``-bit random-hyperplane sign sketch (packed into ONE
-    BIGINT; default :data:`SIGN_SKETCH_PLANES`) for cheap angular prescreens:
-    bit ``p`` is the sign of the vector's dot with seeded plane ``p``, so
-    for any two vectors ``P(bit differs) = angle/π`` exactly, per plane,
-    over the (fixed, seeded) plane draw — the classic SimHash estimator
-    aimed at VECTORS instead of token sets. Comparing two sketches is ONE
-    ``bit_count(xor)`` instead of a ``dim``-element float fold; the sketch
-    itself costs ``n_planes`` dot folds ONCE per vector and is then reused
-    across every pair the vector participates in.
-
-    Built as ONE nested higher-order fold over a single 2-D plane literal
-    — not ``n_planes`` separate fold expressions like the 8-bit bucket
-    variant above. The per-plane formulation costs ~4096 py4j expression
-    constructions per plan and a per-plane-unrolled codegen body, and the
-    ingest gate rebuilds its plan EVERY micro-batch — measured as a
-    throughput regression larger than the fold work the sketch saves.
-    Bit ``p`` is OR-ed in as the literal two's-complement power (bit 63
-    is minLong — ``sig*2 + bit`` packing would overflow BIGINT, which
-    ANSI mode makes an error, and shiftleft's python binding only takes a
-    static shift)."""
-    planes = F.lit([hyperplane(dim, p) for p in range(n_planes)])
-    pow2 = F.lit([(1 << p) - (1 << 64 if p == 63 else 0) for p in range(n_planes)])
-    vd = vec.cast("array<double>")
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(n_planes)),
-        F.lit(0).cast("bigint"),
-        lambda acc, p: acc.bitwiseOR(
-            F.when(
-                F.aggregate(
-                    F.zip_with(vd, F.element_at(planes, p), lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda a, v: a + v,
-                )
-                >= 0,
-                F.element_at(pow2, p),
-            ).otherwise(F.lit(0).cast("bigint"))
-        ),
-    )
-
-
-def prescreen_hamming_max(
-    threshold: float,
-    n_planes: int = SIGN_SKETCH_PLANES,
-    margin_sds: float = 5.0,
-) -> int | None:
-    """The conservative sketch-hamming cutoff for "could this pair score
-    ≥ threshold exact cosine": a true pair at exactly ``threshold`` has
-    hamming ~ Binomial(n_planes, acos(threshold)/π); the cutoff sits
-    ``margin_sds`` standard deviations ABOVE that mean, so the miss
-    probability is the upper binomial tail (≈1e-6 per pair at 5σ with the
-    default 32 planes / threshold 0.95 — and deterministic for any fixed
-    corpus, since the planes are fixed). Returns None when the cutoff
-    cannot discriminate (within grazing distance of the random-pair mean
-    ``n_planes/2``) — prescreening would then cost sketch folds and
-    filter nothing, so callers should skip it."""
-    import math
-
-    if not (0.0 < threshold < 1.0):
-        return None
-    p = math.acos(min(1.0, max(-1.0, threshold))) / math.pi
-    h = math.ceil(
-        n_planes * p + margin_sds * math.sqrt(n_planes * p * (1.0 - p))
-    )
-    if h >= 0.45 * n_planes:
-        return None
-    return h
-
-
 def _rank1_agg(scored: DataFrame) -> DataFrame:
     """Rank-1 selection for the ``n_probe=1, keep_rank=False`` assignment
     shape as ONE partial-aggregable hash aggregation instead of a window:
     ``min`` over ``struct(coalesce(-__csim, +inf), cid, __vec)``.
     Ascending struct order equals the window's (__csim DESC nulls-last,
-    cid ASC) by the :func:`ivf_assign_literal` ordering argument — the
-    identical struct(-score, cid) construction that path pins bit-equal
-    to the window, including -0.0/0.0 and NULL-score placement — and
-    (neg, cid) is unique per vector (cid is a key), so ``__vec`` rides
-    the struct but is never compared. As on the literal path, NaN
-    embeddings are OUTSIDE the contract: a NaN ``__csim`` sorts FIRST
+    cid ASC): negating the score turns DESC into ASC (including the
+    -0.0/0.0 total order), NULL scores coalesce to +inf so they rank LAST
+    exactly like the window's DESC nulls-last, and (neg, cid) is unique
+    per vector (cid is a key), so ``__vec`` rides the struct but is never
+    compared. NaN embeddings are OUTSIDE the contract: a NaN ``__csim`` sorts FIRST
     under the window's DESC (NaN is greatest) but LAST under this
     ``min(struct(-csim, ...))`` (NaN negates to NaN, still greatest), so
     NaN-scored candidates would diverge between the aggregation route
@@ -248,8 +164,8 @@ def _rank1_agg(scored: DataFrame) -> DataFrame:
 def _topn_window(scored: DataFrame, n_probe: int, keep_rank: bool) -> DataFrame:
     """Top-``n_probe`` selection via the window — the ranked/multi-probe
     shapes (query probes, two-level super-routing) keep it. A
-    collect_list + array_sort + posexplode aggregation twin (the exact
-    :func:`ivf_assign_literal` ordering, vector carried once via
+    collect_list + array_sort + posexplode aggregation twin (the
+    :func:`_rank1_agg` struct ordering, vector carried once via
     any_value) was built and MEASURED SLOWER here — 1.04/1.08/1.29×
     interleaved at 200K vectors × 64 candidates × n_probe=2:
     collect_list is a TypedImperativeAggregate (object buffers,
@@ -295,7 +211,7 @@ def ivf_assign(
     projection below (a former ``carry`` hook) looks free but trips
     Spark's Union constraint rewrite ("key not found: <attr>") when the
     input is a self-union — consumers compute derived columns on the
-    assignment OUTPUT instead (see ann_store's sign-sketch sites)."""
+    assignment OUTPUT instead (see ann_store's ``__n`` norm column)."""
     # hoist the norms AND the float→double array casts out of the
     # per-pair expression: cosine(v, c) inline would recompute ||v|| once
     # per CENTROID and ||c|| once per VECTOR — 3 array folds per pair
@@ -325,103 +241,6 @@ def ivf_assign(
     if n_probe == 1 and not keep_rank:
         return _rank1_agg(scored)
     return _topn_window(scored, n_probe, keep_rank)
-
-
-def ivf_assign_literal(
-    vectors: DataFrame,
-    centroid_rows: list,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_rank: bool = False,
-) -> DataFrame:
-    """Flat IVF assignment with the centroids inlined as ONE 2-D literal —
-    a NARROW projection (no broadcast join, no window shuffle): per
-    vector, one nested-HOF fold scores every centroid, an array_sort
-    picks the ``n_probe`` nearest, posexplode emits the ranked rows. The
-    window formulation costs two exchanges per call (the window's
-    hash-partition plus the join), which an ingest micro-batch pays as
-    4-6 AQE stage-jobs of pure scheduling — the measured dominant slice
-    of the gate's small-batch floor.
-
-    STATUS — measured OFF as the default route: on the ingest gate's
-    500-row micro-batches the interleaved quiet-host A/B ran the window
-    arm at 256 rows/s vs 160 with this path (min-of-3): each batch plans
-    a FRESH query, and Catalyst analysis over the k×dim nested literal
-    costs more driver-side than the two exchanges it removes. The
-    operator stays correct, identity-pinned, and opt-in
-    (``ivf_assign_auto(centroid_rows=...)``) for shapes that reuse one
-    plan across many inputs or cache the analyzed plan.
-
-    FLOAT-IDENTICAL to :func:`ivf_assign` by construction: the score is
-    the same ``dot(vec, cvec) / nullif(||v||·||c||, 0)`` expression
-    (same zip_with/fold, same operand order); the centroid norms are
-    precomputed in Python with the identical left-to-right IEEE-double
-    fold; ranking sorts ``struct(-score, cid)`` ascending, which equals
-    the window's (score DESC, cid ASC) including the -0.0/0.0 total
-    order, with NULL scores coalesced to +inf so they rank LAST exactly
-    like the window's DESC nulls-last. (NaN embeddings are outside both
-    paths' contract.) ``centroid_rows`` is [(cid, [float,...]), ...] —
-    the collected centroid frame, e.g. the ANN store's per-generation
-    cache; the whole plan is one 2-D literal + one fold, the sign-sketch
-    lesson (never k separate fold expressions — ~k×dim py4j builds)."""
-    import math
-
-    k = len(centroid_rows)
-    if k == 0:
-        raise ValueError("ivf_assign_literal: empty centroid list")
-    cids = [int(c) for c, _ in centroid_rows]
-    cvecs = [[float(x) for x in v] for _, v in centroid_rows]
-    # the JVM l2_norm is sqrt(left-to-right fold of x*x) over doubles —
-    # this Python loop performs the identical IEEE-754 op sequence, so
-    # the precomputed norms are bit-equal to what ivf_assign derives
-    cns = []
-    for v in cvecs:
-        s = 0.0
-        for x in v:
-            s += x * x
-        cns.append(math.sqrt(s))
-    cl = F.lit(cvecs)
-    cid_lit = F.lit(cids)
-    cn_lit = F.lit(cns)
-    n_probe = min(n_probe, k)
-
-    def ranked_top(vec: Column, vn: Column) -> Column:
-        vd = vec.cast("array<double>")
-        pairs = F.transform(
-            F.sequence(F.lit(1), F.lit(k)),
-            lambda i: F.struct(
-                F.coalesce(
-                    -(
-                        dot(vd, F.element_at(cl, i))
-                        / F.nullif(vn * F.element_at(cn_lit, i), F.lit(0.0))
-                    ),
-                    F.lit(float("inf")),
-                ).alias("__neg"),
-                F.element_at(cid_lit, i).alias("cid"),
-            ),
-        )
-        return F.slice(F.array_sort(pairs), 1, n_probe)
-
-    v = vectors.select(
-        F.col(id_col).alias("__vid"),
-        F.col(vec_col).alias("__vec"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("__vn"),
-    )
-    exploded = v.select(
-        "__vid",
-        "__vec",
-        F.posexplode(ranked_top(F.col("__vec"), F.col("__vn"))).alias(
-            "__pos", "__top"
-        ),
-    ).select(
-        "__vid",
-        "__vec",
-        F.col("__top.cid").alias("cid"),
-        (F.col("__pos") + 1).alias("__crank"),
-    )
-    cols = ["__vid", "__vec", "cid"] + (["__crank"] if keep_rank else [])
-    return exploded.select(*cols)
 
 
 #: centroid count above which :func:`ivf_assign_auto` switches from the
@@ -541,24 +360,13 @@ def ivf_assign_auto(
     keep_rank: bool = False,
     supers: DataFrame | None = None,
     children: DataFrame | None = None,
-    centroid_rows: list | None = None,
 ) -> DataFrame:
     """Flat assignment below :data:`TWO_LEVEL_MIN_CENTROIDS` centroids
     (exact, flat-identical to every DuckDB-replayed parity oracle),
     two-level above it (the scale path). The centroid count comes from a
     count() on the tiny centroid frame — one cheap job, never a corpus
     scan. A precomputed ``supers``/``children`` pair is forwarded to the
-    two-level path (and ignored on the flat one). ``centroid_rows`` (the
-    collected [(cid, vec), ...] list, e.g. the ANN store's
-    per-generation cache) routes the flat path through
-    :func:`ivf_assign_literal` — float-identical, but a narrow
-    projection instead of a broadcast join + window shuffle, and the
-    count() job is skipped too (the list length IS the count)."""
-    if centroid_rows is not None and len(centroid_rows) < TWO_LEVEL_MIN_CENTROIDS:
-        return ivf_assign_literal(
-            vectors, centroid_rows, n_probe, id_col, vec_col,
-            keep_rank=keep_rank,
-        )
+    two-level path (and ignored on the flat one)."""
     if centroids.count() < TWO_LEVEL_MIN_CENTROIDS:
         return ivf_assign(
             vectors, centroids, n_probe, id_col, vec_col, keep_rank=keep_rank

@@ -23,16 +23,20 @@ Guarantees and their limits (stated precisely, not aspirationally):
   between two retained versions. The manifest records the configured
   width; publishes and maintenance rewrites default to preserving it
   (fresh tables start at the classic single-live-version layout).
-- One legacy migration case — ``<path>`` exists as a real directory from
-  the pre-pointer layout — still needs a rename-away/rename-in pair with
-  a tiny no-path window; it happens at most once per table, under the
+- One case is not a pointer swap: ``<path>`` is a real directory, as a
+  plain parquet write leaves it (``dedup_store`` appends create its
+  ``bands/`` and ``sigs/`` that way before ``compact_store`` publishes
+  them; :func:`write_counted` tables are republished by
+  :func:`compact_table` and ``layout``). Its first publish needs a
+  rename-away/rename-in pair with a tiny no-path window; after it the
+  path is a pointer, so this happens at most once per table, under the
   lock.
 
 Crash-safe: leftovers from a crash at any point (a ``__v*`` version
-referenced by neither the pointer nor the history manifest, legacy
-``__old``/``__staging`` dirs, a stray ``__ptr`` temp link or history
-temp file) are cleared on the next publish, so a table can never be
-permanently wedged.
+referenced by neither the pointer nor the history manifest, the
+``__old`` dir of a real-directory publish, a ``__staging`` dir of the
+round-1 publisher, a stray ``__ptr`` temp link or history temp file) are cleared on the next
+publish, so a table can never be permanently wedged.
 
 **Sidecars.** Store pins, locks, markers and state files (run
 watermarks and checkpoints, schedules, model JSONs, folded-id lists,
@@ -123,7 +127,8 @@ def _write_history(publish_path: str, entries: list[dict], keep: int) -> None:
 def _clear_crash_leftovers(publish_path: str) -> None:
     """Remove artifacts a crashed publish may have stranded: version dirs
     referenced by neither the pointer nor the retention manifest, the temp
-    pointer link / history temp, and the legacy __old/__staging dirs."""
+    pointer link / history temp, the __old dir of a real-directory
+    publish and a round-1 __staging dir."""
     current = _current_target(publish_path)
     parent = os.path.dirname(publish_path) or "."
     base = os.path.basename(publish_path)
@@ -144,9 +149,9 @@ def _clear_crash_leftovers(publish_path: str) -> None:
             # the history writer's temp file (the publish lock is held,
             # so no live write owns it)
             os.remove(full)
-    for legacy in (publish_path + "__old", publish_path + "__staging"):
-        if os.path.isdir(legacy) and not os.path.islink(legacy):
-            shutil.rmtree(legacy, ignore_errors=True)
+    for aside in (publish_path + "__old", publish_path + "__staging"):
+        if os.path.isdir(aside) and not os.path.islink(aside):
+            shutil.rmtree(aside, ignore_errors=True)
     if os.path.lexists(publish_path + "__ptr"):
         os.remove(publish_path + "__ptr")
 
@@ -252,8 +257,10 @@ def _publish_locked(
     os.symlink(os.path.basename(version), ptr)
 
     if os.path.isdir(publish_path) and not os.path.islink(publish_path):
-        # legacy real-directory layout: migrate once (non-atomic window,
-        # see module docstring); the un-versioned old dir cannot be retained
+        # a real directory (a plain parquet write, e.g. a dedup_store
+        # append or a write_counted table): becomes a pointer on this
+        # publish (non-atomic window, see module docstring); the
+        # un-versioned old dir cannot be retained
         old = publish_path + "__old"
         os.rename(publish_path, old)
         os.replace(ptr, publish_path)
@@ -293,7 +300,7 @@ def list_versions(publish_path: str) -> list[dict]:
     if not out and current is not None:
         out = [{"seq": 0, "dir": os.path.basename(current), "is_current": True}]
     if not out and os.path.isdir(publish_path):
-        # legacy real-directory table (pre-pointer layout): one live version
+        # a real-directory table (never swap-published): one live version
         out = [{"seq": 0, "dir": os.path.basename(publish_path), "is_current": True}]
     return out
 

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.catalog import load_table_and_since, table_path
-from trialsync_etl_spark.storage import atomic_write_json, atomic_write_text, file_lock
+from trialsync_etl_spark.storage import atomic_write_json, file_lock
 
 MAX_FAILED_PARAMS = 100
 
@@ -211,22 +211,38 @@ def run_incremental(
     return n
 
 
+def _read_json_doc(path: str) -> dict:
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def _update_json_doc(path: str, change: Callable[[dict], object]):
+    """Apply ``change`` to the whole JSON document at ``path`` (``{}``
+    when missing) under the ``<path>__lock`` flock and write it once with
+    ``atomic_write_json``; returns what ``change`` returns. The one
+    read-modify-write of the run-state files: without the lock two
+    writers that read the same document each drop the other's update."""
+    with file_lock(path + "__lock"):
+        data = _read_json_doc(path)
+        out = change(data)
+        atomic_write_json(path, data)
+    return out
+
+
 class WatermarkStore:
     """Per-(job, parameter) high-watermark persistence — the reference reads
     `dw_etl_runs.completed_at` of the last success (executor.py:950-997).
-    One JSON file keyed by job/param; every change is a read-modify-write
-    under the ``<path>__lock`` flock, published by ``atomic_write_json``.
-    Swap for a Delta table in prod."""
+    One JSON file keyed by job/param; every change goes through
+    :func:`_update_json_doc`. Swap for a Delta table in prod."""
 
     def __init__(self, path: str) -> None:
         self.path = path
         self.lock_path = path + "__lock"
 
     def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as f:
-            return json.load(f)
+        return _read_json_doc(self.path)
 
     @staticmethod
     def _key(job: str, param: object = None) -> str:
@@ -238,11 +254,7 @@ class WatermarkStore:
     def update(self, change: Callable[[dict], object]):
         """Apply ``change`` to the whole document under the store lock and
         write it once; returns what ``change`` returns."""
-        with file_lock(self.lock_path):
-            data = self._load()
-            out = change(data)
-            atomic_write_json(self.path, data)
-        return out
+        return _update_json_doc(self.path, change)
 
     def set(self, job: str, watermark: str, param: object = None) -> None:
         self.update(lambda data: data.__setitem__(self._key(job, param), watermark))
@@ -283,7 +295,9 @@ class Checkpoint:
 
 class CheckpointStore:
     """Atomic persistence of one Checkpoint per run — the `run_context`
-    JSONB analog. Cadence-gated save (every 60 s / 100 params)."""
+    JSONB analog, every run id in one JSON file that each save updates
+    through :func:`_update_json_doc`. Cadence-gated save (every 60 s /
+    100 params)."""
 
     def __init__(self, path: str, save_interval_s: float = 60.0, save_every_params: int = 100):
         self.path = path
@@ -296,20 +310,13 @@ class CheckpointStore:
         self._last_param_index = 0
 
     def load(self, run_id: str) -> Checkpoint | None:
-        if not os.path.exists(self.path):
-            return None
-        with open(self.path) as f:
-            data = json.load(f)
-        raw = data.get(run_id)
+        raw = _read_json_doc(self.path).get(run_id)
         return Checkpoint(**raw) if raw else None
 
     def save(self, run_id: str, cp: Checkpoint) -> None:
-        data = {}
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                data = json.load(f)
-        data[run_id] = asdict(cp)
-        atomic_write_text(self.path, json.dumps(data, indent=1))
+        _update_json_doc(
+            self.path, lambda data: data.__setitem__(run_id, asdict(cp))
+        )
         self._last_save = time.monotonic()
         self._last_param_index = cp.parameter_index
 

@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from trialsync_etl_spark.cache import release_persisted
-from trialsync_etl_spark.storage import atomic_write_json, atomic_write_text
+from trialsync_etl_spark.storage import atomic_write_text
 
 
 def read_landing_stream(
@@ -176,21 +176,6 @@ def _pin_batch(batch_df: DataFrame) -> tuple[DataFrame, int]:
         obs, F.count(F.lit(1)).alias("n")
     ).localCheckpoint(eager=True)
     return pinned, int(obs.get["n"])
-
-
-def _checkpoint_predates_marker(checkpoint_dir: str, marker_name: str) -> bool:
-    """True iff the checkpoint dir holds Spark streaming state (offsets)
-    written BEFORE the instance-uuid marker existed — i.e. a pre-uuid
-    deployment's checkpoint being resumed right after the upgrade. Only
-    that one resume may replay micro-batches whose store appends were
-    tagged with the legacy ``stream-<n>`` scheme; once the marker exists
-    the answer is permanently False, so legacy-era appends by OTHER
-    streams sharing a store are never excluded from history again."""
-    marker = os.path.join(checkpoint_dir, marker_name)
-    return (
-        not os.path.exists(marker)
-        and os.path.isdir(os.path.join(checkpoint_dir, "offsets"))
-    )
 
 
 def _stream_instance_tag(checkpoint_dir: str, marker_name: str) -> str:
@@ -871,15 +856,6 @@ class NearDupStreamSink(_GateSink):
         self.id_col = id_col
         self.text_col = text_col
         self.report_dir = report_dir
-        self._legacy_replay = False
-
-    def _restore(self, checkpoint_dir: str) -> None:
-        # order matters: the predates-check must run before the tag call
-        # creates the marker file
-        self._legacy_replay = _checkpoint_predates_marker(
-            checkpoint_dir, self._marker
-        )
-        super()._restore(checkpoint_dir)
 
     def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.dedup_store import incremental_dup_pairs
@@ -892,15 +868,6 @@ class NearDupStreamSink(_GateSink):
             self.id_col,
             self.text_col,
             batch_id=self._batch_tag(batch_id),
-            # a pre-uuid deployment tagged appends "stream-<n>"; ONLY the
-            # first resume after the upgrade (checkpoint predates the uuid
-            # marker) may replay such a batch, and must treat that crashed
-            # attempt's partial append as its own, not as history. On every
-            # later run the exclusion is off — a shared store's legacy
-            # appends from OTHER streams are genuine history
-            also_exclude=(
-                (f"stream-{batch_id}",) if self._legacy_replay else ()
-            ),
         )
         dup_ids = pairs.select(F.col("doc_b").alias(self.id_col)).distinct()
         survivors = batch_df.join(dup_ids, self.id_col, "left_anti")
@@ -1088,20 +1055,6 @@ class SketchRollupStreamSink(_GateSink):
         )
 
 
-def _auto_prescreen_decision(
-    on: bool, pairs_per_vec: float, enable: float, disable: float
-) -> bool:
-    """The auto-prescreen hysteresis: turn ON at/above ``enable`` raw
-    candidate pairs per batch vector, OFF strictly below ``disable``,
-    hold in between — a ratio oscillating around the crossover must not
-    flap the sketch (each flip changes which appended rows persist a
-    ``sig``, and flapping pays the sketch's fixed cost on exactly the
-    batches it doesn't help)."""
-    if on:
-        return pairs_per_vec >= disable
-    return pairs_per_vec >= enable
-
-
 class SemanticDupStreamSink(_GateSink):
     """Streaming semantic near-duplicate gate against the persisted ANN
     index (operators/ann_store.py): each micro-batch of embedded docs
@@ -1111,20 +1064,9 @@ class SemanticDupStreamSink(_GateSink):
     the lower id wins), lands survivors, and appends the batch to the
     index — so the NEXT batch sees this one as history. The embedding
     analog of NearDupStreamSink; the batch-mode twin is
-    `operators.similarity.semdedup` over the accumulated corpus.
-
-    ``prescreen`` accepts True / False / ``"auto"``. Auto watches the
-    RAW candidate-pair count per batch vector (an ``Observation`` riding
-    the scoring action — zero extra jobs) and flips the sign-sketch
-    prescreen on past the measured r10 crossover
-    (:data:`AUTO_ENABLE_PAIRS_PER_VEC`; sparse/bench shapes stay off,
-    deep-history shapes turn on), with hysteresis
-    (:data:`AUTO_DISABLE_PAIRS_PER_VEC`) and the decision persisted in
-    the checkpoint dir (``__semdup_prescreen.json``) so a crash-restart
-    resumes with the same arm. A flip applies from the NEXT batch; rows
-    appended while off carry NULL ``sig`` (exact-scored pass-through)
-    and the nightly rebuild retrain backfills them — flipping is always
-    verdict-neutral, only the scoring cost moves.
+    `operators.similarity.semdedup` over the accumulated corpus. Every
+    candidate pair is scored exactly (one scoring path; see
+    `incremental_semantic_dups`).
 
     Replay-convergent: the index append is tagged
     ``<stream-instance-uuid>-<batch_id>`` (uuid persisted in the
@@ -1140,17 +1082,6 @@ class SemanticDupStreamSink(_GateSink):
     healed by the nightly `compact_ann_index` maintenance fold.
     """
 
-    #: auto-prescreen crossover, in RAW candidate pairs per batch vector —
-    #: the committed r10 A/B boundary: the sketch pays off once the
-    #: scoring stage (pairs × dim-element folds) dominates the gate's
-    #: fixed work, measured at "thousands of candidate pairs per probe
-    #: vector"; below that it ADDS ~n_planes folds per vector for nothing
-    #: (the bench shape ran ~17% slower with it on). Disable at half the
-    #: enable threshold — hysteresis so a ratio oscillating at the
-    #: boundary doesn't flap the sketch on and off every batch.
-    AUTO_ENABLE_PAIRS_PER_VEC = 1000.0
-    AUTO_DISABLE_PAIRS_PER_VEC = 500.0
-
     _marker = "__semdup_stream_id"
 
     def __init__(
@@ -1163,14 +1094,7 @@ class SemanticDupStreamSink(_GateSink):
         n_probe: int = 2,
         n_lists: int | None = None,
         report_dir: str | None = None,
-        prescreen: bool | str = False,
-        auto_enable_pairs_per_vec: float | None = None,
-        auto_disable_pairs_per_vec: float | None = None,
     ) -> None:
-        if prescreen not in (True, False, "auto"):
-            raise ValueError(
-                f"prescreen must be True, False or 'auto', not {prescreen!r}"
-            )
         self.out_dir = out_dir
         self.index_path = index_path
         self.threshold = threshold
@@ -1179,19 +1103,6 @@ class SemanticDupStreamSink(_GateSink):
         self.n_probe = n_probe
         self.n_lists = n_lists
         self.report_dir = report_dir
-        self.prescreen = prescreen
-        self.auto_enable = (
-            self.AUTO_ENABLE_PAIRS_PER_VEC
-            if auto_enable_pairs_per_vec is None
-            else auto_enable_pairs_per_vec
-        )
-        self.auto_disable = (
-            self.AUTO_DISABLE_PAIRS_PER_VEC
-            if auto_disable_pairs_per_vec is None
-            else auto_disable_pairs_per_vec
-        )
-        self._checkpoint_dir: str | None = None
-        self._auto_on: bool = False
 
     def _gate(self, batch_df: DataFrame, batch_id: int, n_rows: int) -> None:
         from trialsync_etl_spark.operators.ann_store import (
@@ -1206,8 +1117,6 @@ class SemanticDupStreamSink(_GateSink):
         spread = max(4, min(
             spark.sparkContext.defaultParallelism, -(-n_rows // 250)
         ))
-        auto = self.prescreen == "auto"
-        stats: dict | None = {} if auto else None
         pairs = incremental_semantic_dups(
             spark,
             batch_df,
@@ -1218,10 +1127,8 @@ class SemanticDupStreamSink(_GateSink):
             vec_col=self.vec_col,
             n_probe=self.n_probe,
             n_lists=self.n_lists,
-            prescreen=self._auto_on if auto else self.prescreen,
             spread=spread,
             batch_rows=n_rows,
-            stats_sink=stats,
             # without a report sink the verdicts are consumed exactly
             # once (the survivors anti-join below, within this batch) —
             # lazy is safe and skips one whole query execution per
@@ -1235,44 +1142,6 @@ class SemanticDupStreamSink(_GateSink):
         _land(survivors, self.out_dir, batch_id)
         if self.report_dir is not None:
             _land(pairs, self.report_dir, batch_id)
-        if auto:
-            # candidate counts came back with the gate call (batch side
-            # exact, history side a per-generation-snapshot estimate —
-            # see incremental_semantic_dups' stats_sink contract; zero
-            # extra per-batch jobs). Update the crossover decision and
-            # persist it: a crash-restart resumes with the same arm,
-            # never re-deriving it from an unlucky first batch.
-            cand = stats.get("hist_candidates", 0) + stats.get(
-                "batch_candidates", 0
-            )
-            new_on = _auto_prescreen_decision(
-                self._auto_on, cand / max(n_rows, 1),
-                self.auto_enable, self.auto_disable,
-            )
-            if new_on != self._auto_on:
-                self._auto_on = new_on
-                self._save_prescreen_state()
-
-    def _restore(self, checkpoint_dir: str) -> None:
-        super()._restore(checkpoint_dir)
-        self._checkpoint_dir = checkpoint_dir
-        if self.prescreen == "auto":
-            self._auto_on = self._load_prescreen_state()
-
-    def _prescreen_state_path(self) -> str:
-        return os.path.join(self._checkpoint_dir, "__semdup_prescreen.json")
-
-    def _load_prescreen_state(self) -> bool:
-        import json
-
-        try:
-            with open(self._prescreen_state_path(), encoding="utf-8") as fh:
-                return bool(json.load(fh).get("on", False))
-        except (FileNotFoundError, ValueError):
-            return False
-
-    def _save_prescreen_state(self) -> None:
-        atomic_write_json(self._prescreen_state_path(), {"on": self._auto_on})
 
 
 class DecontamStreamSink(_GateSink):
