@@ -393,8 +393,6 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     doc via the store (vs='history') plus its own in-batch clone
     (vs='batch') without re-hashing history; re-probing is idempotent for
     pair derivation."""
-    import os
-
     from trialsync_etl_spark.operators.dedup_store import incremental_dup_pairs
 
     store = str(tmp_path / "sig_store")
@@ -420,7 +418,7 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     assert not any(12 in pair for pair in out2)
 
     # the store now holds both batches: each signature ONCE in sigs/,
-    # the narrow band index partitioned by band in bands/
+    # the narrow band index in bands/, both partitioned by batch_id
     stored = spark.read.parquet(f"{store}/sigs")
     assert stored.select("doc_id").distinct().count() == 5
     assert stored.count() == 5  # no per-band signature duplication
@@ -437,13 +435,12 @@ def test_incremental_dedup_against_signature_store(spark, tmp_path):
     # ...and, rerunning the last completed append, appends nothing
     assert spark.read.parquet(f"{store}/sigs").count() == 5
 
-    # an append that crashed before recording itself (no marker): the
-    # rerun's pair set is still identical, but it appends the batch again
-    os.remove(os.path.join(store, "_last_append"))
+    # a third run of the batch: the pair set is still identical, and it
+    # rewrites its own batch partitions instead of appending them again
     rerun = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
         spark, b2, store, batch_id="run-2").collect()}
     assert rerun == out2
-    assert spark.read.parquet(f"{store}/sigs").count() == 8
+    assert spark.read.parquet(f"{store}/sigs").count() == 5
 
     # maintenance compaction drops the duplicate rows the rerun appended
     from trialsync_etl_spark.operators.dedup_store import compact_store
@@ -791,6 +788,19 @@ def _one_table_near_dup_store(spark, docs, path):
     ).write.partitionBy("band").parquet(path)
 
 
+def _band_partitioned_near_dup_store(spark, docs, path):
+    """A near-dup store in the two-table shape with ``bands/`` partitioned
+    by band and both tables written flat by append — the layout before
+    the store's tables became batch-partitioned append logs."""
+    from trialsync_etl_spark.operators import dedup_store as D
+
+    sigs = D._signed(docs).withColumn("batch_id", F.lit("old"))
+    D._band_keys(sigs).withColumn("batch_id", F.lit("old")).write.partitionBy(
+        "band"
+    ).parquet(f"{path}/bands")
+    sigs.write.parquet(f"{path}/sigs")
+
+
 def _root_table_ann_index(spark, vecs, path):
     """An ANN index with its tables at the index root and no `current`
     pointer — not the generation layout ann_store writes."""
@@ -808,7 +818,9 @@ def _root_table_ann_index(spark, vecs, path):
 
 
 @pytest.mark.parametrize(
-    "entry", ["incremental_dup_pairs", "compact_store", "incremental_semantic_dups"]
+    "entry",
+    ["incremental_dup_pairs", "compact_store", "incremental_semantic_dups",
+     "band_partitioned_bands"],
 )
 def test_dedup_gate_refuses_a_foreign_store_layout(spark, tmp_path, entry):
     """A dedup gate's store dir in a layout its module does not write
@@ -834,6 +846,9 @@ def test_dedup_gate_refuses_a_foreign_store_layout(spark, tmp_path, entry):
             spark, docs, p, batch_id="b1"
         ).collect(),
         "compact_store": lambda p: dedup_store.compact_store(spark, p),
+        "band_partitioned_bands": lambda p: dedup_store.incremental_dup_pairs(
+            spark, docs, p, batch_id="b1"
+        ).collect(),
         "incremental_semantic_dups": lambda p: ann_store.incremental_semantic_dups(
             spark, vecs, p, batch_id="b1", n_lists=2
         ).collect(),
@@ -842,6 +857,9 @@ def test_dedup_gate_refuses_a_foreign_store_layout(spark, tmp_path, entry):
     if entry == "incremental_semantic_dups":
         _root_table_ann_index(spark, vecs, foreign)
         expected = "current"
+    elif entry == "band_partitioned_bands":
+        _band_partitioned_near_dup_store(spark, docs, foreign)
+        expected = "bands"
     else:
         _one_table_near_dup_store(spark, docs, foreign)
         expected = "bands"
@@ -880,6 +898,34 @@ def test_dedup_store_empty_batch_never_creates_unreadable_store(spark, tmp_path)
     out = {(r.doc_a, r.doc_b): r.vs for r in incremental_dup_pairs(
         spark, b2, store, batch_id="b-2").collect()}
     assert out == {(1, 10): "history"}
+
+
+def test_dedup_store_crashed_append_converges_on_replay(spark, tmp_path):
+    """An append that crashed after landing batch X's bands/ partition but
+    before its sigs/ one: the replay of X rewrites both partitions, so
+    every (doc_id, band) and every doc_id is stored exactly once, with no
+    compaction, and X's verdicts are those of an uncrashed run."""
+    from trialsync_etl_spark.operators import dedup_store as D
+    from trialsync_etl_spark.storage import append_batch
+
+    store = str(tmp_path / "store")
+    base = " ".join(f"w{i}token" for i in range(30))
+    w = spark.createDataFrame([(1, base)], "doc_id long, text string")
+    x = spark.createDataFrame(
+        [(10, base + " tiny tail"), (11, "other words entirely " * 4)],
+        "doc_id long, text string",
+    )
+    assert D.incremental_dup_pairs(spark, w, store, batch_id="w").count() == 0
+    append_batch(D._band_keys(D._signed(x)), f"{store}/{D.BANDS_TABLE}", "x")
+
+    out = {(r.doc_a, r.doc_b): r.vs for r in D.incremental_dup_pairs(
+        spark, x, store, batch_id="x").collect()}
+    assert out == {(1, 10): "history"}
+    bands = spark.read.parquet(f"{store}/{D.BANDS_TABLE}")
+    assert bands.groupBy("doc_id", "band").count().filter("count > 1").count() == 0
+    sigs = spark.read.parquet(f"{store}/{D.SIGS_TABLE}")
+    assert sigs.groupBy("doc_id").count().filter("count > 1").count() == 0
+    assert sigs.count() == 3
 
 
 @pytest.mark.slow

@@ -12,9 +12,9 @@ from trialsync_etl_spark.operators.sketch_store import (
     append_sketch_rollup,
     compact_sketch_store,
     estimate_rollup,
-    read_sketch_store,
     sketch_rollup,
 )
+from trialsync_etl_spark.storage import read_batches
 
 
 def _events(spark):
@@ -120,7 +120,7 @@ def test_range_query_and_compaction(spark, tmp_path):
     stats = compact_sketch_store(spark, store)  # keys derived from schema
     assert stats["batches_merged"] == 2
     assert set(
-        r[0] for r in read_sketch_store(spark, store)
+        r[0] for r in read_batches(spark, store)
         .select("batch_id").distinct().collect()
     ) == {"__base"}
     after = estimate_rollup(spark, store, where=where).collect()[0]
@@ -157,7 +157,7 @@ def test_concurrent_appends_serialize_on_lock(spark, tmp_path):
     [t.join() for t in ts]
     assert not errs
     assert set(
-        r[0] for r in read_sketch_store(spark, store)
+        r[0] for r in read_batches(spark, store)
         .select("batch_id").distinct().collect()
     ) == {"t0", "t1"}
 
@@ -313,7 +313,7 @@ def test_compact_keeps_recurring_batch_and_refolds_converge(spark, tmp_path):
     assert stats["batches_merged"] == 1 and stats["kept_batches"] == 1
     live = {
         r[0]
-        for r in read_sketch_store(spark, store)
+        for r in read_batches(spark, store)
         .select("batch_id").distinct().collect()
     }
     assert live == {BASE_BATCH, FULL_REFRESH_BATCH}
@@ -365,7 +365,7 @@ def test_corrupt_folded_list_is_loud_and_never_rewritten(spark, tmp_path):
     assert estimate_rollup(spark, store).collect()[0]["n_rows"] == before
     live = {
         r[0]
-        for r in read_sketch_store(spark, store)
+        for r in read_batches(spark, store)
         .select("batch_id").distinct().collect()
     }
     assert live == {"__base", "run-2"}

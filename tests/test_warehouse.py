@@ -230,11 +230,11 @@ def test_scheduled_maintenance_chain_runs_and_preserves_retention(spark, tmp_pat
         BASE_BATCH,
         FULL_REFRESH_BATCH,
         append_sketch_rollup,
-        read_sketch_store,
     )
     from trialsync_etl_spark.scheduler import CronScheduler, ScheduleStore
     from trialsync_etl_spark.storage import (
         list_versions,
+        read_batches,
         swap_publish,
         table_file_stats,
         table_keep_versions,
@@ -317,13 +317,13 @@ def test_scheduled_maintenance_chain_runs_and_preserves_retention(spark, tmp_pat
     # sketch store: ingest batch folded into __base, recurring full-refresh
     # kept live, and a post-maintenance refresh still converges
     live = {
-        r[0] for r in read_sketch_store(spark, f"{wh}/sketch_events")
+        r[0] for r in read_batches(spark, f"{wh}/sketch_events")
         .select("batch_id").distinct().collect()
     }
     assert live == {BASE_BATCH, FULL_REFRESH_BATCH}
     # freq store: same discipline, same outcome (the CM fold is exact)
     live_f = {
-        r[0] for r in read_sketch_store(spark, f"{wh}/freq_events")
+        r[0] for r in read_batches(spark, f"{wh}/freq_events")
         .select("batch_id").distinct().collect()
     }
     assert live_f == {BASE_BATCH, FULL_REFRESH_BATCH}

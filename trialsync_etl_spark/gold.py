@@ -170,24 +170,23 @@ def refresh_sketch_rollup_events(spark: SparkSession, ctx: WarehouseContext) -> 
     The fold uses a FIXED batch_id: this transform is the full-refresh
     cadence (cf. the MVs), so a re-run REPLACES the batch partition and
     stays idempotent. Incremental per-ingest folds append under their own
-    run ids via the `sketch` CLI / SketchRollupStreamSink."""
+    run ids via the `sketch` CLI / SketchRollupStreamSink. Returns the
+    rollup rows the refresh wrote (observed on the write; no read-back)."""
     from trialsync_etl_spark.operators.sketch_store import (
         FULL_REFRESH_BATCH,
         append_sketch_rollup,
-        read_sketch_store,
     )
 
     ev = load_table(spark, ctx.sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.to_date("ts").alias("event_date")
     )
-    append_sketch_rollup(
+    return append_sketch_rollup(
         ev,
         ctx.table_path("sketch_events"),
         ["event_type", "event_date"],
         ["user_id", "event_id"],
         batch_id=FULL_REFRESH_BATCH,
     )
-    return read_sketch_store(spark, ctx.table_path("sketch_events")).count()
 
 
 @transform("refresh_freq_rollup_events", chain=GOLD_CHAIN)
@@ -209,21 +208,17 @@ def refresh_freq_rollup_events(spark: SparkSession, ctx: WarehouseContext) -> in
     point it at a separate store; reads can also exclude a window via
     ``where`` (e.g. ``batch_id != 'full-refresh'``). The nightly
     ``maintain_compact_freq_store`` folds finished ingest ids into
-    ``__base`` exactly either way."""
-    from trialsync_etl_spark.operators.freq import (
-        append_cm_rollup,
-        read_cm_store,
-    )
+    ``__base`` exactly either way. Returns the cells the refresh wrote."""
+    from trialsync_etl_spark.operators.freq import append_cm_rollup
     from trialsync_etl_spark.operators.sketch_store import FULL_REFRESH_BATCH
 
     ev = load_table(spark, ctx.sf_dir, "events").select("user_id")
-    append_cm_rollup(
+    return append_cm_rollup(
         ev,
         ctx.table_path("freq_events"),
         "user_id",
         batch_id=FULL_REFRESH_BATCH,
     )
-    return read_cm_store(spark, ctx.table_path("freq_events")).count()
 
 
 @transform("refresh_hot_keys", chain=GOLD_CHAIN)

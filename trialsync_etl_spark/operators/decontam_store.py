@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import dedup
-from trialsync_etl_spark.storage import PinnedParams
+from trialsync_etl_spark.storage import PinnedParams, check_tag
 
 SHINGLES_TABLE = "shingles"
 
@@ -96,11 +96,7 @@ def build_benchmark_store(
     (replay-convergent); a benchmark UPDATE ships under a new id so
     past gating decisions stay attributable to the set they ran against.
     """
-    if not benchmark_id or any(c in benchmark_id for c in "/=%"):
-        raise ValueError(
-            f"benchmark_id {benchmark_id!r} must be a non-empty partition-"
-            "safe tag (no '/', '=', '%')"
-        )
+    check_tag("benchmark_id", benchmark_id)
     _PARAMS.pin(store_path, k=k, hash_fn=hash_fn)
     sh = (
         dedup.doc_shingles(
@@ -268,11 +264,7 @@ def build_benchmark_embeddings(
     benchmark version; re-building an id overwrites its partition.
     Vectors are stored VERBATIM (no cast), so the store probe scores the
     exact floats the one-shot profile would. Returns the vector count."""
-    if not benchmark_id or any(c in benchmark_id for c in "/=%"):
-        raise ValueError(
-            f"benchmark_id {benchmark_id!r} must be a non-empty partition-"
-            "safe tag (no '/', '=', '%')"
-        )
+    check_tag("benchmark_id", benchmark_id)
     rows = benchmark_emb.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("embedding")
     ).filter(F.col("embedding").isNotNull())

@@ -5,32 +5,31 @@ probe a PERSISTED signature store, emitting only new-vs-historical and
 new-vs-new candidate pairs, then append their own signatures — history
 is never re-hashed, re-shingled, or re-scored.
 
-Layout (two tables — the classic LSH-index shape):
+Layout (two append-log tables, ``storage.append_batch`` — the classic
+LSH-index shape):
 
-- ``<store>/bands`` — the band index, partitioned by ``band``:
-  (doc_id, band, band_key, batch_id). Narrow rows; this is the only
-  side the candidate join touches.
-- ``<store>/sigs`` — (doc_id, h0..h{n-1}, batch_id): each document's
-  MinHash signature stored ONCE. Only the few candidate pairs' rows are
-  fetched for scoring.
+- ``<store>/bands`` — the band index, partitioned by ``batch_id``:
+  (doc_id, band, band_key). Narrow rows; this is the only side the
+  candidate join touches.
+- ``<store>/sigs`` — (doc_id, h0..h{n-1}), partitioned by ``batch_id``:
+  each document's MinHash signature stored ONCE. Only the few candidate
+  pairs' rows are fetched for scoring.
 
 Keeping the signature out of the band rows matters: a single table
 carrying the full n-hash signature on EVERY band row is a ~(n_bands)×
 write/storage/shuffle amplification (at 100 TB, a store ~12× larger than
 the signatures it indexes). This two-table layout is the only one read:
-a non-empty store dir without ``bands/`` is refused with a
-``ValueError`` (see :func:`_store_frames`), never read as an empty store.
+a non-empty store dir without ``bands/``, or with a ``bands/`` partitioned
+by ``band``, is refused with a ``ValueError`` (see :func:`_store_frames`),
+never read as an empty store.
 
-Each appended row is tagged with the caller's ``batch_id``, and the
-history probe excludes the current batch's id — so re-running a batch
-after a partial or complete append still derives the same pair set (its
-own earlier signatures are not mistaken for history). A rerun of the
-last COMPLETED append (``<store>/_last_append`` names its batch_id)
-appends nothing, so the store converges too. An append that crashed
-midway is NOT atomic: its rerun can leave duplicate rows for the same
-(doc_id, batch_id); pair derivation is insensitive to them (pairs are
-DISTINCT and re-derived, never stored), and :func:`compact_store`
-removes them during maintenance.
+Each append lands as the caller's ``batch_id`` partition of both tables,
+and the history probe excludes that partition — so re-running a batch
+after a partial or complete append derives the same pair set (its own
+earlier signatures are not mistaken for history) and rewrites its own
+partitions, so the store converges too, crashed appends included, with
+no compaction. :func:`compact_store` folds finished batches into
+``__base`` (``storage.compact``) to bound the file count.
 """
 
 from __future__ import annotations
@@ -44,11 +43,16 @@ from trialsync_etl_spark.operators.dedup import (
     est_jaccard,
     minhash_signatures_narrow,
 )
-from trialsync_etl_spark.storage import atomic_write_text, file_lock, swap_publish
+from trialsync_etl_spark.storage import (
+    append_batch,
+    check_tag,
+    compact,
+    file_lock,
+    read_batches,
+)
 
 BANDS_TABLE = "bands"
 SIGS_TABLE = "sigs"
-LAST_APPEND = "_last_append"  # batch_id of the last completed append
 
 
 def _band_structs() -> list:
@@ -106,26 +110,32 @@ def _band_keys(sigs: DataFrame) -> DataFrame:
 
 
 def _store_frames(
-    spark: SparkSession, store_path: str
+    spark: SparkSession, store_path: str, exclude: str | None = None
 ) -> tuple[DataFrame, DataFrame] | None:
-    """(bands, sigs) of a store, or None when the store doesn't exist
-    yet (a missing or empty dir: the first append's bands write creates
-    it). Any other dir without ``bands/`` is a foreign layout and raises
-    ``ValueError``: reading it as "no history" would silently drop every
-    history verdict and land new bands beside the old files."""
-    if not os.path.isdir(os.path.join(store_path, BANDS_TABLE)):
-        if os.path.isdir(store_path) and os.listdir(store_path):
-            raise ValueError(
-                f"near-dup store {store_path} is not in the store layout: "
-                f"expected {store_path}/{BANDS_TABLE} (doc_id, band, "
-                f"band_key, batch_id; partitioned by band) and "
-                f"{store_path}/{SIGS_TABLE} (doc_id, h0..h{{n-1}}, batch_id)"
-            )
-        return None
-    return (
-        spark.read.parquet(os.path.join(store_path, BANDS_TABLE)),
-        spark.read.parquet(os.path.join(store_path, SIGS_TABLE)),
+    """(bands, sigs) of a store without batch ``exclude``, or None when
+    the store holds no history yet (a missing or empty dir, or a first
+    append that landed its bands but not its sigs). A dir without
+    ``bands/``, or with the ``band=``-partitioned ``bands/`` of an older
+    layout, is a foreign layout and raises ``ValueError``: reading it as
+    "no history" would silently drop every history verdict and land new
+    batches beside the old files."""
+    bands_dir = os.path.join(store_path, BANDS_TABLE)
+    foreign = (
+        any(n.startswith("band=") for n in os.listdir(bands_dir))
+        if os.path.isdir(bands_dir)
+        else os.path.isdir(store_path)
+        and any(not n.endswith("__lock") for n in os.listdir(store_path))
     )
+    if foreign:
+        raise ValueError(
+            f"near-dup store {store_path} is not in the store layout: "
+            f"expected {store_path}/{BANDS_TABLE} (doc_id, band, band_key; "
+            f"partitioned by batch_id) and {store_path}/{SIGS_TABLE} "
+            f"(doc_id, h0..h{{n-1}}; partitioned by batch_id)"
+        )
+    bands = read_batches(spark, bands_dir, exclude)
+    sigs = read_batches(spark, os.path.join(store_path, SIGS_TABLE), exclude)
+    return None if bands is None or sigs is None else (bands, sigs)
 
 
 def incremental_dup_pairs(
@@ -161,16 +171,15 @@ def incremental_dup_pairs(
     A store dir in a foreign layout raises ``ValueError`` (see
     :func:`_store_frames`).
     """
-    if not batch_id:
-        raise ValueError("batch_id must be a non-empty per-ingest identifier")
+    check_tag("batch_id", batch_id)
     sigs = _signed(new_docs, id_col, text_col, k).persist()
     keys = _band_keys(sigs).persist()
 
     # the WHOLE probe-then-append sequence holds the store lock: the probe
     # lists store files and materializes lazily, so a concurrent
-    # compact_store republish (which deletes the previous version dir
-    # right after its swap) could yank files out from under in-flight
-    # probe tasks if the lock only covered the append
+    # compact_store (which removes the partitions it folds) could yank
+    # files out from under in-flight probe tasks if the lock only
+    # covered the append
     try:
         with file_lock(store_path + "__lock"):
             result = _probe_and_append_locked(
@@ -197,13 +206,11 @@ def _probe_and_append_locked(
     a_sides = [
         sigs.select("doc_id", *h_cols, F.lit("batch").alias("__side"))
     ]
-    frames = _store_frames(spark, store_path)
+    frames = _store_frames(spark, store_path, exclude=batch_id)
     if frames is not None:
         bands_h, sigs_h = frames
-        keep = F.col("batch_id") != batch_id
         cands.append(
-            bands_h.filter(keep)
-            .alias("hb")
+            bands_h.alias("hb")
             .join(
                 keys.alias("nk"),
                 (F.col("hb.band") == F.col("nk.band"))
@@ -217,7 +224,7 @@ def _probe_and_append_locked(
             )
         )
         a_sides.append(
-            sigs_h.filter(keep).select(
+            sigs_h.select(
                 "doc_id", *h_cols, F.lit("history").alias("__side")
             )
         )
@@ -240,9 +247,8 @@ def _probe_and_append_locked(
     # ONE scoring pipeline for both verdict kinds: candidates (with their
     # per-band duplicates — cheaper to score 16 narrow comparisons than to
     # pre-shuffle a distinct) fetch the a-side signature from the union of
-    # history + batch sigs and the b-side from the batch, then a single
-    # distinct collapses band-duplicates and any duplicate signature rows
-    # a crashed un-compacted append left (identical sigs → identical
+    # history + batch sigs and the b-side from the batch, then one
+    # aggregate collapses band-duplicates (identical sigs → identical
     # scores). The __side tag keeps the fetch version-correct: a doc
     # re-ingested under a new batch shares its id with its history copy,
     # and a 'history' candidate must score against the STORED signature,
@@ -286,67 +292,31 @@ def _probe_and_append_locked(
     # a lazily-evaluated result would re-list the store after the append
     # and re-read the just-appended rows. Caller holds the store lock.
     result = out.localCheckpoint(eager=True)
-    if _last_append(store_path) == batch_id:
-        # a rerun of the append that completed last: its rows are
-        # already in the store, appending them again would duplicate
-        return result
     if sigs.isEmpty():
         # an empty batch must not CREATE the store: a bands/ dir holding
-        # only _SUCCESS has no inferable schema and would wedge every
-        # later probe. (Appending empty to an existing store is a no-op.)
+        # only _SUCCESS has no batch to read and no schema to infer.
+        # (Appending empty to an existing store is a no-op.)
         return result
-    # no makedirs: the bands write creates the store dir, so a crash
-    # before it can never leave a bare dir that later reads as a store
-    real = os.path.realpath(store_path)
-    keys.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "append"
-    ).partitionBy("band").parquet(
-        os.path.realpath(os.path.join(real, BANDS_TABLE))
-        if os.path.exists(os.path.join(real, BANDS_TABLE))
-        else os.path.join(real, BANDS_TABLE)
-    )
-    sigs.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-        os.path.realpath(os.path.join(real, SIGS_TABLE))
-        if os.path.exists(os.path.join(real, SIGS_TABLE))
-        else os.path.join(real, SIGS_TABLE)
-    )
-    atomic_write_text(os.path.join(store_path, LAST_APPEND), batch_id)
+    # bands first: a crash between the two appends leaves bands without
+    # sigs, which the probe reads as no history for that batch, and the
+    # replay rewrites both partitions
+    append_batch(keys, os.path.join(store_path, BANDS_TABLE), batch_id)
+    append_batch(sigs, os.path.join(store_path, SIGS_TABLE), batch_id)
     return result
 
 
-def _last_append(store_path: str) -> str | None:
-    """The batch_id of the store's last completed append, if recorded.
-    The marker lives inside the store dir, so it dies with the store."""
-    try:
-        with open(os.path.join(store_path, LAST_APPEND), encoding="utf-8") as fh:
-            return fh.read()
-    except FileNotFoundError:
-        return None
-
-
 def compact_store(spark: SparkSession, store_path: str) -> int:
-    """Maintenance: drop duplicate rows left by re-run appends (same
-    doc_id from the same batch_id) from both store tables and rewrite
-    them atomically. The read and the republish share the store's
-    ``__lock`` so a concurrent ``incremental_dup_pairs`` append cannot
-    commit between them and be dropped by the swap. Returns the
-    compacted signature-row count (one row per (doc_id, batch_id)),
-    observed on the rewrite itself. A store dir in a foreign layout
-    raises ``ValueError`` (see :func:`_store_frames`)."""
+    """Maintenance: fold both store tables' batches into ``__base``
+    (``storage.compact``), distinct-merged — a signature stored by two
+    batches for one doc is kept once per distinct version. Holds the
+    store's ``__lock`` too, so no probe is reading the partitions the
+    fold removes. Returns the signature rows of the new base, observed
+    on its write. A store dir in a foreign layout raises ``ValueError``
+    (see :func:`_store_frames`)."""
     with file_lock(store_path + "__lock"):
-        frames = _store_frames(spark, store_path)
-        if frames is None:
+        if _store_frames(spark, store_path) is None:
             return 0
-        bands, sigs = frames
-        swap_publish(
-            bands.dropDuplicates(["doc_id", "band", "batch_id"]),
-            os.path.join(store_path, BANDS_TABLE),
-            partition_by=("band",),
-            already_locked=True,
-        )
-        return swap_publish(
-            sigs.dropDuplicates(["doc_id", "batch_id"]),
-            os.path.join(store_path, SIGS_TABLE),
-            already_locked=True,
-            return_count=True,
-        )
+        compact(spark, os.path.join(store_path, BANDS_TABLE), DataFrame.distinct)
+        return compact(
+            spark, os.path.join(store_path, SIGS_TABLE), DataFrame.distinct
+        )["base_rows"]

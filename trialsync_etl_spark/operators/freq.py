@@ -42,7 +42,12 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from trialsync_etl_spark.storage import PinnedParams
+from trialsync_etl_spark.storage import (
+    BASE_BATCH,
+    PinnedParams,
+    append_batch,
+    read_batches,
+)
 
 DEFAULT_DEPTH = 4
 DEFAULT_WIDTH = 4096
@@ -122,11 +127,11 @@ def cm_estimate(
 
 
 #: (depth, width) pinned beside the store on first append, under the
-#: SAME ``<store>__lock`` append_rollup takes: cells hashed mod a
-#: different width would silently estimate 0 for genuinely hot keys —
-#: the exact silently-wrong failure the sketch store's folded-id guard
-#: exists to keep loud. A store created before the params file existed
-#: resolves to the caller's values or the module defaults.
+#: store's ``<store>__lock`` (the table lock ``storage.append_batch``
+#: takes): cells hashed mod a different width would silently estimate 0
+#: for genuinely hot keys — the exact silently-wrong failure the folded-
+#: id ledger exists to keep loud. A store created before the params file
+#: existed resolves to the caller's values or the module defaults.
 _CM_PARAMS = PinnedParams(
     label="CM store",
     suffix="__cm.json",
@@ -154,18 +159,19 @@ def append_cm_rollup(
     batch_id: str,
     depth: int = DEFAULT_DEPTH,
     width: int = DEFAULT_WIDTH,
-) -> None:
+) -> int:
     """Fold one ingest's frequencies into a persisted CM store — the
-    frequency sibling of ``append_sketch_rollup``, on the SAME store
-    discipline (``operators/sketch_store.py``): one parquet table
-    partitioned by ``batch_id``, re-appends replace their partition
-    (replay convergence), and ``compact_sketch_store`` folds finished
-    batches into ``__base`` UNCHANGED — with no ``__hll`` columns its
-    merge degenerates to the additive cell sum, which for CM is exact,
-    and its folded-id guard keeps a stale replay loud. (depth, width)
-    are pinned beside the store on first append; later appends and all
-    reads validate against the pin. Window asks (``batch_id >= …``) only
+    frequency sibling of ``append_sketch_rollup``, on the SAME append log
+    (``storage.append_batch``): one parquet table partitioned by
+    ``batch_id``, a re-append replaces its partition (replay
+    convergence), and ``compact_sketch_store`` folds finished batches
+    into ``__base`` UNCHANGED — with no ``__hll`` columns its merge
+    degenerates to the additive cell sum, which for CM is exact, and the
+    folded-id ledger keeps a stale replay loud. (depth, width) are pinned
+    beside the store on first append; later appends and all reads
+    validate against the pin. Window asks (``batch_id >= …``) only
     survive for batches not yet folded — compact closed windows only.
+    Returns the cells written.
 
     Cell counts are ADDITIVE, so the same rows must fold exactly once:
     pick ONE cadence per store (a full-refresh transform OR per-ingest
@@ -173,13 +179,11 @@ def append_cm_rollup(
     double fold only inflates the auxiliary n_rows, here it doubles the
     primary estimate). Exclude a window at read time with ``where`` if a
     store must carry both."""
-    from trialsync_etl_spark.operators.sketch_store import append_rollup
-
     _CM_PARAMS.pin(store_path, depth=depth, width=width)
     cells = cm_sketch(df, key_col, depth, width).withColumnRenamed(
         "cnt", "n_rows"
     )
-    append_rollup(cells, store_path, batch_id)
+    return append_batch(cells, store_path, batch_id)
 
 
 def read_cm_store(
@@ -209,12 +213,7 @@ def read_cm_store(
     window — state intent with ``include_base=True`` (window over the
     base) or ``include_base=False`` (assert its exclusion). With no
     ``where`` the full store (base included) merges, as before."""
-    from trialsync_etl_spark.operators.sketch_store import (
-        BASE_BATCH,
-        read_sketch_store,
-    )
-
-    store = read_sketch_store(spark, store_path)
+    store = read_batches(spark, store_path)
     if where:
         # loud-contradiction guard: a predicate that NAMES the base
         # partition while include_base is unstated is ambiguous — under

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from trialsync_etl_spark.storage import (
     atomic_write_json,
+    check_tag,
     file_lock,
     read_json_sidecar,
 )
@@ -157,11 +158,7 @@ def build_lm_model(
     n_tokens is NOT stored: scoring needs only the tables +
     unseen_logp, and re-deriving N would cost a second reference-corpus
     pass."""
-    if not model_id or any(c in model_id for c in "/=%"):
-        raise ValueError(
-            f"model_id {model_id!r} must be a non-empty partition-safe "
-            "tag (no '/', '=', '%')"
-        )
+    check_tag("model_id", model_id)
     if order not in (1, 2, 3, 4, 5):
         raise ValueError(
             f"order must be 1 (unigram), 2 (bigram), 3 (KN trigram), or "

@@ -37,7 +37,12 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trialsync_etl_spark.storage import PinnedParams
+from trialsync_etl_spark.storage import (
+    PinnedParams,
+    append_batch,
+    check_tag,
+    read_batches,
+)
 
 #: grid: 8 rows × 9 columns = 72 cells → 8 comparisons per row; the
 #: 64th bit is dropped to keep the packed signature a non-negative int64
@@ -452,19 +457,14 @@ def _sig_kind(name: str) -> dict:
     return SIG_KINDS[name]
 
 
-def read_media_signatures(spark, store_path: str) -> DataFrame:
+def read_media_signatures(spark, store_path: str) -> DataFrame | None:
     """The store's (media_id, dhash) relation, distinct-merged on read so
-    a crashed/replayed append's duplicate rows converge instead of
-    double-matching."""
+    a media id landed by two batches matches once; None when no batch
+    has landed yet."""
     import os
 
-    table = os.path.join(store_path, MEDIA_SIGS_TABLE)
-    return (
-        spark.read.schema("media_id long, dhash long")
-        .parquet(table)
-        .select("media_id", "dhash")  # drop the batch_id partition col
-        .distinct()
-    )
+    stored = read_batches(spark, os.path.join(store_path, MEDIA_SIGS_TABLE))
+    return None if stored is None else stored.select("media_id", "dhash").distinct()
 
 
 def media_neardup_incremental(
@@ -488,15 +488,12 @@ def media_neardup_incremental(
     drop rule the mm_image_near_dup oracle replays, so id-ordered batches
     reproduce the one-shot verdicts and a REPLAYED batch converges: its
     own stored signatures are never lower-id than itself), then fold the
-    batch's signatures into the store (partition overwrite per batch_id —
-    a replay rewrites its own partition, never corrupts history).
+    batch's signatures into the store (``storage.append_batch`` — a
+    replay rewrites its own partition, never corrupts history).
     Returns the surviving media rows."""
     import os
 
-    if not batch_id or any(c in batch_id for c in "/=%"):
-        raise ValueError(
-            f"batch_id {batch_id!r} must be a non-empty partition-safe tag"
-        )
+    check_tag("batch_id", batch_id)
     kind = _sig_kind(sig_kind)
     if max_distance is None:
         max_distance = kind["default_distance"]
@@ -511,12 +508,8 @@ def media_neardup_incremental(
         sig_fn(media, id_col=id_col, content_col=content_col).persist()
     )
 
-    table = os.path.join(store_path, MEDIA_SIGS_TABLE)
-    if os.path.isdir(table):
-        stored = read_media_signatures(spark, store_path)
-        both = sigs.unionByName(stored)
-    else:
-        both = sigs
+    stored = read_media_signatures(spark, store_path)
+    both = sigs if stored is None else sigs.unionByName(stored)
     # one banded join of the batch against history+self; the id-precedence
     # filter keeps exactly the lower-id neighbors
     batch_bands = dhash_bands(
@@ -548,9 +541,7 @@ def media_neardup_incremental(
     ).localCheckpoint(eager=True)
     # fold AFTER the verdicts are materialized (the checkpoint): the
     # probe must never see its own batch through the store
-    sigs.write.mode("overwrite").parquet(
-        os.path.join(table, f"batch_id={batch_id}")
-    )
+    append_batch(sigs, os.path.join(store_path, MEDIA_SIGS_TABLE), batch_id)
     sigs.unpersist()
     return survivors
 

@@ -15,16 +15,15 @@ rows cannot inflate the estimate.
 Everything stays JVM-side: Spark's Datasketches-backed
 ``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``.
 
-Layout mirrors the other persisted artifacts (dedup_store, ann_store):
-one parquet table partitioned by ``batch_id``; an append OVERWRITES its
-own batch partition (dynamic partition overwrite), so a crashed-and-
-retried ingest converges instead of double-counting ``n_rows``.
-:func:`compact_sketch_store` folds finished batches into a single base
-partition during maintenance — recurring batch ids (the gold chain's
-``full-refresh``, anything passed via ``exclude``) stay live, and the
-folded ids are persisted so re-appending one is a loud error rather
-than a silent ``n_rows`` double-count. All store mutations serialize on
-the same ``<path>__lock`` flock the other stores use.
+Layout: one append-log table (``storage.append_batch``), partitioned by
+``batch_id``; an append OVERWRITES its own batch partition, so a
+crashed-and-retried ingest converges instead of double-counting
+``n_rows``. :func:`compact_sketch_store` folds finished batches into the
+``__base`` partition during maintenance (``storage.compact``) —
+recurring batch ids (the gold chain's ``full-refresh``, anything passed
+via ``exclude``) stay live, and the folded ids land in the table's
+ledger, so re-appending one is a loud error rather than a silent
+``n_rows`` double-count.
 """
 
 from __future__ import annotations
@@ -32,17 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trialsync_etl_spark.storage import (
-    atomic_write_json,
-    file_lock,
-    read_json_sidecar,
+from trialsync_etl_spark.storage import (  # noqa: F401 (BASE_BATCH re-exported)
+    BASE_BATCH,
+    append_batch,
+    compact,
+    read_batches,
 )
 
 #: Datasketches lgConfigK: 2^12 registers ≈ 1.6% relative standard error
 #: at ~4 KB per sketch — the usual accuracy/size sweet spot for rollups
 DEFAULT_LGK = 12
-
-BASE_BATCH = "__base"  # compaction target partition
 
 #: The warehouse gold chain's fixed full-refresh batch id
 #: (gold.refresh_sketch_rollup_events). Recurring ids are RE-APPENDED on
@@ -83,39 +81,6 @@ def _merge_rollups(rollup: DataFrame, key_cols: list[str]) -> DataFrame:
     return rollup.groupBy(*[F.col(k) for k in key_cols]).agg(*aggs)
 
 
-def append_rollup(rollup: DataFrame, store_path: str, batch_id: str) -> None:
-    """Locked batch-partition append of a PREBUILT mergeable rollup: any
-    key columns, any number of ``__hll`` sketch columns (zero is fine —
-    the CM frequency cells of operators/freq.py use exactly this with
-    key cols ``(d, idx)``), and one additive ``n_rows`` count column.
-    Re-running a batch REPLACES its partition (dynamic partition
-    overwrite), so retries converge — ``n_rows`` cannot double-count and
-    the idempotent sketch union cannot inflate."""
-    if not batch_id or batch_id.startswith("__"):
-        raise ValueError("batch_id must be non-empty and not start with '__'")
-    with file_lock(store_path + "__lock"):
-        # the folded check lives INSIDE the lock: a concurrent
-        # compact_sketch_store folding this batch_id between an unlocked
-        # check and the write would re-land the partition and silently
-        # double-count n_rows — the exact inflation the check exists to
-        # make loud. (The batch's contribution already lives inside
-        # ``__base`` and an HLL base cannot be subtracted from.) Loud
-        # beats silently wrong: pick a fresh batch id, or keep recurring
-        # ids out of compaction via its ``exclude`` param.
-        if batch_id in _read_folded(store_path):
-            raise ValueError(
-                f"batch_id {batch_id!r} was folded into {BASE_BATCH!r} by "
-                "compact_sketch_store; re-appending it would double-count "
-                "n_rows. Use a new batch id, or exclude recurring ids from "
-                "compaction."
-            )
-        rollup.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(store_path)
-
-
 def append_sketch_rollup(
     df: DataFrame,
     store_path: str,
@@ -123,37 +88,15 @@ def append_sketch_rollup(
     distinct_cols: list[str],
     batch_id: str,
     lgk: int = DEFAULT_LGK,
-) -> None:
+) -> int:
     """Fold one ingest's slice into the store under its ``batch_id``
-    partition (see :func:`append_rollup` for the replay/compaction
-    contract)."""
+    partition (``storage.append_batch``: a replay replaces its partition,
+    a folded id is refused); returns the rollup rows written."""
     if not distinct_cols:
         raise ValueError("append_sketch_rollup needs at least one distinct_col")
-    append_rollup(
+    return append_batch(
         sketch_rollup(df, key_cols, distinct_cols, lgk), store_path, batch_id
     )
-
-
-def read_sketch_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Read the store with ``batch_id`` pinned to STRING. Partition
-    discovery type-inference would otherwise mangle exactly the batch ids
-    the contract recommends: a date-prefixed ``2026-08-01`` infers as
-    DATE (breaking the folded-id JSON and every ``batch_id >= '<str>'``
-    window), and a zero-padded ``0001`` infers as INT ``1`` — silently a
-    DIFFERENT id, so a replay would double-count instead of replacing its
-    partition. An explicit schema makes Spark take the raw partition
-    directory value as-is."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    spark.catalog.refreshByPath(store_path)
-    df = spark.read.parquet(store_path)
-    if "batch_id" in df.columns and dict(df.dtypes)["batch_id"] != "string":
-        pinned = StructType([
-            f if f.name != "batch_id" else StructField("batch_id", StringType())
-            for f in df.schema.fields
-        ])
-        df = spark.read.schema(pinned).parquet(store_path)
-    return df
 
 
 def store_key_cols(store: DataFrame) -> list[str]:
@@ -168,31 +111,6 @@ def store_key_cols(store: DataFrame) -> list[str]:
     ]
 
 
-def _folded_path(store_path: str) -> str:
-    return store_path + "__folded.json"
-
-
-def _read_folded(store_path: str) -> set[str]:
-    """Batch ids whose contribution lives inside ``__base`` — persisted
-    by compaction so a later append of the same id fails loudly instead
-    of double-counting (HLL cannot subtract). A corrupt file raises
-    instead of reading as empty: an empty set would let a folded id land
-    again (double-counted ``n_rows``), and the next compaction would
-    rewrite the file without the lost ids."""
-    folded = read_json_sidecar(
-        _folded_path(store_path),
-        "sketch store folded-id list",
-        "restore it, or rewrite it as a JSON list of every batch id ever "
-        "folded into '__base' (re-appending one of those double-counts "
-        "n_rows)",
-    )
-    return set(folded or ())
-
-
-def _write_folded(store_path: str, folded: set[str]) -> None:
-    atomic_write_json(_folded_path(store_path), sorted(folded))
-
-
 def compact_sketch_store(
     spark: SparkSession,
     store_path: str,
@@ -205,52 +123,18 @@ def compact_sketch_store(
     ``full-refresh`` id) are left as live partitions: a recurring id is
     re-appended on every refresh, and folding it into a base that HLL
     cannot subtract from would double-count ``n_rows`` on the next
-    refresh. The ids that WERE folded are persisted next to the store
-    (``<path>__folded.json``); :func:`append_sketch_rollup` rejects them,
+    refresh. The ids that WERE folded are recorded in the store's
+    folded-id ledger; :func:`append_sketch_rollup` rejects them,
     so a stale producer (e.g. a streaming replay straddling the compact)
     surfaces as an error, never as silent inflation — quiesce streams
     writing to a store before compacting it.
 
-    The read happens under the same lock as the rewrite (listing outside
-    it would drop a concurrent append, cf. storage.compact_table)."""
-    with file_lock(store_path + "__lock"):
-        # read BEFORE the rewrite: a corrupt list must stop the fold, not
-        # surface after the data already moved into __base
-        folded = _read_folded(store_path)
-        store = read_sketch_store(spark, store_path)
-        key_cols = store_key_cols(store)
-        batch_ids = {
-            r["batch_id"] for r in store.select("batch_id").distinct().collect()
-        }
-        fold_ids = batch_ids - set(exclude)
-        kept = batch_ids - fold_ids
-        if not fold_ids or fold_ids == {BASE_BATCH}:
-            return {
-                "batches_merged": 0,
-                "kept_batches": len(kept),
-                "keys": store.count(),
-            }
-        base = _merge_rollups(
-            store.filter(F.col("batch_id").isin(list(fold_ids))).drop("batch_id"),
-            key_cols,
-        ).withColumn("batch_id", F.lit(BASE_BATCH))
-        out = base
-        if kept:
-            out = store.filter(
-                F.col("batch_id").isin(list(kept))
-            ).select(*base.columns).unionByName(base)
-        # overwrite the WHOLE table (static overwrite): folded batch
-        # partitions are replaced by the merged base + kept live partitions
-        out.localCheckpoint().write.mode("overwrite").partitionBy(
-            "batch_id"
-        ).parquet(store_path)
-        _write_folded(store_path, (folded | fold_ids) - {BASE_BATCH})
-    n_keys = read_sketch_store(spark, store_path).count()
-    return {
-        "batches_merged": len(fold_ids - {BASE_BATCH}),
-        "kept_batches": len(kept),
-        "keys": n_keys,
-    }
+    Returns ``storage.compact``'s counts."""
+    return compact(
+        spark, store_path,
+        lambda rows: _merge_rollups(rows, store_key_cols(rows)),
+        keep=exclude,
+    )
 
 
 def estimate_rollup(
@@ -265,7 +149,7 @@ def estimate_rollup(
     dropped keys); ``where`` prunes rollup rows first (e.g.
     ``"event_date >= '2026-01-01'"`` — a partition/footer prune over
     kilobytes). Output: keys..., <col>_distinct per sketch, n_rows."""
-    store = read_sketch_store(spark, store_path).drop("batch_id")
+    store = read_batches(spark, store_path).drop("batch_id")
     if where:
         store = store.filter(where)
     keys = key_cols or []

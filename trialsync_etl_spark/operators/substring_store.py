@@ -9,10 +9,12 @@ decontam_store); this is the substring member's:
 
 - ``<store>/firsts/batch_id=<id>/`` — (h, doc_id, pos): the corpus-
   global FIRST occurrence of each k-gram hash, one row per distinct
-  gram first seen in that batch. Reads MIN-MERGE across partitions
-  (min(struct) is idempotent and order-free), so duplicate rows left by
-  a crashed append, or an overlapping replay, converge instead of
-  corrupting verdicts — no replay tags needed: a replayed batch's own
+  gram first seen in that batch — an append-log table
+  (``storage.append_batch``): a replayed batch rewrites its own
+  partition, and its probe excludes that partition, so its own earlier
+  fold is never history to it. Reads MIN-MERGE across partitions
+  (min(struct) is idempotent and order-free), so grams two batches both
+  first saw collapse to the true first; and a replayed batch's own
   stored firsts EQUAL its occurrences' (doc_id, pos), and equality means
   "this IS the first", never "redundant".
 - ``<store>__meta.json`` — pinned (k, hash_fn) under the store's
@@ -43,10 +45,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import dedup
-from trialsync_etl_spark.storage import PinnedParams, file_lock
+from trialsync_etl_spark.storage import (  # noqa: F401 (BASE_BATCH re-exported)
+    BASE_BATCH,
+    PinnedParams,
+    append_batch,
+    check_tag,
+    compact,
+    read_batches,
+)
 
 FIRSTS_TABLE = "firsts"
-BASE_BATCH = "__base"
 
 
 _PARAMS = PinnedParams(
@@ -68,15 +76,35 @@ def read_substring_params(store_path: str) -> dict | None:
     return _PARAMS.read(store_path)
 
 
-def read_gram_firsts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The min-merged (h, __first) relation of the whole store — the
-    history side of every probe. Min-merging on read is what makes
-    appends crash/replay-safe (duplicate rows for one h collapse to the
-    true first)."""
-    grams = spark.read.parquet(os.path.join(store_path, FIRSTS_TABLE))
+def pin_substring_params(store_path: str, k: int = 8, hash_fn: str = "md5") -> None:
+    """Pin (k, hash_fn) on the store's first use, before any gram lands
+    (a stream's first probe needs the pin); raise if a later use
+    differs."""
+    _PARAMS.pin(store_path, k=k, hash_fn=hash_fn)
+
+
+def _min_firsts(grams: DataFrame) -> DataFrame:
+    """(h, __first): the lowest (doc_id, pos) per gram hash."""
     return grams.groupBy("h").agg(
         F.min(F.struct("doc_id", "pos")).alias("__first")
     )
+
+
+def _flat(firsts: DataFrame) -> DataFrame:
+    """(h, doc_id, pos) — the stored row shape of :func:`_min_firsts`."""
+    return firsts.select(
+        "h", F.col("__first.doc_id").alias("doc_id"),
+        F.col("__first.pos").alias("pos"),
+    )
+
+
+def read_gram_firsts(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """The min-merged (h, __first) relation of the whole store — the
+    history side of every probe — or None when no gram has landed yet.
+    Min-merging on read collapses grams several batches first saw to
+    the true first."""
+    grams = read_batches(spark, os.path.join(store_path, FIRSTS_TABLE))
+    return None if grams is None else _min_firsts(grams)
 
 
 def append_gram_firsts(
@@ -95,38 +123,17 @@ def append_gram_firsts(
     ``batch_id`` overwrites its partition (replay-convergent: the batch's
     own earlier fold is not history to it). Returns the number of new
     grams folded."""
-    if not batch_id or any(c in batch_id for c in "/=%"):
-        raise ValueError(
-            f"batch_id {batch_id!r} must be a non-empty partition-safe tag"
-        )
-    _PARAMS.pin(store_path, k=k, hash_fn=hash_fn)
-    mins = (
-        dedup.positional_shingles(docs, id_col, text_col, k, hash_fn)
-        .groupBy("h")
-        .agg(F.min(F.struct("doc_id", "pos")).alias("__first"))
-    )
+    check_tag("batch_id", batch_id)
+    pin_substring_params(store_path, k, hash_fn)
+    mins = _min_firsts(dedup.positional_shingles(docs, id_col, text_col, k, hash_fn))
     table = os.path.join(store_path, FIRSTS_TABLE)
-    if os.path.isdir(table):
+    seen = read_batches(docs.sparkSession, table, exclude=batch_id)
+    if seen is not None:
         # no .distinct() on the store side: left_anti is already
         # membership semantics, and a distinct would add a full store
         # shuffle to every append
-        seen = (
-            docs.sparkSession.read.parquet(table)
-            .filter(F.col("batch_id").cast("string") != batch_id)
-            .select("h")
-        )
-        mins = mins.join(seen, "h", "left_anti")
-    new = mins.select(
-        "h", F.col("__first.doc_id").alias("doc_id"),
-        F.col("__first.pos").alias("pos"),
-    )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    new.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(table, f"batch_id={batch_id}"))
-    return int(obs.get["n"])
+        mins = mins.join(seen.select("h"), "h", "left_anti")
+    return append_batch(_flat(mins), table, batch_id)
 
 
 def duplicate_spans_incremental(
@@ -159,20 +166,16 @@ def duplicate_spans_incremental(
     grams = dedup.positional_shingles(
         dedup.spread_for_cpu(docs), id_col, text_col, k, hash_fn
     )
-    batch_mins = grams.groupBy("h").agg(
-        F.min(F.struct("doc_id", "pos")).alias("__bmin")
-    )
+    batch_mins = _min_firsts(grams).withColumnRenamed("__first", "__bmin")
+    occ = grams.join(batch_mins, "h")
+    first = F.col("__bmin")
     history = read_gram_firsts(spark, store_path)
-    occ = F.struct("doc_id", "pos")
-    redundant = (
-        grams.join(batch_mins, "h")
-        .join(history, "h", "left")
-        .filter(
-            F.when(F.col("__first").isNotNull(), occ != F.col("__first"))
-            .otherwise(occ != F.col("__bmin"))
-        )
-        .select("doc_id", "pos")
-    )
+    if history is not None:
+        occ = occ.join(history, "h", "left")
+        first = F.coalesce(F.col("__first"), first)
+    redundant = occ.filter(
+        F.struct("doc_id", "pos") != first
+    ).select("doc_id", "pos")
     return dedup.merge_spans(redundant, k, min_len)
 
 
@@ -197,30 +200,11 @@ def substring_dedup_incremental(
 
 
 def compact_gram_store(spark: SparkSession, store_path: str) -> int:
-    """Fold every batch partition into one ``batch_id=__base`` partition
-    (min-merged) and drop the folded partitions — read-side file count
-    stops growing with ingest history. Crash-safe by the same min-merge:
-    a failure between the base write and the partition removals leaves
-    duplicate rows that every read collapses; re-running converges.
-    Returns the number of distinct grams kept."""
-    import shutil
-
-    table = os.path.join(store_path, FIRSTS_TABLE)
-    if not os.path.isdir(table):
-        return 0
-    with file_lock(os.path.join(store_path, "__lock")):
-        parts = [
-            d for d in os.listdir(table)
-            if d.startswith("batch_id=") and d != f"batch_id={BASE_BATCH}"
-        ]
-        merged = read_gram_firsts(spark, store_path).select(
-            "h", F.col("__first.doc_id").alias("doc_id"),
-            F.col("__first.pos").alias("pos"),
-        ).localCheckpoint(eager=True)  # materialize BEFORE overwriting inputs
-        n = merged.count()
-        merged.write.mode("overwrite").parquet(
-            os.path.join(table, f"batch_id={BASE_BATCH}")
-        )
-        for d in parts:
-            shutil.rmtree(os.path.join(table, d), ignore_errors=True)
-    return n
+    """Fold every batch partition into ``__base``, min-merged
+    (``storage.compact``) — the read-side file count stops growing with
+    ingest history, and the store's verdicts are unchanged. Returns the
+    number of distinct grams kept."""
+    return compact(
+        spark, os.path.join(store_path, FIRSTS_TABLE),
+        lambda rows: _flat(_min_firsts(rows)),
+    )["base_rows"]

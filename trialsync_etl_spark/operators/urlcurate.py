@@ -37,6 +37,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trialsync_etl_spark.storage import append_batch, check_tag, read_batches
+
 #: multi-part public suffixes where the registrable domain is THREE
 #: labels (site.co.uk), not two — the common set; a production deployment
 #: swaps in the full public-suffix list, the expression shape is the same
@@ -132,16 +134,18 @@ def cap_per_domain(
 DOMAIN_COUNTS_TABLE = "domain_counts"
 
 
-def read_domain_counts(spark: SparkSession, store_path: str) -> DataFrame:
+def read_domain_counts(
+    spark: SparkSession, store_path: str, exclude: str | None = None
+) -> DataFrame:
     """The store's aggregated (__dom, n_kept) relation across all batch
-    partitions — what the NEXT batch sees as prior history."""
-    table = os.path.join(store_path, DOMAIN_COUNTS_TABLE)
-    return (
-        spark.read.schema("__dom string, n_kept long")
-        .parquet(table)
-        .groupBy("__dom")
-        .agg(F.sum("n_kept").alias("n_kept"))
+    partitions but ``exclude`` — what the NEXT batch sees as prior
+    history (empty before the first batch lands)."""
+    counts = read_batches(
+        spark, os.path.join(store_path, DOMAIN_COUNTS_TABLE), exclude
     )
+    if counts is None:
+        return spark.createDataFrame([], "__dom string, n_kept long")
+    return counts.groupBy("__dom").agg(F.sum("n_kept").alias("n_kept"))
 
 
 def cap_per_domain_incremental(
@@ -156,7 +160,7 @@ def cap_per_domain_incremental(
     """The ingest-cadence domain cap: a persisted count table under
     ``store_path``, keyed by ``batch_id`` partition —
     ``domain_counts/batch_id=<tag>/`` holds THIS batch's kept counts,
-    written with partition overwrite. The batch keeps rows while
+    written by ``storage.append_batch``. The batch keeps rows while
     ``prior_count + rank_in_batch <= cap`` (rank by id within the batch —
     deterministic), where the prior aggregates every partition EXCEPT the
     batch's own — so a re-delivered foreachBatch micro-batch never probes
@@ -164,29 +168,15 @@ def cap_per_domain_incremental(
     and never double-folds its counts: the replay keeps the original rows
     and rewrites its own partition. Id-ordered batches reproduce
     :func:`cap_per_domain` exactly — the replay-convergence contract the
-    one-shot oracle pins. Per-partition overwrite also removes the old
-    whole-table rename publish (torn-store hazard on crash)."""
+    one-shot oracle pins."""
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    if not batch_id or any(c in batch_id for c in "/=%"):
-        raise ValueError(
-            f"batch_id {batch_id!r} must be a non-empty partition-safe tag"
-        )
-    table = os.path.join(store_path, DOMAIN_COUNTS_TABLE)
+    check_tag("batch_id", batch_id)
     dom = registrable_domain(F.col(url_col))
     with_dom = batch.withColumn("__dom", dom)
     capless = with_dom.filter(F.col("__dom").isNull()).drop("__dom")
     capped = with_dom.filter(F.col("__dom").isNotNull())
-    if os.path.isdir(table):
-        prior = (
-            spark.read.schema("__dom string, n_kept long")
-            .parquet(table)
-            .filter(F.col("batch_id") != F.lit(batch_id))
-            .groupBy("__dom")
-            .agg(F.sum("n_kept").alias("n_kept"))
-        )
-    else:
-        prior = spark.createDataFrame([], "__dom string, n_kept long")
+    prior = read_domain_counts(spark, store_path, exclude=batch_id)
     w = Window.partitionBy("__dom").orderBy(F.col(id_col).asc())
     ranked = capped.withColumn("__r", F.row_number().over(w)).join(
         F.broadcast(prior), "__dom", "left"
@@ -201,8 +191,8 @@ def cap_per_domain_incremental(
         F.count(F.lit(1)).alias("n_kept")
     )
     final = kept.drop("__dom").localCheckpoint(eager=True)
-    new_counts.write.mode("overwrite").parquet(
-        os.path.join(table, f"batch_id={batch_id}")
+    append_batch(
+        new_counts, os.path.join(store_path, DOMAIN_COUNTS_TABLE), batch_id
     )
     return final.unionByName(capless)
 

@@ -24,13 +24,12 @@ Guarantees and their limits (stated precisely, not aspirationally):
   width; publishes and maintenance rewrites default to preserving it
   (fresh tables start at the classic single-live-version layout).
 - One case is not a pointer swap: ``<path>`` is a real directory, as a
-  plain parquet write leaves it (``dedup_store`` appends create its
-  ``bands/`` and ``sigs/`` that way before ``compact_store`` publishes
-  them; :func:`write_counted` tables are republished by
-  :func:`compact_table` and ``layout``). Its first publish needs a
-  rename-away/rename-in pair with a tiny no-path window; after it the
-  path is a pointer, so this happens at most once per table, under the
-  lock.
+  plain parquet write leaves it (:func:`write_counted` tables, which
+  :func:`compact_table` and ``layout`` republish). Its first publish
+  needs a rename-away/rename-in pair with a tiny no-path window; after
+  it the path is a pointer, so this happens at most once per table,
+  under the lock. The append-log tables below are never swap-published:
+  they change one ``batch_id`` partition at a time.
 
 Crash-safe: leftovers from a crash at any point (a ``__v*`` version
 referenced by neither the pointer nor the history manifest, the
@@ -50,17 +49,32 @@ index metas) go through three primitives, and only these:
   loud read, a first-write-wins pin under the store lock, and the check
   of explicitly passed values against the pin.
 
+**Append logs.** Every ingest store's tables (sketch and CM rollups,
+substring firsts, near-dup bands and signatures, media signatures,
+domain counts) are batch-partitioned append logs, and go through three
+primitives, and only these:
+
+- :func:`append_batch` — a locked dynamic overwrite of one
+  ``batch_id=<id>`` partition; a replay rewrites its own partition;
+- :func:`read_batches` — ``__base`` plus every live batch, ``batch_id``
+  pinned to STRING, optionally without the caller's own batch;
+- :func:`compact` — folds finished batches into ``__base`` and records
+  them in the ``<table>__folded.json`` ledger that appends check.
+
+:func:`check_tag` is the one validator of every partition tag.
+
 The object-storage caveat, stated once: ``os.replace`` and ``flock`` are
 atomic only on a POSIX filesystem. On object storage (S3/GCS) rename is
 copy+delete and there is no flock, so neither the sidecar writer nor the
-table pointer swap is atomic there. The PORTABLE idioms this repo's
-stores already use are (a) per-batch PARTITION OVERWRITE keyed by
-batch_id/model_id — a replay rewrites its own partition and readers
+table pointer swap is atomic there. The portable idiom is
+:func:`append_batch`'s per-batch PARTITION OVERWRITE (and the same
+overwrite keyed by ``benchmark_id``/``model_id`` in the decontamination
+and LM stores): a replay rewrites its own partition and readers
 aggregate partitions, so a torn write is repaired by the retry, never
-folded twice — and (b) distinct-merge on read for append-style tables. A
-cloud deployment swaps these primitives for a conditional PUT (S3
-If-None-Match / GCS preconditions) or a real table format's commit
-protocol; everything above them is already shaped for that.
+folded twice. A cloud deployment swaps these primitives for a
+conditional PUT (S3 If-None-Match / GCS preconditions) or a real table
+format's commit protocol; everything above them is already shaped for
+that.
 """
 
 from __future__ import annotations
@@ -257,8 +271,8 @@ def _publish_locked(
     os.symlink(os.path.basename(version), ptr)
 
     if os.path.isdir(publish_path) and not os.path.islink(publish_path):
-        # a real directory (a plain parquet write, e.g. a dedup_store
-        # append or a write_counted table): becomes a pointer on this
+        # a real directory (a plain parquet write, e.g. a write_counted
+        # table): becomes a pointer on this
         # publish (non-atomic window, see module docstring); the
         # un-versioned old dir cannot be retained
         old = publish_path + "__old"
@@ -452,6 +466,149 @@ def read_published_arrow(publish_path: str):
 def read_published_pylist(publish_path: str) -> list[dict]:
     """:func:`read_published_arrow` as Python rows."""
     return read_published_arrow(publish_path).to_pylist()
+
+
+# ---------------------------------------------------------------------------
+# the batch-partitioned append log: every ingest store's tables
+# ---------------------------------------------------------------------------
+#: the partition :func:`compact` folds finished batches into; a reserved
+#: id (:func:`check_tag` refuses the ``__`` prefix)
+BASE_BATCH = "__base"
+
+
+def check_tag(name: str, value: str) -> str:
+    """Refuse a partition tag (``batch_id``, ``benchmark_id``,
+    ``model_id``) that could escape or alias its partition: empty,
+    holding ``/``, ``=`` or ``%`` (path and hive-escape characters), or
+    starting with ``__`` (reserved: ``__base`` holds compacted history,
+    and a caller's ``__base`` would overwrite it)."""
+    if not value or value.startswith("__") or any(c in value for c in "/=%"):
+        raise ValueError(
+            f"{name} {value!r} must be a non-empty partition-safe tag "
+            "(no '/', '=', '%' and no leading '__')"
+        )
+    return value
+
+
+def _batch_dirs(table: str) -> dict[str, str]:
+    """{batch_id: partition dir} of an append-log table ({} when it
+    holds none). Spark escapes partition values as ``%XX``; the tags
+    :func:`check_tag` admits hold no ``%``, so unquoting is exact."""
+    from urllib.parse import unquote
+
+    if not os.path.isdir(table):
+        return {}
+    return {
+        unquote(name[len("batch_id="):]): os.path.join(table, name)
+        for name in os.listdir(table)
+        if name.startswith("batch_id=")
+    }
+
+
+def _read_folded(table: str) -> set[str]:
+    """The ``<table>__folded.json`` ledger of ids folded into ``__base``.
+    A corrupt ledger raises: read as empty it would let a folded id land
+    again, and the next compaction would drop the lost ids for good."""
+    folded = read_json_sidecar(
+        table + "__folded.json",
+        "folded-batch ledger",
+        "restore it, or rewrite it as a JSON list of every batch id ever "
+        f"folded into {BASE_BATCH!r} (re-appending one of those counts its "
+        "rows twice)",
+    )
+    return set(folded or ())
+
+
+def append_batch(df: DataFrame, table: str, batch_id: str) -> int:
+    """Land ``df`` as the ``batch_id=<id>`` partition of ``table`` (a
+    dynamic overwrite: a replay rewrites its own partition, so a crashed
+    or re-delivered batch converges without compaction) and return the
+    rows observed on the write. Holds ``<table>__lock`` — the table's,
+    not the store's, so a caller may hold its store lock across a probe
+    and this append — and refuses an id :func:`compact` folded, whose
+    rows ``__base`` already counts."""
+    from pyspark.sql import functions as F
+
+    check_tag("batch_id", batch_id)
+    with file_lock(table + "__lock"):
+        if batch_id in _read_folded(table):
+            raise ValueError(
+                f"batch_id {batch_id!r} of {table} was folded into "
+                f"{BASE_BATCH!r} by compaction; re-appending it would count "
+                "its rows twice. Use a new batch id, or keep recurring ids "
+                "out of compaction."
+            )
+        return write_counted(
+            df.withColumn("batch_id", F.lit(batch_id)), table, ("batch_id",),
+            dynamic=True,
+        )
+
+
+def read_batches(spark, table: str, exclude: str | None = None) -> DataFrame | None:
+    """``__base`` and every live batch of ``table``, ``batch_id`` pinned
+    to STRING, without batch ``exclude`` (a probe's own, on a replay);
+    ``None`` when the table holds no batch yet. Partition inference would
+    read ``0001`` as INT ``1`` — a different id, so a probe excluding
+    ``"0001"`` would see its own batch as history — and ``2026-08-01``
+    as DATE."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    if not _batch_dirs(table):
+        return None
+    df = spark.read.parquet(table)
+    if dict(df.dtypes)["batch_id"] != "string":
+        df = spark.read.schema(StructType([
+            StructField("batch_id", StringType()) if f.name == "batch_id" else f
+            for f in df.schema.fields
+        ])).parquet(table)
+    if exclude is not None:
+        df = df.filter(F.col("batch_id") != exclude)
+    return df
+
+
+def compact(spark, table: str, fold, keep: tuple[str, ...] | list[str] = ()) -> dict:
+    """Fold every batch of ``table`` but the ``keep`` ids (recurring ones,
+    which must stay appendable) into ``__base``: ``fold(rows)`` merges the
+    old base and the folded batches' rows (``batch_id`` dropped) into the
+    new base — a sketch union, a min-merge, a distinct. The folded ids
+    join the ``<table>__folded.json`` ledger that :func:`append_batch`
+    checks. Under ``<table>__lock``, in this order: new base, ledger,
+    removal of the folded partitions — a crash before the removal leaves
+    partitions the ledger names, which the next compaction removes; a
+    crash between the base write and the ledger leaves the folded batches
+    live beside a base that holds them (an additive store counts them
+    twice).
+    Returns {"batches_merged", "kept_batches", "base_rows"}, ``base_rows``
+    observed on the base write (a no-op counts the existing base)."""
+    from pyspark.sql import functions as F
+
+    if not _batch_dirs(table):
+        return {"batches_merged": 0, "kept_batches": 0, "base_rows": 0}
+    with file_lock(table + "__lock"):
+        # read BEFORE any change: a corrupt ledger must stop the fold
+        folded = _read_folded(table)
+        dirs = _batch_dirs(table)
+        for bid in folded & dirs.keys():
+            shutil.rmtree(dirs.pop(bid))
+        fold_ids = set(dirs) - set(keep) - {BASE_BATCH}
+        kept = len(set(dirs) - fold_ids - {BASE_BATCH})
+        if not fold_ids:
+            base = dirs.get(BASE_BATCH)
+            n = spark.read.parquet(base).count() if base else 0
+            return {"batches_merged": 0, "kept_batches": kept, "base_rows": n}
+        rows = read_batches(spark, table).filter(
+            F.col("batch_id").isin(*fold_ids, BASE_BATCH)
+        ).drop("batch_id")
+        base = fold(rows).localCheckpoint(eager=True)
+        n = write_counted(
+            base.withColumn("batch_id", F.lit(BASE_BATCH)), table,
+            ("batch_id",), dynamic=True,
+        )
+        atomic_write_json(table + "__folded.json", sorted(folded | fold_ids))
+        for bid in fold_ids:
+            shutil.rmtree(dirs[bid])
+    return {"batches_merged": len(fold_ids), "kept_batches": kept, "base_rows": n}
 
 
 # ---------------------------------------------------------------------------

@@ -606,12 +606,7 @@ class CurateStreamSink(_GateSink):
             from trialsync_etl_spark.operators import substring_store as SS
 
             cur = fold = cur.localCheckpoint(eager=True)
-            if SS.read_substring_params(self.substring_store) is None:
-                SS.append_gram_firsts(
-                    cur.limit(0), self.substring_store, "__pin",
-                    k=self.substring_k, id_col=self.id_col,
-                    text_col=self.text_col,
-                )
+            SS.pin_substring_params(self.substring_store, self.substring_k)
             trimmed = SS.substring_dedup_incremental(
                 batch_df.sparkSession, cur, self.substring_store,
                 self.substring_min_len, self.id_col, self.text_col,
@@ -984,14 +979,7 @@ class SubstringDedupStreamSink(_GateSink):
         from trialsync_etl_spark.operators import substring_store as SS
 
         spark = batch_df.sparkSession
-        # first batch pins the store params; later batches assert them
-        params = SS.read_substring_params(self.store_path)
-        if params is None:
-            SS.append_gram_firsts(
-                batch_df.limit(0), self.store_path, "__pin",
-                k=self.k, id_col=self.id_col, text_col=self.text_col,
-                hash_fn=self.hash_fn,
-            )
+        SS.pin_substring_params(self.store_path, self.k, self.hash_fn)
         trimmed = SS.substring_dedup_incremental(
             spark, batch_df, self.store_path, self.min_len,
             self.id_col, self.text_col, k=self.k, hash_fn=self.hash_fn,

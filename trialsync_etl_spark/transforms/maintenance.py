@@ -136,13 +136,14 @@ def maintain_compact_sketch_store(
     spark: SparkSession, ctx: WarehouseContext
 ) -> int:
     """Fold the events sketch rollup's finished batches into ``__base``
-    (recurring full-refresh partition stays live); returns keys kept."""
+    (recurring full-refresh partition stays live); returns the
+    ``__base`` rows."""
     from trialsync_etl_spark.operators.sketch_store import compact_sketch_store
 
     path = ctx.table_path("sketch_events")
     if not os.path.isdir(path):
         return 0
-    return int(compact_sketch_store(spark, path)["keys"])
+    return int(compact_sketch_store(spark, path)["base_rows"])
 
 
 @transform("maintain_compact_freq_store", chain=MAINT_CHAIN)
@@ -152,13 +153,14 @@ def maintain_compact_freq_store(
     """Fold the events frequency rollup's finished batches into
     ``__base`` — the CM store shares the sketch store's layout and
     maintenance verbatim, and its additive cells make the fold EXACT
-    (recurring full-refresh partition stays live); returns cells kept."""
+    (recurring full-refresh partition stays live); returns the
+    ``__base`` cells."""
     from trialsync_etl_spark.operators.sketch_store import compact_sketch_store
 
     path = ctx.table_path("freq_events")
     if not os.path.isdir(path):
         return 0
-    return int(compact_sketch_store(spark, path)["keys"])
+    return int(compact_sketch_store(spark, path)["base_rows"])
 
 
 @transform("check_freq_drift", chain=MAINT_CHAIN)
@@ -439,8 +441,9 @@ def maintain_rebuild_ann_index(spark: SparkSession, ctx: WarehouseContext) -> in
 def maintain_compact_dedup_store(
     spark: SparkSession, ctx: WarehouseContext
 ) -> int:
-    """Fold the MinHash signature store's batch partitions (ctx.options
-    ``dedup_store`` path; 0 when absent)."""
+    """Fold the MinHash signature store's batch partitions into
+    ``__base`` (ctx.options ``dedup_store`` path; 0 when absent);
+    returns the ``__base`` signature rows."""
     from trialsync_etl_spark.operators.dedup_store import compact_store
 
     path = ctx.options.get("dedup_store")
