@@ -7,6 +7,7 @@ refused before it can overwrite compacted history."""
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -179,3 +180,67 @@ def test_append_read_compact_round_trip(spark, tmp_path):
     os.rename(os.path.join(table, "batch_id=0003"), os.path.join(table, "batch_id=0002"))
     assert storage.compact(spark, table, fold, keep=("live",))["batches_merged"] == 0
     assert not os.path.exists(os.path.join(table, "batch_id=0002"))
+
+
+class _Crash(Exception):
+    pass
+
+
+@pytest.mark.parametrize("step", ["base-write", "ledger", "mid-removal"])
+def test_interrupted_compaction_reads_pre_or_post_and_rerun_converges(
+    spark, tmp_path, monkeypatch, step
+):
+    """A compaction that dies after its base write, after its ledger
+    write, or between two partition removals leaves ``read_batches``
+    equal to the table before or after the fold, never both at once
+    (an additive store would count the folded batches twice), and the
+    rerun converges to the fold."""
+    table = str(tmp_path / "t")
+
+    def fold(rows):
+        return rows.groupBy("k").sum("n").withColumnRenamed("sum(n)", "n")
+
+    def append(bid, n):
+        storage.append_batch(spark.range(n).selectExpr("id AS k", "1L AS n"), table, bid)
+
+    def rows():
+        got = storage.read_batches(spark, table).select("batch_id", "k", "n")
+        return sorted(tuple(r) for r in got.collect())
+
+    append("b1", 3)
+    storage.compact(spark, table, fold)  # an old base for the fold to replace
+    append("b2", 2)
+    append("b3", 1)
+    pre = rows()
+    post = [("__base", 0, 3), ("__base", 1, 2), ("__base", 2, 1)]
+
+    def then_crash(fn):
+        def wrapped(*args, **kwargs):
+            fn(*args, **kwargs)
+            raise _Crash(step)
+        return wrapped
+
+    if step == "base-write":
+        monkeypatch.setattr(storage, "write_counted", then_crash(storage.write_counted))
+    elif step == "ledger":
+        monkeypatch.setattr(storage, "atomic_write_json", then_crash(storage.atomic_write_json))
+    else:
+        rmtree, removed = shutil.rmtree, []
+
+        def crash_on_second_partition(path, *args, **kwargs):
+            if os.path.basename(path).startswith("batch_id="):
+                if removed:
+                    raise _Crash(step)
+                removed.append(path)
+            rmtree(path, *args, **kwargs)
+
+        monkeypatch.setattr(storage.shutil, "rmtree", crash_on_second_partition)
+    with pytest.raises(_Crash):
+        storage.compact(spark, table, fold)
+    monkeypatch.undo()
+
+    assert rows() in (pre, post)
+    assert storage.compact(spark, table, fold)["base_rows"] == 3
+    assert rows() == post
+    with pytest.raises(ValueError, match="folded"):
+        append("b2", 1)

@@ -1,6 +1,6 @@
-"""Full medallion pipeline end-to-end: OData DataSource → Bronze envelope →
-Silver SCD2 dimension → Gold materialized rollup — one test driving every
-layer the way a deployment would."""
+"""Full medallion pipeline end-to-end: OData feed → JobExecutor → Bronze
+envelope → Silver SCD2 dimension → Gold materialized rollup — one test
+driving every layer the way a deployment would."""
 
 from __future__ import annotations
 
@@ -15,8 +15,22 @@ from trialsync_etl_spark.gold import materialize, read_materialized
 from trialsync_etl_spark.jobs import JobSpec
 from trialsync_etl_spark.operators.scd2 import current_view, scd2_rebuild
 from trialsync_etl_spark.runs import RunLog
-from trialsync_etl_spark.sources.odata_datasource import ODataDataSource
+from trialsync_etl_spark.sources.odata import ODataSource
 from trialsync_etl_spark.streaming.incremental import CheckpointStore, WatermarkStore
+
+
+def _odata_feed(records):
+    """A hermetic OData endpoint honoring $top/$skip."""
+
+    def transport(url):
+        from urllib.parse import parse_qs, urlparse
+
+        q = parse_qs(urlparse(url).query)
+        top = int(q.get("$top", ["1000"])[0])
+        skip = int(q.get("$skip", ["0"])[0])
+        return 200, {}, json.dumps({"value": records[skip : skip + top]})
+
+    return transport
 
 
 @pytest.mark.slow
@@ -29,21 +43,19 @@ def test_medallion_end_to_end(spark, tmp_path):
                 {"id": uid * 100 + day, "patientId": uid, "status": status,
                  "changedAt": f"2024-01-{day:02d}T00:00:00"}
             )
-    feed = tmp_path / "feed.json"
-    feed.write_text(json.dumps(events))
 
-    # --- Bronze: read through the registered DataSource --------------------
-    spark.dataSource.register(ODataDataSource)
-    bronze = (
-        spark.read.format("odata")
-        .option("fixture", str(feed))
-        .option("pagesize", "4")
-        .option("numpartitions", "3")
-        .load()
+    # --- Bronze: land the feed through the job executor --------------------
+    ex = JobExecutor(
+        spark=spark,
+        source=ODataSource(_odata_feed(events), page_size=4),
+        bronze_root=str(tmp_path / "bronze"),
+        run_log=RunLog(str(tmp_path / "runs.jsonl")),
+        watermarks=WatermarkStore(str(tmp_path / "wm.json")),
+        checkpoints=CheckpointStore(str(tmp_path / "cp.json"), save_interval_s=0),
     )
-    bronze_path = str(tmp_path / "bronze/status_staging")
-    bronze.write.parquet(bronze_path)
-    landed = spark.read.parquet(bronze_path)
+    out = ex.execute(JobSpec(60, "StatusChanges", "/api/status-changes", "status_staging"))
+    assert out.status == "success" and out.pages == 4
+    landed = spark.read.parquet(str(tmp_path / "bronze/status_staging"))
     assert landed.count() == 15
 
     # --- Silver: JSON projection + SCD2 dimension ---------------------------
@@ -97,19 +109,9 @@ def test_full_catalog_job_lands_pinned_entity(spark, tmp_path):
         for i in range(12)
     ]
 
-    def transport(url):
-        from urllib.parse import parse_qs, urlparse
-
-        q = parse_qs(urlparse(url).query)
-        top = int(q.get("$top", ["1000"])[0])
-        skip = int(q.get("$skip", ["0"])[0])
-        return 200, {}, json.dumps({"value": patients[skip : skip + top]})
-
-    from trialsync_etl_spark.sources.odata import ODataSource
-
     ex = JobExecutor(
         spark=spark,
-        source=ODataSource(transport, page_size=5),
+        source=ODataSource(_odata_feed(patients), page_size=5),
         bronze_root=str(tmp_path / "bronze"),
         run_log=RunLog(str(tmp_path / "runs.jsonl")),
         watermarks=WatermarkStore(str(tmp_path / "wm.json")),

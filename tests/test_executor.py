@@ -193,9 +193,14 @@ PARAM_SPEC = JobSpec(
 )
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_parameterized_fanout_partial_failures(spark, tmp_path):
     ex = _executor(spark, tmp_path, make_transport(_records(6)))
     ex.execute(SPEC)  # land the parent table (ids 0..5)
+    cached = _persistent_rdds(spark)
 
     def fetch_one(key):
         if key == 3:
@@ -204,6 +209,7 @@ def test_parameterized_fanout_partial_failures(spark, tmp_path):
 
     out = ex.execute_parameterized(PARAM_SPEC, fetch_one)
     assert out.status == "success"
+    assert _persistent_rdds(spark) == cached  # the fetched frame is released
     assert out.records_loaded == 10  # 5 ok parents × 2 children
     assert out.run.records_failed == 1
     assert out.run.run_context["total_parameters"] == 6
@@ -220,12 +226,14 @@ def test_parameterized_all_fail_fails_run(spark, tmp_path):
 
     ex = _executor(spark, tmp_path, make_transport(_records(3)))
     ex.execute(SPEC)
+    cached = _persistent_rdds(spark)
 
     def always_boom(key):
         raise RuntimeError("down")
 
     with _pytest.raises(RuntimeError, match="all 3 parameters failed"):
         ex.execute_parameterized(PARAM_SPEC, always_boom)
+    assert _persistent_rdds(spark) == cached
     assert ex.run_log.history("PatientVisits")[0]["status"] == "failed"
 
 

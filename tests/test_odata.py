@@ -21,10 +21,9 @@ from trialsync_etl_spark.sources.odata import (
 
 
 def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, retry_after=None,
-                   count=False, cap=None):
+                   count=False):
     """Fake OData server honoring $top/$skip, with fault injection;
-    ``count=True`` answers ``$count=true`` (enveloped bodies only), and
-    ``cap`` serves at most that many rows per page whatever $top asks."""
+    ``count=True`` answers ``$count=true`` (enveloped bodies only)."""
     state = {"calls": 0}
 
     def transport(url):
@@ -33,7 +32,7 @@ def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, r
             headers = {"Retry-After": str(retry_after)} if retry_after else {}
             return 503, headers, "busy"
         q = parse_qs(urlparse(url).query)
-        top = min(int(q.get("$top", [API_MAX_PAGE_SIZE])[0]), cap or API_MAX_PAGE_SIZE)
+        top = int(q.get("$top", [API_MAX_PAGE_SIZE])[0])
         skip = 0 if ignore_skip else int(q.get("$skip", [0])[0])
         page = records[skip : skip + top]
         if envelope is None:
@@ -93,8 +92,8 @@ def test_skip_ignored_detection():
 
 def test_bounded_scan_reads_past_server_page_cap():
     # the server serves at most 50 rows where 100 were asked: a short page
-    # ends an open scan, but a $top-bounded scan (a DataSource range) reads
-    # on until its total is met
+    # ends an open scan, but a $top-bounded scan reads on until its total
+    # is met
     t = make_transport(RECORDS)
     src = ODataSource(lambda url: t(url.replace("%24top=100", "%24top=50")), page_size=100)
     assert [len(p.items) for p in src.pages("/Patients")] == [50]
@@ -177,29 +176,13 @@ def test_fanout_fetch_partial_failures(spark):
     assert json.loads(ok[0].data)["parent"] == ok[0]["_parentId"]
 
 
-# -- one pager contract over both front ends: the driver-side pages() and
-# the Spark DataSource's partitions() + read() --------------------------------
-def _via_pages(transport, pagesize, monkeypatch):
+# -- the pager contract of pages(), the one front end's scan ------------------
+def _via_pages(transport, pagesize):
     src = ODataSource(transport, page_size=pagesize)
     return [item for page in src.pages("/Patients") for item in page.items]
 
 
-def _via_datasource(transport, pagesize, monkeypatch):
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    import trialsync_etl_spark.sources.odata_datasource as ds
-
-    monkeypatch.setattr(ds, "_make_transport", lambda options: transport)
-    reader = ds.ODataReader(
-        StructType([StructField("data", StringType())]),
-        {"resource": "/Patients", "pagesize": str(pagesize)},
-    )
-    return [json.loads(row[0]) for part in reader.partitions() for row in reader.read(part)]
-
-
-FRONT_ENDS = pytest.mark.parametrize(
-    "fetch", [_via_pages, _via_datasource], ids=["pages", "datasource"]
-)
+FRONT_ENDS = pytest.mark.parametrize("fetch", [_via_pages], ids=["pages"])
 
 LANDS_EVERY_ROW = {
     "value": dict(envelope="value", count=True),
@@ -207,48 +190,37 @@ LANDS_EVERY_ROW = {
     "bare-list": dict(envelope=None),
     # "0" as a string: the header is sent, and the retry does not wait
     "503-retry-after": dict(fail_first=1, retry_after="0", count=True),
-    "count-ignored": dict(),  # the DataSource pages one serial partition
+    "count-ignored": dict(),
 }
 
 
 @FRONT_ENDS
 @pytest.mark.parametrize("feed", LANDS_EVERY_ROW.values(), ids=LANDS_EVERY_ROW.keys())
-def test_pager_contract_lands_every_row(fetch, feed, monkeypatch):
-    got = fetch(make_transport(RECORDS, **feed), 100, monkeypatch)
-    assert [r["id"] for r in got] == list(range(250))
-
-
-@pytest.mark.parametrize("count", [True, False], ids=["ranges", "count-ignored"])
-def test_datasource_reads_past_server_page_cap(count, monkeypatch):
-    # the server serves at most 50 rows where 100 are asked: that short page
-    # ends an open pages() scan, but a DataSource partition, ranged or the
-    # serial one, reads on until its range is full or a page comes back empty
-    got = _via_datasource(make_transport(RECORDS, count=count, cap=50), 100, monkeypatch)
+def test_pager_contract_lands_every_row(fetch, feed):
+    got = fetch(make_transport(RECORDS, **feed), 100)
     assert [r["id"] for r in got] == list(range(250))
 
 
 @FRONT_ENDS
-def test_pager_contract_unparseable_body_raises(fetch, monkeypatch):
+def test_pager_contract_unparseable_body_raises(fetch):
     with pytest.raises(ResponseParseError):
-        fetch(make_transport(RECORDS, envelope="nope", count=True), 100, monkeypatch)
+        fetch(make_transport(RECORDS, envelope="nope", count=True), 100)
 
 
 @FRONT_ENDS
-def test_pager_contract_skip_ignored_raises(fetch, monkeypatch):
-    # with $count answered the DataSource plans 3 ranges; each would land
-    # the same first rows (250 rows, 84 distinct)
+def test_pager_contract_skip_ignored_raises(fetch):
     feed = make_transport(RECORDS, ignore_skip=True, count=True)
     with pytest.raises(ODataSourceError, match=r"ignored \$skip"):
-        fetch(feed, 100, monkeypatch)
+        fetch(feed, 100)
 
 
 @FRONT_ENDS
-def test_pager_contract_caps_page_size(fetch, monkeypatch):
+def test_pager_contract_caps_page_size(fetch):
     feed, tops = make_transport(RECORDS), []
 
     def spy(url):
         tops.append(int(parse_qs(urlparse(url).query)["$top"][0]))
         return feed(url)
 
-    assert len(fetch(spy, 5000, monkeypatch)) == 250
+    assert len(fetch(spy, 5000)) == 250
     assert max(tops) == API_MAX_PAGE_SIZE

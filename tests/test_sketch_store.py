@@ -340,10 +340,14 @@ def test_compact_keeps_recurring_batch_and_refolds_converge(spark, tmp_path):
 
 
 def test_corrupt_folded_list_is_loud_and_never_rewritten(spark, tmp_path):
-    """A truncated ``<store>__folded.json`` must not read as "nothing
-    folded": appending a folded id would double-count n_rows, and a
-    compaction would rewrite the list without the lost ids. Both raise,
-    and compaction leaves the file (and the store) as they were."""
+    """A truncated folded-batch ledger (``_folded.json`` in the live base)
+    must not read as "nothing folded": appending a folded id would
+    double-count n_rows, a read could not tell which batches the base
+    holds, and a compaction would rewrite the list without the lost ids.
+    All three raise, and compaction leaves the file (and the store) as
+    they were."""
+    import os
+
     import pytest
 
     store = str(tmp_path / "sk")
@@ -352,16 +356,22 @@ def test_corrupt_folded_list_is_loud_and_never_rewritten(spark, tmp_path):
     compact_sketch_store(spark, store)
     append_sketch_rollup(ev, store, ["event_type"], ["user_id"], "run-2")
     before = estimate_rollup(spark, store).collect()[0]["n_rows"]
-    folded = store + "__folded.json"
+    folded = os.path.join(store, "batch_id=__base", "_folded.json")
+    with open(folded, encoding="utf-8") as fh:
+        intact = fh.read()
     with open(folded, "w", encoding="utf-8") as fh:
         fh.write('["run-')  # torn write
 
     with pytest.raises(ValueError, match="unreadable"):
         append_sketch_rollup(ev, store, ["event_type"], ["user_id"], "run-1")
     with pytest.raises(ValueError, match="unreadable"):
+        estimate_rollup(spark, store)
+    with pytest.raises(ValueError, match="unreadable"):
         compact_sketch_store(spark, store)
     with open(folded, encoding="utf-8") as fh:
         assert fh.read() == '["run-'
+    with open(folded, "w", encoding="utf-8") as fh:
+        fh.write(intact)
     assert estimate_rollup(spark, store).collect()[0]["n_rows"] == before
     live = {
         r[0]

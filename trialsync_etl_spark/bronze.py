@@ -10,16 +10,14 @@ unioned with the anti-joined existing table (SURVEY.md §7.3).
 Scale: the upsert shuffles both sides once on the business key. At 100 TB,
 partition Bronze by a stable hash bucket of the key (`pmod(xxhash64(key),
 N)`) so the anti-join joins bucket-to-bucket and a MERGE rewrites only
-touched partitions; with Delta/Iceberg on the classpath the same API maps
-to a real `MERGE INTO` (import-gated, see `upsert_delta`).
+touched partitions.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators.scd2 import dedup_last_wins
@@ -117,31 +115,6 @@ def upsert_stats(existing: DataFrame | None, batch_deduped_count: int, result: D
     inserted = n_after - n_before
     updated = batch_deduped_count - inserted
     return {"inserted": inserted, "updated": updated, "total": n_after}
-
-
-def upsert_delta(
-    spark: SparkSession,
-    target_path: str,
-    batch: DataFrame,
-    key_cols: Sequence[str],
-) -> None:
-    """Real MERGE INTO when delta-spark is on the classpath (not in this
-    image — import-gated per environment constraints)."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "delta-spark not installed; use keyed_upsert (parquet rewrite)"
-        ) from exc
-    target = DeltaTable.forPath(spark, target_path)  # pragma: no cover
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)  # pragma: no cover
-    (
-        target.alias("t")
-        .merge(batch.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )  # pragma: no cover
 
 
 class DryRunSink:

@@ -315,6 +315,7 @@ class JobExecutor:
         from trialsync_etl_spark.sources.odata import fanout_fetch
 
         rec = self.run_log.create(spec.name)
+        fetched = None
         try:
             parent = self.spark.read.parquet(
                 os.path.join(self.bronze_root, spec.parent_table)
@@ -322,8 +323,9 @@ class JobExecutor:
             parent_keys = parent.select(
                 F.get_json_object("data", f"$.{spec.parent_key}").cast("long").alias("k")
             )
-            fetched = fanout_fetch(self.spark, parent_keys, fetch_one, key_col="k")
-            fetched = fetched.persist()
+            fetched = fanout_fetch(
+                self.spark, parent_keys, fetch_one, key_col="k"
+            ).persist()
             failures = fetched.filter(F.col("_error").isNotNull())
             ok = fetched.filter(F.col("_error").isNull())
             n_failed = failures.select("_parentId").distinct().count()
@@ -370,6 +372,11 @@ class JobExecutor:
             self.run_log.update(rec, "failed", error=str(exc))
             self.metrics.record_job(spec.name, "failed", 0.0)
             raise
+        finally:
+            # on every exit: a cached frame would pin the fetched rows in
+            # the session cache for the life of the application
+            if fetched is not None:
+                fetched.unpersist()
 
     def _flush(
         self,

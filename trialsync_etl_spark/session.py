@@ -4,7 +4,8 @@ Local mode for tests/bench; the same config block is what we'd ship to a
 1000-executor cluster (AQE on, adaptive coalesce/skew-join, UTC session TZ,
 Arrow for the few Pandas-UDF paths). Shuffle partitions default to the local
 core count — on a real cluster this is overridden by AQE's coalescing from
-an intentionally-high initial number.
+an intentionally-high initial number. No Python-DataSource filter pushdown
+conf: the one DataSource (``sources/warc_datasource.py``) takes no filters.
 """
 
 from __future__ import annotations
@@ -47,9 +48,6 @@ def get_spark(
         # some sources write TIMESTAMP(NANOS) parquet, which Spark's reader
         # rejects; read as raw int64 and convert in the catalog layer
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # let Python DataSources (sources/odata_datasource.py) receive
-        # Catalyst filter pushdown
-        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -3,10 +3,10 @@
 The reference's ClinicalConductorClient (ref: src/api/client.py:28-734)
 re-expressed as the one OData pager: ``ODataSource`` is the only code that
 builds an OData URL, sends a request, parses a response and decides when a
-scan ends. Two front ends iterate ``ODataSource.pages``: the driver-side
-``JobExecutor`` (the reference's shape — the slow, rate-limited HTTP stays
-on the driver, Bronze holds the raw JSON) and each partition of
-``spark.read.format("odata")`` (``sources/odata_datasource.py``).
+scan ends. Its one front end is the driver-side ``JobExecutor`` (the
+reference's shape): the slow, rate-limited HTTP stays on the driver under
+one token bucket, every flushed page is checkpointed, and Bronze holds the
+raw JSON.
 
 Behavioral parity:
 - S2 predicate/limit pushdown: ``ODataParams`` serializes $filter/$top/
@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field, replace
 from urllib.parse import urlencode
 
@@ -174,14 +174,14 @@ class ODataSource:
             self.sleep(wait)
 
     # -- S8: response parsing/validation ------------------------------------
-    def _parse(self, body: str) -> tuple[object, list[dict]]:
-        """(document, records) of one response body."""
+    def _parse(self, body: str) -> list[dict]:
+        """The records of one response body."""
         try:
             doc = json.loads(body)
         except json.JSONDecodeError as exc:
             if self.strict:
                 raise ResponseParseError(f"invalid JSON: {exc}") from exc
-            return None, []
+            return []
         if isinstance(doc, list):
             items = doc
         elif isinstance(doc, dict):
@@ -189,32 +189,17 @@ class ODataSource:
             if items is None:
                 if self.strict:
                     raise ResponseParseError("no value/items key in response object")
-                return doc, []
+                return []
         else:
             if self.strict:
                 raise ResponseParseError(f"unexpected payload type {type(doc)}")
-            return doc, []
+            return []
         if self.strict:
             bad = [i for i in items if not isinstance(i, dict)]
             if bad:
                 raise ResponseParseError(f"{len(bad)} non-object items")
-            return doc, items
-        return doc, [i for i in items if isinstance(i, dict)]
-
-    def _get(self, resource: str, params: ODataParams) -> tuple[object, list[dict]]:
-        """One request with S7 retry and S8 parsing: (document, records)."""
-        url = f"{self.base_url}{resource}?{urlencode(params.to_query())}"
-        return self._parse(self._request(url))
-
-    def probe(self, resource: str, filter: str | None = None) -> tuple[int | None, dict | None]:
-        """The ``$count`` probe: one ``$top=1&$count=true`` request.
-        Returns (total, first record); total is ``@odata.count``, 0 when the
-        probe page is empty, and None when the endpoint ignores ``$count``."""
-        doc, items = self._get(resource, ODataParams(filter=filter, top=1, skip=0, count=True))
-        first = items[0] if items else None
-        if isinstance(doc, dict) and "@odata.count" in doc:
-            return int(doc["@odata.count"]), first
-        return (0 if first is None else None), first
+            return items
+        return [i for i in items if isinstance(i, dict)]
 
     # -- S1/S4/S5: page iterator with termination + rails --------------------
     def pages(
@@ -240,7 +225,8 @@ class ODataSource:
             if page_index - start_page_index >= self.max_pages:
                 raise PaginationLimitExceeded(f"max_pages={self.max_pages} exceeded")
             ask = self.page_size if remaining is None else min(self.page_size, remaining)
-            _, items = self._get(resource, replace(params, top=ask, skip=skip))
+            query = replace(params, top=ask, skip=skip).to_query()
+            items = self._parse(self._request(f"{self.base_url}{resource}?{urlencode(query)}"))
 
             if not items:  # S4: empty page → done
                 return

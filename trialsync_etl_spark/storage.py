@@ -29,7 +29,8 @@ Guarantees and their limits (stated precisely, not aspirationally):
   needs a rename-away/rename-in pair with a tiny no-path window; after
   it the path is a pointer, so this happens at most once per table,
   under the lock. The append-log tables below are never swap-published:
-  they change one ``batch_id`` partition at a time.
+  they change one ``batch_id`` partition at a time, and their compacted
+  ``__base`` partition is a pointer of its own (see :func:`compact`).
 
 Crash-safe: leftovers from a crash at any point (a ``__v*`` version
 referenced by neither the pointer nor the history manifest, the
@@ -58,8 +59,9 @@ primitives, and only these:
   ``batch_id=<id>`` partition; a replay rewrites its own partition;
 - :func:`read_batches` — ``__base`` plus every live batch, ``batch_id``
   pinned to STRING, optionally without the caller's own batch;
-- :func:`compact` — folds finished batches into ``__base`` and records
-  them in the ``<table>__folded.json`` ledger that appends check.
+- :func:`compact` — folds finished batches into a new ``__base`` version
+  that carries the ledger of folded ids, which appends and reads check,
+  and swaps it in by one pointer repoint.
 
 :func:`check_tag` is the one validator of every partition tag.
 
@@ -474,6 +476,8 @@ def read_published_pylist(publish_path: str) -> list[dict]:
 #: the partition :func:`compact` folds finished batches into; a reserved
 #: id (:func:`check_tag` refuses the ``__`` prefix)
 BASE_BATCH = "__base"
+#: every batch id folded into ``__base``, kept inside the base version
+FOLDED_LEDGER = "_folded.json"
 
 
 def check_tag(name: str, value: str) -> str:
@@ -505,12 +509,19 @@ def _batch_dirs(table: str) -> dict[str, str]:
     }
 
 
+def _base_link(table: str) -> str:
+    """The ``batch_id=__base`` partition: a symlink to the live hidden
+    ``_base_v<token>`` dir (Spark skips ``_``-prefixed names)."""
+    return os.path.join(table, f"batch_id={BASE_BATCH}")
+
+
 def _read_folded(table: str) -> set[str]:
-    """The ``<table>__folded.json`` ledger of ids folded into ``__base``.
-    A corrupt ledger raises: read as empty it would let a folded id land
-    again, and the next compaction would drop the lost ids for good."""
+    """The ledger of ids folded into ``__base`` (empty before the first
+    compaction). A corrupt ledger raises: read as empty it would let a
+    folded id land again, count its rows twice, and the next compaction
+    would drop the lost ids for good."""
     folded = read_json_sidecar(
-        table + "__folded.json",
+        os.path.join(_base_link(table), FOLDED_LEDGER),
         "folded-batch ledger",
         "restore it, or rewrite it as a JSON list of every batch id ever "
         f"folded into {BASE_BATCH!r} (re-appending one of those counts its "
@@ -546,24 +557,29 @@ def append_batch(df: DataFrame, table: str, batch_id: str) -> int:
 
 def read_batches(spark, table: str, exclude: str | None = None) -> DataFrame | None:
     """``__base`` and every live batch of ``table``, ``batch_id`` pinned
-    to STRING, without batch ``exclude`` (a probe's own, on a replay);
-    ``None`` when the table holds no batch yet. Partition inference would
-    read ``0001`` as INT ``1`` — a different id, so a probe excluding
-    ``"0001"`` would see its own batch as history — and ``2026-08-01``
-    as DATE."""
+    to STRING, without batch ``exclude`` (a probe's own, on a replay) and
+    without a batch the base ledger names (an interrupted compaction's
+    leftover, whose rows ``__base`` holds); ``None`` when the table holds
+    no batch yet. Partition inference would read ``0001`` as INT ``1`` —
+    a different id, so a probe excluding ``"0001"`` would see its own
+    batch as history — and ``2026-08-01`` as DATE."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField, StructType
 
-    if not _batch_dirs(table):
+    dirs = _batch_dirs(table)
+    if not dirs:
         return None
+    drop = _read_folded(table) & dirs.keys()
+    if exclude is not None:
+        drop.add(exclude)
     df = spark.read.parquet(table)
     if dict(df.dtypes)["batch_id"] != "string":
         df = spark.read.schema(StructType([
             StructField("batch_id", StringType()) if f.name == "batch_id" else f
             for f in df.schema.fields
         ])).parquet(table)
-    if exclude is not None:
-        df = df.filter(F.col("batch_id") != exclude)
+    if drop:
+        df = df.filter(~F.col("batch_id").isin(*sorted(drop)))
     return df
 
 
@@ -571,14 +587,15 @@ def compact(spark, table: str, fold, keep: tuple[str, ...] | list[str] = ()) -> 
     """Fold every batch of ``table`` but the ``keep`` ids (recurring ones,
     which must stay appendable) into ``__base``: ``fold(rows)`` merges the
     old base and the folded batches' rows (``batch_id`` dropped) into the
-    new base — a sketch union, a min-merge, a distinct. The folded ids
-    join the ``<table>__folded.json`` ledger that :func:`append_batch`
-    checks. Under ``<table>__lock``, in this order: new base, ledger,
-    removal of the folded partitions — a crash before the removal leaves
-    partitions the ledger names, which the next compaction removes; a
-    crash between the base write and the ledger leaves the folded batches
-    live beside a base that holds them (an additive store counts them
-    twice).
+    new base — a sketch union, a min-merge, a distinct.
+
+    Under ``<table>__lock``, the new base and its ledger (every id folded
+    so far: :func:`append_batch` refuses them, :func:`read_batches` skips
+    them) are written to a hidden ``_base_v<token>`` dir that one atomic
+    repoint of the ``batch_id=__base`` symlink makes live — the commit
+    point. A crash before it leaves the table as it was; one after it
+    leaves folded partitions that reads skip. Either way the next
+    compaction clears the leftovers, and a reader never sees both.
     Returns {"batches_merged", "kept_batches", "base_rows"}, ``base_rows``
     observed on the base write (a no-op counts the existing base)."""
     from pyspark.sql import functions as F
@@ -591,6 +608,15 @@ def compact(spark, table: str, fold, keep: tuple[str, ...] | list[str] = ()) -> 
         dirs = _batch_dirs(table)
         for bid in folded & dirs.keys():
             shutil.rmtree(dirs.pop(bid))
+        live = os.path.realpath(_base_link(table))
+        for name in os.listdir(table):
+            full = os.path.join(table, name)
+            if not name.startswith("_base"):
+                continue
+            if os.path.islink(full):  # a crashed repoint's temp link
+                os.remove(full)
+            elif os.path.realpath(full) != live:
+                shutil.rmtree(full)
         fold_ids = set(dirs) - set(keep) - {BASE_BATCH}
         kept = len(set(dirs) - fold_ids - {BASE_BATCH})
         if not fold_ids:
@@ -601,11 +627,14 @@ def compact(spark, table: str, fold, keep: tuple[str, ...] | list[str] = ()) -> 
             F.col("batch_id").isin(*fold_ids, BASE_BATCH)
         ).drop("batch_id")
         base = fold(rows).localCheckpoint(eager=True)
-        n = write_counted(
-            base.withColumn("batch_id", F.lit(BASE_BATCH)), table,
-            ("batch_id",), dynamic=True,
-        )
-        atomic_write_json(table + "__folded.json", sorted(folded | fold_ids))
+        new = os.path.join(table, f"_base_v{uuid.uuid4().hex[:12]}")
+        n = write_counted(base, new)
+        atomic_write_json(os.path.join(new, FOLDED_LEDGER), sorted(folded | fold_ids))
+        ptr = os.path.join(table, "_base_ptr")
+        os.symlink(os.path.basename(new), ptr)
+        os.replace(ptr, _base_link(table))
+        if BASE_BATCH in dirs:
+            shutil.rmtree(live)
         for bid in fold_ids:
             shutil.rmtree(dirs[bid])
     return {"batches_merged": len(fold_ids), "kept_batches": kept, "base_rows": n}
