@@ -1,5 +1,5 @@
 """The batch-partitioned append log in ``storage.py`` (``append_batch``,
-``read_batches``, ``compact``, ``check_tag``) and the five ingest stores
+``read_batches``, ``compact``, ``check_tag``) and the four ingest stores
 built on it: a replayed append leaves every store's rows as they were,
 whatever the id looks like to partition inference, and a reserved id is
 refused before it can overwrite compacted history."""
@@ -95,22 +95,11 @@ def _media():
     return Store(append)
 
 
-def _urlcurate():
-    from trialsync_etl_spark.operators import urlcurate
-
-    return Store(
-        lambda spark, p, bid: urlcurate.cap_per_domain_incremental(
-            spark, _docs(spark), p, cap=1, batch_id=bid
-        ).collect()
-    )
-
-
 STORES = {
     "sketch": _sketch,
     "substring": _substring,
     "near_dup": _near_dup,
     "media": _media,
-    "urlcurate": _urlcurate,
 }
 
 

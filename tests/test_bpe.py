@@ -88,7 +88,7 @@ def test_byte_map_is_the_published_gpt2_bijection():
 
 
 def test_exact_pretokenizer_is_unicode_faithful():
-    """The exact path's pre-tokenizer renders GPT-2's published \p{L}
+    r"""The exact path's pre-tokenizer renders GPT-2's published \p{L}
     classes: non-ASCII letters stay in their letter run ('café' is ONE
     pre-token, Han runs keep adjacent ASCII letters), contractions and
     digit runs split as published."""

@@ -706,137 +706,6 @@ def test_api_decontam_benchmarks_endpoint(spark, tmp_path):
     assert body["params"] == {"k": 3, "hash_fn": "md5"}
 
 
-def test_curate_stream_sink_store_and_model_stages(spark, tmp_path):
-    """CurateStreamSink with the store-backed decontamination gate AND
-    the trained quality filter: a spam doc falls to the model, a leaked
-    doc to the store probe, clean docs land; passing both benchmark
-    sides is loud."""
-    import json
-    import os
-
-    import pytest
-
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.operators.decontam_store import (
-        build_benchmark_store,
-    )
-    from trialsync_etl_spark.operators.quality_model import (
-        DEFAULT_QUALITY_MODEL,
-    )
-    from trialsync_etl_spark.streaming import structured
-
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    store = str(tmp_path / "store")
-    build_benchmark_store(bench, store, "suite")
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    rows = [
-        (1, 1_700_000_100, "a genuinely varied paragraph on broadcast "
-            "joins partition pruning and adaptive query execution"),
-        (2, 1_700_000_101, "alpha beta gamma delta epsilon zeta eta theta"),
-        (3, 1_700_000_102, "buy now buy now buy now buy now buy now buy "
-            "now buy now buy now buy now buy now buy now buy now"),
-    ]
-    with open(os.path.join(landing, "b1.json"), "w") as f:
-        for did, ts, text in rows:
-            f.write(json.dumps(
-                {"doc_id": did, "ts": ts, "text": text}
-            ) + "\n")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    out = str(tmp_path / "curated")
-    sink = structured.CurateStreamSink(
-        out, benchmark_store=store, decontam_min_overlap=0.5,
-        quality_model=DEFAULT_QUALITY_MODEL, min_quality_score=0.5,
-        min_tokens=3, max_top_token_frac=1.0, min_distinct_ratio=0.0,
-    )
-    stream = structured.read_landing_stream(spark, landing, schema)
-    sink.attach(stream.withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ), str(tmp_path / "ckpt"))
-    kept = [r.doc_id for r in spark.read.parquet(out).collect()]
-    assert kept == [1]
-
-    with pytest.raises(ValueError, match="not both"):
-        structured.CurateStreamSink(
-            out, benchmark=bench, benchmark_store=store
-        )
-
-
-def test_curate_stream_sink_benchmark_ids_selects_store_subset(
-    spark, tmp_path
-):
-    """CurateStreamSink(benchmark_ids=...) gates against the SELECTED
-    benchmarks only — the same subset knob batch curate_corpus exposes,
-    so the twin funnels stay twins: a doc overlapping the deselected
-    benchmark must survive, a doc overlapping the selected one must not;
-    benchmark_ids without a store is loud."""
-    import json
-    import os
-
-    import pytest
-
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.operators.decontam_store import (
-        build_benchmark_store,
-    )
-    from trialsync_etl_spark.streaming import structured
-
-    text_a = "alpha beta gamma delta epsilon zeta eta theta"
-    text_b = "sigma tau upsilon phi chi psi omega rho"
-    store = str(tmp_path / "store")
-    build_benchmark_store(
-        spark.createDataFrame([(100, text_a)], "doc_id long, text string"),
-        store, "suite_a",
-    )
-    build_benchmark_store(
-        spark.createDataFrame([(200, text_b)], "doc_id long, text string"),
-        store, "suite_b",
-    )
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    with open(os.path.join(landing, "b1.json"), "w") as f:
-        for did, ts, text in [
-            (1, 1_700_000_100, text_a),   # hits the SELECTED suite_a
-            (2, 1_700_000_101, text_b),   # hits only the deselected one
-            (3, 1_700_000_102, "an unrelated paragraph about adaptive "
-                "query execution broadcast joins and partition pruning"),
-        ]:
-            f.write(json.dumps(
-                {"doc_id": did, "ts": ts, "text": text}
-            ) + "\n")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    out = str(tmp_path / "curated")
-    sink = structured.CurateStreamSink(
-        out, benchmark_store=store, benchmark_ids=["suite_a"],
-        decontam_min_overlap=0.5, min_tokens=3,
-        max_top_token_frac=1.0, min_distinct_ratio=0.0,
-    )
-    stream = structured.read_landing_stream(spark, landing, schema)
-    sink.attach(stream.withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ), str(tmp_path / "ckpt"))
-    kept = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert kept == [2, 3]
-
-    with pytest.raises(ValueError, match="benchmark_store too"):
-        structured.CurateStreamSink(out, benchmark_ids=["suite_a"])
-
-
 @pytest.mark.slow
 def test_semantic_decontam_catches_paraphrase_ngram_misses(spark, tmp_path):
     """The paraphrase gap, end to end: a corpus doc that shares NO
@@ -1117,76 +986,3 @@ def test_curate_funnel_perplexity_band_stage(spark):
     assert "perplexity_banded" in res.stages
     assert res.stats["perplexity_band"] == [ppl[1] + 0.01, ppl[3] - 0.01]
     res.unpersist()
-
-
-def test_curate_stream_sink_semantic_decontam_stage(spark, tmp_path):
-    """CurateStreamSink(benchmark_emb_store=, embeddings_path=): the
-    batch funnel's SEMANTIC decontamination stage at ingest cadence —
-    the paraphrased doc (clean by shingles) drops against the stored
-    benchmark embeddings via the stream-static embeddings side table, a
-    doc WITHOUT an embedding passes through (no evidence, no drop), and
-    the store knob without the side table is loud before any stream
-    starts."""
-    import json as _json
-    import os as _os
-
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.operators.decontam_store import (
-        build_benchmark_embeddings,
-    )
-    from trialsync_etl_spark.streaming import structured
-
-    store = str(tmp_path / "store")
-    build_benchmark_embeddings(
-        spark.createDataFrame([(100, [1.0, 0.0, 0.0, 0.0])],
-                              "doc_id long, embedding array<float>"),
-        store, "suite",
-    )
-    emb_path = str(tmp_path / "emb.parquet")
-    spark.createDataFrame(
-        # doc 1 = paraphrase cone of the benchmark item; doc 2 = far;
-        # doc 3 deliberately ABSENT (no evidence -> passes)
-        [(1, [0.99, 0.14, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    ).write.parquet(emb_path)
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    ckpt = str(tmp_path / "ckpt")
-    _os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    rows = [
-        {"doc_id": 1,
-         "text": "a speedy tan-colored fox leaps across one sleepy "
-                 "canine this evening in the quiet garden",
-         "ts": "2024-01-01T00:00:01Z"},
-        {"doc_id": 2,
-         "text": "an entirely unrelated report about parquet footer "
-                 "statistics and row groups and pruning",
-         "ts": "2024-01-01T00:00:02Z"},
-        {"doc_id": 3,
-         "text": "a third document with no embedding row at all in the "
-                 "side table passes through untouched",
-         "ts": "2024-01-01T00:00:03Z"},
-    ]
-    with open(_os.path.join(landing, "b1.json"), "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-
-    sink = structured.CurateStreamSink(
-        out, benchmark_emb_store=store, embeddings_path=emb_path,
-        semantic_decontam_threshold=0.95, min_distinct_ratio=0.0,
-    )
-    sink.attach(structured.read_landing_stream(spark, landing, schema), ckpt)
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(out).collect()
-    ) == [2, 3]
-
-    with _pytest.raises(ValueError, match="embeddings_path"):
-        structured.CurateStreamSink(out, benchmark_emb_store=store)

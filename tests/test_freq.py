@@ -193,66 +193,6 @@ def test_cm_rollup_store_replay_and_compaction(spark, tmp_path):
         append_cm_rollup(a, store, "key", "b1", depth, width)
 
 
-def test_freq_rollup_stream_sink(spark, tmp_path):
-    """Streaming cadence of the CM store: micro-batches fold in one by
-    one; after the run the store's estimates equal one sketch over every
-    landed row, and a no-new-data restart on the intact checkpoint
-    leaves the store byte-stable (replay convergence)."""
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.operators.freq import cm_store_estimate
-    from trialsync_etl_spark.streaming import structured
-
-    df = _skewed(spark, n=1200, hot="HOT", hot_share=0.4, n_cold=50)
-    landing = str(tmp_path / "landing")
-    df.repartition(4).write.mode("overwrite").json(landing)
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("key", T.StringType())]
-    )
-    store = str(tmp_path / "cm_store")
-    ckpt = str(tmp_path / "ckpt")
-    depth, width = 4, 256
-    sink = structured.FreqRollupStreamSink(store, "key", depth, width)
-    sink.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        ckpt,
-    )
-
-    keys = df.select("key").distinct()
-    got = {
-        r[0]: r[1]
-        for r in cm_store_estimate(
-            spark, store, keys, "key", depth, width
-        ).collect()
-    }
-    direct = {
-        r[0]: r[1]
-        for r in cm_estimate(
-            cm_sketch(df, "key", depth, width), keys, "key", depth, width
-        ).collect()
-    }
-    assert got == direct
-    assert got["HOT"] >= 480  # the planted hot key is visible
-
-    # intact checkpoint, no new files: nothing re-folds
-    sink2 = structured.FreqRollupStreamSink(store, "key", depth, width)
-    sink2.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        ckpt,
-    )
-    got2 = {
-        r[0]: r[1]
-        for r in cm_store_estimate(
-            spark, store, keys, "key", depth, width
-        ).collect()
-    }
-    assert got2 == got
-
-
 def test_heavy_hitters_property_equals_exact_having(spark):
     """Property: over random key multisets and thresholds, the bounded
     detector equals the exact GROUP BY/HAVING — including distributions

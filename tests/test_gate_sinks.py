@@ -1,15 +1,18 @@
 """The foreachBatch sink skeleton (`streaming.structured._GateSink`),
-checked once over all twelve sinks: a crash-replay of a micro-batch
-converges to the single run's landed output and store state; a tagged
-sink refuses to run before `attach`; an empty micro-batch lands nothing;
-every batch releases the thread's tracked persists; and `attach` drains
-through an instance-level `process_batch` override."""
+checked once over every sink: each sink has a case here and is run by a
+benchmark (`bench.py` or `perfbench/workloads.py`); a crash-replay of a
+micro-batch converges to the single run's landed output and store state;
+a tagged sink refuses to run before `attach`; an empty micro-batch lands
+nothing; every batch releases the thread's tracked persists; and
+`attach` drains through an instance-level `process_batch` override."""
 
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
@@ -30,49 +33,21 @@ DOCS = [
 DOC_SCHEMA = "doc_id long, text string, url string"
 
 
+#: the benchmark sources a sink must be named in (read, never run here)
+BENCH_SOURCES = [
+    Path(__file__).resolve().parents[1] / "bench.py",
+    Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py",
+]
+
+
 @dataclass
 class Case:
     sink: object
     batch: DataFrame
-    #: reads the sink's state where a row snapshot of the state dir
-    #: would also see publish bookkeeping (version dirs, manifests)
-    read: Callable[[], list] | None = None
 
 
 def _docs(spark) -> DataFrame:
     return spark.createDataFrame(DOCS, DOC_SCHEMA)
-
-
-def _scd2(spark, state, static):
-    batch = spark.sql(
-        "SELECT * FROM VALUES"
-        " (1L, 1L, 'screening', 1.0D, TIMESTAMP'2024-01-01 00:00:00'),"
-        " (2L, 2L, 'screening', 2.0D, TIMESTAMP'2024-01-01 01:00:00'),"
-        " (3L, 1L, 'enrolled', 1.5D, TIMESTAMP'2024-01-02 00:00:00')"
-        " AS t(event_id, user_id, status, value, ts)"
-    )
-    dim = f"{state}/dim"
-
-    def read():
-        if not os.path.exists(dim):
-            return []
-        return sorted(tuple(r) for r in spark.read.parquet(dim).collect())
-
-    return Case(structured.Scd2StreamSink(
-        spark, dim, key_cols=["user_id"],
-        tracked_cols=["status", "value"], ts_col="ts", tiebreak_cols=["event_id"],
-    ), batch, read)
-
-
-def _curate(spark, state, static):
-    return Case(structured.CurateStreamSink(
-        f"{state}/out", substring_store=f"{state}/substr", substring_k=4,
-        substring_min_len=8, max_per_domain=1, domain_store=f"{state}/domains",
-    ), _docs(spark))
-
-
-def _export(spark, state, static):
-    return Case(structured.ExportStreamSink(f"{state}/out", n_shards=2), _docs(spark))
 
 
 def _quality(spark, state, static):
@@ -88,17 +63,6 @@ def _near_dup(spark, state, static):
     ), _docs(spark))
 
 
-def _media(spark, state, static):
-    from trialsync_etl_spark.operators import media_dedup as md
-
-    rows = [(s, bytes(md.triangle_image(s, 900))) for s in range(3)]
-    rows.append((10, bytes(md.triangle_image(0, 1000))))  # re-encode of 0
-    return Case(
-        structured.MediaNearDupStreamSink(f"{state}/out", f"{state}/store"),
-        spark.createDataFrame(rows, "media_id long, content binary"),
-    )
-
-
 def _substring(spark, state, static):
     block = " ".join(f"w{i}" for i in range(12))
     batch = spark.createDataFrame(
@@ -107,16 +71,6 @@ def _substring(spark, state, static):
     )
     return Case(structured.SubstringDedupStreamSink(
         f"{state}/out", f"{state}/store", k=4, min_len=8,
-    ), batch)
-
-
-def _sketch(spark, state, static):
-    batch = spark.createDataFrame(
-        [(i % 7, "view" if i % 2 else "click") for i in range(40)],
-        "user_id long, event_type string",
-    )
-    return Case(structured.SketchRollupStreamSink(
-        f"{state}/store", ["event_type"], ["user_id"],
     ), batch)
 
 
@@ -152,29 +106,16 @@ def _perplexity(spark, state, static):
     ), _docs(spark))
 
 
-def _freq(spark, state, static):
-    batch = spark.createDataFrame(
-        [(i, "HOT" if i % 3 else f"k{i}") for i in range(30)], "id long, key string"
-    )
-    return Case(structured.FreqRollupStreamSink(f"{state}/store", "key", 4, 64), batch)
-
-
 CASES: dict[str, Callable] = {
-    "scd2": _scd2,
-    "curate": _curate,
-    "export": _export,
     "quality": _quality,
     "near_dup": _near_dup,
-    "media_near_dup": _media,
     "substring": _substring,
-    "sketch": _sketch,
     "semantic_dup": _semantic_dup,
     "decontam": _decontam,
     "perplexity": _perplexity,
-    "freq": _freq,
 }
 #: the sinks whose store appends carry the stream-instance tag
-TAGGED = ["near_dup", "media_near_dup", "substring", "sketch", "semantic_dup", "freq"]
+TAGGED = ["near_dup", "substring", "semantic_dup"]
 
 
 def _case(name, spark, tmp_path) -> tuple[Case, Callable[[], list], str]:
@@ -182,7 +123,7 @@ def _case(name, spark, tmp_path) -> tuple[Case, Callable[[], list], str]:
     landed, and a checkpoint dir."""
     state, static = str(tmp_path / "state"), str(tmp_path / "static")
     case = CASES[name](spark, state, static)
-    return case, case.read or (lambda: _snapshot(state)), str(tmp_path / "ckpt")
+    return case, lambda: _snapshot(state), str(tmp_path / "ckpt")
 
 
 def _snapshot(root: str) -> list:
@@ -213,15 +154,25 @@ def test_every_sink_is_on_the_skeleton():
         n for n, c in vars(structured).items()
         if n.endswith("StreamSink") and isinstance(c, type)
     }
-    assert len(sinks) == len(CASES) == 12
     assert all(issubclass(getattr(structured, n), structured._GateSink) for n in sinks)
+    # every sink has a case: the case factories name exactly the sinks
+    covered = {
+        n for make in CASES.values() for n in make.__code__.co_names
+        if n.endswith("StreamSink")
+    }
+    assert covered == sinks
+    # every sink is run by a benchmark, so a sink only tests reach is
+    # caught here rather than kept alive by its own cases
+    bench = "\n".join(p.read_text(encoding="utf-8") for p in BENCH_SOURCES)
+    unrun = sorted(n for n in sinks if not re.search(rf"\b{n}\b", bench))
+    assert unrun == []
 
 
 @pytest.mark.parametrize("name", list(CASES))
 def test_replayed_batch_converges(spark, tmp_path, name):
     """A crash-replay of batch 0 — the same id delivered again after its
     first attempt landed — leaves the landed output, the report and the
-    store, index or dim exactly as one run left them."""
+    store or index exactly as one run left them."""
     case, landed, ckpt = _case(name, spark, tmp_path)
     case.sink._restore(ckpt)
     case.sink.process_batch(case.batch, 0)
@@ -267,13 +218,8 @@ def test_attach_drains_through_instance_process_batch(spark, tmp_path, name):
     timer) sees every micro-batch."""
     case, _, ckpt = _case(name, spark, tmp_path)
     landing = str(tmp_path / "landing")
-    batch = case.batch if name != "curate" else case.batch.selectExpr(
-        "*", "TIMESTAMP'2024-01-01 00:00:00' AS ts"
-    )
-    batch.coalesce(1).write.parquet(landing)
+    case.batch.coalesce(1).write.parquet(landing)
     seen = []
     case.sink.process_batch = lambda df, batch_id: seen.append((batch_id, df.count()))
-    case.sink.attach(spark.readStream.schema(batch.schema).parquet(landing), ckpt)
-    # (the curate sink's watermarked dedup may add a no-data batch after)
-    assert seen[0] == (0, case.batch.count())
-    assert all(n == 0 for _, n in seen[1:])
+    case.sink.attach(spark.readStream.schema(case.batch.schema).parquet(landing), ckpt)
+    assert seen == [(0, case.batch.count())]

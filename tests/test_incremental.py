@@ -7,7 +7,6 @@ import datetime as dt
 import os
 
 from trialsync_etl_spark.streaming.incremental import (
-    CadencePlan,
     Checkpoint,
     CheckpointStore,
     Deadline,
@@ -97,17 +96,6 @@ def test_changed_since(spark):
     dim = spark.createDataFrame(rows, "k int, is_current boolean, effective_start timestamp")
     out = changed_since(dim, "2024-01-05 00:00:00")
     assert [r.k for r in out.collect()] == [2]  # current AND newer than watermark
-
-
-def test_dual_cadence(tmp_path, spark):
-    ws = WatermarkStore(str(tmp_path / "wm.json"))
-    plan = CadencePlan(job_group="patients", full_job="p_full", changed_job="p_changed")
-    df = _events(spark)
-    # before any watermark: changed variant behaves like full
-    assert df.filter(plan.predicate_for("changed", "ts", ws)).count() == 10
-    ws.set("patients", "2024-01-07 12:00:00")
-    assert df.filter(plan.predicate_for("changed", "ts", ws)).count() == 3
-    assert df.filter(plan.predicate_for("full", "ts", ws)).count() == 10
 
 
 def test_boundary_stats_and_stale_slice(spark, tmp_path):

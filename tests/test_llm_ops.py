@@ -1517,17 +1517,10 @@ def test_gopher_metrics_hand_computed_and_mask_per_rule(spark):
     assert b.n_stopwords >= 2 and 3.0 <= b.mean_word_len <= 10.0
 
 
-def test_gopher_stage_runs_in_both_funnels(spark, tmp_path):
-    """curate_corpus(gopher_rules=True) and CurateStreamSink(
-    gopher_rules=...) drop the same planted violator — the cadences
-    share the Column expression; dict form overrides thresholds."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
+def test_gopher_stage_runs_in_both_funnels(spark):
+    """curate_corpus(gopher_rules=True) drops the planted violators,
+    the bullet-list page included; dict form overrides thresholds."""
     from trialsync_etl_spark.operators.curate import curate_corpus
-    from trialsync_etl_spark.streaming import structured
 
     good = ("the of and that have with "
             + "quick brown foxes jump over lazy dogs daily " * 6).strip()
@@ -1557,48 +1550,19 @@ def test_gopher_stage_runs_in_both_funnels(spark, tmp_path):
         r.doc_id for r in res2.stages["gopher_filtered"].collect()
     ) == [1, 2]
 
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    _os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    with open(_os.path.join(landing, "b1.json"), "w") as f:
-        for i, t in ((1, good), (2, bad), (3, bullets)):
-            f.write(_json.dumps(
-                {"doc_id": i, "text": t,
-                 "ts": f"2024-01-01T00:00:0{i}Z"}) + "\n")
-    sink = structured.CurateStreamSink(
-        out, gopher_rules=True,
-        min_distinct_ratio=0.0, max_top_token_frac=1.0,
-    )
-    sink.attach(
-        structured.read_landing_stream(spark, landing, schema),
-        str(tmp_path / "ckpt"),
-    )
-    assert [r.doc_id for r in spark.read.parquet(out).collect()] == [1]
 
-
-def test_c4_rules_hand_checked_and_both_funnels(spark, tmp_path):
+def test_c4_rules_hand_checked_and_both_funnels(spark):
     """The published C4 recipe: line retention hand-checked per rule
     (terminal punctuation, ≥5 words, lorem-ipsum / javascript / '{'
     markers), the page rules (three-retained-line floor, page-anywhere
-    markers), and the stage running FIRST in both funnels — on the raw
+    markers), and the stage running FIRST in the funnel — on the raw
     line structure clean_text would destroy."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
     from trialsync_etl_spark.operators.curate import curate_corpus
     from trialsync_etl_spark.operators.textstats import (
         c4_clean_text,
         c4_kept_lines,
         c4_quality_mask,
     )
-    from trialsync_etl_spark.streaming import structured
 
     page = "\n".join([
         "raw lead line without punctuation",          # dropped: no punct
@@ -1644,49 +1608,18 @@ def test_c4_rules_hand_checked_and_both_funnels(spark, tmp_path):
     assert [r.doc_id for r in got] == [1]
     assert got[0].text == "\n".join(kept)
 
-    # streaming twin
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    _os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    with open(_os.path.join(landing, "b1.json"), "w") as f:
-        for i, t in ((1, page), (2, two_lines), (3, lorem)):
-            f.write(_json.dumps(
-                {"doc_id": i, "text": t,
-                 "ts": f"2024-01-01T00:00:0{i}Z"}) + "\n")
-    sink = structured.CurateStreamSink(out, c4_clean=True)
-    sink.attach(
-        structured.read_landing_stream(spark, landing, schema),
-        str(tmp_path / "ckpt"),
-    )
-    rows = spark.read.parquet(out).collect()
-    assert [r.doc_id for r in rows] == [1]
-    # the landed text went through c4 (line rebuild) THEN clean_text
-    # (whitespace collapse): the newlines became single spaces
-    assert rows[0].text == " ".join(kept)
-
 
 @pytest.mark.slow
-def test_gopher_repetition_hand_computed_and_both_funnels(spark, tmp_path):
+def test_gopher_repetition_hand_computed_and_both_funnels(spark):
     """The published Gopher repetition rules: duplicate-line and
     duplicate-paragraph fractions hand-checked, n-gram coverage
     fractions hand-checked on a hot-bigram doc, the raw-line-structure
     requirement (a collapsed doc would hide the line dups), and the
-    funnel stage dropping the same planted violator in both cadences."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
+    funnel stage dropping the planted violator."""
     from trialsync_etl_spark.operators.curate import curate_corpus
     from trialsync_etl_spark.operators.textstats import (
         gopher_repetition_report,
     )
-    from trialsync_etl_spark.streaming import structured
 
     # hand-check: 3 identical lines (12 chars each) + 1 distinct (25)
     tiny = spark.createDataFrame(
@@ -1724,8 +1657,7 @@ def test_gopher_repetition_hand_computed_and_both_funnels(spark, tmp_path):
                  "elongated1 elongated2")
     assert r4.top_2gram_char_frac == round(3 * len("a b") / chars4, 4)
 
-    # funnel, both cadences: a long repetitive doc drops, a varied
-    # long doc survives
+    # funnel: a long repetitive doc drops, a varied long doc survives
     # fully distinct words: no n-gram ever repeats, so only the
     # top-{2,3,4}-gram caps matter and they shrink with doc length
     good = " ".join(f"distinctword{i}" for i in range(80))
@@ -1757,29 +1689,6 @@ def test_gopher_repetition_hand_computed_and_both_funnels(spark, tmp_path):
     assert sorted(
         r.doc_id for r in res2.stages["repetition_filtered"].collect()
     ) == [1, 2]
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    _os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    with open(_os.path.join(landing, "b1.json"), "w") as f:
-        for i, t in ((1, good.strip()), (2, bad_lines)):
-            f.write(_json.dumps(
-                {"doc_id": i, "text": t,
-                 "ts": f"2024-01-01T00:00:0{i}Z"}) + "\n")
-    sink = structured.CurateStreamSink(
-        out, gopher_repetition=True,
-        min_distinct_ratio=0.0, max_top_token_frac=1.0,
-    )
-    sink.attach(
-        structured.read_landing_stream(spark, landing, schema),
-        str(tmp_path / "ckpt"),
-    )
-    assert [r.doc_id for r in spark.read.parquet(out).collect()] == [1]
 
 
 @pytest.mark.slow

@@ -1,6 +1,7 @@
 """Persisted unigram-LM store (operators/lm_store.py): train-once /
 score-every-batch parity with the one-shot path, loud param pins, the
-funnel + streaming stages, and the `lm` CLI lifecycle."""
+funnel stage, the perplexity-band gate sink, and the `lm` CLI
+lifecycle."""
 
 from __future__ import annotations
 
@@ -184,56 +185,6 @@ def test_curate_funnel_store_arm_equals_ref_arm(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="perplexity_band"):
         curate_corpus(docs, perplexity_store=(store, "ref-v1"))
-
-
-def test_curate_stream_sink_perplexity_stage(spark, tmp_path):
-    """CurateStreamSink(perplexity_store=, perplexity_band=): each
-    micro-batch is banded against the PERSISTED model — the batch
-    funnel's stage at ingest cadence; the stage is store-backed only
-    (one knob without the other raises)."""
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.streaming import structured
-
-    store = str(tmp_path / "lm")
-    lm_store.build_lm_model(_ref(spark), store, "ref-v1")
-    scores = {
-        r.doc_id: r.perplexity
-        for r in lm_store.score_perplexity_store(
-            spark, _docs(spark), store, "ref-v1"
-        ).collect()
-    }
-    band = ((scores[1] + scores[2]) / 2, (scores[2] + scores[3]) / 2)
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    rows = [
-        {"doc_id": i, "text": t, "ts": f"2024-01-01T00:00:0{i}Z"}
-        for i, t in DOC_ROWS
-    ]
-    with open(os.path.join(landing, "b1.json"), "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    sink = structured.CurateStreamSink(
-        out, perplexity_store=(store, "ref-v1"), perplexity_band=band,
-        min_tokens=3,
-    )
-    sink.attach(structured.read_landing_stream(spark, landing, schema), ckpt)
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [2]
-
-    with pytest.raises(ValueError, match="store-backed only"):
-        structured.CurateStreamSink(out, perplexity_band=band)
-    with pytest.raises(ValueError, match="store-backed only"):
-        structured.CurateStreamSink(
-            out, perplexity_store=(store, "ref-v1")
-        )
 
 
 def test_cli_lm_train_list_score_band(spark, tmp_path):

@@ -20,10 +20,8 @@ from trialsync_etl_spark.sources.odata import (
 )
 
 
-def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, retry_after=None,
-                   count=False):
-    """Fake OData server honoring $top/$skip, with fault injection;
-    ``count=True`` answers ``$count=true`` (enveloped bodies only)."""
+def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, retry_after=None):
+    """Fake OData server honoring $top/$skip, with fault injection."""
     state = {"calls": 0}
 
     def transport(url):
@@ -37,10 +35,7 @@ def make_transport(records, envelope="value", ignore_skip=False, fail_first=0, r
         page = records[skip : skip + top]
         if envelope is None:
             return 200, {}, json.dumps(page)
-        doc = {envelope: page}
-        if count and q.get("$count") == ["true"]:
-            doc["@odata.count"] = len(records)
-        return 200, {}, json.dumps(doc)
+        return 200, {}, json.dumps({envelope: page})
 
     transport.state = state
     return transport
@@ -185,12 +180,11 @@ def _via_pages(transport, pagesize):
 FRONT_ENDS = pytest.mark.parametrize("fetch", [_via_pages], ids=["pages"])
 
 LANDS_EVERY_ROW = {
-    "value": dict(envelope="value", count=True),
-    "items": dict(envelope="items", count=True),
+    "value": dict(envelope="value"),
+    "items": dict(envelope="items"),
     "bare-list": dict(envelope=None),
     # "0" as a string: the header is sent, and the retry does not wait
-    "503-retry-after": dict(fail_first=1, retry_after="0", count=True),
-    "count-ignored": dict(),
+    "503-retry-after": dict(fail_first=1, retry_after="0"),
 }
 
 
@@ -204,12 +198,12 @@ def test_pager_contract_lands_every_row(fetch, feed):
 @FRONT_ENDS
 def test_pager_contract_unparseable_body_raises(fetch):
     with pytest.raises(ResponseParseError):
-        fetch(make_transport(RECORDS, envelope="nope", count=True), 100)
+        fetch(make_transport(RECORDS, envelope="nope"), 100)
 
 
 @FRONT_ENDS
 def test_pager_contract_skip_ignored_raises(fetch):
-    feed = make_transport(RECORDS, ignore_skip=True, count=True)
+    feed = make_transport(RECORDS, ignore_skip=True)
     with pytest.raises(ODataSourceError, match=r"ignored \$skip"):
         fetch(feed, 100)
 

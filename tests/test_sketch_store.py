@@ -201,44 +201,6 @@ def test_cli_sketch_append_estimate_compact(spark, tmp_path):
     assert _json.loads(out3.getvalue())["batches_merged"] == 1
 
 
-def test_sketch_rollup_stream_sink(spark, tmp_path):
-    """Streaming cadence: micro-batches fold into the store via the
-    stream-tagged partitions; estimates equal the batch path's."""
-    import json as _json
-    import os
-
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.streaming import structured
-
-    landing = str(tmp_path / "landing")
-    store = str(tmp_path / "sk")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(landing, exist_ok=True)
-
-    rows1 = [{"user_id": i % 7, "event_type": "view"} for i in range(40)]
-    rows2 = [{"user_id": 100 + (i % 5), "event_type": "click"} for i in range(30)]
-    with open(os.path.join(landing, "b1.json"), "w") as f:
-        f.write("\n".join(_json.dumps(r) for r in rows1))
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-    sink = structured.SketchRollupStreamSink(store, ["event_type"], ["user_id"])
-    sink.attach(structured.read_landing_stream(spark, landing, schema), ckpt)
-
-    with open(os.path.join(landing, "b2.json"), "w") as f:
-        f.write("\n".join(_json.dumps(r) for r in rows2))
-    sink.attach(structured.read_landing_stream(spark, landing, schema), ckpt)
-
-    est = {
-        r["event_type"]: (r["user_id_distinct"], r["n_rows"])
-        for r in estimate_rollup(spark, store, ["event_type"]).collect()
-    }
-    assert est == {"view": (7, 40), "click": (5, 30)}
-
-
 def test_cli_sketch_append_missing_flags_is_usage_error(tmp_path):
     import io
 

@@ -4,7 +4,6 @@ store (operators/substring_store.py) and its streaming sink."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from trialsync_etl_spark.operators import substring_store as SS
 from trialsync_etl_spark.operators.dedup import duplicate_spans
@@ -166,65 +165,6 @@ def test_substring_stream_sink_gates_batches(spark, tmp_path):
     assert "w0" not in got[10].text              # later-batch copy trimmed
     assert got[10].text.startswith("different lead")
     assert got[10].source == "books"             # non-text columns survive
-    assert SS.read_substring_params(store) == {"k": 4, "hash_fn": "md5"}
-
-
-def test_curate_stream_sink_substring_stage(spark, tmp_path):
-    """CurateStreamSink(substring_store=...): the streaming funnel's
-    substring gate trims a LATER batch's off-grid copy against the
-    earlier batch's stored firsts and drops a pure-duplicate doc, while
-    the rest of the funnel (quality mask) still runs."""
-    import json
-    import os
-
-    from pyspark.sql import types as T
-
-    from trialsync_etl_spark.streaming import structured
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing)
-    batches = {
-        "a.json": [
-            (1, 1_700_000_100,
-             "intro one two three " + BLOCK + " tail alpha"),
-            (2, 1_700_000_101,
-             "a genuinely varied paragraph on broadcast joins and "
-             "partition pruning with adaptive execution"),
-        ],
-        "b.json": [
-            (10, 1_700_000_200,
-             "different lead " + BLOCK + " other end words here"),
-            (11, 1_700_000_201, BLOCK),  # pure duplicate -> dropped
-        ],
-    }
-    for name, rows in batches.items():
-        with open(os.path.join(landing, name), "w") as f:
-            for did, ts, text in rows:
-                f.write(json.dumps(
-                    {"doc_id": did, "ts": ts, "text": text}
-                ) + "\n")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    out = str(tmp_path / "curated")
-    store = str(tmp_path / "grams")
-    sink = structured.CurateStreamSink(
-        out, substring_store=store, substring_k=4, substring_min_len=8,
-        min_tokens=3, max_top_token_frac=1.0, min_distinct_ratio=0.0,
-    )
-    stream = structured.read_landing_stream(
-        spark, landing, schema, max_files_per_trigger=1
-    )
-    sink.attach(stream.withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ), str(tmp_path / "ckpt"))
-
-    got = {r.doc_id: r.text for r in spark.read.parquet(out).collect()}
-    assert set(got) == {1, 2, 10}
-    assert "w0" in got[1]               # first occurrence intact
-    assert "w0" not in got[10]          # later-batch copy trimmed
     assert SS.read_substring_params(store) == {"k": 4, "hash_fn": "md5"}
 
 

@@ -1,8 +1,7 @@
 """URL/domain curation (operators/urlcurate.py): host/registrable-domain
 extraction hand-checked, blocklist semantics, the two-stage salted
-per-domain cap against a straight-line reference, the incremental
-(store-backed) cap's replay convergence, the funnel stages in both
-cadences, and the domain-mix report."""
+per-domain cap against a straight-line reference, the funnel stages,
+and the domain-mix report."""
 
 from __future__ import annotations
 
@@ -103,78 +102,6 @@ def test_cap_per_domain_matches_reference_and_is_salt_invariant(spark):
         urlcurate.cap_per_domain(df, 0)
 
 
-def test_cap_per_domain_incremental_replays_one_shot(spark, tmp_path):
-    """Two id-ordered batches through the persisted count table keep
-    exactly the docs the one-shot cap keeps, and the table's counts
-    equal the kept totals — the replay-convergence contract."""
-    rows = [
-        (i, None if i % 13 == 0 else f"https://www.d{i % 5}.com/p/{i}")
-        for i in range(97)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    want = {
-        r.doc_id for r in urlcurate.cap_per_domain(df, 3).collect()
-    }
-    store = str(tmp_path / "domstore")
-    got = set()
-    for tag, batch in (
-        ("b0", df.filter(F.col("doc_id") < 50)),
-        ("b1", df.filter(F.col("doc_id") >= 50)),
-    ):
-        out = urlcurate.cap_per_domain_incremental(
-            spark, batch, store, 3, batch_id=tag
-        )
-        got |= {r.doc_id for r in out.collect()}
-    assert got == want
-    counts = {
-        r["__dom"]: r["n_kept"]
-        for r in urlcurate.read_domain_counts(spark, store).collect()
-    }
-    assert counts == {f"d{k}.com": 3 for k in range(5)}
-    with pytest.raises(ValueError, match="batch_id"):
-        urlcurate.cap_per_domain_incremental(
-            spark, df, store, 3, batch_id="a/b"
-        )
-
-
-def test_cap_per_domain_incremental_replay_converges(spark, tmp_path):
-    """A re-delivered micro-batch (same batch_id — foreachBatch replays
-    batch ids after failure) keeps EXACTLY the rows its first delivery
-    kept and leaves the store counts unchanged: its prior excludes its
-    own partition, and the partition is rewritten, not re-folded. A
-    later batch then sees the correct (single-fold) history."""
-    rows = [(i, f"https://www.hot.com/p/{i}") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    store = str(tmp_path / "domstore")
-    b1 = df.filter(F.col("doc_id") < 6)
-
-    first = {
-        r.doc_id
-        for r in urlcurate.cap_per_domain_incremental(
-            spark, b1, store, 4, batch_id="b1"
-        ).collect()
-    }
-    assert first == {0, 1, 2, 3}
-    replay = {
-        r.doc_id
-        for r in urlcurate.cap_per_domain_incremental(
-            spark, b1, store, 4, batch_id="b1"
-        ).collect()
-    }
-    assert replay == first  # the pre-fix behavior kept NOTHING here
-    counts = {
-        r["__dom"]: r["n_kept"]
-        for r in urlcurate.read_domain_counts(spark, store).collect()
-    }
-    assert counts == {"hot.com": 4}  # not 8: rewrite, not re-fold
-    # a later batch sees cap already reached
-    b2 = df.filter(F.col("doc_id") >= 6)
-    out2 = urlcurate.cap_per_domain_incremental(
-        spark, b2, store, 4, batch_id="b2"
-    )
-    assert out2.count() == 0
-
-
 def test_domain_mix_shares(spark):
     df = spark.createDataFrame(
         [
@@ -190,17 +117,11 @@ def test_domain_mix_shares(spark):
     assert mix[None][0] == 1 and mix[None][1] is None
 
 
-def test_url_stages_in_both_funnels(spark, tmp_path):
-    """curate_corpus and CurateStreamSink drop the same blocklisted doc
-    and cap the same domain — URL stages run FIRST in both cadences;
-    a corpus without a url column is loud."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import types as T
-
+def test_url_stages_in_both_funnels(spark):
+    """curate_corpus drops the blocklisted doc and caps the domain — the
+    URL stages run FIRST in the funnel; a corpus without a url column is
+    loud."""
     from trialsync_etl_spark.operators.curate import curate_corpus
-    from trialsync_etl_spark.streaming import structured
 
     good = "a perfectly ordinary document with enough distinct words here"
     docs = spark.createDataFrame(
@@ -231,39 +152,3 @@ def test_url_stages_in_both_funnels(spark, tmp_path):
             docs.drop("url"), url_blocklist=("spam.net",),
             near_dup=False, persist=False,
         )
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "curated")
-    _os.makedirs(landing)
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    # two batch files → the cap must hold ACROSS batches via the store
-    for fname, ids in (("b1.json", (1, 2)), ("b2.json", (3, 4, 5))):
-        with open(_os.path.join(landing, fname), "w") as f:
-            for r in docs.collect():
-                if r.doc_id in ids:
-                    f.write(_json.dumps(
-                        {"doc_id": r.doc_id, "text": r.text, "url": r.url,
-                         "ts": f"2024-01-01T00:00:0{r.doc_id}Z"}) + "\n")
-    sink = structured.CurateStreamSink(
-        out, url_blocklist=("spam.net",), max_per_domain=2,
-        domain_store=str(tmp_path / "domstore"),
-        min_tokens=3, max_top_token_frac=1.0, min_distinct_ratio=0.0,
-    )
-    sink.attach(
-        structured.read_landing_stream(
-            spark, landing, schema, max_files_per_trigger=1
-        ),
-        str(tmp_path / "ckpt"),
-    )
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(out).collect()
-    ) == [1, 2, 5]
-
-    # streaming cap without a store is loud
-    with pytest.raises(ValueError, match="domain_store"):
-        structured.CurateStreamSink(out, max_per_domain=2)

@@ -1165,7 +1165,7 @@ def cmd_langid(args, out=sys.stdout) -> int:
         }) + "\n")
         return 0
 
-    # apply — routed by model size like the funnel/stream surfaces when
+    # apply — routed by model size like the funnel's language gate when
     # the input carries the standard doc_id column (the table path's
     # re-attach key): at the committed 21-language breadth the literal
     # plan costs ~19 s of query build and OOMs default-heap sessions,

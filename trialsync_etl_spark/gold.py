@@ -11,7 +11,6 @@ published path never see a half-written refresh (the CONCURRENTLY analog).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -170,7 +169,7 @@ def refresh_sketch_rollup_events(spark: SparkSession, ctx: WarehouseContext) -> 
     The fold uses a FIXED batch_id: this transform is the full-refresh
     cadence (cf. the MVs), so a re-run REPLACES the batch partition and
     stays idempotent. Incremental per-ingest folds append under their own
-    run ids via the `sketch` CLI / SketchRollupStreamSink. Returns the
+    run ids via the `sketch` CLI. Returns the
     rollup rows the refresh wrote (observed on the write; no read-back)."""
     from trialsync_etl_spark.operators.sketch_store import (
         FULL_REFRESH_BATCH,
@@ -203,10 +202,10 @@ def refresh_freq_rollup_events(spark: SparkSession, ctx: WarehouseContext) -> in
     covers must not ALSO fold under per-ingest ids into the same store —
     unlike the HLL twin (idempotent union; only the auxiliary n_rows
     inflates), a double fold here doubles the primary estimate. A
-    deployment that folds at ingest cadence (`freq append` /
-    FreqRollupStreamSink) should drop this transform from its chain or
-    point it at a separate store; reads can also exclude a window via
-    ``where`` (e.g. ``batch_id != 'full-refresh'``). The nightly
+    deployment that folds at ingest cadence (`freq append`) should drop
+    this transform from its chain or point it at a separate store; reads
+    can also exclude a window via ``where`` (e.g. ``batch_id !=
+    'full-refresh'``). The nightly
     ``maintain_compact_freq_store`` folds finished ingest ids into
     ``__base`` exactly either way. Returns the cells the refresh wrote."""
     from trialsync_etl_spark.operators.freq import append_cm_rollup

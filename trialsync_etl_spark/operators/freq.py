@@ -277,8 +277,8 @@ def hot_key_drift(
     """Which keys got HOT between two windows of the persisted CM store —
     "is a key skewing today that wasn't last week" answered from cells
     alone, never a raw rescan. ``where_a``/``where_b`` are batch-partition
-    filters selecting the two windows (e.g. the streaming sink's per-day
-    tags, or ``"batch_id = '__base'"`` with ``include_base_a=True`` vs
+    filters selecting the two windows (e.g. per-day ingest batch ids,
+    or ``"batch_id = '__base'"`` with ``include_base_a=True`` vs
     everything since the last compact — a window always excludes the
     compacted ``__base`` partition unless the matching
     ``include_base_a``/``include_base_b`` says otherwise, see

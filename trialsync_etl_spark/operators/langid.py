@@ -549,9 +549,8 @@ def language_gate(
     text_col: str = "text",
 ) -> DataFrame:
     """Keep rows whose predicted language is in ``allowed`` — the
-    funnel-stage gate BOTH cadences share (batch ``curate_corpus`` and
-    ``CurateStreamSink``), routed by model size like every other
-    inference surface: below ``INLINE_MAX_CELLS`` the literal-inlined
+    ``curate_corpus`` funnel-stage gate, routed by model size like every
+    other inference surface: below ``INLINE_MAX_CELLS`` the literal-inlined
     :func:`language_mask` predicate (zero exchanges), above it a
     left-semi join against the broadcast weight-table scores (the
     committed 21-language breadth — the inline plan there pays L

@@ -31,10 +31,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def avg_token_len(text: Column) -> Column:
     """Average token length, NULL-guarded for empty docs (A4's NULLIF idiom)."""
     toks = tokens(text)
@@ -298,9 +294,8 @@ def quality_mask(
     min_distinct_ratio: float = 0.2,
     script_aware: bool = False,
 ) -> Column:
-    """The curation keep-predicate shared by the batch funnel and the
-    streaming sink: length floor + repetition guards, one boolean Column
-    so the two cadences cannot drift.
+    """The curation funnel's keep-predicate: length floor + repetition
+    guards, one boolean Column.
 
     ``script_aware=True``: docs WITHOUT word boundaries (CJK/Thai —
     :func:`has_word_boundaries`) are judged by the character-count twin
@@ -439,8 +434,7 @@ def gopher_quality_mask(
     subset :func:`quality_mask` keeps for cheap-rail use: word-count
     band, mean-word-length band, hash and ellipsis symbol ratios (each
     thresholded SEPARATELY, the paper's rule), bullet/ellipsis line
-    fractions, alphabetic-word floor, ≥2 stopwords. Shared by the batch
-    funnel and the streaming sink so the two cadences cannot drift.
+    fractions, alphabetic-word floor, ≥2 stopwords.
 
     ``script_aware=True``: the paper's rules are English-word-based —
     on an unsegmented-script doc (CJK/Thai, :func:`has_word_boundaries`)

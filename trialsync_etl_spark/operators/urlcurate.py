@@ -17,27 +17,14 @@ in the dataset report. This module supplies those stages Spark-first:
   hot domain's sort splits 16 ways; stage 2 ranks the ≤16·cap survivors)
   — exact, deterministic, and the shape that survives a wikipedia.org at
   100 TB where a single-window rank would sort one giant partition.
-- :func:`cap_per_domain_incremental` — the ingest-cadence sibling: a
-  persisted per-batch (domain, n_kept) count table keyed by ``batch_id``
-  partition (the media-signature-store discipline); each batch keeps
-  rows while ``prior_count + rank_in_batch <= cap`` where the prior
-  aggregates every OTHER batch's partition — so a re-delivered
-  micro-batch (foreachBatch redelivers batch ids after failure) never
-  sees its own keeps as history: the replay keeps exactly the original
-  rows and REWRITES its partition instead of double-folding. Id-ordered
-  batches reproduce the one-shot result exactly.
 - :func:`domain_mix` — docs/share per registrable domain, the datacard's
   domain-level complement.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from trialsync_etl_spark.storage import append_batch, check_tag, read_batches
 
 #: multi-part public suffixes where the registrable domain is THREE
 #: labels (site.co.uk), not two — the common set; a production deployment
@@ -129,72 +116,6 @@ def cap_per_domain(
         .drop("__r", "__dom")
     )
     return stage2.unionByName(capless)
-
-
-DOMAIN_COUNTS_TABLE = "domain_counts"
-
-
-def read_domain_counts(
-    spark: SparkSession, store_path: str, exclude: str | None = None
-) -> DataFrame:
-    """The store's aggregated (__dom, n_kept) relation across all batch
-    partitions but ``exclude`` — what the NEXT batch sees as prior
-    history (empty before the first batch lands)."""
-    counts = read_batches(
-        spark, os.path.join(store_path, DOMAIN_COUNTS_TABLE), exclude
-    )
-    if counts is None:
-        return spark.createDataFrame([], "__dom string, n_kept long")
-    return counts.groupBy("__dom").agg(F.sum("n_kept").alias("n_kept"))
-
-
-def cap_per_domain_incremental(
-    spark: SparkSession,
-    batch: DataFrame,
-    store_path: str,
-    cap: int,
-    batch_id: str,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The ingest-cadence domain cap: a persisted count table under
-    ``store_path``, keyed by ``batch_id`` partition —
-    ``domain_counts/batch_id=<tag>/`` holds THIS batch's kept counts,
-    written by ``storage.append_batch``. The batch keeps rows while
-    ``prior_count + rank_in_batch <= cap`` (rank by id within the batch —
-    deterministic), where the prior aggregates every partition EXCEPT the
-    batch's own — so a re-delivered foreachBatch micro-batch never probes
-    its own keeps as history (which would drop every previously-kept row)
-    and never double-folds its counts: the replay keeps the original rows
-    and rewrites its own partition. Id-ordered batches reproduce
-    :func:`cap_per_domain` exactly — the replay-convergence contract the
-    one-shot oracle pins."""
-    if cap < 1:
-        raise ValueError(f"cap must be >= 1, got {cap}")
-    check_tag("batch_id", batch_id)
-    dom = registrable_domain(F.col(url_col))
-    with_dom = batch.withColumn("__dom", dom)
-    capless = with_dom.filter(F.col("__dom").isNull()).drop("__dom")
-    capped = with_dom.filter(F.col("__dom").isNotNull())
-    prior = read_domain_counts(spark, store_path, exclude=batch_id)
-    w = Window.partitionBy("__dom").orderBy(F.col(id_col).asc())
-    ranked = capped.withColumn("__r", F.row_number().over(w)).join(
-        F.broadcast(prior), "__dom", "left"
-    )
-    kept = ranked.filter(
-        F.coalesce(F.col("n_kept"), F.lit(0)) + F.col("__r") <= cap
-    ).drop("__r", "n_kept")
-    # materialize the verdicts BEFORE the fold (the store-sibling
-    # discipline: the probe must never see its own batch through the
-    # store), then publish this batch's counts as its own partition
-    new_counts = kept.groupBy("__dom").agg(
-        F.count(F.lit(1)).alias("n_kept")
-    )
-    final = kept.drop("__dom").localCheckpoint(eager=True)
-    append_batch(
-        new_counts, os.path.join(store_path, DOMAIN_COUNTS_TABLE), batch_id
-    )
-    return final.unionByName(capless)
 
 
 def domain_mix(

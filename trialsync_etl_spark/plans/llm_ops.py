@@ -2878,7 +2878,7 @@ _URL_ORACLE = f"""
     driver=False,  # URL-level curation semantics (blocklist +
     # keep-lowest-id per-domain cap + urlless pass-through) pinned by a
     # full SQL replay of the host/registrable-domain extraction and the
-    # windowed cap; the funnel/streaming twins and the salted top-N
+    # windowed cap; the funnel stage and the salted top-N
     # scale shape are pinned in tests/test_urlcurate.py.
 )
 def text_url_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:

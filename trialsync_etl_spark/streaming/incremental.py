@@ -32,7 +32,7 @@ import time
 from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trialsync_etl_spark.catalog import load_table_and_since, table_path
@@ -372,21 +372,3 @@ def changed_ids_topk(
     deterministic when ``ts_col`` ties at the cut line."""
     order = [F.col(ts_col).desc()] + [F.col(c).desc() for c in tiebreak_cols]
     return changed_since(dim, since).orderBy(*order).limit(limit)
-
-
-@dataclass
-class CadencePlan:
-    """I6: paired full/changed variants of one pipeline sharing a job_group
-    (ref: create_patient_dual_job_pattern.sql:50-277)."""
-
-    job_group: str
-    full_job: str
-    changed_job: str
-
-    def predicate_for(self, variant: str, ts_col: str, store: WatermarkStore) -> Column:
-        if variant == "full":
-            return F.lit(True)
-        wm = store.get(self.job_group)
-        if wm is None:
-            return F.lit(True)
-        return F.col(ts_col) > F.lit(wm).cast("timestamp")
