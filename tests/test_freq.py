@@ -141,7 +141,6 @@ def test_cm_rollup_store_replay_and_compaction(spark, tmp_path):
     from trialsync_etl_spark.operators.freq import (
         append_cm_rollup,
         cm_store_estimate,
-        read_cm_store,
     )
     from trialsync_etl_spark.operators.sketch_store import (
         compact_sketch_store,

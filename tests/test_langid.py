@@ -5,9 +5,7 @@ the nightly language-mix drift observable, and the CLI lifecycle."""
 
 from __future__ import annotations
 
-import contextlib
 import io
-import re
 
 import pytest
 from pyspark.sql import functions as F

@@ -1337,8 +1337,8 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
     from trialsync_etl_spark.operators.lm import (
         bigram_model,
         doc_perplexity_bigram,
-        doc_perplexity_kn,
-        kn_model,
+        doc_perplexity_kn_n,
+        kn_tables,
     )
 
     # corpus "a b c a b d": bigram TYPES {(a,b),(b,c),(c,a),(b,d)} -> B=4;
@@ -1347,7 +1347,8 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
     ref = spark.createDataFrame(
         [(1, "a b c a b d")], "doc_id long, text string"
     )
-    uni, bi, ctx2, tri, ctx3, sc = kn_model(ref)
+    tables, sc = kn_tables(ref, order=3)
+    uni, (bi, ctx2), (tri, ctx3) = tables
     u = {r.tok: r.logp for r in uni.collect()}
     b = {(r.w1, r.w2): r.logp for r in bi.collect()}
     g2 = {r.w1: r.logg for r in ctx2.collect()}
@@ -1376,9 +1377,9 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
 
     # fully-attested doc "a b c": pos0 unigram, pos1 stored bigram,
     # pos2 stored trigram
-    got = doc_perplexity_kn(
+    got = doc_perplexity_kn_n(
         spark.createDataFrame([(10, "a b c")], "doc_id long, text string"),
-        uni, bi, ctx2, tri, ctx3, sc["unk_logp"],
+        tables, sc["unk_logp"],
     ).collect()[0]
     want_avg = round((p1r + p2_ba + p3_abc) / 3, 6)
     assert got.avg_logp == want_avg
@@ -1395,16 +1396,16 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
         ),
         8,
     )
-    got_b = doc_perplexity_kn(
+    got_b = doc_perplexity_kn_n(
         spark.createDataFrame([(11, "c a d")], "doc_id long, text string"),
-        uni, bi, ctx2, tri, ctx3, sc["unk_logp"],
+        tables, sc["unk_logp"],
     ).collect()[0]
     assert got_b.avg_logp == round((p1r + p2_ca + lp_d) / 3, 6)
 
     # all-OOV doc: every rung misses -> every token scores the UNK mass
-    got_u = doc_perplexity_kn(
+    got_u = doc_perplexity_kn_n(
         spark.createDataFrame([(12, "zz qq ww")], "doc_id long, text string"),
-        uni, bi, ctx2, tri, ctx3, sc["unk_logp"],
+        tables, sc["unk_logp"],
     ).collect()[0]
     assert got_u.avg_logp == round(sc["unk_logp"], 6)
 
@@ -1421,12 +1422,10 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
          (31, "fox the lazy jumps dog quick over the")],
         "doc_id long, text string",
     )
-    ku, kb, kc2, kt, kc3, ksc = kn_model(ref2)
+    ktables, ksc = kn_tables(ref2, order=3)
     kn_ppl = {
         r.doc_id: r.perplexity
-        for r in doc_perplexity_kn(
-            docs, ku, kb, kc2, kt, kc3, ksc["unk_logp"]
-        ).collect()
+        for r in doc_perplexity_kn_n(docs, ktables, ksc["unk_logp"]).collect()
     }
     bu, bb, bc, bsc = bigram_model(ref2)
     bi_ppl = {
@@ -1440,11 +1439,11 @@ def test_kn_trigram_hand_computed_backoff_and_order_signal(spark):
     assert kn_ppl[31] / kn_ppl[30] > bi_ppl[31] / bi_ppl[30]
 
     with _pytest.raises(ValueError, match="discount"):
-        kn_model(ref, discount=1.5)
+        kn_tables(ref, order=3, discount=1.5)
     with _pytest.raises(ValueError, match="bigrams"):
-        kn_model(spark.createDataFrame(
+        kn_tables(spark.createDataFrame(
             [(1, "solo"), (2, "word")], "doc_id long, text string"
-        ))
+        ), order=3)
 
 
 def test_gopher_metrics_hand_computed_and_mask_per_rule(spark):
@@ -1692,52 +1691,20 @@ def test_gopher_repetition_hand_computed_and_both_funnels(spark):
 
 
 @pytest.mark.slow
-def test_kn_generic_matches_specialized_and_oracle_generator(spark):
-    """The r14 order-N generalization is pinned to the r13 trigram at
-    order 3 from both directions: (a) kn_tables(order=3) reproduces
-    every kn_model table row-for-row and doc_perplexity_kn_n the exact
-    scorer output; (b) the GENERATED DuckDB oracle (_kn_oracle_n(3))
-    returns the same rows as the hand-written trigram oracle on the
-    test corpus. Order-5 is then exercised end-to-end by the
-    text_perplexity_kn5 value oracle in the registry sweep."""
+def test_kn_oracle_generator_matches_hand_written_trigram_oracle(spark):
+    """The GENERATED DuckDB oracle (_kn_oracle_n(3)) returns the same
+    rows as the hand-written trigram oracle (_KN_ORACLE_SQL) on the test
+    corpus — the order-5 value oracle of text_perplexity_kn5 is the same
+    recursion the order-3 driver query is checked against — and
+    kn_tables refuses orders outside 2..5."""
     import duckdb
 
     from tests.conftest import SF_DIR
-    from trialsync_etl_spark.operators.lm import (
-        doc_perplexity_kn,
-        doc_perplexity_kn_n,
-        kn_model,
-        kn_tables,
-    )
+    from trialsync_etl_spark.operators.lm import kn_tables
     from trialsync_etl_spark.plans.llm_ops import (
         _KN_ORACLE_SQL,
         _kn_oracle_n,
     )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat and the cat ran"),
-            (2, "a dog sat on a log and the dog ran off quickly"),
-            (3, "the cat and the dog sat quietly together on the mat"),
-            (4, "san francisco is foggy and san francisco is hilly"),
-        ],
-        "doc_id long, text string",
-    )
-    uni, bi, ctx2, tri, ctx3, sc = kn_model(docs)
-    tables, sc2 = kn_tables(docs, order=3)
-    assert sc["unk_logp"] == sc2["unk_logp"]
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert rows(uni) == rows(tables[0])
-    assert rows(bi) == rows(tables[1][0])
-    assert rows(ctx2) == rows(tables[1][1])
-    assert rows(tri) == rows(tables[2][0])
-    assert rows(ctx3) == rows(tables[2][1])
-    assert rows(
-        doc_perplexity_kn(docs, uni, bi, ctx2, tri, ctx3, sc["unk_logp"])
-    ) == rows(doc_perplexity_kn_n(docs, tables, sc2["unk_logp"]))
 
     con = duckdb.connect()
     con.execute(
@@ -1748,7 +1715,10 @@ def test_kn_generic_matches_specialized_and_oracle_generator(spark):
     gen = sorted(con.execute(_kn_oracle_n(3, max_doc=500)).fetchall())
     assert hand == gen
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="order"):
-        kn_tables(docs, order=6)
+    with pytest.raises(ValueError, match="order"):
+        kn_tables(
+            spark.createDataFrame(
+                [(1, "the cat sat on the mat")], "doc_id long, text string"
+            ),
+            order=6,
+        )

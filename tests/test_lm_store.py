@@ -524,12 +524,17 @@ def test_store_bigram_model_roundtrip_and_order_dispatch(spark, tmp_path):
     assert vocab.count() == params["vocab"] and unseen < 0
 
 @pytest.mark.slow
-def test_store_kn_model_roundtrip_and_order_dispatch(spark, tmp_path):
-    """Order-3 (interpolated Kneser-Ney) models persist all FIVE tables
-    and score bit-identically to the one-shot KN path; the order pin
-    routes score/band automatically; wrong-shape readers are loud; the
-    meta records the discount instead of add_k."""
-    from trialsync_etl_spark.operators.lm import doc_perplexity_kn, kn_model
+def test_store_kn_order3_roundtrip_and_order_dispatch(spark, tmp_path):
+    """Order-3 (interpolated Kneser-Ney) models persist exactly the FIVE
+    original tables (vocab, bigrams, contexts, trigrams, contexts3 — no
+    grams<n>/contexts<n> dirs) and score bit-identically to the one-shot
+    kn_tables(order=3) path; the order pin routes score/band
+    automatically; wrong-shape readers are loud; the meta records the
+    discount instead of add_k."""
+    from trialsync_etl_spark.operators.lm import (
+        doc_perplexity_kn_n,
+        kn_tables,
+    )
 
     store = str(tmp_path / "lm")
     ref = _ref(spark)
@@ -540,14 +545,10 @@ def test_store_kn_model_roundtrip_and_order_dispatch(spark, tmp_path):
     assert params["vocab"] > 0 and params["unseen_logp"] < 0
     import os
 
-    for table in (
-        lm_store.VOCAB_TABLE, lm_store.BIGRAMS_TABLE,
-        lm_store.CONTEXTS_TABLE, lm_store.TRIGRAMS_TABLE,
-        lm_store.CONTEXTS3_TABLE,
-    ):
-        assert os.path.isdir(
-            os.path.join(store, table, "model_id=kn-v1")
-        ), table
+    assert sorted(
+        t for t in os.listdir(store)
+        if os.path.isdir(os.path.join(store, t, "model_id=kn-v1"))
+    ) == ["bigrams", "contexts", "contexts3", "trigrams", "vocab"]
 
     docs = _docs(spark)
     got = {
@@ -556,12 +557,10 @@ def test_store_kn_model_roundtrip_and_order_dispatch(spark, tmp_path):
             spark, docs, store, "kn-v1"
         ).collect()
     }
-    uni, bi, ctx2, tri, ctx3, sc = kn_model(ref, discount=0.75)
+    tables, sc = kn_tables(ref, order=3, discount=0.75)
     want = {
         r.doc_id: r.asDict()
-        for r in doc_perplexity_kn(
-            docs, uni, bi, ctx2, tri, ctx3, sc["unk_logp"]
-        ).collect()
+        for r in doc_perplexity_kn_n(docs, tables, sc["unk_logp"]).collect()
     }
     assert got == want
 
@@ -572,7 +571,7 @@ def test_store_kn_model_roundtrip_and_order_dispatch(spark, tmp_path):
         lm_store.read_lm_model(spark, store, "kn-v1")
     lm_store.build_lm_model(ref, store, "uni-x", order=1)
     with pytest.raises(ValueError, match="order"):
-        lm_store.read_kn_lm_model(spark, store, "uni-x")
+        lm_store.read_kn_lm_model_n(spark, store, "uni-x")
 
     # banding dispatches on the stored order with no special wiring
     ppl = sorted(v["perplexity"] for v in got.values())
@@ -772,8 +771,18 @@ def test_order5_store_roundtrip(spark, tmp_path):
     assert via_store[10][2] < via_store[11][2]  # in-domain < gibberish
 
     with _pytest.raises(ValueError, match="order"):
-        LS.read_kn_lm_model(spark, store, "kn5")
-    # order-3 model is rejected by the order-N reader
+        LS.read_bigram_lm_model(spark, store, "kn5")
+    # the order-N reader serves order-3 models too, scoring them
+    # identically to the one-shot order-3 path
     LS.build_lm_model(ref, store, "kn3", order=3)
-    with _pytest.raises(ValueError, match="order"):
-        LS.read_kn_lm_model_n(spark, store, "kn3")
+    tables3, unk3 = LS.read_kn_lm_model_n(spark, store, "kn3")
+    assert len(tables3) == 3
+    tables, sc = kn_tables(ref, order=3)
+    assert unk3 == sc["unk_logp"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(doc_perplexity_kn_n(batch, tables3, unk3)) == rows(
+        doc_perplexity_kn_n(batch, tables, sc["unk_logp"])
+    )

@@ -21,7 +21,6 @@ oracle computes identical values).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -152,21 +151,6 @@ def spread_for_cpu(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_signatures(shingles: DataFrame) -> DataFrame:
-    """N_HASHES min-hash components per doc as columns h0..h{n-1}, from an
-    exploded (doc_id, h) relation.
-
-    XOR with a fixed seed permutes the hash space; min over the permuted
-    values per doc = one MinHash component. Single groupBy on doc_id —
-    prefer :func:`minhash_signatures_narrow` when you still hold the docs
-    (it skips this shuffle entirely)."""
-    aggs = [
-        F.min(F.col("h").bitwiseXOR(F.lit(seed))).alias(f"h{j}")
-        for j, seed in enumerate(MINHASH_SEEDS)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_signatures_narrow(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -177,11 +161,9 @@ def minhash_signatures_narrow(
     """MinHash signatures with ZERO shuffle: each component is
     ``array_min`` over the per-doc shingle-hash array (XOR-permuted in a
     lambda), so signing is a narrow projection — the corpus never moves
-    for the groupBy that :func:`minhash_signatures` pays.
+    for a per-doc groupBy over exploded shingle hashes.
 
-    Identical output to the exploded path (min is duplicate-insensitive;
-    docs with no shingles are dropped on both paths — here via the
-    token-count pre-filter, there by producing no exploded rows).
+    Docs with no shingles are dropped via the token-count pre-filter.
 
     The no-shingle filter is expressed on the RAW tokens (``n_tokens >=
     k`` ⟺ at least one k-shingle), never as ``size(__hs) > 0``: Catalyst

@@ -266,7 +266,7 @@ def train_langid_model(
     time the moment the bucket space grew to 1024). MLlib multinomial
     LBFGS over a single coalesced partition is deterministic for a
     fixed input; the 100 TB corpus only ever sees the literal
-    expression from :func:`langid_scores`."""
+    expression from :func:`langid_struct`."""
     from collections import Counter
 
     from pyspark.ml.classification import LogisticRegression
@@ -469,23 +469,6 @@ def langid_struct(
             _pred_of(v, model).alias("lang_pred"),
         ),
     )
-
-
-def langid_scores(
-    text: Column, model: LangIdModel | None = None
-) -> dict[str, Column]:
-    """Per-language linear scores as pure column expressions. NOTE: each
-    returned column carries its own fold — selecting several of them
-    re-hashes per column. Multi-output consumers should select
-    :func:`langid_struct` once and unpack instead (the parity query
-    does)."""
-    model = model or default_langid_model()
-    return {
-        l: _let(
-            _fold_struct(text, model), lambda v, _l=l: _score_of(v, _l, model)
-        )
-        for l in model.langs
-    }
 
 
 def detect_language_model(

@@ -1,17 +1,22 @@
-"""Unigram language-model perplexity — the CCNet-style statistical
-quality signal (beyond-reference op).
+"""Language-model perplexity — the CCNet-style statistical quality
+signal (beyond-reference op), at three strengths:
 
-The public training-data recipe (CCNet: "quality" = perplexity of a
-KenLM model over the candidate document; Gopher/RefinedWeb keep bands of
-it) reduces, at the unigram level, to pure relational algebra — which is
-exactly what makes it a first-class engine operator instead of a UDF:
+- :func:`unigram_model` / :func:`doc_perplexity`: add-k unigram.
+- :func:`bigram_model` / :func:`doc_perplexity_bigram`: interpolated
+  add-k bigram — the first model that sees WORD ORDER.
+- :func:`kn_tables` / :func:`doc_perplexity_kn_n`: interpolated
+  Kneser-Ney of any order 2..5 (order 5 is the published CCNet KenLM
+  configuration; order 3 is the driver's trigram member).
 
-- TRAIN: one explode + groupBy over the reference corpus → (token,
-  logp) with add-k smoothing. The vocabulary table is the model.
-- SCORE: one explode + join(token) + per-doc aggregate. At 100 TB the
-  vocabulary of natural text is millions of rows — a plain shuffle join
-  AQE can broadcast when the vocab is small and shuffle when it isn't;
-  the corpus is scanned once, never collected.
+Every model reduces to pure relational algebra — which is exactly what
+makes it a first-class engine operator instead of a UDF:
+
+- TRAIN: one explode + groupBys over the reference corpus → log-prob
+  tables (the tables ARE the model).
+- SCORE: one explode + token-key joins + per-doc aggregate. At 100 TB
+  the vocabulary of natural text is millions of rows — plain shuffle
+  joins AQE can broadcast when a table is small and shuffle when it
+  isn't; the corpus is scanned once, never collected.
 
 Perplexity reads: LOW = the doc is made of tokens the reference corpus
 uses constantly (boilerplate/repetition), HIGH = tokens the reference
@@ -306,312 +311,6 @@ def doc_perplexity_bigram(
     )
 
 
-def kn_model(
-    docs: DataFrame,
-    text_col: str = "text",
-    discount: float = 0.75,
-    persist: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, dict]:
-    """Fit an interpolated Kneser-Ney trigram LM (Chen & Goodman 1999,
-    the public recipe behind the CCNet KenLM signal) — absolute
-    discounting with CONTINUATION counts at the lower orders: a word's
-    unigram weight is how many distinct contexts it completes, not how
-    often it occurs, which is what stops "Francisco" (frequent, but only
-    ever after "San") from inflating every context.
-
-    Returns (uni, bi, ctx2, tri, ctx3, scalars) — five distributed
-    tables plus pinned scalars:
-
-    - ``uni`` (tok, logp): interpolated-KN unigram
-      p1(w) = max(N1+(·w)−D, 0)/B + D·V/B · 1/(V+1), 8 dp, where
-      N1+(·w) = distinct left-neighbors of w, B = distinct bigram
-      types, V = distinct continuation types.
-    - ``bi`` (w1, w2, logp): p2(w2|w1) = max(N1+(·w1w2)−D, 0)/N1+(·w1·)
-      + γ2(w1)·p1(w2) for every bigram type WITH trigram-continuation
-      evidence, 8 dp.
-    - ``ctx2`` (w1, logg): ln γ2(w1) = ln(D·N1+(w1·)/N1+(·w1·)) — the
-      backoff weight a score-time miss multiplies into p1.
-    - ``tri`` (w1, w2, w3, logp): p3(w3|w1w2) = max(c3−D, 0)/c(w1w2·)
-      + γ3(w1w2)·p2(w3|w2), 8 dp.
-    - ``ctx3`` (w1, w2, logg): ln γ3(w1w2).
-    - ``scalars``: {discount, unk_logp} — unk_logp the unigram UNK
-      mass ln(D·V/B/(V+1)), the full-backoff floor.
-
-    Everything is groupBys and hash joins over ONE positional explode;
-    the only driver transfer is the (B, V) scalar pair. ``persist=True``
-    caches the shared explode + trigram counts for multi-action callers
-    (lm_store's five writes) — ``scalars['unpersist']`` releases."""
-    from trialsync_etl_spark.operators.textstats import tokens as _tokens
-
-    d = float(discount)
-    if not (0.0 < d < 1.0):
-        raise ValueError(f"discount must be in (0, 1), got {discount}")
-    grams = docs.select(
-        F.posexplode(_tokens(F.col(text_col))).alias("pos", "tok"),
-        _tokens(F.col(text_col)).alias("__toks"),
-    ).select(
-        F.col("tok").alias("w3"),
-        F.when(
-            F.col("pos") > 0, F.element_at(F.col("__toks"), F.col("pos"))
-        ).alias("w2"),
-        F.when(
-            F.col("pos") > 1,
-            F.element_at(F.col("__toks"), F.col("pos") - 1),
-        ).alias("w1"),
-    )
-    if persist:
-        from pyspark import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # corpus bigram TYPES (position >= 1) drive the unigram continuation
-    bi_types = (
-        grams.filter(F.col("w2").isNotNull())
-        .select("w2", "w3")
-        .distinct()
-    )
-    if persist:
-        bi_types = bi_types.persist()
-    uni_cont = bi_types.groupBy("w3").agg(F.count(F.lit(1)).alias("n1p"))
-    b_types, v_types = uni_cont.agg(F.sum("n1p"), F.count(F.lit(1))).first()
-    if not b_types:
-        raise ValueError(
-            "kn_model: reference corpus has no bigrams (need docs with "
-            ">= 2 tokens)"
-        )
-    b_f, v_f = float(b_types), float(v_types)
-    gamma_uni = d * v_f / b_f
-    unk_logp = round(math.log(gamma_uni / (v_f + 1.0)), 8)
-    uni = uni_cont.select(
-        F.col("w3").alias("tok"),
-        F.round(
-            F.log(
-                F.greatest(F.col("n1p") - F.lit(d), F.lit(0.0)) / F.lit(b_f)
-                + F.lit(gamma_uni / (v_f + 1.0))
-            ),
-            8,
-        ).alias("logp"),
-    )
-
-    # trigram counts (position >= 2) drive the bigram continuation
-    tri_counts = (
-        grams.filter(F.col("w1").isNotNull())
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).alias("c3"))
-    )
-    if persist:
-        tri_counts = tri_counts.persist()
-    # N1+(·w2w3): distinct w1 preceding the bigram (rows of tri_counts)
-    bi_cont = tri_counts.groupBy("w2", "w3").agg(
-        F.count(F.lit(1)).alias("n1p_bi")
-    )
-    # N1+(·w2·) and N1+(w2·) per middle word
-    ctx2_stats = bi_cont.groupBy("w2").agg(
-        F.sum("n1p_bi").alias("total"),
-        F.count(F.lit(1)).alias("n_follow"),
-    )
-    ctx2 = ctx2_stats.select(
-        F.col("w2").alias("w1"),
-        F.round(
-            F.log(F.lit(d) * F.col("n_follow") / F.col("total")), 8
-        ).alias("logg"),
-    )
-    bi = (
-        bi_cont.join(ctx2_stats, "w2")
-        .join(uni.select(F.col("tok").alias("w3"), F.col("logp").alias("__p1")), "w3")
-        .select(
-            F.col("w2").alias("w1"),
-            F.col("w3").alias("w2"),
-            F.round(
-                F.log(
-                    F.greatest(F.col("n1p_bi") - F.lit(d), F.lit(0.0))
-                    / F.col("total")
-                    + (F.lit(d) * F.col("n_follow") / F.col("total"))
-                    * F.exp(F.col("__p1"))
-                ),
-                8,
-            ).alias("logp"),
-        )
-    )
-
-    # trigram level: raw counts discounted against the context total
-    ctx3_stats = tri_counts.groupBy("w1", "w2").agg(
-        F.sum("c3").alias("c_ctx"),
-        F.count(F.lit(1)).alias("n_follow"),
-    )
-    ctx3 = ctx3_stats.select(
-        "w1",
-        "w2",
-        F.round(
-            F.log(F.lit(d) * F.col("n_follow") / F.col("c_ctx")), 8
-        ).alias("logg"),
-    )
-    tri = (
-        tri_counts.join(ctx3_stats, ["w1", "w2"])
-        .join(
-            bi.select(
-                F.col("w1").alias("w2"),
-                F.col("w2").alias("w3"),
-                F.col("logp").alias("__p2"),
-            ),
-            ["w2", "w3"],
-        )
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.round(
-                F.log(
-                    F.greatest(F.col("c3") - F.lit(d), F.lit(0.0))
-                    / F.col("c_ctx")
-                    + (F.lit(d) * F.col("n_follow") / F.col("c_ctx"))
-                    * F.exp(F.col("__p2"))
-                ),
-                8,
-            ).alias("logp"),
-        )
-    )
-    scalars = {"discount": d, "unk_logp": unk_logp}
-    if persist:
-        def _unpersist(_g=grams, _b=bi_types, _t=tri_counts) -> None:
-            _g.unpersist()
-            _b.unpersist()
-            _t.unpersist()
-
-        scalars["unpersist"] = _unpersist
-    return uni, bi, ctx2, tri, ctx3, scalars
-
-
-def doc_perplexity_kn(
-    docs: DataFrame,
-    uni: DataFrame,
-    bi: DataFrame,
-    ctx2: DataFrame,
-    tri: DataFrame,
-    ctx3: DataFrame,
-    unk_logp: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-doc perplexity under the interpolated-KN trigram LM: token 0
-    scores p1, token 1 scores p2(tok|prev), tokens ≥2 score
-    p3(tok|prev2 prev1) — each level resolving its standard backoff
-    ladder at score time (stored row → stored γ × lower level → lower
-    level). Same output contract and rounding cascade as the other
-    scorers: stored logs 8 dp, per-token log re-rounded 8 dp, per-doc
-    mean 6 dp, perplexity 4 dp FROM the rounded mean.
-
-    Plan shape: one positional explode + five hash joins on token keys
-    (uni/bi/ctx2/tri/ctx3 — AQE broadcasts the small ones) + one per-doc
-    aggregate; the corpus is scanned once."""
-    from trialsync_etl_spark.operators.textstats import tokens as _tokens
-
-    tok = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(_tokens(F.col(text_col))).alias("pos", "tok"),
-        _tokens(F.col(text_col)).alias("__toks"),
-    ).select(
-        "doc_id",
-        "tok",
-        F.when(
-            F.col("pos") > 0, F.element_at(F.col("__toks"), F.col("pos"))
-        ).alias("prev1"),
-        F.when(
-            F.col("pos") > 1,
-            F.element_at(F.col("__toks"), F.col("pos") - 1),
-        ).alias("prev2"),
-    )
-    scored = (
-        tok.join(
-            uni.select(F.col("tok"), F.col("logp").alias("__u")),
-            "tok",
-            "left",
-        )
-        .join(
-            bi.select(
-                F.col("w1").alias("prev1"),
-                F.col("w2").alias("tok"),
-                F.col("logp").alias("__b"),
-            ),
-            ["prev1", "tok"],
-            "left",
-        )
-        .join(
-            ctx2.select(
-                F.col("w1").alias("prev1"), F.col("logg").alias("__g2")
-            ),
-            "prev1",
-            "left",
-        )
-        .join(
-            tri.select(
-                F.col("w1").alias("prev2"),
-                F.col("w2").alias("prev1"),
-                F.col("w3").alias("tok"),
-                F.col("logp").alias("__t"),
-            ),
-            ["prev2", "prev1", "tok"],
-            "left",
-        )
-        .join(
-            ctx3.select(
-                F.col("w1").alias("prev2"),
-                F.col("w2").alias("prev1"),
-                F.col("logg").alias("__g3"),
-            ),
-            ["prev2", "prev1"],
-            "left",
-        )
-    )
-    p1 = F.exp(F.coalesce(F.col("__u"), F.lit(float(unk_logp))))
-    p2 = (
-        F.when(F.col("__b").isNotNull(), F.exp(F.col("__b")))
-        .when(F.col("__g2").isNotNull(), F.exp(F.col("__g2")) * p1)
-        .otherwise(p1)
-    )
-    p3 = (
-        F.when(F.col("__t").isNotNull(), F.exp(F.col("__t")))
-        .when(F.col("__g3").isNotNull(), F.exp(F.col("__g3")) * p2)
-        .otherwise(p2)
-    )
-    lp = F.round(
-        F.log(
-            F.when(F.col("prev1").isNull(), p1)
-            .when(F.col("prev2").isNull(), p2)
-            .otherwise(p3)
-        ),
-        8,
-    )
-    # integer-sum mean: each 8 dp log becomes an exact BIGINT (×1e8), so
-    # the per-doc sum is EXACT in both engines regardless of aggregation
-    # order — the unigram/bigram scorers' round(avg, 6) leaves a ~1e-16
-    # sum-order residue that can flip a .5e-6 boundary (one sf0.01 doc
-    # did); dividing the exact integer sum makes the 6 dp mean
-    # bit-stable by construction
-    lp_int = F.round(lp * F.lit(1e8), 0).cast("long")
-    per_tok = scored.select("doc_id", lp_int.alias("__lpi"))
-    return (
-        per_tok.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("__lpi").alias("__s"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.round(
-                F.col("__s") / F.lit(1e8) / F.col("n_tokens"), 6
-            ).alias("avg_logp"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "avg_logp",
-            F.round(F.exp(-F.col("avg_logp")), 4).alias("perplexity"),
-        )
-    )
-
-
 def kn_tables(
     docs: DataFrame,
     order: int = 3,
@@ -619,9 +318,13 @@ def kn_tables(
     discount: float = 0.75,
     persist: bool = False,
 ) -> tuple[list, dict]:
-    """Generalized interpolated Kneser-Ney for any ``order`` in 2..5 —
-    the uniform recursion :func:`kn_model` instantiates at 3 (Chen &
-    Goodman 1999; order 5 is the published CCNet KenLM configuration):
+    """Fit an interpolated Kneser-Ney LM of any ``order`` in 2..5 (Chen
+    & Goodman 1999, the public recipe behind the CCNet KenLM signal;
+    order 5 is the published KenLM configuration) — absolute
+    discounting with CONTINUATION counts at the lower orders: a word's
+    unigram weight is how many distinct contexts it completes, not how
+    often it occurs, which is what stops "Francisco" (frequent, but only
+    ever after "San") from inflating every context. The recursion:
 
     - level ``order``: RAW n-gram counts discounted against the raw
       context total.
@@ -636,14 +339,15 @@ def kn_tables(
     (tok, logp) and ``tables[n-1]`` for n ≥ 2 is ``(gram_n, ctx_n)``:
     gram_n = (w1..wn, logp) with p_n = max(cnt−D,0)/total +
     γ_n·p_{n−1}(w2..wn); ctx_n = (w1..w_{n−1}, logg) with
-    ln γ_n = ln(D·n_follow/total). All logs 8 dp — the same rounding
-    cascade as :func:`kn_model`, whose five order-3 tables this
-    reproduces row-for-row (pinned by test).
+    ln γ_n = ln(D·n_follow/total). All logs 8 dp. ``scalars`` holds
+    {discount, unk_logp, order} — unk_logp the unigram UNK mass
+    ln(D·V/B/(V+1)), the full-backoff floor.
 
     Plan shape: ONE positional explode; per level one groupBy + (from
     level 2 up) two hash joins; only scalars reach the driver.
     ``persist=True`` caches the shared explode + top-level counts for
-    multi-action callers (the store's 2·order−1 writes)."""
+    multi-action callers (the store's 2·order−1 writes) —
+    ``scalars['unpersist']`` releases them."""
     from trialsync_etl_spark.operators.textstats import tokens as _tokens
 
     d = float(discount)
@@ -794,9 +498,10 @@ def doc_perplexity_kn_n(
     """Per-doc perplexity under a :func:`kn_tables` model of any order:
     the token at position p scores with order min(p+1, N), each level
     resolving the standard ladder (stored row → stored γ × lower →
-    lower). Output contract and rounding cascade identical to
-    :func:`doc_perplexity_kn` (8 dp stored/per-token logs, EXACT
-    integer-sum 6 dp mean, 4 dp perplexity).
+    lower). Same output contract as the other scorers ((doc_id,
+    n_tokens, avg_logp, perplexity)); rounding cascade: 8 dp stored and
+    per-token logs, EXACT integer-sum 6 dp mean, 4 dp perplexity FROM
+    the rounded mean.
 
     Plan: one positional explode + 2·order−1 token-key hash joins + one
     per-doc aggregate."""
@@ -866,6 +571,12 @@ def doc_perplexity_kn_n(
         level_p = F.col(f"__q_{n}") if n >= 2 else p
         pick = F.when(F.col(f"prev{n}").isNull(), level_p).otherwise(pick)
     lp = F.round(F.log(pick), 8)
+    # integer-sum mean: each 8 dp log becomes an exact BIGINT (×1e8), so
+    # the per-doc sum is EXACT in both engines regardless of aggregation
+    # order — the unigram/bigram scorers' round(avg, 6) leaves a ~1e-16
+    # sum-order residue that can flip a .5e-6 boundary (one sf0.01 doc
+    # did); dividing the exact integer sum makes the 6 dp mean
+    # bit-stable by construction
     lp_int = F.round(lp * F.lit(1e8), 0).cast("long")
     per_tok = scored.select("doc_id", lp_int.alias("__lpi"))
     return (

@@ -1,4 +1,4 @@
-"""Persisted unigram/bigram/KN-trigram LM store — train once, score every batch.
+"""Persisted unigram/bigram/Kneser-Ney LM store — train once, score every batch.
 
 `operators/lm.py` is the one-shot shape: `curate_corpus(perplexity_ref=)`
 re-trains the unigram model on every funnel run. At 100 TB the reference
@@ -19,11 +19,14 @@ persisted store, the same discipline every other per-ingest probe got
   — tens of millions of rows at scale, same distributed-layout rule)
   and ``<store>/contexts/model_id=<id>/`` ((w1, logp): each seen
   context's unseen-continuation mass — the interpolation's backoff rung).
-- order-3 (interpolated Kneser-Ney) models reuse vocab/bigrams/contexts
-  for their KN-continuation counterparts and add
-  ``<store>/trigrams/model_id=<id>/`` ((w1, w2, w3, logp)) and
-  ``<store>/contexts3/model_id=<id>/`` ((w1, w2, logg) backoff weights);
-  the meta records ``discount`` instead of ``add_k``.
+- order-3..5 (interpolated Kneser-Ney, :func:`lm.kn_tables`) models
+  store the continuation unigram in ``vocab`` and, per level n ≥ 2, a
+  gram table ((w1..wn, logp)) plus a context table ((w1..w(n-1), logg)
+  backoff weights). Order-3 models name their levels
+  ``bigrams``/``contexts`` and ``trigrams``/``contexts3``; order-4/5
+  models name every level ``grams<n>``/``contexts<n>``
+  (:func:`_kn_level_tables` is the one mapping). The meta records
+  ``discount`` instead of ``add_k``.
 - ``<store>__meta.json`` — per-model scalars ({order, add_k, vocab,
   unseen_logp}), written under the store's ``__lock`` flock with
   tmp+rename. The unseen-token log-prob is part of the model: scoring
@@ -44,10 +47,11 @@ are static artifacts, not growing logs.
 Parity contract: :func:`score_perplexity_store` over a stored model
 equals the one-shot :func:`~trialsync_etl_spark.operators.lm
 .doc_perplexity` / :func:`~trialsync_etl_spark.operators.lm
-.doc_perplexity_bigram` with the tables the matching ``*_model`` call
-returned at build time — pinned by the ``text_perplexity_store``
-registry query against the same DuckDB oracle as the one-shot
-``text_perplexity``, and by the store-vs-one-shot bigram test.
+.doc_perplexity_bigram` / :func:`~trialsync_etl_spark.operators.lm
+.doc_perplexity_kn_n` with the tables the matching fit call returned at
+build time — pinned by the ``text_perplexity_store`` registry query
+against the same DuckDB oracle as the one-shot ``text_perplexity``, and
+by the store-vs-one-shot bigram and Kneser-Ney tests.
 """
 
 from __future__ import annotations
@@ -71,14 +75,15 @@ TRIGRAMS_TABLE = "trigrams"
 CONTEXTS3_TABLE = "contexts3"
 
 
-def _gram_table(n: int) -> str:
-    """Generic order-n table names (order ≥ 4 models): grams4/contexts4,
-    grams5/contexts5 — the order-2/3 layouts keep their legacy names."""
-    return f"grams{n}"
-
-
-def _ctx_table(n: int) -> str:
-    return f"contexts{n}"
+def _kn_level_tables(order: int, n: int) -> tuple[str, str]:
+    """The (gram table, context table) names of level ``n`` of an
+    order-``order`` Kneser-Ney model: order-3 models keep their original
+    bigrams/contexts + trigrams/contexts3 names, order ≥ 4 models use
+    grams<n>/contexts<n> at every level."""
+    if order == 3:
+        return {2: (BIGRAMS_TABLE, CONTEXTS_TABLE),
+                3: (TRIGRAMS_TABLE, CONTEXTS3_TABLE)}[n]
+    return f"grams{n}", f"contexts{n}"
 
 
 def _meta_path(store_path: str) -> str:
@@ -147,10 +152,11 @@ def build_lm_model(
     """Fit the LM on ``reference`` and persist it under ``model_id`` —
     paid once per reference-corpus version, never per scored batch.
     ``order=1`` is the unigram; ``order=2`` the interpolated bigram
-    (vocab + bigrams + contexts partitions); ``order=3`` the
-    interpolated Kneser-Ney trigram (vocab + bigrams + contexts +
-    trigrams + contexts3 partitions — ``discount`` applies, ``add_k``
-    is ignored). Returns the recorded scalars ({order, add_k|discount,
+    (vocab + bigrams + contexts partitions); ``order=3..5`` the
+    interpolated Kneser-Ney model of :func:`lm.kn_tables` (vocab + one
+    gram and one context partition per level, named by
+    :func:`_kn_level_tables` — ``discount`` applies, ``add_k`` is
+    ignored). Returns the recorded scalars ({order, add_k|discount,
     vocab, unseen_logp}). Re-building the same id overwrites its
     partitions and meta entry; the partitions land BEFORE the meta
     entry, so a crash between the two leaves unregistered partitions
@@ -161,9 +167,8 @@ def build_lm_model(
     check_tag("model_id", model_id)
     if order not in (1, 2, 3, 4, 5):
         raise ValueError(
-            f"order must be 1 (unigram), 2 (bigram), 3 (KN trigram), or "
-            f"4/5 (generalized KN — the order-5 CCNet KenLM shape), "
-            f"got {order}"
+            f"order must be 1 (unigram), 2 (bigram), or 3..5 (Kneser-Ney "
+            f"— order 5 is the CCNet KenLM shape), got {order}"
         )
     from pyspark.sql import Observation
 
@@ -180,11 +185,11 @@ def build_lm_model(
         lm.observe(obs, F.count(F.lit(1)).alias("v")).write.mode(
             "overwrite"
         ).parquet(_model_partition(store_path, VOCAB_TABLE, model_id))
-    elif order >= 4:
+    elif order >= 3:
         from trialsync_etl_spark.operators.lm import kn_tables
 
         # persist=True caches the shared explode + top-count lineage for
-        # the 2·order−1 write actions below (the order-3 discipline)
+        # the 2·order−1 write actions below (the order-2 discipline)
         tables, scalars = kn_tables(
             reference, order=order, text_col=text_col, discount=discount,
             persist=True,
@@ -198,51 +203,17 @@ def build_lm_model(
             )
             for n in range(2, order + 1):
                 gram_n, ctx_n = tables[n - 1]
+                gram_table, ctx_table = _kn_level_tables(order, n)
                 gram_n.write.mode("overwrite").parquet(
-                    _model_partition(store_path, _gram_table(n), model_id)
+                    _model_partition(store_path, gram_table, model_id)
                 )
                 ctx_n.write.mode("overwrite").parquet(
-                    _model_partition(store_path, _ctx_table(n), model_id)
+                    _model_partition(store_path, ctx_table, model_id)
                 )
         finally:
             scalars["unpersist"]()
         params = {
             "order": int(order),
-            "discount": float(discount),
-            "vocab": int(obs.get["v"]),
-            "unseen_logp": float(unseen_logp),
-        }
-        _record_model(store_path, model_id, params)
-        return params
-    elif order == 3:
-        from trialsync_etl_spark.operators.lm import kn_model
-
-        # persist=True caches the shared explode + count lineages for
-        # the FIVE write actions below (the order-2 discipline)
-        uni, bi, ctx2, tri, ctx3, scalars = kn_model(
-            reference, text_col=text_col, discount=discount, persist=True
-        )
-        unseen_logp = scalars["unk_logp"]
-        try:
-            uni.observe(obs, F.count(F.lit(1)).alias("v")).write.mode(
-                "overwrite"
-            ).parquet(_model_partition(store_path, VOCAB_TABLE, model_id))
-            bi.write.mode("overwrite").parquet(
-                _model_partition(store_path, BIGRAMS_TABLE, model_id)
-            )
-            ctx2.write.mode("overwrite").parquet(
-                _model_partition(store_path, CONTEXTS_TABLE, model_id)
-            )
-            tri.write.mode("overwrite").parquet(
-                _model_partition(store_path, TRIGRAMS_TABLE, model_id)
-            )
-            ctx3.write.mode("overwrite").parquet(
-                _model_partition(store_path, CONTEXTS3_TABLE, model_id)
-            )
-        finally:
-            scalars["unpersist"]()
-        params = {
-            "order": 3,
             "discount": float(discount),
             "vocab": int(obs.get["v"]),
             "unseen_logp": float(unseen_logp),
@@ -324,50 +295,19 @@ def read_bigram_lm_model(
     return uni, bi, ctx, params["unseen_logp"]
 
 
-def read_kn_lm_model(
-    spark: SparkSession, store_path: str, model_id: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, float]:
-    """The stored (uni, bi, ctx2, tri, ctx3, unk_logp) of an ORDER-3
-    interpolated-KN model — exactly what
-    :func:`lm.doc_perplexity_kn` consumes."""
-    params = read_lm_params(store_path, model_id)
-    if params.get("order", 1) != 3:
-        raise ValueError(
-            f"lm store model {model_id!r} is order "
-            f"{params.get('order', 1)} — read it with "
-            "read_lm_model/read_bigram_lm_model"
-        )
-    uni = spark.read.schema("tok string, logp double").parquet(
-        _model_partition(store_path, VOCAB_TABLE, model_id)
-    )
-    bi = spark.read.schema("w1 string, w2 string, logp double").parquet(
-        _model_partition(store_path, BIGRAMS_TABLE, model_id)
-    )
-    ctx2 = spark.read.schema("w1 string, logg double").parquet(
-        _model_partition(store_path, CONTEXTS_TABLE, model_id)
-    )
-    tri = spark.read.schema(
-        "w1 string, w2 string, w3 string, logp double"
-    ).parquet(_model_partition(store_path, TRIGRAMS_TABLE, model_id))
-    ctx3 = spark.read.schema("w1 string, w2 string, logg double").parquet(
-        _model_partition(store_path, CONTEXTS3_TABLE, model_id)
-    )
-    return uni, bi, ctx2, tri, ctx3, params["unseen_logp"]
-
-
 def read_kn_lm_model_n(
     spark: SparkSession, store_path: str, model_id: str
 ) -> tuple[list, float]:
-    """The stored generalized-KN tables of an order ≥ 4 model in
+    """The stored Kneser-Ney tables of an order ≥ 3 model in
     :func:`lm.kn_tables` shape — ``(tables, unk_logp)`` with
     ``tables[0]`` the unigram and ``tables[n-1] = (gram_n, ctx_n)`` —
     exactly what :func:`lm.doc_perplexity_kn_n` consumes."""
     params = read_lm_params(store_path, model_id)
     order = params.get("order", 1)
-    if order < 4:
+    if order < 3:
         raise ValueError(
             f"lm store model {model_id!r} is order {order} — read it "
-            "with read_lm_model/read_bigram_lm_model/read_kn_lm_model"
+            "with read_lm_model/read_bigram_lm_model"
         )
     uni = spark.read.schema("tok string, logp double").parquet(
         _model_partition(store_path, VOCAB_TABLE, model_id)
@@ -376,11 +316,12 @@ def read_kn_lm_model_n(
     for n in range(2, order + 1):
         gcols = ", ".join(f"w{i} string" for i in range(1, n + 1))
         ccols = ", ".join(f"w{i} string" for i in range(1, n))
+        gram_table, ctx_table = _kn_level_tables(order, n)
         gram_n = spark.read.schema(f"{gcols}, logp double").parquet(
-            _model_partition(store_path, _gram_table(n), model_id)
+            _model_partition(store_path, gram_table, model_id)
         )
         ctx_n = spark.read.schema(f"{ccols}, logg double").parquet(
-            _model_partition(store_path, _ctx_table(n), model_id)
+            _model_partition(store_path, ctx_table, model_id)
         )
         tables.append((gram_n, ctx_n))
     return tables, params["unseen_logp"]
@@ -402,22 +343,12 @@ def score_perplexity_store(
     scorer (``lam`` applies to order-2 models only). Pure function of
     (batch, store): a replayed batch derives identical scores."""
     params = read_lm_params(store_path, model_id)
-    if params.get("order", 1) >= 4:
+    if params.get("order", 1) >= 3:
         from trialsync_etl_spark.operators.lm import doc_perplexity_kn_n
 
         tables, unk_logp = read_kn_lm_model_n(spark, store_path, model_id)
         return doc_perplexity_kn_n(
             docs, tables, unk_logp, id_col=id_col, text_col=text_col
-        )
-    if params.get("order", 1) == 3:
-        from trialsync_etl_spark.operators.lm import doc_perplexity_kn
-
-        uni, bi, ctx2, tri, ctx3, unk_logp = read_kn_lm_model(
-            spark, store_path, model_id
-        )
-        return doc_perplexity_kn(
-            docs, uni, bi, ctx2, tri, ctx3, unk_logp,
-            id_col=id_col, text_col=text_col,
         )
     if params.get("order", 1) == 2:
         from trialsync_etl_spark.operators.lm import doc_perplexity_bigram

@@ -2386,7 +2386,7 @@ _KN_ORACLE_SQL = """
 )
 def text_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney trigram perplexity per document
-    (operators/lm.py kn_model + doc_perplexity_kn, D=0.75): unigram
+    (operators/lm.kn_tables(order=3) + doc_perplexity_kn_n, D=0.75): unigram
     weight = continuation count (how many distinct contexts a word
     completes), p2/p3 = discounted count + γ·lower-order, score-time
     ladder stored-row → stored-γ × lower → lower. Every stored log is
@@ -2400,14 +2400,24 @@ def text_perplexity_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     store: lm_store.build_lm_model(order=3) persists the shared lineage
     across its five writes, and a scored batch pays only the five
     token-key hash joins (the text_perplexity_store probe plan)."""
-    from trialsync_etl_spark.operators.lm import doc_perplexity_kn, kn_model
+    return _kn_perplexity(spark, sf_dir, order=3, max_doc=500)
+
+
+def _kn_perplexity(
+    spark: SparkSession, sf_dir: str, order: int, max_doc: int
+) -> DataFrame:
+    """One-shot train+score of the order-``order`` Kneser-Ney model over
+    the documents with ``doc_id < max_doc`` — the shared body of the
+    ``text_perplexity_kn*`` queries."""
+    from trialsync_etl_spark.operators.lm import (
+        doc_perplexity_kn_n,
+        kn_tables,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.filter(F.col("doc_id") < 500)
-    uni, bi, ctx2, tri, ctx3, scalars = kn_model(docs)
-    return doc_perplexity_kn(
-        docs, uni, bi, ctx2, tri, ctx3, scalars["unk_logp"]
-    )
+    docs = docs.filter(F.col("doc_id") < max_doc)
+    tables, scalars = kn_tables(docs, order=order)
+    return doc_perplexity_kn_n(docs, tables, scalars["unk_logp"])
 
 
 _GOPHER_RULES_ORACLE = """
@@ -3448,12 +3458,4 @@ def text_perplexity_kn5(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram member uniformly: continuation counts at orders 2..4, raw
     counts at 5, score-time resolution stored-row → stored-γ × lower →
     lower at every level, exact integer-sum 6 dp means."""
-    from trialsync_etl_spark.operators.lm import (
-        doc_perplexity_kn_n,
-        kn_tables,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = docs.filter(F.col("doc_id") < 300)
-    tables, scalars = kn_tables(docs, order=5)
-    return doc_perplexity_kn_n(docs, tables, scalars["unk_logp"])
+    return _kn_perplexity(spark, sf_dir, order=5, max_doc=300)

@@ -243,13 +243,10 @@ _COLUMNS = [
 #: per-file size above which read_warc routes through the streaming
 #: DataSource instead of binaryFile (whose byte-array row hard-stops at
 #: 2 GB and spikes task memory by the container size). 1.5 GiB leaves
-#: headroom below the hard cap; override via env for deployments whose
-#: executor memory budget wants the spike bounded lower. The two routes
-#: are row-identical (test-pinned) and measured at throughput parity on
-#: the bench crawl shape (interleaved A/B, ±2%).
-BINARYFILE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_WARC_BINARYFILE_MAX", str((3 << 30) // 2))
-)
+#: headroom below the hard cap. The two routes are row-identical
+#: (test-pinned) and measured at throughput parity on the bench crawl
+#: shape (interleaved A/B, ±2%).
+BINARYFILE_MAX_BYTES = (3 << 30) // 2
 
 
 def read_warc(
